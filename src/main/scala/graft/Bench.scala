@@ -305,17 +305,14 @@ object Bench {
     // agg → sentence render → embedding → last-write-wins upsert frame),
     // materialized like every other query. Tracked separately: it is the
     // reference's reason to exist, not one of the operator queries.
-    // TWO passes, min reported, both stamped (VERDICT r11 #5): the
-    // r10→r11 drift (2.47→4.77 s) was profiled — the pipeline's code is
-    // byte-identical between the two records, and an isolated StageProf
-    // run shows only ~1.3 s of its ~3.4 s total lives in stages; the
-    // rest is per-plan DRIVER overhead (optimization, whole-stage
-    // codegen compilation, broadcast-build threads), which the suite
-    // never warms (entry is not a registered query) and which swings
-    // with end-of-suite JVM state and host band. Pass 1 carries that
-    // one-time cost (comparable to prior rounds' single-shot number);
-    // pass 2 is the steady-state data cost a long-running deployment
-    // actually pays per window.
+    // TWO passes, min reported, both stamped: a window is mostly
+    // driver time outside any stage (analysis, planning, AQE, codegen,
+    // job submission; 7 jobs / 7 tasks). Its measured cause used to be
+    // the embedding's self-joins, now one per-row kernel (see
+    // pipeline.Embedder). The entry is not a registered query, so the
+    // suite never warms its codegen and JIT: pass 1 carries that
+    // one-time cost; pass 2 is the steady-state cost a long-running
+    // deployment pays per window.
     val entryPasses = (1 to 2).map { _ =>
       System.gc() // entry must not absorb the suite's reclaimable debt
       val t0 = System.nanoTime()

@@ -13,9 +13,14 @@ import org.apache.spark.sql.functions._
   * upsert frame keyed by vector_id (reference: main.py:239-316 +
   * sentence_builder.py:102-156 + pgvector_storage.py:79-116).
   *
-  * One QueryExecution; the exchanges are the daily groupBy shuffle and
-  * the (tiny) weather dimension's — which then arrives at the metrics
-  * by broadcast, exactly the J2 enrich shape.
+  * One QueryExecution. Measured shape (executed plan at sf0.001): three
+  * exchanges — the daily groupBy shuffle, the (tiny) weather
+  * dimension's, which then arrives at the metrics by broadcast (the J2
+  * enrich shape), and the sentence render's single-partition
+  * presentation. The stale copy reads that last exchange back as a
+  * ReusedExchange, so events is scanned twice per window. The embedding
+  * is a projection in the render's codegen stage, and the upsert's
+  * window needs no exchange over the single-partition union.
   * The 2-day/1-day-overlap incremental loop (main.py:341-369) makes each
   * day's summary computed twice — the upsert keeps the newest, which is
   * exactly [[Upsert.lastWins]] here.

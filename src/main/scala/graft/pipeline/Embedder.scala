@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.plans.HashSignEmbed
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -8,136 +9,59 @@ import org.apache.spark.sql.functions._
   * The reference calls OpenAI `text-embedding-3-small` per batch
   * (src/services/embedding_service.py:50-124, dim 1536, zero-vector on
   * error). Offline + reproducible here: a seeded hash-projection
-  * embedding — token t contributes ±1/√d at dims derived from
-  * xxhash64(t, seed_i) — expressed entirely in columnar HOFs so it
-  * distributes with the scan (no driver round-trip, no UDF serialization).
+  * embedding — token t adds sign_i(t) = ±1 to dimension i, where
+  * sign_i(t) is bit (i mod 64) of xxhash64(t, i/64), so a token pays
+  * ⌈dim/64⌉ hashes instead of dim — then the sum is L2-normalized.
+  * Tokens are the non-empty runs of `[a-z0-9]` after lowercasing and
+  * newline-flattening (embedding_service.py:67 — the reference's
+  * literal-"\\n" bug is fixed here per SURVEY F3). Text with no tokens
+  * embeds as the zero vector (embedding_service.py:86), null text as null.
   *
-  * Like the real service, embeddings are L2-normalized and the text is
-  * newline-flattened first (embedding_service.py:67 — the reference's
-  * literal-"\\n" bug is fixed here per SURVEY F3).
+  * Shape: tokenization is Spark's built-in (codegen'd) string
+  * expressions; hashing, summing and normalizing is ONE native
+  * per-row kernel, [[HashSignEmbed]]. Each row is a pure function of
+  * its text, so the embedding adds no exchange or join, nothing
+  * depends on partitioning, and no ~KB text is ever shuffled.
+  * Duplicate texts are hashed once per occurrence; that is cheaper than
+  * the dedup shuffle and join-back it would need.
   *
-  * VALUE VERSIONING (ADVICE r8 #4): round 8 changed the sign scheme
-  * (per-dim `pmod(xxhash64(t, i), 2)` → bit i of `xxhash64(t, i/64)`),
-  * which changed every embedding value. In-repo consumers recompute per
-  * run, but an embedding store persisted ACROSS engine versions (e.g. a
-  * pgvector table kept between deployments) will no longer match
-  * recomputation — stamp [[Version]] beside persisted vectors at write
-  * time and re-embed on mismatch rather than mixing schemes silently.
+  * Rejected alternatives (values identical in each; all sums are of
+  * ±1.0 terms, exact in double):
+  *  - a higher-order-function fold (`aggregate` + `zip_with` over the
+  *    token array) evaluates interpreted through CodegenFallback and was
+  *    the pipeline's dominant cost;
+  *  - the transposed form (one aggregate per dimension) re-tokenizes
+  *    the text once per dimension: ~40× slower at corpus scale;
+  *  - explode + one 64-wide `sum(CASE WHEN …)` hash aggregate behind a
+  *    SHA-256-keyed distinct, joined back twice: every E1 window ran 11
+  *    jobs / 17 tasks and spent most of its wall time in driver-side
+  *    analysis and planning of the self-joins. Against it the kernel
+  *    measured, on a 4-core VM at `local[4]` (perfbench `ingest_e1`,
+  *    seed 733, 10 alternating pairs, medians): process CPU per window
+  *    1.91 s → 0.69 s, live heap 131 MB → 95 MB, 7 jobs / 7 tasks per
+  *    window; 100k documents (sf0.1 ×20) embed in 0.70 s wall / 2.5 s
+  *    CPU instead of 1.39 s / 4.8 s, bit-identical.
+  *
+  * VALUE VERSIONING: [[Version]] names the embedding VALUES. Bump it on
+  * any change to them; a store persisted across engine versions (e.g. a
+  * pgvector table kept between deployments) stamps it beside its
+  * vectors and re-embeds on mismatch rather than mixing schemes.
   */
 object Embedder {
   val Dim = 64      // default: matches the testdata embeddings dim
   val RefDim = 1536 // reference schema fidelity: VECTOR(1536), pgvector_storage.py:92
-  /** Embedding-scheme version — bump on ANY change to embed()'s VALUES
-    * (see the value-versioning scaladoc above). v2: r8's one-hash-word
-    * sign bits; v1: per-dim pmod parity. ADVISORY constant: the in-repo
-    * store (VectorStore) rewrites its vectors every run and keeps no
-    * cross-version state, so nothing here consumes it — it exists for
-    * external persistence layers to stamp and compare. */
+  /** Embedding-scheme version. v2: one hash word carries 64 sign bits;
+    * v1: per-dim pmod parity. ADVISORY: the in-repo store (VectorStore)
+    * rewrites its vectors every run, so nothing here consumes it — it
+    * exists for external persistence layers to stamp and compare. */
   val Version = 2
 
-  /** 64-bit hash words needed to carry `dim` sign bits. */
-  private def words(dim: Int): Int = (dim + 63) / 64
+  /** Embed `textCol` into an `array<double>` column of width `dim`
+    * (default [[Dim]]; pass [[RefDim]] for the reference's 1536-wide schema). */
+  def embed(textCol: Column, dim: Int = Dim): Column =
+    HashSignEmbed(split(lower(regexp_replace(textCol, "\\s+", " ")), "[^a-z0-9]+"), dim)
 
-  /** sign_i(tok) = +1 if bit (i mod 64) of xxhash64(tok, i/64) is 0,
-    * else −1: ONE hash evaluation yields 64 independent sign bits
-    * (feature hashing's standard trick), so a token pays ⌈dim/64⌉
-    * hashes instead of dim — at Dim=64 exactly one, at RefDim=1536
-    * twenty-four instead of 1536. The bits of a 64-bit avalanche hash
-    * are pairwise independent coin flips, which is all the ±1
-    * projection needs. */
-  private def sign(word: Int => Column, i: Int): Column =
-    when(shiftright(word(i / 64), i % 64).bitwiseAND(lit(1L)) === 0L,
-      lit(1.0)).otherwise(lit(-1.0))
-
-  /** raw(i) = Σ_tok sign_i(tok), computed as ONE fold over the token
-    * array — each token contributes a ±1 vector to all Dim
-    * accumulators in a single pass. (The transposed formulation — one
-    * aggregate per dimension — re-tokenizes the text Dim times per row:
-    * ~40× slower at corpus scale. Values are identical: same per-dim
-    * addition order.) */
-  private def rawFold(toks: Column, dim: Int): Column = {
-    val zero = array((0 until dim).map(_ => lit(0.0)): _*)
-    aggregate(toks, zero, (acc, t) =>
-      zip_with(acc, array((0 until dim).map(i =>
-        sign(j => xxhash64(t, lit(j)), i)): _*),
-        (a, b) => a + b))
-  }
-
-  private def toksOf(textCol: Column): Column =
-    filter(split(lower(regexp_replace(textCol, "\\s+", " ")), "[^a-z0-9]+"),
-      t => t =!= "")
-
-  /** Embed `textCol` into an ArrayType(Double) column of dimension `dim`
-    * (default [[Dim]]; pass [[RefDim]] for the reference's 1536-wide schema).
-    * One-expression form for spec-scale use; pipelines should prefer
-    * [[withEmbedding]], which stages the fold/norm into separate
-    * projections so nothing is re-evaluated per element. */
-  def embed(textCol: Column, dim: Int = Dim): Column = {
-    val raw = rawFold(toksOf(textCol), dim)
-    val nrm = sqrt(aggregate(raw, lit(0.0), (acc, x) => acc + x * x))
-    when(nrm > 0, transform(raw, x => x / nrm))
-      .otherwise(raw) // zero vector on empty text (embedding_service.py:86)
-  }
-
-  /** Attach an `embedding` column to a frame with a text column.
-    *
-    * Hot path is explode + one WIDE hash aggregate, not the HOF fold:
-    * higher-order functions evaluate interpreted (CodegenFallback), so
-    * [[rawFold]] was the pipeline's dominant cost; the per-dimension ±1
-    * sums here run inside codegen'd HashAggregate with map-side partial
-    * combine. Values are BIT-identical to the fold — each accumulator
-    * sums ±1.0 terms, which are exact integers in double, so addition
-    * order cannot matter. Distinct texts embed once and join back (the
-    * reference's batch-dedup behavior for free); texts with no tokens
-    * take the zero vector, null texts a null embedding, exactly like
-    * the fold path. */
-  def withEmbedding(df: DataFrame, textCol: String, dim: Int = Dim): DataFrame = {
-    // Numbered repartition under the distinct: the distinct's own
-    // exchange is ENSURE_REQUIREMENTS, which AQE coalesces — and a
-    // text corpus coalesces to very few partitions by byte size, so
-    // the explode + wide hash aggregate (the embedding compute, keyed
-    // by the same __text distribution and therefore exchange-free)
-    // would run near-serially. REPARTITION_BY_NUM is preserved by AQE
-    // and satisfies both the distinct and the aggregate downstream.
-    // ONE exchange keyed by a compact digest of the text carries the
-    // whole embed stage: the numbered repartition (AQE-preserved — a
-    // column-only one coalesces to near-serial at text byte sizes)
-    // satisfies the dedup aggregate, the per-token sign aggregate AND
-    // the text join-back, so none of them shuffles again. Grouping the
-    // per-token rows by 64 hex chars instead of the ~KB document text
-    // cuts the dominant memory traffic of the map-side aggregate.
-    // SHA-256, not md5: a key collision here is not a benign merge —
-    // the surviving text would take the normalized sum of BOTH
-    // colliding documents' tokens and the dropped text the zero vector
-    // — and md5 collisions are practical to craft (web corpora contain
-    // published collision pairs), while a SHA-256 collision is not.
-    val keyed = df.select(col(textCol).as("__text")).na.drop()
-      .select(col("__text"), sha2(col("__text"), 256).as("__k"))
-      .repartition(df.sparkSession.sparkContext.defaultParallelism, col("__k"))
-      .groupBy(col("__k")).agg(first(col("__text")).as("__text")) // distinct texts, by key
-    // Hash words are PROJECTED once per token row, then the dim sums
-    // only extract bits — the aggregate's hash cost is ⌈dim/64⌉
-    // evaluations per occurrence, not dim (see [[sign]]).
-    val hashed = keyed
-      .select(col("__k"), explode(toksOf(col("__text"))).as("__t"))
-      .select(col("__k") +: (0 until words(dim)).map(j =>
-        xxhash64(col("__t"), lit(j)).as(s"__h$j")): _*)
-    val sums = (0 until dim).map(i =>
-      sum(sign(j => col(s"__h$j"), i)).as(s"__e$i"))
-    val raw = hashed.groupBy(col("__k"))
-      .agg(sums.head, sums.tail: _*)
-      .join(keyed, "__k")
-      .select(col("__text"),
-        array((0 until dim).map(i => col(s"__e$i")): _*).as("__raw"))
-    val zero = array((0 until dim).map(_ => lit(0.0)): _*)
-    df.join(raw.withColumnRenamed("__text", textCol), Seq(textCol), "left")
-      .withColumn("__raw",
-        when(col(textCol).isNotNull, coalesce(col("__raw"), zero)))
-      .withColumn("__nrm",
-        sqrt(aggregate(col("__raw"), lit(0.0), (acc, x) => acc + x * x)))
-      .withColumn("embedding",
-        when(col("__nrm") > 0, transform(col("__raw"), x => x / col("__nrm")))
-          .otherwise(col("__raw")))
-      .drop("__raw", "__nrm")
-  }
+  /** `df` with an `embedding` column computed from its `textCol`. */
+  def withEmbedding(df: DataFrame, textCol: String, dim: Int = Dim): DataFrame =
+    df.withColumn("embedding", embed(col(textCol), dim))
 }

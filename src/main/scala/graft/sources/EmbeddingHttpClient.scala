@@ -152,12 +152,14 @@ final class EmbeddingHttpClient private[sources] (conf: EmbeddingConf,
 }
 
 /** Spark-side integration: the live analog of
-  * [[graft.pipeline.Embedder.withEmbedding]], same distinct-first
-  * shape. The deterministic embedder stays the oracle/bench default;
-  * this path exists for parity with the reference's production wiring.
+  * [[graft.pipeline.Embedder.withEmbedding]]. The deterministic
+  * embedder stays the oracle/bench default; this path exists for
+  * parity with the reference's production wiring.
   *
-  * Scale design: DISTINCT texts only (repeats embed once and join
-  * back — the dedup the reference gets per-batch, globally here);
+  * Scale design: DISTINCT texts only — each distinct text is a paid
+  * network call, so repeats embed once and join back (the dedup the
+  * reference gets per-batch, globally here; the local kernel is a
+  * cheap per-row function and does not deduplicate);
   * batches of `conf.batchSize` per POST amortize round trips;
   * partition-parallel fan-out with one pooled connection per executor
   * JVM; and the result frame is MATERIALIZED before returning so a

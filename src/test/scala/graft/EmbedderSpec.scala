@@ -1,6 +1,8 @@
 package graft
 
-import graft.pipeline.Embedder
+import graft.pipeline.{DailySummary, Embedder}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The deterministic embedder's contract (SURVEY.md §2.10 U1; reference
@@ -57,5 +59,40 @@ class EmbedderSpec extends AnyFunSuite {
     val norm = math.sqrt(vs.head.map(x => x * x).sum)
     assert(math.abs(norm - 1.0) < 1e-9) // L2-normalized at full width too
     assert(vs(1).forall(_ == 0.0))      // empty text → 1536-wide zero vector
+  }
+
+  /** Rows of `df` whose kernel embedding of `textCol` is not `==` to the
+    * test-scope HOF reference's, element for element. */
+  private def mismatches(df: DataFrame, textCol: String, dim: Int): Seq[String] =
+    EmbedderReference.withEmbedding(df.repartition(4), textCol, dim, "r")
+      .withColumn("k", Embedder.embed(col(textCol), dim))
+      .collect().toSeq.collect {
+        case r if r.getAs[Seq[Double]]("k") != r.getAs[Seq[Double]]("r") ||
+            (r.getAs[Seq[Double]]("k") != null && r.getAs[Seq[Double]]("k").size != dim) =>
+          s"dim $dim: ${r.getAs[String](textCol)}"
+      }
+
+  private val Dims = Seq(64, 100, Embedder.RefDim)
+
+  test("kernel == HOF reference, bit for bit: edge-case texts") {
+    val texts = Seq(None, Some(""), Some("!!! ---"), Some("foo\n\tbar  baz\r\n"),
+      Some("echo echo echo Echo ECHO"), Some("Café naïve — 東京 42"),
+      Some("the quick brown fox jumps over the lazy dog 0123456789"))
+      .toDF("text")
+    for (d <- Dims) assert(mismatches(texts, "text", d).isEmpty)
+  }
+
+  test("kernel == HOF reference, bit for bit: every documents.text at sf0.01") {
+    val docs = Tables.load(spark, "/root/testdata/sf0.01", "documents").select("text")
+    assert(docs.count() == 500)
+    for (d <- Dims) assert(mismatches(docs, "text", d).isEmpty)
+  }
+
+  test("DailySummary.run at sf0.001: every embedding == the reference of its sentence") {
+    val out = EmbedderReference.withEmbedding(DailySummary.run(spark, "/root/testdata/sf0.001"),
+        "semantic_sentence", Embedder.Dim, "r")
+      .select("embedding", "r").collect()
+    assert(out.nonEmpty)
+    out.foreach(r => assert(r.getSeq[Double](0) == r.getSeq[Double](1), r))
   }
 }

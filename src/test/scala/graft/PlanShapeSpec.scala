@@ -263,6 +263,59 @@ class PlanShapeSpec extends AnyFunSuite {
       s"flagship plans no BroadcastHashJoin for the weather dim:\n$p")
   }
 
+  /** The E1 embedding is one native per-row kernel: no explode, no
+    * wide sort/object aggregate, no exchange or join keyed on the
+    * sentence text or anything computed from it (the former shape
+    * shuffled on a digest of the text and joined back on it), and the
+    * kernel runs fused inside WholeStageCodegen. */
+  test("the flagship embeds per row: one fused kernel, no exchange or join on the text") {
+    import graft.plans.HashSignEmbed
+    import org.apache.spark.sql.catalyst.expressions.{ExprId, Expression, NamedExpression}
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val df = pipeline.DailySummary.run(spark, dir)
+    df.collect() // the final adaptive plan
+    val p = df.queryExecution.executedPlan
+    val ns = nodes(p)
+    assert(!ns.exists(n => n.isInstanceOf[GenerateExec] ||
+      n.isInstanceOf[SortAggregateExec] || n.isInstanceOf[ObjectHashAggregateExec]), p)
+    // Every attribute computed from the sentence text, to a fixpoint.
+    var fromText: Set[ExprId] = ns.flatMap(_.output)
+      .filter(_.name == "semantic_sentence").map(_.exprId).toSet
+    var grown = true
+    while (grown) {
+      val next = fromText ++ ns.flatMap(_.expressions).collect {
+        case e: NamedExpression if e.references.exists(a => fromText(a.exprId)) => e.exprId
+      }
+      grown = next.size > fromText.size
+      fromText = next
+    }
+    val keyedOnText = ns.filter {
+      case j: BaseJoinExec => j.references.exists(a => fromText(a.exprId))
+      case e: ShuffleExchangeExec => e.outputPartitioning match {
+        case k: Expression => k.references.exists(a => fromText(a.exprId))
+        case _ => false
+      }
+      case _ => false
+    }
+    assert(keyedOnText.isEmpty, s"exchange or join keyed on the text:\n$p")
+    def fusedIn(n: SparkPlan): Seq[SparkPlan] = n match {
+      case _: InputAdapter => Nil
+      case _ => n +: n.children.flatMap(fusedIn)
+    }
+    val fused = ns.collect { case w: WholeStageCodegenExec => fusedIn(w.child) }.flatten
+    val kernels = ns.flatMap(n => n.expressions.flatMap(_.collect {
+      case k: HashSignEmbed => n -> k
+    }))
+    assert(kernels.nonEmpty, p)
+    kernels.foreach { case (n, k) =>
+      assert(fused.exists(_ eq n), s"HashSignEmbed runs outside WholeStageCodegen:\n$p")
+      assert(!k.exists(_.isInstanceOf[CodegenFallback]), k)
+    }
+  }
+
   /** Walk the unary presentation chain from the root (sorts, projects,
     * limits, AQE wrappers) to the first exchange: that is the exchange
     * the final result funnels through. Deeper single-partition exchanges
