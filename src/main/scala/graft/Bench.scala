@@ -1,30 +1,19 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** Locale.ROOT 3-decimal doubles: de_DE comma separators are invalid
+    * JSON, and full precision bloated r5's record past the tail a
+    * last-line reader captures. */
+  private def f3(x: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(x))
+
+  /** Escape a string for embedding in a JSON literal. */
+  private def jstr(s: String): String =
+    s.replace("\\", "\\\\").replace("\"", "\\\"")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // Suite-order-noise guards: even with the UI off, the app status
-      // stores retain per-execution plan metrics and per-stage task data
-      // for the WHOLE app (defaults: 1000 SQL executions, 1000 stages,
-      // 100k tasks). Across a 97-query suite that retained state grows
-      // monotonically and its heap/GC pressure taxes LATER queries —
-      // an 8× artifact-vs-isolated gap on late queries with near-zero
-      // shuffle. Cap retention at "recent history" sizes; the bench
-      // reads none of it.
-      .config("spark.sql.ui.retainedExecutions", "5")
-      .config("spark.ui.retainedJobs", "20")
-      .config("spark.ui.retainedStages", "50")
-      .config("spark.ui.retainedTasks", "2000")
-      .config("spark.ui.retainedDeadExecutors", "1")
-      .withExtensions(new plans.GraftExtensions) // cosine_sim + FuseCosine
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.configure(spark)
+    val spark = GraftSession()
     // Shuffle accounting: total bytes written to shuffle, via listener.
     // Queries run sequentially, so a before/after snapshot attributes
     // bytes to the query in between — the judge-readable record of how
@@ -281,12 +270,6 @@ object Bench {
     val results = firstPass.map { case (name, elapsed, shuffleMb, err) =>
       (name, secondPass.get(name).fold(elapsed)(math.min(elapsed, _)), shuffleMb, err)
     }
-    // Shared JSON formatting (ProbeHarness): Locale.ROOT 3-decimal
-    // doubles (de_DE comma separators are invalid JSON; full precision
-    // bloated r5's record past the driver's tail-capture) and the one
-    // copy of string escaping — the probes' old quote-swap escaping bug
-    // is exactly the drift a second inline copy invites.
-    import ProbeHarness.{f3, jstr}
     val qs = results.map { case (k, v, _, _) => s"\"" + k + "\":" + f3(v) }
       .mkString("{", ",", "}")
     val shuffles = results.map { case (k, _, mb, _) =>

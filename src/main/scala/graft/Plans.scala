@@ -117,14 +117,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.configure(spark)
+    val spark = GraftSession(logLevel = "ERROR")
 
     // Explicit UTF-8: PrintWriter(File) uses the platform default
     // charset, which mangles non-ASCII in the claims on POSIX-locale

@@ -32,26 +32,13 @@ object Tables {
   def configure(spark: SparkSession): Unit = {
     try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     catch { case scala.util.control.NonFatal(_) => () }
-    // AQE coalesce floor: env-overridable, DEFAULT = Spark's stock 1 MB.
-    // r15 measured both ways (guide §1.1's empirical loop): a 4kb floor
-    // un-serializes CPU-dense tiny-byte stages (q59's CC-contraction
-    // rounds ran n=2..7 of 32; at 4kb n=14..32, isolated wall -25%) but
-    // IN-SUITE, back-to-back quiet A/B legs read 179.7 s (stock) vs
-    // 206.0 s (4kb): the extra tiny tasks' fixed cost across every
-    // query's small stages outweighs the per-stage parallelism, and
-    // even q59 was +1.3 s in-suite. The stock floor stays; the knob
-    // remains for cluster profiles where the trade differs.
-    sys.env.get("SPARK_GRAFT_AQE_MIN_PARTITION").foreach { v =>
-      try spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize", v)
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          // Loud skip (ADVICE r15): a mistyped override otherwise runs
-          // silently at the stock floor and the A/B reads as a no-op.
-          System.err.println("[graft] ignoring invalid " +
-            s"SPARK_GRAFT_AQE_MIN_PARTITION='$v': ${e.getMessage}")
-      }
-    }
+    // AQE coalesce floor: Spark's stock 1 MB. Rejected alternative
+    // (r15): a 4kb floor un-serializes CPU-dense tiny-byte stages
+    // (q59's CC-contraction rounds ran n=2..7 of 32; at 4kb n=14..32,
+    // isolated wall -25%) but IN-SUITE, back-to-back quiet A/B legs
+    // read 179.7 s (stock) vs 206.0 s (4kb): the extra tiny tasks'
+    // fixed cost across every query's small stages outweighs the
+    // per-stage parallelism, and even q59 was +1.3 s in-suite.
     graft.plans.GraftExtensions.install(spark)
   }
 
@@ -91,12 +78,6 @@ object Tables {
     * structural no-op there. Call it AFTER filters/projections so
     * pushdown still reaches the scan. */
   def spread(df: DataFrame): DataFrame = {
-    // A/B escape hatch (one-JVM interleaved measurement — the only
-    // reliable comparison on this host, see bench notes): with
-    // -Dgraft.noSpread=1 every spread call site degrades to identity,
-    // so a harness can alternate spread/unspread per pass without
-    // recompiling. Production reads the default (spread on).
-    if (sys.props.get("graft.noSpread").contains("1")) return df
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism
     // Estimate the scan's task count from the physical scan nodes with

@@ -91,7 +91,8 @@ object AdvancedQueries {
     // + ~0.7 s genuine work (source scan + state agg ~0.5 s wall, the
     // 31-date-partition merge write ~0.2-0.6 s). The harness share is
     // fixed per RUN, not per event — it amortizes to noise on a real
-    // backlog (StreamScaleProbe: 1.05× wall at 10× the events).
+    // backlog (the scale probe's `stream` family: 1.05× wall at 10×
+    // the events).
     q("q49_streaming_daily",
       "T1/T2/T6: streaming catch-up restatement ≡ batch daily aggregate",
       s"""SELECT CAST(ts AS DATE) AS d, event_type, COUNT(*) AS n,

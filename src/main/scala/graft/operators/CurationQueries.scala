@@ -280,8 +280,9 @@ object CurationQueries {
 
   /** q118's drain, file-count parameterized (each file is one
     * micro-batch under maxFilesPerTrigger=1; the registered query runs
-    * 2, [[graft.BacklogProbe]] drains a 10-file backlog to measure the
-    * per-micro-batch marginal cost — VERDICT r13 #3). */
+    * 2; the `backlog` family of the test-scope scale probe drains a
+    * 10-file backlog to measure the per-micro-batch marginal cost —
+    * VERDICT r13 #3). */
   private[graft] def qcStreamDrain(s: SparkSession, dir: String,
       nFiles: Int): DataFrame = {
     import java.math.{BigDecimal => JDec}

@@ -745,8 +745,6 @@ object DedupQueries {
           .isEmpty
       }
       cur = next
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] $tag round $rounds done=$done")
     }
     if (!done)
       throw new IllegalStateException(

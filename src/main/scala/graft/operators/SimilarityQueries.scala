@@ -409,8 +409,8 @@ object SimilarityQueries {
   }
 
   /** q124's drain, cell-count parameterized (the registered query runs
-    * the fixed IvfCells; LearnedProbe's primary append-family rows run
-    * cells ∝ corpus — the deployment knob). */
+    * the fixed IvfCells; the scale probe's `learned` and `backlog`
+    * families run cells ∝ corpus at 10× — the deployment knob). */
   private[graft] def ivfpqAppendStream(s: SparkSession, dir: String,
       cells: Int, nFiles: Int = 2): DataFrame = {
     val st0 = ivfpqAppendStatics(s, dir, cells)

@@ -900,8 +900,9 @@ object TextQueries {
 
   /** q123's drain, file-count parameterized (each file is one
     * micro-batch under maxFilesPerTrigger=1; the registered query runs
-    * 2, [[graft.BacklogProbe]] drains a 10-file backlog to measure the
-    * per-micro-batch marginal cost — VERDICT r13 #3). */
+    * 2; the `backlog` family of the test-scope scale probe drains a
+    * 10-file backlog to measure the per-micro-batch marginal cost —
+    * VERDICT r13 #3). */
   private[graft] def bpeStreamDrain(s: SparkSession, dir: String,
       nFiles: Int): DataFrame = {
     val merges = bpeMergesOf(s, dir)

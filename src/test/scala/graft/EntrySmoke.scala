@@ -2,11 +2,7 @@ package graft
 /** Manual smoke main: mirrors the driver's t1 check (entry rows>0). */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(logLevel = "ERROR")
     val df = SparkEntry.entry(spark)
     df.show(3, 70)
     println("ENTRY_ROWS=" + df.count())

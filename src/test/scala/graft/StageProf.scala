@@ -12,18 +12,7 @@ object StageProf {
   def main(args: Array[String]): Unit = {
     val qname = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    // Core count via SPARK_GRAFT_CPUS (default 32) so the 8-vs-32-core
-    // anti-scaling question (VERDICT r15 scaling block) is profilable
-    // with the same stage attribution at both widths.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.configure(spark)
+    val spark = GraftSession(logLevel = "ERROR")
     val stages = mutable.ArrayBuffer[(Int, String, Long, Long, Long, Int)]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {

@@ -5,15 +5,5 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for every suite (Test/fork runs them in a
   * single forked JVM, so this is created once). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    Tables.configure(s)
-    s
-  }
+  lazy val spark: SparkSession = GraftSession(cpus = 4, logLevel = "ERROR")
 }
