@@ -3,6 +3,7 @@ package graft.operators
 import graft.{NamedQuery, Tables}
 import graft.NamedQuery.{q, PresentationOps}
 import graft.functions.{Exact, ExactSql}
+import graft.streaming.Drain
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -99,7 +100,6 @@ object AdvancedQueries {
          |  ${ExactSql.dsum("value")} AS sum_value
          |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
       val root = graft.TempDirs.fresh("q49")
-      val target = s"$root/target"; val ckpt = s"$root/ckpt"
       // The shared pre-normalized source (NANOS→micros once per SF dir,
       // memoized — a parquet file stream cannot apply the legacy-nanos
       // rewrite itself). Watermarks require TIMESTAMP (LTZ); the session
@@ -108,10 +108,9 @@ object AdvancedQueries {
       import graft.streaming.NormalizedEvents
       val src = NormalizedEvents.sourceDir(s, dir)
       graft.streaming.StreamingUpsert.runAvailableNow(s, src,
-        NormalizedEvents.schema, target, ckpt,
-        statePartitions = Some(1), // ~40 (day, type) keys: 1 store, not 32
-        noDataBatches = false) // update mode emitted everything in the data batch
-      s.read.parquet(target)
+        NormalizedEvents.schema, Drain.targetDir(root), Drain.checkpointDir(root),
+        statePartitions = Some(1)) // ~40 (day, type) keys: 1 store, not 32
+      s.read.parquet(Drain.targetDir(root))
         .select(col("d").cast("date").as("d"), col("event_type"),
           col("n"), col("sum_value"))
         .presented("d", "event_type")
@@ -200,16 +199,14 @@ object AdvancedQueries {
         |  AND c.ts BETWEEN p.ts - INTERVAL 1 DAY AND p.ts
         |ORDER BY p_event_id, c_event_id""".stripMargin) { (s, dir) =>
       val root = graft.TempDirs.fresh("q53")
-      val target = s"$root/target"; val ckpt = s"$root/ckpt"
       // Shared normalized source (see q49) — this query never mutates
       // its source dir, so it streams the memoized copy directly.
       import graft.streaming.NormalizedEvents
       val src = NormalizedEvents.sourceDir(s, dir)
-      graft.streaming.StreamIntervalJoin.runAvailableNow(
-        s, src, NormalizedEvents.schema, target, ckpt,
-        statePartitions = Some(4), // state = the events themselves (~80k rows/side): parallel inserts
-        noDataBatches = false) // inner join emits pairs only in data batches
-      s.read.parquet(target)
+      graft.streaming.StreamIntervalJoin.runAvailableNow(s, src,
+        NormalizedEvents.schema, Drain.targetDir(root), Drain.checkpointDir(root), "inner",
+        statePartitions = Some(4)) // state = the events themselves (~80k rows/side): parallel inserts
+      s.read.parquet(Drain.targetDir(root))
         .select("p_event_id", "c_event_id", "user_id")
         .orderBy("p_event_id", "c_event_id")
     },
@@ -228,17 +225,24 @@ object AdvancedQueries {
       """SELECT event_id, user_id, event_type, value
         |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
       val root = graft.TempDirs.fresh("q54")
-      val src = s"$root/src"; val target = s"$root/target"; val ckpt = s"$root/ckpt"
+      val src = Drain.srcDir(root); val target = Drain.targetDir(root)
       // Two deliveries = two filesystem copies of the shared sharded
       // source, delivery-level mtimes + a delivery-sized trigger, so the
       // re-delivery lands in the LATER micro-batch deterministically.
       import graft.streaming.NormalizedEvents
       NormalizedEvents.deliverCopies(s, dir, src, copies = 2)
-      graft.streaming.StreamDedup.runAvailableNow(
-        s, src, NormalizedEvents.schema, "event_id", target, ckpt,
-        maxFilesPerTrigger = Some(NormalizedEvents.SourceFiles),
-        statePartitions = Some(4), // state = one entry per event_id (~200k): parallel inserts
-        noDataBatches = false) // first-seen rows emit in their data batch
+      Drain(s, src, NormalizedEvents.schema, Drain.checkpointDir(root),
+          maxFilesPerTrigger = Some(NormalizedEvents.SourceFiles),
+          statePartitions = Some(4)) { // state = one entry per event_id (~200k)
+        // The watermark evicts dedup state past the 2-day lateness
+        // horizon; a row behind it drops as late — the at-most-once-per-
+        // key contract re-deliveries need. First-seen rows emit in the
+        // data batch that carries them.
+        _.stream()
+          .withWatermark("ts", "2 days")
+          .dropDuplicatesWithinWatermark("event_id")
+          .writeStream.format("parquet").option("path", target)
+      }
       s.read.parquet(target)
         .select("event_id", "user_id", "event_type", "value")
         .orderBy("event_id")
@@ -264,7 +268,7 @@ object AdvancedQueries {
         |WHERE p.event_type = 'purchase'
         |ORDER BY p_event_id, c_event_id""".stripMargin) { (s, dir) =>
       val root = graft.TempDirs.fresh("q94")
-      val src = s"$root/src"; val target = s"$root/target"; val ckpt = s"$root/ckpt"
+      val src = Drain.srcDir(root); val target = Drain.targetDir(root)
       // Private source dir assembled by FILESYSTEM COPY from the
       // memoized per-corpus fixture: the one-file real delivery, then
       // the two far-future flush deliveries, with STRICTLY INCREASING
@@ -283,14 +287,14 @@ object AdvancedQueries {
       // per-file draining this replaced.
       import graft.streaming.NormalizedEvents
       NormalizedEvents.deliverOuterJoinFixture(s, dir, src)
-      graft.streaming.StreamIntervalJoin.runLeftOuterAvailableNow(
-        s, src, NormalizedEvents.schema, target, ckpt,
-        statePartitions = Some(4), maxFilesPerTrigger = Some(2),
-        // Every REAL outer null is emitted by flush two's DATA batch
-        // (watermark advanced past all real purchases by flush one);
-        // the skipped empty batch would only emit the flush purchase's
-        // own null row, which the filter below drops anyway.
-        noDataBatches = false)
+      // statePartitions skips the trailing empty batch: every REAL outer
+      // null is emitted by flush two's DATA batch (watermark advanced
+      // past all real purchases by flush one); the skipped batch would
+      // only emit the flush purchase's own null row, which the filter
+      // below drops anyway.
+      graft.streaming.StreamIntervalJoin.runAvailableNow(s, src,
+        NormalizedEvents.schema, target, Drain.checkpointDir(root), "left_outer",
+        statePartitions = Some(4), maxFilesPerTrigger = Some(2))
       s.read.parquet(target)
         .filter(col("p_event_id") >= 0) // synthetic flush rows are harness, not data
         .select("p_event_id", "c_event_id", "user_id")
@@ -485,14 +489,14 @@ object AdvancedQueries {
       val weights = Seq("click" -> 1.5, "view" -> 0.5, "purchase" -> 5.0,
         "signup" -> 3.0, "error" -> 0.0).toDF("event_type", "weight")
       val root = graft.TempDirs.fresh("q71")
-      val src = s"$root/src"; val target = s"$root/target"; val ckpt = s"$root/ckpt"
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
-      ev.repartition(2).write.parquet(src) // two files → two micro-batches
-      graft.streaming.StreamEnrich.runAvailableNow(
-        s, src, ev.schema, weights, "event_type",
-        Seq("event_type", "value", "value * weight AS weighted"),
-        target, ckpt, maxFilesPerTrigger = Some(1))
+      // Two files → two micro-batches; each plans a broadcast-hash join.
+      val target = Drain.split(root, ev, 2) {
+        _.stream().join(broadcast(weights), "event_type")
+          .selectExpr("event_type", "value", "value * weight AS weighted")
+          .writeStream.format("parquet").option("path", Drain.targetDir(root))
+      }
       s.read.parquet(target)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("weighted")).as("weighted_value"))

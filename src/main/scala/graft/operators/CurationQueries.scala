@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.Materialize.CheckpointOps
-import graft.{NamedQuery, Tables}
+import graft.{NamedQuery, Overlap, Tables}
 import graft.NamedQuery.{q, PresentationOps}
 import graft.functions.{Exact, ExactSql, TextOps}
+import graft.streaming.Drain
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -116,7 +117,7 @@ object CurationQueries {
     * bench (matched controls) touched-family +2.0-2.4 s, q125
     * +1.2-1.3 s. Mechanism: at sf0.1 every scan is one row-group, and
     * this 5-branch plan's three heavy single-task branches (hf/nt/lab)
-    * run CONCURRENTLY — and overlap with q125's Future'd BPE retrain —
+    * run CONCURRENTLY — and overlap with q125's helper-thread BPE retrain —
     * while the fused chain serializes its critical path. Two interim
     * variants were worse still: referencing the bucket md5 inside 64
     * conditional sums re-evaluated it per sum (q115 → 40 s); an
@@ -295,17 +296,14 @@ object CurationQueries {
         concat(col("text"), lit(" zq"),
           pmod(col("doc_id"), lit(11)).cast("string")).as("text"))
     val root = graft.TempDirs.fresh("q118")
-    val src = s"$root/src"; val target = s"$root/target"; val ckpt = s"$root/ckpt"
-    batch.repartition(nFiles).write.parquet(src)
-    graft.streaming.StreamScore.runAvailableNow(
-      s, src, batch.schema, target, ckpt, maxFilesPerTrigger = Some(1)) { b =>
+    val sink = Drain.appendEach(Drain.targetDir(root)) { b =>
       qcScored(qcFeaturesOf(b), w)
         .filter(col("b") === QcBuckets + 1) // bias row: one per doc
         .select(col("doc_id"), col("y"),
           col("p").cast("double").as("p"),
           (col("p") >= lit(0.5).cast(QcDec)).as("admitted"))
     }
-    s.read.parquet(target).orderBy("doc_id")
+    s.read.parquet(Drain.split(root, batch, nFiles)(sink)).orderBy("doc_id")
   }
 
   /** q115/q116 shared oracle SQL: the labeled-feature CTEs over source
@@ -1464,17 +1462,13 @@ object CurationQueries {
         .filter(col("doc_id") % 37 =!= 0)
       // Stages 1 (index purge) and 2 (BPE retrain) are INDEPENDENT of
       // stage 3 (qc retrain): run them on a helper thread so their jobs
-      // back-fill executors the qc retrain's stage tails leave idle
-      // (guide §2.6 overlap-independent-jobs; the BPE retrain is
-      // driver-round-trip bound — 8 argmax collects over vocab-sized
-      // frames — so it hides almost entirely under the compute-bound qc
-      // feature/gradient stages). Spark job submission is thread-safe;
-      // the two threads write disjoint artifacts. r15: q125 isolated
-      // wall 9.6 s → ~7 s, the BPE segment's serialized latency gone.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val sideArtifacts = Future {
+      // back-fill executors the qc retrain's stage tails leave idle (the
+      // BPE retrain is driver-round-trip bound — 8 argmax collects over
+      // vocab-sized frames — so it hides almost entirely under the
+      // compute-bound qc feature/gradient stages). The two threads write
+      // disjoint artifacts. r15: q125 isolated wall 9.6 s → ~7 s, the
+      // BPE segment's serialized latency gone.
+      Overlap {
         // 1. The assignment index: row-wise anti-join purge, published,
         // audited from the PUBLISHED table (q122's discipline — the
         // reconciliation checks the rewrite, not re-derived arithmetic;
@@ -1491,27 +1485,14 @@ object CurationQueries {
         s.createDataFrame(retrained)
           .toDF("step", "lhs", "rhs", "merged", "score")
           .repartition(1).write.parquet(s"$root/bpe_merges")
-      }
-      // 3. The qc model: same retrain discipline via the shared loop —
-      // runs on THIS thread while the helper thread drives stages 1-2.
-      // The Future is awaited in a finally (ADVICE r15): if the qc
-      // retrain or its write throws, the side artifacts' jobs must not
-      // keep running (and failing silently) under a query that already
-      // unwound — and a helper-thread failure surfaces promptly either
-      // way. The secondary failure is suppressed so the primary
-      // exception stays the one the caller sees.
-      try {
+      } {
+        // 3. The qc model: same retrain discipline via the shared loop —
+        // runs on THIS thread while the helper thread drives stages 1-2.
         val (rw, _) = qcTrainOf(s, purged)
         rw.toSeq.sortBy(_._1).map { case (b, v) => (b, v.toPlainString) }
           .toDF("b", "w")
           .repartition(1).write.parquet(s"$root/qc_model")
-      } catch {
-        case scala.util.control.NonFatal(primary) =>
-          try Await.result(sideArtifacts, Duration.Inf)
-          catch { case scala.util.control.NonFatal(_) => () }
-          throw primary
       }
-      Await.result(sideArtifacts, Duration.Inf)
       // Audits read the PUBLISHED artifacts both threads wrote.
       val vidx = s.read.parquet(graft.pipeline.VectorIndex.prepared(
         s, dir, SimilarityQueries.IvfCells))

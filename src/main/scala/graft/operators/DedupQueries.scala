@@ -4,6 +4,7 @@ import graft.Materialize.CheckpointOps
 import graft.{NamedQuery, Tables}
 import graft.NamedQuery.{q, PresentationOps}
 import graft.functions.TextOps
+import graft.streaming.Drain
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1069,14 +1070,12 @@ object DedupQueries {
       val indexPath = graft.pipeline.DedupIndex.prepared(s, dir)
       val batch = appendTriageBatch(s, dir)
       val root = graft.TempDirs.fresh("q120")
-      val src = s"$root/src"; val target = s"$root/target"; val ckpt = s"$root/ckpt"
-      batch.repartition(2).write.parquet(src) // two files → two micro-batches
-      graft.streaming.StreamScore.runAvailableNow(
-        s, src, batch.schema, target, ckpt, maxFilesPerTrigger = Some(1)) { b =>
+      val sink = Drain.appendEach(Drain.targetDir(root)) { b =>
         graft.pipeline.DedupIndex.triage(s, indexPath,
           graft.pipeline.DedupIndex.signatures(b).checkpointed(false))
       }
-      s.read.parquet(target).orderBy("doc_id")
+      // Two files → two micro-batches.
+      s.read.parquet(Drain.split(root, batch, 2)(sink)).orderBy("doc_id")
     },
 
     // ----- X3/X4+ GOVERNANCE: TAKEDOWN — purge a removal list from the

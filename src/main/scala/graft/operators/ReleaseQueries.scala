@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.Materialize.CheckpointOps
-import graft.{NamedQuery, Tables}
+import graft.{NamedQuery, Overlap, Tables}
 import graft.NamedQuery.{q, PresentationOps}
 import graft.functions.{Exact, ExactSql, TextOps}
+import graft.streaming.Drain
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -437,21 +438,11 @@ object ReleaseQueries {
       // the index state a production store would have published before
       // the removal list arrived. Materialized: the takedown reads the
       // artifacts as tables, not as lineage into the append math.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
       // Both artifact pairs below are independent writes over inputs
       // cardUpdate/cardTakedown already checkpointed — overlap each
-      // pair (guide §2.6), publish latency = max, not sum.
-      def writeBoth(a: DataFrame, ap: String, b: DataFrame, bp: String): Unit = {
-        val fa = Future { a.write.parquet(ap) }
-        // Await in a finally (ADVICE r15): a failure writing `b` must
-        // not leave `a`'s write job running unobserved past the query's
-        // unwind; the await's own failure is subordinate to the primary.
-        try b.write.parquet(bp)
-        finally Await.ready(fa, Duration.Inf)
-        Await.result(fa, Duration.Inf)
-      }
+      // pair, publish latency = max, not sum.
+      def writeBoth(a: DataFrame, ap: String, b: DataFrame, bp: String): Unit =
+        Overlap(a.write.parquet(ap))(b.write.parquet(bp))
       val bf = cardFeatures(cardBatch(s, dir)).checkpointed()
       val (card1, sig1) = cardUpdate(
         s.read.parquet(s"$idx/sigstats").drop("bucket"),
@@ -613,16 +604,9 @@ object ReleaseQueries {
     val root = graft.TempDirs.fresh("q134")
     SigstatsStore.init(s, root, s"$idx/sigstats")
     s.read.parquet(s"$idx/card").write.parquet(s"$root/v0/card")
-    val batch = cardBatch(s, dir)
-    val src = s"$root/src"; val ckpt = s"$root/ckpt"
-    batch.repartition(nFiles).write.parquet(src)
     val committed = new java.util.concurrent.atomic.AtomicInteger(0)
-    val stream = s.readStream.schema(batch.schema)
-      .option("maxFilesPerTrigger", 1).parquet(src)
-    val query = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
+    Drain.split(root, cardBatch(s, dir), nFiles) {
+      _.stream().writeStream.foreachBatch { (b: DataFrame, batchId: Long) =>
         val v = batchId.toInt // replay-stable: the id IS the base version
         val bf = cardFeatures(b).checkpointed()
         val touched = SigstatsStore.touchedBuckets(bf)
@@ -632,28 +616,18 @@ object ReleaseQueries {
         // The two artifact write-backs are independent (disjoint paths,
         // shared inputs already checkpointed by cardUpdate): overlap
         // them so the card write's job back-fills the sigstats commit's
-        // stage tail (guide §2.6) — the batch's publish latency is the
-        // max of the two writes, not their sum. The manifest publish
-        // inside commit() still happens before this batch returns, so
-        // the replay contract (v+1 fully published or redone) holds.
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val cardWrite = Future {
-          card.write.mode("overwrite").parquet(s"$root/v${v + 1}/card")
-        }
-        // finally-await (ADVICE r15): a commit failure must not leave
-        // the card write running past this batch's unwind — the replay
-        // redoes both writes (overwrite mode), but only once no stale
-        // job is still holding the target.
-        try SigstatsStore.commit(s, root, v + 1, sig)
-        finally Await.ready(cardWrite, Duration.Inf)
-        Await.result(cardWrite, Duration.Inf)
+        // stage tail — the batch's publish latency is the max of the two
+        // writes, not their sum. The manifest publish inside commit()
+        // still happens before this batch returns, so the replay
+        // contract (v+1 fully published or redone) holds; a commit
+        // failure waits for the card write, so the replay's overwrite
+        // finds no stale job holding the target.
+        Overlap(card.write.mode("overwrite").parquet(s"$root/v${v + 1}/card"))(
+          SigstatsStore.commit(s, root, v + 1, sig))
         committed.updateAndGet(m => math.max(m, v + 1))
         if (v >= 1) SigstatsStore.retire(s, root, Seq(v, v + 1))
       }
-      .start()
-    query.awaitTermination()
+    }
     (root, committed.get())
   }
 

@@ -1,10 +1,11 @@
 package graft.operators
 
 import graft.Materialize.CheckpointOps
-import graft.{NamedQuery, Tables}
+import graft.{NamedQuery, Overlap, Tables}
 import graft.NamedQuery.{q, PresentationOps}
 import graft.functions.{Exact, ExactSql, VectorOps}
 import graft.pipeline.Embedder
+import graft.streaming.Drain
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -421,12 +422,8 @@ object SimilarityQueries {
       st0.cents.checkpointed(), st0.cb.checkpointed())
     val batch = ivfpqAppendBatch(s, dir)
     val root = graft.TempDirs.fresh("q124")
-    val src = s"$root/src"; val target = s"$root/target"; val ckpt = s"$root/ckpt"
-    batch.repartition(nFiles).write.parquet(src) // one file per micro-batch
-    graft.streaming.StreamScore.runAvailableNow(
-      s, src, batch.schema, target, ckpt, maxFilesPerTrigger = Some(1)) { b =>
-      ivfpqTriage(st, b)
-    }
+    val target = Drain.split(root, batch, nFiles)(
+      Drain.appendEach(Drain.targetDir(root))(ivfpqTriage(st, _)))
     s.read.parquet(target).orderBy("vec_id")
   }
 
@@ -2135,25 +2132,13 @@ object SimilarityQueries {
         .checkpointed(false)
       // The seed variant's EAGER sub-checkpoint is independent of the
       // Lloyd training: build it on a helper thread so its
-      // materialization job overlaps the training rounds (guide §2.6,
-      // the q125 pattern). Only `base` (already eagerly checkpointed)
-      // is shared with the helper; topx's lazy checkpoint sees its
-      // first action in the final union job, on one thread.
-      val fSeed = scala.concurrent.Future {
-        ivfpqNprobeCurve(base, seedCents, topx, "seed")
-      }(scala.concurrent.ExecutionContext.global)
-      val trained =
-        try ivfpqNprobeCurve(base, trainedCentsOf(), topx, "trained")
-        catch { case scala.util.control.NonFatal(primary) =>
-          try scala.concurrent.Await.ready(fSeed,
-            scala.concurrent.duration.Duration.Inf)
-          catch { case scala.util.control.NonFatal(_) => () }
-          throw primary
-        }
-      scala.concurrent.Await.result(fSeed,
-          scala.concurrent.duration.Duration.Inf)
-        .unionAll(trained)
-        .presented("variant", "nprobe")
+      // materialization job overlaps the training rounds (the q125
+      // pattern). Only `base` (already eagerly checkpointed) is shared
+      // with the helper; topx's lazy checkpoint sees its first action in
+      // the final union job, on one thread.
+      val (seed, trained) = Overlap(ivfpqNprobeCurve(base, seedCents, topx, "seed"))(
+        ivfpqNprobeCurve(base, trainedCentsOf(), topx, "trained"))
+      seed.unionAll(trained).presented("variant", "nprobe")
     },
 
     // ----- X2 composite (VERDICT r12 #7): the PqK CODEBOOK knob —
@@ -2205,24 +2190,11 @@ object SimilarityQueries {
         .select(col("query_id"), explode(col("tk.vec_id")).as("vec_id"))
         .checkpointed(false)
       // Seed-variant sub-checkpoint on a helper thread, overlapping the
-      // Lloyd training (guide §2.6 — see the q126 note).
-      val fSeed = scala.concurrent.Future {
-        ivfpqNprobeCurve(base, seedCents, topx, "seed", Pq8K)
-      }(scala.concurrent.ExecutionContext.global)
-      val trained =
-        try ivfpqNprobeCurve(base,
-          kmTrainedCents(base, KmTrainedUpdates).checkpointed(), topx,
-          "trained", Pq8K)
-        catch { case scala.util.control.NonFatal(primary) =>
-          try scala.concurrent.Await.ready(fSeed,
-            scala.concurrent.duration.Duration.Inf)
-          catch { case scala.util.control.NonFatal(_) => () }
-          throw primary
-        }
-      scala.concurrent.Await.result(fSeed,
-          scala.concurrent.duration.Duration.Inf)
-        .unionAll(trained)
-        .presented("variant", "nprobe")
+      // Lloyd training (see the q126 note).
+      val (seed, trained) = Overlap(ivfpqNprobeCurve(base, seedCents, topx, "seed", Pq8K))(
+        ivfpqNprobeCurve(base, kmTrainedCents(base, KmTrainedUpdates).checkpointed(),
+          topx, "trained", Pq8K))
+      seed.unionAll(trained).presented("variant", "nprobe")
     },
 
     // ----- X2 composite (VERDICT r13 #4): the REFINE-DEPTH knob —

@@ -4,6 +4,7 @@ import graft.{NamedQuery, Tables}
 import graft.Materialize.CheckpointOps
 import graft.NamedQuery.{q, PresentationOps}
 import graft.functions.{Exact, ExactSql, TextOps}
+import graft.streaming.Drain
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -908,12 +909,8 @@ object TextQueries {
     val merges = bpeMergesOf(s, dir)
     val batch = bpeAppendBatch(s, dir)
     val root = graft.TempDirs.fresh("q123")
-    val src = s"$root/src"; val target = s"$root/target"; val ckpt = s"$root/ckpt"
-    batch.repartition(nFiles).write.parquet(src)
-    graft.streaming.StreamScore.runAvailableNow(
-      s, src, batch.schema, target, ckpt, maxFilesPerTrigger = Some(1)) { b =>
-      bpeSegmentWith(merges, b)
-    }
+    val target = Drain.split(root, batch, nFiles)(
+      Drain.appendEach(Drain.targetDir(root))(bpeSegmentWith(merges, _)))
     s.read.parquet(target).orderBy("doc_id")
   }
 

@@ -301,8 +301,8 @@ case class PagesOffset(pages: Int) extends streaming.Offset {
   override def json(): String = s"""{"pages":$pages}"""
 }
 
-/** T1/T2 as a FIRST-CLASS streaming source: `spark.readStream
-  * .format("ercot-pages")` polls the paginated feed incrementally —
+/** T1/T2 as a FIRST-CLASS streaming source: a stream read of
+  * format "ercot-pages" polls the paginated feed incrementally —
   * the Spark-native restatement of the reference's scheduled
   * windowed-ingest driver loop (main.py:341-369), with exactly-once
   * delivery falling out of checkpointed page offsets instead of
@@ -320,7 +320,7 @@ case class PagesOffset(pages: Int) extends streaming.Offset {
   *    can no longer grow, which is what makes the page offset an
   *    exactly-once cursor over an append-only feed.
   *  - [[SupportsTriggerAvailableNow]] pins the bound once at prepare
-  *    time, so Trigger.AvailableNow drains what existed at start and
+  *    time, so an AvailableNow trigger drains what existed at start and
   *    stops even while the remote keeps appending. */
 class ErcotPagesMicroBatchStream(totalPages: () => Int, pagesPerTrigger: Int,
     pageSize: Int, startDateDays: Long, fields: Array[String],

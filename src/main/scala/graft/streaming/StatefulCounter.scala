@@ -4,7 +4,7 @@ import graft.Materialize.CheckpointOps
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
 /** Custom arbitrary-state streaming (SURVEY T6 extension; north-star
@@ -53,27 +53,21 @@ object StatefulCounter {
       targetDir: String,
       checkpointDir: String): Unit = {
     import spark.implicits._
-
-    val totals = spark.readStream.schema(schema).parquet(srcDir)
-      .as[EventIn]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[UserState, UserTotals](
-        OutputMode.Update, GroupStateTimeout.NoTimeout)(updateUser)
-
     // One-time layout check per stream start, not per micro-batch: the
     // probe reads the target table's footers, which is wasted driver I/O
     // repeated inside a long catch-up cycle's foreachBatch.
     migrateLegacyLayout(spark, targetDir)
-
-    val query = totals.toDF().writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeTotals(batch, targetDir, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+    Drain(spark, srcDir, schema, checkpointDir) { src =>
+      src.stream().as[EventIn]
+        .groupByKey(_.user_id)
+        .flatMapGroupsWithState[UserState, UserTotals](
+          OutputMode.Update, GroupStateTimeout.NoTimeout)(updateUser)
+        .toDF().writeStream
+        .outputMode("update")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          mergeTotals(batch, targetDir, batchId)
+        }
+    }
   }
 
   /** Hash-bucket fan-out of the totals table: the merge below reads and

@@ -5,7 +5,6 @@ import graft.operators.Upsert
 import graft.sinks.SinkOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** T6: the reference's incremental driver loop restated as Structured
@@ -17,61 +16,43 @@ import org.apache.spark.sql.types.StructType
   * 1-day tumbling window aggregate (update mode) → `foreachBatch`
   * last-write-wins upsert into a date-partitioned parquet table with
   * DYNAMIC partition overwrite — each micro-batch rewrites only the
-  * date partitions it touched. `Trigger.AvailableNow` drains whatever
-  * files exist and stops, which is exactly the reference's "catch up the
-  * configured range, then exit" semantics, restartable from the
-  * checkpoint like the reference is restartable from its date bookmark.
+  * date partitions it touched. The [[Drain]] takes whatever files exist
+  * and stops, which is exactly the reference's "catch up the configured
+  * range, then exit" semantics, restartable from the checkpoint like the
+  * reference is restartable from its date bookmark.
   */
 object StreamingUpsert {
 
   /** One catch-up cycle: stream every unprocessed file under `srcDir`,
     * aggregate per (day, event_type), and upsert into `targetDir`.
-    * Returns after the AvailableNow drain terminates.
-    *
-    * `maxFilesPerTrigger` is the source-side throughput ceiling (the
-    * reference's rate-limit analog, SURVEY T4): AvailableNow still
-    * drains everything, but in bounded micro-batches instead of one. */
+    * Returns after the drain terminates. Update mode emits re-aggregated
+    * keys in the data batch that changed them, so `statePartitions`
+    * (see [[Drain]]) loses nothing. */
   def runAvailableNow(
       spark: SparkSession,
       srcDir: String,
       schema: StructType,
       targetDir: String,
       checkpointDir: String,
-      maxFilesPerTrigger: Option[Int] = None,
-      statePartitions: Option[Int] = None,
-      noDataBatches: Boolean = true): Unit = {
-
-    // Update mode emits re-aggregated keys in the data batch that
-    // changed them, so a terminating drain can skip the trailing empty
-    // batch — rationale and store sizing documented on TunedSession.
-    val session = TunedSession(spark, statePartitions, noDataBatches)
-
-    val reader = session.readStream.schema(schema)
-    val stream = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(srcDir)
-
-    // Decimal-exact sum: streaming state merges in arrival order, so a
-    // double sum would be run-dependent in its last ulps; the decimal
-    // accumulator makes the restatement bit-equal to the batch answer.
-    val daily = stream
-      .withWatermark("ts", "2 days") // bounds agg state; 1-day overlap + slack
-      .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(graft.functions.Exact.Dec)).as("sum_dec"))
-      .select(col("w.start").cast("date").as("d"), col("event_type"),
-        col("n"), col("sum_dec").cast("double").as("sum_value"))
-
-    val query = daily.writeStream
-      .outputMode("update") // emit re-aggregated keys each batch; upsert dedups
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        upsertBatch(batch, targetDir, Seq("d", "event_type"), "d", batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-  }
+      statePartitions: Option[Int] = None): Unit =
+    Drain(spark, srcDir, schema, checkpointDir,
+        statePartitions = statePartitions) { src =>
+      // Decimal-exact sum: streaming state merges in arrival order, so a
+      // double sum would be run-dependent in its last ulps; the decimal
+      // accumulator makes the restatement bit-equal to the batch answer.
+      src.stream()
+        .withWatermark("ts", "2 days") // bounds agg state; 1-day overlap + slack
+        .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum(col("value").cast(graft.functions.Exact.Dec)).as("sum_dec"))
+        .select(col("w.start").cast("date").as("d"), col("event_type"),
+          col("n"), col("sum_dec").cast("double").as("sum_value"))
+        .writeStream
+        .outputMode("update") // emit re-aggregated keys each batch; upsert dedups
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          upsertBatch(batch, targetDir, Seq("d", "event_type"), "d", batchId)
+        }
+    }
 
   /** MERGE-without-Delta: last-write-wins the incoming batch against the
     * CURRENT content of only the date partitions it touches, then

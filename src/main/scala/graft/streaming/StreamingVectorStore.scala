@@ -1,8 +1,7 @@
 package graft.streaming
 
 import graft.pipeline.VectorStore
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming ingest into the REAL JDBC vector store: the reference's
@@ -28,17 +27,10 @@ object StreamingVectorStore {
       url: String,
       table: String,
       checkpoint: String,
-      maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val reader = spark.readStream.schema(schema)
-    val src = maxFilesPerTrigger.fold(reader)(n =>
-      reader.option("maxFilesPerTrigger", n)).parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+      maxFilesPerTrigger: Option[Int] = None): Unit =
+    Drain(spark, srcDir, schema, checkpoint, maxFilesPerTrigger) {
+      _.stream().writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
         VectorStore.store(batch, url, table); ()
       }
-      .start()
-    q.awaitTermination()
-  }
+    }
 }

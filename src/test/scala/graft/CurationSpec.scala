@@ -360,6 +360,7 @@ class CurationSpec extends AnyFunSuite {
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("y"),
         r.getAs[Double]("p"), r.getAs[Boolean]("admitted"))).sorted
     assert(streamed.nonEmpty)
+    StreamChecks.assertCrossedBoundary("q118") // the boundary happened
     val C = graft.operators.CurationQueries
     val w = spark.read.parquet(C.qcModelPrepared(spark, dir)).collect()
       .map(r => r.getAs[Int]("b") -> new JDec(r.getAs[String]("w"))).toMap

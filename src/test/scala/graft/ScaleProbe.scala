@@ -264,10 +264,11 @@ object ScaleProbe {
     def floor(nFiles: Int): Double = {
       val root = TempDirs.fresh("backlog_floor")
       val batch = spark.range(nFiles.toLong).toDF("doc_id")
-      batch.repartition(nFiles).write.parquet(s"$root/src")
+      batch.repartition(nFiles).write.parquet(streaming.Drain.srcDir(root))
       val t0 = System.nanoTime()
-      streaming.StreamScore.runAvailableNow(spark, s"$root/src", batch.schema,
-        s"$root/t", s"$root/c", maxFilesPerTrigger = Some(1))(b => b)
+      streaming.Drain(spark, streaming.Drain.srcDir(root), batch.schema,
+        streaming.Drain.checkpointDir(root), maxFilesPerTrigger = Some(1))(
+        streaming.Drain.appendEach(streaming.Drain.targetDir(root))(b => b))
       val sec = (System.nanoTime() - t0) / 1e9
       collect()
       sec
@@ -530,8 +531,8 @@ object ScaleProbe {
     val knob = c.meter.rows {
       val root = TempDirs.fresh("sprobe53")
       streaming.StreamIntervalJoin.runAvailableNow(c.spark, src,
-        streaming.NormalizedEvents.schema, s"$root/t", s"$root/c",
-        statePartitions = Some(4 * Copies), noDataBatches = false)
+        streaming.NormalizedEvents.schema, s"$root/t", s"$root/c", "inner",
+        statePartitions = Some(4 * Copies))
       c.spark.read.parquet(s"$root/t")
     }
     (("copies" -> Copies) +: c.versions, rows,

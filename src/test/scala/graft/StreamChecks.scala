@@ -2,14 +2,13 @@ package graft
 
 import org.scalatest.Assertions._
 
-/** Shared micro-batch boundary inspection for the foreachBatch drain
-  * queries (q118/q120/q123/q124 and kin): AvailableNow leaves one
-  * commit file per executed micro-batch in the checkpoint, and the
+/** Shared micro-batch boundary inspection for the queries that drain
+  * through `Drain.split` (q71/q118/q120/q123/q124): AvailableNow leaves
+  * one commit file per executed micro-batch in the checkpoint, and the
   * source must hold ≥2 non-empty parquet part files drained at
   * maxFilesPerTrigger=1 — together they OBSERVE (not assume) that the
-  * stream-≡-batch equality really spanned a boundary. ONE definition
-  * so a Spark checkpoint-layout change is fixed in one place, not
-  * three (ADVICE r11 follow-through).
+  * stream-≡-batch equality really spanned a boundary. The paths come
+  * from `Drain`'s scratch layout.
   */
 object StreamChecks {
 
@@ -18,10 +17,10 @@ object StreamChecks {
   def assertCrossedBoundary(label: String): Unit = {
     val root = TempDirs.current(label).getOrElse(
       fail(s"$label left no scratch root to inspect"))
-    val commits = Option(new java.io.File(s"$root/ckpt/commits").listFiles())
+    val commits = Option(new java.io.File(streaming.Drain.commitsDir(root)).listFiles())
       .getOrElse(Array.empty).count(_.getName.forall(_.isDigit))
     assert(commits >= 2, s"expected >=2 committed micro-batches, saw $commits")
-    val srcParts = Option(new java.io.File(s"$root/src").listFiles())
+    val srcParts = Option(new java.io.File(streaming.Drain.srcDir(root)).listFiles())
       .getOrElse(Array.empty)
       .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
     assert(srcParts.count(_.length > 0) >= 2,

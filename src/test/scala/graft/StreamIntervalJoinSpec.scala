@@ -26,7 +26,7 @@ class StreamIntervalJoinSpec extends AnyFunSuite {
       (22L, 2L, "click", ts("2024-01-02 09:30:00")))    // other user
       .toDF("event_id", "user_id", "event_type", "ts")
     cycle1.write.mode("append").parquet(src)
-    StreamIntervalJoin.runAvailableNow(spark, src, cycle1.schema, target, ckpt)
+    StreamIntervalJoin.runAvailableNow(spark, src, cycle1.schema, target, ckpt, "inner")
 
     val after1 = spark.read.parquet(target)
       .select("p_event_id", "c_event_id").as[(Long, Long)].collect().toSet
@@ -39,7 +39,7 @@ class StreamIntervalJoinSpec extends AnyFunSuite {
       (11L, 1L, "purchase", ts("2024-01-02 12:00:00")))
       .toDF("event_id", "user_id", "event_type", "ts")
       .write.mode("append").parquet(src)
-    StreamIntervalJoin.runAvailableNow(spark, src, cycle1.schema, target, ckpt)
+    StreamIntervalJoin.runAvailableNow(spark, src, cycle1.schema, target, ckpt, "inner")
 
     val after2 = spark.read.parquet(target)
       .select("p_event_id", "c_event_id").as[(Long, Long)].collect().toList
@@ -60,8 +60,8 @@ class StreamIntervalJoinSpec extends AnyFunSuite {
       (11L, 2L, "purchase", ts("2024-01-02 11:00:00")))  // NO click in window
       .toDF("event_id", "user_id", "event_type", "ts")
     cycle1.write.mode("append").parquet(src)
-    StreamIntervalJoin.runLeftOuterAvailableNow(
-      spark, src, cycle1.schema, target, ckpt)
+    StreamIntervalJoin.runAvailableNow(
+      spark, src, cycle1.schema, target, ckpt, "left_outer")
 
     // The unmatched purchase must NOT have emitted yet: the watermark
     // hasn't passed its window, so "no conversion" is still "not yet".
@@ -79,8 +79,8 @@ class StreamIntervalJoinSpec extends AnyFunSuite {
         .write.mode("append").parquet(src)
     flushFile(-1L, -2L, "2024-03-01 00:00:00")
     flushFile(-3L, -4L, "2024-03-02 00:00:00")
-    StreamIntervalJoin.runLeftOuterAvailableNow(
-      spark, src, cycle1.schema, target, ckpt, maxFilesPerTrigger = Some(1))
+    StreamIntervalJoin.runAvailableNow(
+      spark, src, cycle1.schema, target, ckpt, "left_outer", maxFilesPerTrigger = Some(1))
 
     val after2 = spark.read.parquet(target)
       .filter($"p_event_id" >= 0) // synthetic flush rows are harness, not data
@@ -122,10 +122,9 @@ class StreamIntervalJoinSpec extends AnyFunSuite {
     writeDelivery(flush(-1L, -2L, "2024-03-01 00:00:00"), "flush-01", t0 + 60000L)
     writeDelivery(flush(-3L, -4L, "2024-03-02 00:00:00"), "flush-02", t0 + 120000L)
 
-    StreamIntervalJoin.runLeftOuterAvailableNow(
-      spark, src, delivery.schema, target, ckpt,
-      statePartitions = Some(4), maxFilesPerTrigger = Some(2),
-      noDataBatches = false)
+    StreamIntervalJoin.runAvailableNow(
+      spark, src, delivery.schema, target, ckpt, "left_outer",
+      statePartitions = Some(4), maxFilesPerTrigger = Some(2))
 
     val got = spark.read.parquet(target)
       .filter($"p_event_id" >= 0)
