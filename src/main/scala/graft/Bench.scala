@@ -100,6 +100,13 @@ object Bench {
     // be data-processing cost. The warm pass is identical code at
     // sf0.001 — openly part of the harness, not a hidden cache of the
     // measured data.
+    // Invariant this relies on: the generated-class cache holds a FULL
+    // pass (`Tables.CodegenCacheEntries`, set in `Tables.configure`).
+    // One 136-query pass needs 2,970 entries. At Spark's default cap of
+    // 100 the LRU evicted every class before its next use: a measured
+    // pass at sf0.001 recompiled 5,005 classes; with the cap and
+    // `Tables.shareCompiledCode` it compiles 4. `codegen_compiles` in the
+    // record shows what a pass still compiles.
     // Skip (don't abort) when the small SF isn't generated on this host —
     // the measured pass then absorbs codegen compile, which is noisier
     // but still a complete record.
@@ -135,9 +142,10 @@ object Bench {
     // count-only plan. Listener events are async; drain before each
     // snapshot so the previous query's shuffle bytes can't bleed in.
     def measure(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Double, Option[String]) = {
+        : (Double, Double, Long, Option[String]) = {
       org.apache.spark.GraftSpark.drainListeners(spark.sparkContext)
       val shuffle0 = shuffleBytes.get()
+      val compiles0 = Tables.codegenCompiles()
       val t0 = System.nanoTime()
       val err =
         try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); None }
@@ -148,6 +156,7 @@ object Bench {
       val elapsed = (System.nanoTime() - t0) / 1e9
       org.apache.spark.GraftSpark.drainListeners(spark.sparkContext)
       val shuffleMb = (shuffleBytes.get() - shuffle0) / 1048576.0
+      val compiles = Tables.codegenCompiles() - compiles0
       // Release this query's localCheckpoint blocks before the next one
       // runs: 80+ queries' worth of retained checkpoint storage otherwise
       // accumulates block-manager pressure that inflates LATER queries'
@@ -155,7 +164,7 @@ object Bench {
       // storage after materialization changes nothing semantically —
       // each query's lifetime ends at its noop save.
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      (elapsed, shuffleMb, err)
+      (elapsed, shuffleMb, compiles, err)
     }
     // Host-calibration workload (definitions; see the artifact scaladoc
     // comment below for why): a fixed deterministic 64-bit mix over a
@@ -232,14 +241,14 @@ object Bench {
     var sinceGc = 0
     calibSample()
     val firstPass = selected.map { case (name, fn) =>
-      val (elapsed, shuffleMb, err) = measure(name, fn)
+      val (elapsed, shuffleMb, compiles, err) = measure(name, fn)
       // Shuffle files live until the ContextCleaner sees their
       // dependencies GC'd; across ~100 queries that is tens of GB of
       // dead spill the OS page cache keeps paying for. A periodic GC
       // nudge lets the cleaner actually reclaim them mid-suite.
       sinceGc += 1
       if (sinceGc >= 15) { sinceGc = 0; System.gc(); calibSample() }
-      (name, elapsed, shuffleMb, err)
+      (name, elapsed, shuffleMb, compiles, err)
     }
     // Second pass over the slowest tail: whatever session-lifetime state
     // still accumulates despite the caps above inflates a first-pass
@@ -255,29 +264,34 @@ object Bench {
     // like any batch query.
     val remeasureN = 10
     val remeasured = firstPass
-      .filter { case (_, _, _, err) => err.isEmpty }
+      .filter { case (_, _, _, _, err) => err.isEmpty }
       .sortBy(-_._2).take(remeasureN).map(_._1).toSet
     val secondPass: Map[String, Double] = {
       System.gc() // start the re-pass from a reclaimed heap
-      firstPass.collect { case (name, _, _, _) if remeasured(name) =>
+      firstPass.collect { case (name, _, _, _, _) if remeasured(name) =>
         // A FAILED re-run must not contribute its time-to-failure: the
         // artifact's contract is that a timing with no error entry is a
         // completed materialization, so only an error-free second
         // reading may be min'd in.
         name -> measure(name, SparkEntry.queries(name))
-      }.collect { case (name, (t, _, None)) => name -> t }.toMap
+      }.collect { case (name, (t, _, _, None)) => name -> t }.toMap
     }
-    val results = firstPass.map { case (name, elapsed, shuffleMb, err) =>
-      (name, secondPass.get(name).fold(elapsed)(math.min(elapsed, _)), shuffleMb, err)
+    val results = firstPass.map { case (name, elapsed, shuffleMb, compiles, err) =>
+      (name, secondPass.get(name).fold(elapsed)(math.min(elapsed, _)), shuffleMb, compiles, err)
     }
-    val qs = results.map { case (k, v, _, _) => s"\"" + k + "\":" + f3(v) }
+    val qs = results.map { case (k, v, _, _, _) => s"\"" + k + "\":" + f3(v) }
       .mkString("{", ",", "}")
-    val shuffles = results.map { case (k, _, mb, _) =>
+    val shuffles = results.map { case (k, _, mb, _, _) =>
       s"\"" + k + "\":" + String.format(java.util.Locale.ROOT, "%.2f", Double.box(mb))
     }.mkString("{", ",", "}")
+    // Classes compiled by the first measured pass, per query: code the
+    // warm pass did not leave in the cache. A jump across the board is a
+    // cache regression.
+    val compiled = results.map { case (k, _, _, n, _) => s"\"" + k + "\":" + n }
+      .mkString("{", ",", "}")
     // Failed queries keep their elapsed time but are flagged explicitly —
     // a timing with no error entry is a COMPLETED materialization.
-    val errs = results.collect { case (k, _, _, Some(m)) =>
+    val errs = results.collect { case (k, _, _, _, Some(m)) =>
       "\"" + k + "\":\"" + jstr(m) + "\""
     }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
@@ -313,7 +327,7 @@ object Bench {
     }
     // Transparency record for the min-of-passes tail: both readings, so
     // the artifact shows HOW noisy the first pass was, not just the min.
-    val passes = firstPass.collect { case (name, e1, _, _) if secondPass.contains(name) =>
+    val passes = firstPass.collect { case (name, e1, _, _, _) if secondPass.contains(name) =>
       s"\"" + name + "\":[" + f3(e1) + "," + f3(secondPass(name)) + "]"
     }.mkString("{", ",", "}")
     // A compact headline line FIRST: r5's driver tail-capture truncated
@@ -420,7 +434,7 @@ object Bench {
       "the pipeline code being byte-identical between those records"
     val meta = s""""spark_version":"${spark.version}","bench_pass":"$passLabel","entry_pipeline_passes":${entryPasses.map(f3).mkString("[", ",", "]")},"entry_pipeline_note":"$entryNote","timing_rule":"min of error-free passes (tail re-measured once; both readings in remeasured_passes); shuffle_mb always from first pass; calibrated_total = total x median(nt samples)/ref, suppressed (null) when contended",$calibNote$calib"""
     val summary = s"""{"metric":"total","value":${f3(total)},"unit":"sec","calibrated_total":$calibratedJson,"contended":$contended,"n_queries":${results.size},"avg_sec_per_query":${f3(avg)},"entry_pipeline_sec":${f3(entrySec)},"spark_version":"${spark.version}","sf":"$sfDir"}"""
-    val json = s"""{"metric":"total","value":${f3(total)},"unit":"sec","calibrated_total":$calibratedJson,"contended":$contended,"n_queries":${results.size},"avg_sec_per_query":${f3(avg)},"entry_pipeline_sec":${f3(entrySec)},$meta,"queries":$qs,"shuffle_mb":$shuffles,"errors":$errs,"remeasured_passes":$passes,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":${f3(total)},"unit":"sec","calibrated_total":$calibratedJson,"contended":$contended,"n_queries":${results.size},"avg_sec_per_query":${f3(avg)},"entry_pipeline_sec":${f3(entrySec)},$meta,"queries":$qs,"shuffle_mb":$shuffles,"codegen_compiles":$compiled,"errors":$errs,"remeasured_passes":$passes,"sf":"$sfDir"}"""
     // Stdout AND a file: the driver's tail-capture truncated the r3
     // artifact mid-JSON; the file is the complete record either way.
     // The file defaults to SCRATCH, not the repo root (VERDICT r13 #5):

@@ -28,8 +28,29 @@ object Tables {
     * `load` below adapts to whatever type the reader actually produced.
     * Also registers graft's custom SQL functions (cosine_sim) — the
     * FunctionRegistry path a `spark.sql.extensions=graft.plans.
-    * GraftExtensions` deployment gets automatically. */
+    * GraftExtensions` deployment gets automatically.
+    *
+    * Sizes Spark's generated-class cache to [[CodegenCacheEntries]].
+    * Ordering invariant: `CodeGenerator` reads
+    * `spark.sql.codegen.cache.maxEntries` ONCE, when the JVM first
+    * generates code, so this must run before the first query; a later
+    * call (or a later session) has no effect on the cap. The conf is
+    * static, which `RuntimeConfig.set` rejects, hence `sessionState.conf`.
+    * The cache is an LRU keyed on (thread context class loader, code
+    * text); in `local[N]` the driver and the executor tasks run under
+    * different loaders, so every class takes TWO entries. At Spark's
+    * default of 100 the working set thrashes: one perfbench `suite` pass
+    * needs ~181 entries (q132 141, q91 17, q54 12, q26 11) and, cycled in
+    * the same order every pass, an LRU never hits, so each pass
+    * recompiled ~180 classes; one 136-query pass needs 2,970 entries, and
+    * the second of two sf0.001 passes in one JVM compiled 5,005 classes
+    * (317 with the cap, 4 with [[shareCompiledCode]] as well). Janino was
+    * 25% of Java CPU samples over 23 q132 runs. Measured cost: ~25 KB
+    * heap per cached class. */
   def configure(spark: SparkSession): Unit = {
+    spark.sessionState.conf.setConfString(
+      "spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+    shareCompiledCode(spark)
     try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     catch { case scala.util.control.NonFatal(_) => () }
     // AQE coalesce floor: Spark's stock 1 MB. Rejected alternative
@@ -41,6 +62,34 @@ object Tables {
     // per-stage parallelism, and even q59 was +1.3 s in-suite.
     graft.plans.GraftExtensions.install(spark)
   }
+
+  /** Generated-class cache cap: the smallest power of two above one full
+    * 136-query pass (2,970 entries) plus what a pass cannot reuse (317
+    * classes without [[shareCompiledCode]]). perfbench holds ~200-270. */
+  val CodegenCacheEntries = 4096
+
+  /** Session settings under which a repeat of the same plan hits the
+    * generated-class cache instead of compiling again; `configure` applies
+    * them, and a `newSession()` clone (which starts from Spark's defaults)
+    * must apply them again, before its first job (a session reads the
+    * isolation setting once, at first use).
+    *  - No codegen stage id in the class name. Under AQE a stage's id
+    *    varies from run to run, so the same stage got a new name, hence
+    *    new code text, on most runs (q132 at sf0.001: 4-10 of its 141
+    *    classes per repeat).
+    *  - No per-session artifact class loader on the executors. Every
+    *    streaming query runs on its own `cloneSession()`, whose new session
+    *    id gave its tasks a new loader, so each drain recompiled every
+    *    task-side class (q124 52 classes per run, q54 5). graft adds no
+    *    session artifacts, so the isolation bought nothing. */
+  def shareCompiledCode(spark: SparkSession): Unit = {
+    spark.conf.set("spark.sql.codegen.useIdInClassName", false)
+    spark.conf.set("spark.sql.artifact.isolation.enabled", false)
+  }
+
+  /** Classes this JVM has compiled so far (cache hits do not count). */
+  def codegenCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = name match {
     case "events" =>

@@ -22,6 +22,10 @@ import org.apache.spark.sql.types.StructType
   * session with that many shards and with no trailing empty
   * micro-batch (`noDataMicroBatches` off); a drain without it runs on
   * the caller's session unchanged. The caller's conf is never touched.
+  * The clone starts from Spark's defaults, so it re-applies
+  * `Tables.shareCompiledCode`: Spark clones the session again for every
+  * streaming query, and without that setting each clone's tasks got a new
+  * class loader and recompiled every class (q124 52, q54 5 per run).
   *
   * Invariant for `statePartitions`: skipping the empty batch is safe
   * only when nothing relies on post-drain eviction output. The
@@ -58,6 +62,7 @@ object Drain {
       sink: Source => DataStreamWriter[Row]): Unit = {
     val session = statePartitions.fold(spark) { n =>
       val s = spark.newSession()
+      graft.Tables.shareCompiledCode(s)
       s.conf.set("spark.sql.shuffle.partitions", n)
       s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", false)
       s

@@ -36,15 +36,17 @@ object StageProf {
     (1 to passes).foreach { p =>
       org.apache.spark.GraftSpark.drainListeners(spark.sparkContext)
       stages.clear()
+      val compiles0 = Tables.codegenCompiles()
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.mode("overwrite").format("noop").save()
       total = (System.nanoTime() - t0) / 1e9
+      val compiles = Tables.codegenCompiles() - compiles0
       org.apache.spark.GraftSpark.drainListeners(spark.sparkContext)
       val wallSum = stages.map(_._3).sum / 1000.0
       val runSum = stages.map(_._4).sum / 1000.0
       println(f"PASS $p TOTAL $total%.2f s over ${stages.size} stages; " +
         f"stage-wall sum $wallSum%.2f s (driver gap ${total - wallSum}%.2f s); " +
-        f"taskRun sum $runSum%.2f s")
+        f"taskRun sum $runSum%.2f s; $compiles classes compiled")
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
     }
     stages.sortBy(-_._4).take(20).foreach { case (id, name, wall, run, sb, nt) =>
