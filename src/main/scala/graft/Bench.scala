@@ -1,6 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** One measured query: seconds (min of passes once the tail is
+    * re-measured); shuffle MB, compiled classes and started jobs of the
+    * first pass; the error that ended it, if any. */
+  private final case class Measured(
+      sec: Double, shuffleMb: Double, compiles: Long, jobs: Long, err: Option[String])
+
   /** Locale.ROOT 3-decimal doubles: de_DE comma separators are invalid
     * JSON, and full precision bloated r5's record past the tail a
     * last-line reader captures. */
@@ -18,11 +24,15 @@ object Bench {
     // Queries run sequentially, so a before/after snapshot attributes
     // bytes to the query in between — the judge-readable record of how
     // much data each plan actually moves (THE scale-limiting resource).
+    // Jobs started, attributed the same way (ROADMAP D2's job count).
     val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
+    val jobsStarted = new java.util.concurrent.atomic.AtomicLong(0L)
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(
           sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
         shuffleBytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobsStarted.incrementAndGet()
     })
     // Warmup: touch every table + exercise shuffle/codegen/sink paths
     // once so the first measured query doesn't absorb JVM/session
@@ -142,9 +152,10 @@ object Bench {
     // count-only plan. Listener events are async; drain before each
     // snapshot so the previous query's shuffle bytes can't bleed in.
     def measure(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Double, Long, Option[String]) = {
+        : Measured = {
       org.apache.spark.GraftSpark.drainListeners(spark.sparkContext)
       val shuffle0 = shuffleBytes.get()
+      val jobs0 = jobsStarted.get()
       val compiles0 = Tables.codegenCompiles()
       val t0 = System.nanoTime()
       val err =
@@ -156,6 +167,7 @@ object Bench {
       val elapsed = (System.nanoTime() - t0) / 1e9
       org.apache.spark.GraftSpark.drainListeners(spark.sparkContext)
       val shuffleMb = (shuffleBytes.get() - shuffle0) / 1048576.0
+      val jobs = jobsStarted.get() - jobs0
       val compiles = Tables.codegenCompiles() - compiles0
       // Release this query's localCheckpoint blocks before the next one
       // runs: 80+ queries' worth of retained checkpoint storage otherwise
@@ -164,7 +176,7 @@ object Bench {
       // storage after materialization changes nothing semantically —
       // each query's lifetime ends at its noop save.
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      (elapsed, shuffleMb, compiles, err)
+      Measured(elapsed, shuffleMb, compiles, jobs, err)
     }
     // Host-calibration workload (definitions; see the artifact scaladoc
     // comment below for why): a fixed deterministic 64-bit mix over a
@@ -241,14 +253,14 @@ object Bench {
     var sinceGc = 0
     calibSample()
     val firstPass = selected.map { case (name, fn) =>
-      val (elapsed, shuffleMb, compiles, err) = measure(name, fn)
+      val m = measure(name, fn)
       // Shuffle files live until the ContextCleaner sees their
       // dependencies GC'd; across ~100 queries that is tens of GB of
       // dead spill the OS page cache keeps paying for. A periodic GC
       // nudge lets the cleaner actually reclaim them mid-suite.
       sinceGc += 1
       if (sinceGc >= 15) { sinceGc = 0; System.gc(); calibSample() }
-      (name, elapsed, shuffleMb, compiles, err)
+      name -> m
     }
     // Second pass over the slowest tail: whatever session-lifetime state
     // still accumulates despite the caps above inflates a first-pass
@@ -264,37 +276,40 @@ object Bench {
     // like any batch query.
     val remeasureN = 10
     val remeasured = firstPass
-      .filter { case (_, _, _, _, err) => err.isEmpty }
-      .sortBy(-_._2).take(remeasureN).map(_._1).toSet
+      .filter(_._2.err.isEmpty)
+      .sortBy(-_._2.sec).take(remeasureN).map(_._1).toSet
     val secondPass: Map[String, Double] = {
       System.gc() // start the re-pass from a reclaimed heap
-      firstPass.collect { case (name, _, _, _, _) if remeasured(name) =>
+      firstPass.collect { case (name, _) if remeasured(name) =>
         // A FAILED re-run must not contribute its time-to-failure: the
         // artifact's contract is that a timing with no error entry is a
         // completed materialization, so only an error-free second
         // reading may be min'd in.
         name -> measure(name, SparkEntry.queries(name))
-      }.collect { case (name, (t, _, _, None)) => name -> t }.toMap
+      }.collect { case (name, m) if m.err.isEmpty => name -> m.sec }.toMap
     }
-    val results = firstPass.map { case (name, elapsed, shuffleMb, compiles, err) =>
-      (name, secondPass.get(name).fold(elapsed)(math.min(elapsed, _)), shuffleMb, compiles, err)
+    val results = firstPass.map { case (name, m) =>
+      name -> secondPass.get(name).fold(m)(t => m.copy(sec = math.min(m.sec, t)))
     }
-    val qs = results.map { case (k, v, _, _, _) => s"\"" + k + "\":" + f3(v) }
+    val qs = results.map { case (k, m) => s"\"" + k + "\":" + f3(m.sec) }
       .mkString("{", ",", "}")
-    val shuffles = results.map { case (k, _, mb, _, _) =>
-      s"\"" + k + "\":" + String.format(java.util.Locale.ROOT, "%.2f", Double.box(mb))
+    val shuffles = results.map { case (k, m) =>
+      s"\"" + k + "\":" + String.format(java.util.Locale.ROOT, "%.2f", Double.box(m.shuffleMb))
     }.mkString("{", ",", "}")
     // Classes compiled by the first measured pass, per query: code the
     // warm pass did not leave in the cache. A jump across the board is a
     // cache regression.
-    val compiled = results.map { case (k, _, _, n, _) => s"\"" + k + "\":" + n }
+    val compiled = results.map { case (k, m) => s"\"" + k + "\":" + m.compiles }
+      .mkString("{", ",", "}")
+    // Spark jobs the first measured pass started, per query.
+    val jobs = results.map { case (k, m) => s"\"" + k + "\":" + m.jobs }
       .mkString("{", ",", "}")
     // Failed queries keep their elapsed time but are flagged explicitly —
     // a timing with no error entry is a COMPLETED materialization.
-    val errs = results.collect { case (k, _, _, _, Some(m)) =>
-      "\"" + k + "\":\"" + jstr(m) + "\""
+    val errs = results.collect { case (k, Measured(_, _, _, _, Some(e))) =>
+      "\"" + k + "\":\"" + jstr(e) + "\""
     }.mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    val total = results.map(_._2.sec).sum
     // n_queries/avg keep totals comparable across rounds as the query
     // count grows (r2: 50 queries, r3: 75).
     val avg = if (results.nonEmpty) total / results.size else 0.0
@@ -327,8 +342,8 @@ object Bench {
     }
     // Transparency record for the min-of-passes tail: both readings, so
     // the artifact shows HOW noisy the first pass was, not just the min.
-    val passes = firstPass.collect { case (name, e1, _, _, _) if secondPass.contains(name) =>
-      s"\"" + name + "\":[" + f3(e1) + "," + f3(secondPass(name)) + "]"
+    val passes = firstPass.collect { case (name, m) if secondPass.contains(name) =>
+      s"\"" + name + "\":[" + f3(m.sec) + "," + f3(secondPass(name)) + "]"
     }.mkString("{", ",", "}")
     // A compact headline line FIRST: r5's driver tail-capture truncated
     // the full record mid-map, leaving nothing parseable. The short line
@@ -434,7 +449,7 @@ object Bench {
       "the pipeline code being byte-identical between those records"
     val meta = s""""spark_version":"${spark.version}","bench_pass":"$passLabel","entry_pipeline_passes":${entryPasses.map(f3).mkString("[", ",", "]")},"entry_pipeline_note":"$entryNote","timing_rule":"min of error-free passes (tail re-measured once; both readings in remeasured_passes); shuffle_mb always from first pass; calibrated_total = total x median(nt samples)/ref, suppressed (null) when contended",$calibNote$calib"""
     val summary = s"""{"metric":"total","value":${f3(total)},"unit":"sec","calibrated_total":$calibratedJson,"contended":$contended,"n_queries":${results.size},"avg_sec_per_query":${f3(avg)},"entry_pipeline_sec":${f3(entrySec)},"spark_version":"${spark.version}","sf":"$sfDir"}"""
-    val json = s"""{"metric":"total","value":${f3(total)},"unit":"sec","calibrated_total":$calibratedJson,"contended":$contended,"n_queries":${results.size},"avg_sec_per_query":${f3(avg)},"entry_pipeline_sec":${f3(entrySec)},$meta,"queries":$qs,"shuffle_mb":$shuffles,"codegen_compiles":$compiled,"errors":$errs,"remeasured_passes":$passes,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":${f3(total)},"unit":"sec","calibrated_total":$calibratedJson,"contended":$contended,"n_queries":${results.size},"avg_sec_per_query":${f3(avg)},"entry_pipeline_sec":${f3(entrySec)},$meta,"queries":$qs,"shuffle_mb":$shuffles,"codegen_compiles":$compiled,"jobs":$jobs,"errors":$errs,"remeasured_passes":$passes,"sf":"$sfDir"}"""
     // Stdout AND a file: the driver's tail-capture truncated the r3
     // artifact mid-JSON; the file is the complete record either way.
     // The file defaults to SCRATCH, not the repo root (VERDICT r13 #5):

@@ -91,6 +91,54 @@ object Tables {
   def codegenCompiles(): Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
+  /** Parquet schemas this JVM has inferred; the key is documented on [[load]]. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[SchemaKey, org.apache.spark.sql.types.StructType]()
+
+  private final case class SchemaKey(
+      path: String, listing: Seq[String], readerConf: Seq[(String, String)])
+
+  /** `spark.read.parquet(path)` with the schema inferred once per key (see
+    * [[load]]). Spark infers a parquet schema with a job of its own
+    * (`SchemaMergeUtils.mergeSchemasInParallel`: one stage, one task, a
+    * serialized Hadoop conf, no SQL execution id), even for one file with
+    * `mergeSchema` off, so every bare read cost one job. A warm load of
+    * sf0.01 `documents` took 66-77 ms process CPU (56-61 ms wall) bare
+    * and 10 ms (5 ms) with the schema supplied (4 cores, 300 loads, 2
+    * runs). The first read of a key still runs Spark's own inference, so
+    * no hand-written schema can drift from Spark's; later reads pass its
+    * result to `spark.read.schema` and start no job. The inference runs
+    * outside the map's lock (get, else infer, then `putIfAbsent`):
+    * `Overlap` branches load concurrently, and two first reads of one key
+    * at worst infer twice. For stable paths only (the tables, published
+    * [[graft.pipeline.PreparedArtifact]]s): a per-run scratch directory
+    * never repeats, and caching it would only grow the map. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val readerConf = spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }.sorted
+    val key = SchemaKey(path, graft.pipeline.PreparedArtifact.listing(spark, path), readerConf)
+    val known = schemas.get(key)
+    if (known != null) spark.read.schema(known).parquet(path)
+    else {
+      val df = spark.read.parquet(path)
+      schemas.putIfAbsent(key, df.schema)
+      df
+    }
+  }
+
+  /** Table `name` of `sfDir`, read through [[read]], so its schema is
+    * inferred once per JVM and key. Each part of the key rules out a
+    * stale schema:
+    *  - the path;
+    *  - its leaf-file listing (name, length, mtime; the one
+    *    [[graft.pipeline.PreparedArtifact.listing]] the artifact
+    *    fingerprints use): a table rewritten in place with another
+    *    schema is inferred again;
+    *  - the session's `spark.sql.parquet.*` and
+    *    `spark.sql.legacy.parquet.*` settings, sorted: inference reads
+    *    them (how timestamps and binary columns map), so a session that
+    *    sets one differently infers for itself. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = name match {
     case "events" =>
       // events.ts must come out timezone-naive micro-precision
@@ -104,7 +152,7 @@ object Tables {
       // (round-6 regression: 43 queries died on a stale BIGINT path).
       import org.apache.spark.sql.functions.{col, expr}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-      val raw = spark.read.parquet(s"$sfDir/$name.parquet")
+      val raw = read(spark, s"$sfDir/$name.parquet")
       raw.schema("ts").dataType match {
         case TimestampNTZType => raw
         case LongType =>
@@ -116,7 +164,7 @@ object Tables {
         case other => sys.error(
           s"events.ts: unexpected parquet-read type $other — extend Tables.load")
       }
-    case _ => spark.read.parquet(s"$sfDir/$name.parquet")
+    case _ => read(spark, s"$sfDir/$name.parquet")
   }
 
   /** Round-robin fan-out applied ONLY when the plan currently reads

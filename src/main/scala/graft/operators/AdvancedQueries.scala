@@ -243,7 +243,9 @@ object AdvancedQueries {
           .dropDuplicatesWithinWatermark("event_id")
           .writeStream.format("parquet").option("path", target)
       }
-      s.read.parquet(target)
+      // The drain wrote NormalizedEvents.schema: supplying it skips the
+      // schema-inference job a fresh directory would otherwise cost.
+      s.read.schema(NormalizedEvents.schema).parquet(target)
         .select("event_id", "user_id", "event_type", "value")
         .orderBy("event_id")
     },

@@ -287,7 +287,7 @@ object CurationQueries {
   private[graft] def qcStreamDrain(s: SparkSession, dir: String,
       nFiles: Int): DataFrame = {
     import java.math.{BigDecimal => JDec}
-    val w: Map[Int, JDec] = s.read.parquet(qcModelPrepared(s, dir))
+    val w: Map[Int, JDec] = Tables.read(s, qcModelPrepared(s, dir))
       .collect()
       .map(r => r.getAs[Int]("b") -> new JDec(r.getAs[String]("w")))
       .toMap
@@ -1174,7 +1174,7 @@ object CurationQueries {
       }) { (s, dir) =>
       import java.math.{BigDecimal => JDec}
       // The persisted model: ≤66 (bucket, weight) rows, read once.
-      val w: Map[Int, JDec] = s.read.parquet(qcModelPrepared(s, dir))
+      val w: Map[Int, JDec] = Tables.read(s, qcModelPrepared(s, dir))
         .collect()
         .map(r => r.getAs[Int]("b") -> new JDec(r.getAs[String]("w")))
         .toMap
@@ -1285,7 +1285,7 @@ object CurationQueries {
       // Stage 2: the persisted model gates admission (q116's path —
       // weights in the closure, no join). Checkpointed: three
       // downstream consumers (vocab build, billing stream, manifest).
-      val w: Map[Int, JDec] = s.read.parquet(qcModelPrepared(s, dir))
+      val w: Map[Int, JDec] = Tables.read(s, qcModelPrepared(s, dir))
         .collect()
         .map(r => r.getAs[Int]("b") -> new JDec(r.getAs[String]("w")))
         .toMap
@@ -1299,7 +1299,7 @@ object CurationQueries {
       // Stage 3: the persisted BPE merges bill the admitted docs
       // (q112's replay: 8 rules over the admitted set's vocab-sized
       // word table, then one broadcast seg join over the doc stream).
-      val merges = s.read.parquet(graft.operators.TextQueries.bpeMergesPrepared(s, dir))
+      val merges = Tables.read(s, graft.operators.TextQueries.bpeMergesPrepared(s, dir))
         .orderBy("step").collect()
         .map(r => (r.getAs[String]("lhs"), r.getAs[String]("rhs")))
       val words0 = adm
@@ -1473,7 +1473,7 @@ object CurationQueries {
         // audited from the PUBLISHED table (q122's discipline — the
         // reconciliation checks the rewrite, not re-derived arithmetic;
         // the leak check proves no removed vec_id survived).
-        s.read.parquet(graft.pipeline.VectorIndex.prepared(
+        Tables.read(s, graft.pipeline.VectorIndex.prepared(
             s, dir, SimilarityQueries.IvfCells))
           .filter(col("vec_id") % 37 =!= 0).write.parquet(s"$root/vec_index")
         // 2. The BPE merge table: RETRAIN on the survivors with the
@@ -1494,14 +1494,14 @@ object CurationQueries {
           .repartition(1).write.parquet(s"$root/qc_model")
       }
       // Audits read the PUBLISHED artifacts both threads wrote.
-      val vidx = s.read.parquet(graft.pipeline.VectorIndex.prepared(
+      val vidx = Tables.read(s, graft.pipeline.VectorIndex.prepared(
         s, dir, SimilarityQueries.IvfCells))
       val vpub = s.read.parquet(s"$root/vec_index")
       val vecAudit = item("vec_index_before", vidx)
         .unionAll(item("vec_index_removed", vidx.filter(col("vec_id") % 37 === 0)))
         .unionAll(item("vec_index_after", vpub))
         .unionAll(item("vec_index_leak", vpub.filter(col("vec_id") % 37 === 0)))
-      val oldRules = s.read.parquet(TextQueries.bpeMergesPrepared(s, dir))
+      val oldRules = Tables.read(s, TextQueries.bpeMergesPrepared(s, dir))
         .select(col("step"), col("lhs").as("olhs"), col("rhs").as("orhs"))
       val newRules = s.read.parquet(s"$root/bpe_merges")
       val bpeChanged = newRules.select(col("step"), col("lhs"), col("rhs"))
@@ -1509,7 +1509,7 @@ object CurationQueries {
         .filter(!(col("lhs") <=> col("olhs")) || !(col("rhs") <=> col("orhs")))
       val bpeAudit = item("bpe_rules_n", newRules)
         .unionAll(item("bpe_rules_changed", bpeChanged))
-      val oldW = s.read.parquet(qcModelPrepared(s, dir))
+      val oldW = Tables.read(s, qcModelPrepared(s, dir))
         .select(col("b"), col("w").cast(QcDec).as("ow"))
       val newW = s.read.parquet(s"$root/qc_model")
       val wChanged = newW.select(col("b"), col("w").cast(QcDec).as("nw"))

@@ -1146,8 +1146,8 @@ object DedupQueries {
            |SELECT item, n FROM (SELECT * FROM audit UNION ALL SELECT * FROM vcounts)
            |ORDER BY item""".stripMargin
       }) { (s, dir) =>
-      val idx = s.read.parquet(graft.pipeline.DedupIndex.prepared(s, dir))
-      val pq = s.read.parquet(
+      val idx = Tables.read(s, graft.pipeline.DedupIndex.prepared(s, dir))
+      val pq = Tables.read(s,
         graft.operators.SimilarityQueries.ivfPqIndexPrepared(s, dir))
       // Publish the post-takedown state of BOTH artifacts (production
       // rewrites them; readers must never see purged rows), then audit
@@ -1168,8 +1168,8 @@ object DedupQueries {
       val removed = Tables.load(s, dir, "documents")
         .select("doc_id", "text").filter(col("doc_id") % 37 === 0)
       val verdicts = graft.pipeline.DedupIndex
-        .triage(s, s"$root/index", graft.pipeline.DedupIndex.signatures(removed)
-          .checkpointed(false))
+        .triage(s.read.parquet(s"$root/index"),
+          graft.pipeline.DedupIndex.signatures(removed).checkpointed(false))
         .groupBy(col("verdict")).agg(count(lit(1)).as("n"))
         .select(concat(lit("retriage_"), col("verdict")).as("item"), col("n"))
       audit("dedup_index", idx, col("doc_id") % 37 === 0, s"$root/index")

@@ -361,9 +361,9 @@ object ReleaseQueries {
       // buckets the batch's own hashes touch — directory-level pruning
       // the FileScan shows as a partition filter.
       val touched = graft.pipeline.SigstatsStore.touchedBuckets(bf)
-      val sig = s.read.parquet(s"$idx/sigstats")
+      val sig = Tables.read(s, s"$idx/sigstats")
         .where(col("bucket").isin(touched: _*)).drop("bucket")
-      val (card, _) = cardUpdate(sig, s.read.parquet(s"$idx/card"), bf)
+      val (card, _) = cardUpdate(sig, Tables.read(s, s"$idx/card"), bf)
       card.presented("source", "lang")
     },
 
@@ -445,8 +445,8 @@ object ReleaseQueries {
         Overlap(a.write.parquet(ap))(b.write.parquet(bp))
       val bf = cardFeatures(cardBatch(s, dir)).checkpointed()
       val (card1, sig1) = cardUpdate(
-        s.read.parquet(s"$idx/sigstats").drop("bucket"),
-        s.read.parquet(s"$idx/card"), bf)
+        Tables.read(s, s"$idx/sigstats").drop("bucket"),
+        Tables.read(s, s"$idx/card"), bf)
       writeBoth(sig1, s"$root/appended/sigstats", card1, s"$root/appended/card")
       val union = docs(s, dir)
         .select(col("doc_id"), col("source"), col("lang"), col("n_chars"),
@@ -603,7 +603,7 @@ object ReleaseQueries {
     val idx = graft.pipeline.CardIndex.prepared(s, dir)
     val root = graft.TempDirs.fresh("q134")
     SigstatsStore.init(s, root, s"$idx/sigstats")
-    s.read.parquet(s"$idx/card").write.parquet(s"$root/v0/card")
+    Tables.read(s, s"$idx/card").write.parquet(s"$root/v0/card")
     val committed = new java.util.concurrent.atomic.AtomicInteger(0)
     Drain.split(root, cardBatch(s, dir), nFiles) {
       _.stream().writeStream.foreachBatch { (b: DataFrame, batchId: Long) =>

@@ -378,7 +378,7 @@ object SimilarityQueries {
 
   private[graft] def ivfpqAppendStatics(
       s: SparkSession, dir: String, cells: Int): IvfPqStatics = {
-    val idx = s.read.parquet(ivfPqIndexPrepared(s, dir, cells))
+    val idx = Tables.read(s, ivfPqIndexPrepared(s, dir, cells))
     val occ = idx.groupBy(col("cell_id")).agg(count(lit(1)).as("cell_n_index"))
     val base = emb(s, dir)
     val cents = base.filter(col("vec_id") < cells)
@@ -393,7 +393,7 @@ object SimilarityQueries {
       cells: Int): DataFrame = {
     import graft.pipeline.VectorIndex
     val indexPath = VectorIndex.prepared(s, dir, cells)
-    val occ = s.read.parquet(indexPath)
+    val occ = Tables.read(s, indexPath)
       .groupBy(col("cell_id")).agg(count(lit(1)).as("cell_n_index"))
     val base = emb(s, dir)
     val cents = VectorIndex.seedCentroids(base, cells)

@@ -959,7 +959,7 @@ object TextQueries {
 
   /** The persisted merge rules, read once (8 tiny rows → closure). */
   private[graft] def bpeMergesOf(s: SparkSession, dir: String): Array[(String, String)] =
-    s.read.parquet(bpeMergesPrepared(s, dir))
+    Tables.read(s, bpeMergesPrepared(s, dir))
       .orderBy("step").collect()
       .map(r => (r.getAs[String]("lhs"), r.getAs[String]("rhs")))
 

@@ -63,8 +63,12 @@ object DedupIndex {
   /** Triage a batch against the index: one row per batch doc with
     * verdict ∈ {exact_dup, near_dup, new} and the match count. The
     * passed `batchSigs` must come from [[signatures]] over the batch. */
-  def triage(spark: SparkSession, indexPath: String, batchSigs: DataFrame): DataFrame = {
-    val index = spark.read.parquet(indexPath)
+  def triage(spark: SparkSession, indexPath: String, batchSigs: DataFrame): DataFrame =
+    triage(graft.Tables.read(spark, indexPath), batchSigs)
+
+  /** [[triage]] against an index already read (a per-run scratch copy
+    * that the schema cache must not hold). */
+  def triage(index: DataFrame, batchSigs: DataFrame): DataFrame = {
     val exact = batchSigs.select(col("doc_id"), col("content_hash"))
       .join(index.select(col("content_hash")), "content_hash")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("exact_n"))

@@ -18,20 +18,32 @@ object PreparedArtifact {
   private val preparedPaths =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** Cache key = md5 over the source table's file listing (name,
-    * length, mtime) plus the dir path — NOT a hash of the dir string
-    * alone: regenerating the testdata changes the key, so a cached
-    * artifact can never be served against data it wasn't built from,
-    * and distinct dirs can't collide. The listing probe is one
-    * driver-side listStatus, cheap enough to pay on every call. */
+  /** Cache key = md5 over the source table's file [[listing]] plus the
+    * dir path — NOT a hash of the dir string alone: regenerating the
+    * testdata changes the key, so a cached artifact can never be served
+    * against data it wasn't built from, and distinct dirs can't collide.
+    * The listing probe is driver-side listStatus, cheap enough to pay on
+    * every call. */
   def fingerprint(spark: SparkSession, sfDir: String, table: String): String = {
-    val srcDir = new org.apache.hadoop.fs.Path(s"$sfDir/$table.parquet")
-    val srcFs = srcDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val listing = srcFs.listStatus(srcDir).toSeq
-      .map(s => s"${s.getPath.getName}|${s.getLen}|${s.getModificationTime}")
-      .sorted.mkString(s"$sfDir\n", "\n", "")
+    val text = listing(spark, s"$sfDir/$table.parquet").mkString(s"$sfDir\n", "\n", "")
     java.security.MessageDigest.getInstance("MD5")
-      .digest(listing.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      .digest(text.getBytes("UTF-8")).map("%02x".format(_)).mkString
+  }
+
+  /** Every leaf file under `path` (or `path` itself, when it is a file)
+    * as `name|length|mtime`, sorted; a name below a subdirectory keeps its
+    * relative path (`bucket=3/part-0.parquet`). A file rewritten, added
+    * or removed anywhere below `path` changes the listing. */
+  def listing(spark: SparkSession, path: String): Seq[String] = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def leaves(dir: org.apache.hadoop.fs.Path, prefix: String): Seq[String] =
+      fs.listStatus(dir).toSeq.flatMap { s =>
+        val name = prefix + s.getPath.getName
+        if (s.isDirectory) leaves(s.getPath, s"$name/")
+        else Seq(s"$name|${s.getLen}|${s.getModificationTime}")
+      }
+    leaves(root, "").sorted
   }
 
   /** Memoized within the JVM per `prefix_key`, reused across JVMs via
