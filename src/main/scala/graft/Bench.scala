@@ -210,8 +210,8 @@ object Bench {
     // end snapshot reflects the moment, not the contention the suite
     // actually ran under. The MEDIAN of interleaved samples is the
     // run's speed reference; calibrated_total normalizes the total to
-    // the round-8 committed record's host speed so cross-round
-    // comparisons cite one number (VERDICT r8 #5).
+    // a reference host speed at the same thread count (below), so
+    // comparisons across runs cite one number.
     val calibSamples = scala.collection.mutable.ArrayBuffer[Long]()
     // I/O calibration sample (VERDICT r11 #2): the splitmix64 workload is
     // CPU-only and missed a 2.4x FILESYSTEM-contention slowdown outright
@@ -364,20 +364,21 @@ object Bench {
     calibSample() // one final sample after the re-measure pass
     val ntSorted = calibSamples.sorted
     val ntMedian = ntSorted(ntSorted.size / 2)
-    // Reference point (re-stamped r10, VERDICT r9 #2): the IN-SUITE
-    // INTERLEAVED MEDIAN of a full 105-query run on this box —
-    // 5,203,252 ops/ms (samples 4.30-7.53M; raw total 89.0 s) — so both
-    // sides of the division now use the same sampling discipline.
-    // calibrated_total = total × median/ref expresses this run's total
-    // at that reference host speed: the one number to compare across
-    // rounds. Continuity: the retired r8 reference (e51ecb2's single
-    // end-of-run snapshot, 5,289,256 — a DIFFERENT protocol, the
-    // mismatch VERDICT r9 flagged) stays stamped in the artifact as
-    // ref_ops_per_ms_nt_r8; it sits within 1.65% of the new ref, so
-    // r8/r9 calibrated records remain comparable to ~2%.
-    val refNt = 5203252L
-    val refNtR8 = 5289256L
-    val calibratedTotal = total * ntMedian.toDouble / refNt
+    // Reference points: the IN-SUITE INTERLEAVED MEDIAN of ops_per_ms_nt
+    // on a quiet host, KEYED BY the thread count the samples ran at
+    // (threads_nt = defaultParallelism). The mix is per-thread CPU-bound,
+    // so a reference taken at another thread count scales the total by
+    // the thread ratio, not the host speed: the 32-thread reference read
+    // against 4-thread samples put every 4-core calibrated_total 7-9x
+    // low. A thread count with no reference publishes no calibrated total.
+    //  - 32 threads: 5,203,252 ops/ms over a full 105-query run
+    //    (samples 4.30-7.53M; raw total 89.0 s).
+    //  - 4 threads: 666,666 ops/ms over a quiet second sf0.001 pass of all
+    //    136 queries on a 4-core host (11 samples 567,375-888,888).
+    val threads = spark.sparkContext.defaultParallelism
+    val refNtByThreads = Map(32 -> 5203252L, 4 -> 666666L)
+    val refNt = refNtByThreads.get(threads)
+    val calibratedTotal = refNt.map(total * ntMedian.toDouble / _)
     // Spread = max/min of the interleaved samples (VERDICT r10 #8): a
     // quiet host sits well under ~3×; a larger spread means the suite
     // ran under shifting contention and per-query numbers from this
@@ -427,9 +428,12 @@ object Bench {
     // 2.4x I/O slowdown to 11% and a reader saw a phantom 3x regression.
     // Raw total + per-query min-of-passes + shuffle_mb remain — those are
     // the honest readings a contended host can still produce.
-    val calibratedJson = if (contended) "null" else f3(calibratedTotal)
+    val calibratedJson = calibratedTotal.filterNot(_ => contended).fold("null")(f3)
     val calibNote =
-      if (contended)
+      if (refNt.isEmpty)
+        "\"calibration_note\":\"no " + threads + "-thread reference: " +
+          "calibrated_total suppressed; read raw total + shuffle_mb only\","
+      else if (contended)
         "\"calibration_note\":\"contended host (cpu_spread " + f3(calibSpread) +
           ", io_spread " + f3(ioSpread) + ", io_median " + f3(ioMedian) +
           " MB/s vs ref " + f3(refIoMbS) +
@@ -440,14 +444,14 @@ object Bench {
     // which pass this artifact is so the protocol is visible in the
     // record itself, not just in the commit message.
     val passLabel = jstr(sys.env.getOrElse("SPARK_GRAFT_PASS_LABEL", "1/1"))
-    val calib = s""""host_calibration":{"workload":"splitmix64 mix, 20M iters/thread","ops_per_ms_1t":${opsPerMs(1)},"ops_per_ms_nt":$ntMedian,"ops_per_ms_nt_samples":${ntSorted.mkString("[", ",", "]")},"calibration_spread":${f3(calibSpread)},"io_workload":"32MiB fsync'd write to repo target (same ext4 as testdata)","io_mb_s_samples":${ioSorted.map(f3).mkString("[", ",", "]")},"io_mb_s_median":${f3(ioMedian)},"io_spread":${f3(ioSpread)},"ref_io_mb_s":${f3(refIoMbS)},"io_slow":$ioSlow,"contended":$contended,"ref_ops_per_ms_nt":$refNt,"ref_protocol":"r10 in-suite interleaved median (matched protocol)","ref_ops_per_ms_nt_r8":$refNtR8,"ref_r8_note":"retired end-of-run snapshot, within 1.65% of current ref","threads_nt":${spark.sparkContext.defaultParallelism},"checksum":${calibSink.get()}}"""
+    val calib = s""""host_calibration":{"workload":"splitmix64 mix, 20M iters/thread","ops_per_ms_1t":${opsPerMs(1)},"ops_per_ms_nt":$ntMedian,"ops_per_ms_nt_samples":${ntSorted.mkString("[", ",", "]")},"calibration_spread":${f3(calibSpread)},"io_workload":"32MiB fsync'd write to repo target (same ext4 as testdata)","io_mb_s_samples":${ioSorted.map(f3).mkString("[", ",", "]")},"io_mb_s_median":${f3(ioMedian)},"io_spread":${f3(ioSpread)},"ref_io_mb_s":${f3(refIoMbS)},"io_slow":$ioSlow,"contended":$contended,"ref_ops_per_ms_nt":${refNt.fold("null")(_.toString)},"ref_protocol":"in-suite interleaved median at threads_nt threads (matched protocol)","threads_nt":$threads,"checksum":${calibSink.get()}}"""
     val entryNote = "entry_pipeline_sec = min of 2 passes (both in " +
       "entry_pipeline_passes); pass 1 includes the plan's one-time driver " +
       "overhead (optimize + codegen + broadcast threads, ~2s of the ~3.4s " +
       "isolated total, stage sum only ~1.3s) — the r10->r11 2.47->4.77 " +
       "drift was this overhead under end-of-suite JVM state + host band, " +
       "the pipeline code being byte-identical between those records"
-    val meta = s""""spark_version":"${spark.version}","bench_pass":"$passLabel","entry_pipeline_passes":${entryPasses.map(f3).mkString("[", ",", "]")},"entry_pipeline_note":"$entryNote","timing_rule":"min of error-free passes (tail re-measured once; both readings in remeasured_passes); shuffle_mb always from first pass; calibrated_total = total x median(nt samples)/ref, suppressed (null) when contended",$calibNote$calib"""
+    val meta = s""""spark_version":"${spark.version}","bench_pass":"$passLabel","entry_pipeline_passes":${entryPasses.map(f3).mkString("[", ",", "]")},"entry_pipeline_note":"$entryNote","timing_rule":"min of error-free passes (tail re-measured once; both readings in remeasured_passes); shuffle_mb always from first pass; calibrated_total = total x median(nt samples)/ref at threads_nt, suppressed (null) when contended or when threads_nt has no ref",$calibNote$calib"""
     val summary = s"""{"metric":"total","value":${f3(total)},"unit":"sec","calibrated_total":$calibratedJson,"contended":$contended,"n_queries":${results.size},"avg_sec_per_query":${f3(avg)},"entry_pipeline_sec":${f3(entrySec)},"spark_version":"${spark.version}","sf":"$sfDir"}"""
     val json = s"""{"metric":"total","value":${f3(total)},"unit":"sec","calibrated_total":$calibratedJson,"contended":$contended,"n_queries":${results.size},"avg_sec_per_query":${f3(avg)},"entry_pipeline_sec":${f3(entrySec)},$meta,"queries":$qs,"shuffle_mb":$shuffles,"codegen_compiles":$compiled,"jobs":$jobs,"errors":$errs,"remeasured_passes":$passes,"sf":"$sfDir"}"""
     // Stdout AND a file: the driver's tail-capture truncated the r3

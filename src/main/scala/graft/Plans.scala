@@ -58,11 +58,11 @@ object Plans {
     "q133_card_on_append" -> "card-on-append: the PERSISTED sigstats/card tables arrive by parquet scan; the batch features are map-only; the sigstats probe is PARTITION-PRUNED to the hash buckets the batch touches (bucket=k directory pruning visible in the FileScan, r15) and probes the BROADCAST batch-hash frame (result <= batch-sized, then re-broadcast); every later join/aggregate is batch- or card-sized; shares/means recompute from exact integer sums (r12)",
     "q134_stream_card_maintain" -> "streaming card maintenance: q133's cardUpdate per micro-batch with artifact WRITE-BACK through the SigstatsStore manifest layout (r15): each micro-batch reads and rewrites ONLY the sig-hash buckets its batch touches, the new version's manifest re-references untouched buckets' files in place (merge-on-read/LSM shape) — no corpus rescan, no corpus shuffle; the commit clusters the touched rows by bucket before the dynamic-partition write so the writer opens one file per bucket, not tasks x buckets (r16, plans/r16/sigstats_commit_write_*.txt); the dump shows the registered drain's final card read (the stream side is foreachBatch, outside the plan) (r12)",
     "q127_train_order" -> "curriculum manifest: one 5-row lang-counts agg feeds a 15-row threshold broadcast; the corpus side is epoch-explode + broadcast-hash join + per-row hash keep — MAP-ONLY selection (no window, no per-stratum rank); the only corpus exchange is the trailing range sort of the manifest itself (r12)",
-    "q128_quality_ensemble" -> "quality ensemble: three SHARED doc-keyed signal frames (q34 rule, q64 trigram ratio, q103 bigram-LM) join on doc_id; ONE 1-row min/max aggregate broadcasts back (min-max beats rank normalization at scale: no global sort exists anywhere); bins are fixed-width floor() — map-side (r12)",
+    "q128_quality_ensemble" -> "quality ensemble: three SHARED doc-keyed signal frames (q34 rule, q64 trigram ratio, q103 bigram-LM) join on doc_id; the six min/max bounds are OBSERVED on the joined frame's own checkpoint job (Dataset.observe) and enter the normalize pass as literals — no bounds aggregate, no join back (min-max beats rank normalization at scale: no global sort exists anywhere); bins are fixed-width floor() — map-side (r12)",
     "q129_data_card" -> "data card: every per-doc feature (token count, md5 sig, the SHARED q33 language ladder) rides ONE corpus scan; the only corpus-sized exchange is the sig-keyed duplicate window (the q27 key); then a source-x-lang group agg + 1-row total broadcast (r12)",
-    "q130_shard_plan" -> "shard plan: textbook distributed prefix sum — 256 FIXED hash buckets aggregate to a constant-size offset table (the single-task window is 256 rows at ANY corpus), within-bucket cumsums run partitioned by bucket, shard cut is all-integer floor division; spec pins two-phase == global cumsum (r12)",
-    "q131_quality_curriculum" -> "quality-annealed curriculum: the per-doc ensemble (q128's SHARED chain, checkpointed once) is the one corpus-heavy stage; epoch floors filter in the scan (integer micro-score compare — the round-free tier), then q127's shape verbatim: per-(epoch,lang) counts agg -> 15-row threshold broadcast -> map-only rate-keep (r12)",
-    "q132_curriculum_shards" -> "curriculum shard packing: the manifest (q131's SHARED frame) checkpoints once; the per-epoch prefix sum is the SHARED exclusivePrefix two-phase form with CONTIGUOUS pos-range buckets (<=256 offset rows per epoch at ANY corpus — ordering by (bucket,pos,doc_id) IS the stream order), epoch targets broadcast; the ORACLE computes the same packing with one global window per epoch, so two-phase == global IS the hash gate (r12)",
+    "q130_shard_plan" -> "shard plan: textbook distributed prefix sum — 256 FIXED hash buckets aggregate to a constant-size offset table (the single-task windows — offsets and the grand total — are 256 rows at ANY corpus), within-bucket cumsums run partitioned by bucket, shard cut is all-integer floor division against a target computed per row from the total; spec pins two-phase == global cumsum (r12)",
+    "q131_quality_curriculum" -> "quality-annealed curriculum: the per-doc ensemble (q128's SHARED chain, checkpointed once) is the one corpus-heavy stage; epoch floors filter in the scan (integer micro-score compare — the round-free tier), then q127's map-only rate-keep: per-(epoch,lang) counts agg -> ONE window by epoch (count total + exact-decimal weight sum) -> 15-row threshold broadcast (r12)",
+    "q132_curriculum_shards" -> "curriculum shard packing: the manifest (q131's SHARED frame) checkpoints once; the per-epoch prefix sum is the SHARED exclusivePrefix two-phase form with CONTIGUOUS pos-range buckets (<=256 offset rows per epoch at ANY corpus — ordering by (bucket,pos,doc_id) IS the stream order), each epoch's total rides the offset table as a second window, so the shard target is a per-row column; the ORACLE computes the same packing with one global window per epoch, so two-phase == global IS the hash gate (r12)",
     "q137_ivfpq_refine_curve" -> "refine-depth curve (base fanned out to defaultParallelism before its checkpoint — r16, plans/r16/curve_base_spread_*.txt — so the 256-codebook encode and ADC chains run wide instead of one-task): ONE map-only encode (q113's shape, below the checkpoint) + one full-corpus ADC; the (nprobe, rr_short) grid is two nested slices of the shared candidate frame — nprobe by home-cell rank, rr_short by ADC rank — with the exact re-rank distance computed ONCE per candidate at the max depth and every grid point a re-window of that checkpointed frame; re-rank joins are shortlist-sized (rr x queries rows), the corpus is never re-encoded or re-scored per point (r14)")
 
   /** Queries whose registered frame ends in `rangeSorted` — its lazy

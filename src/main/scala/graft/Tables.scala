@@ -46,11 +46,15 @@ object Tables {
     * the second of two sf0.001 passes in one JVM compiled 5,005 classes
     * (317 with the cap, 4 with [[shareCompiledCode]] as well). Janino was
     * 25% of Java CPU samples over 23 q132 runs. Measured cost: ~25 KB
-    * heap per cached class. */
+    * heap per cached class.
+    *
+    * Installs [[graft.streaming.CheckpointFiles]], so local streaming
+    * checkpoints rename without forking `readlink`. */
   def configure(spark: SparkSession): Unit = {
     spark.sessionState.conf.setConfString(
       "spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
     shareCompiledCode(spark)
+    graft.streaming.CheckpointFiles.install(spark)
     try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     catch { case scala.util.control.NonFatal(_) => () }
     // AQE coalesce floor: Spark's stock 1 MB. Rejected alternative

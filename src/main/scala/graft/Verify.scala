@@ -5,7 +5,12 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = GraftSession()
+    run(GraftSession(), sfDir, outDir)
+  }
+
+  /** Dump every query's result under `outDir` from `spark`, then stop it. */
+  def run(spark: org.apache.spark.sql.SparkSession, sfDir: String,
+      outDir: String): Unit = {
     Tables.assertIdHeadroom(spark, sfDir) // planted-copy offsets need id room
     new java.io.File(outDir).mkdirs()
     // GRAFT_VERIFY_ONLY=q1,q2 — dump a subset while iterating locally

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.expressions.WindowSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -26,6 +27,10 @@ object Exact {
 
   /** Order-independent sum of a double column, returned as double. */
   def dsum(c: Column): Column = sum(c.cast(Dec)).cast("double")
+
+  /** [[dsum]] as a window aggregate over `w`. */
+  def dsumOver(c: Column, w: WindowSpec): Column =
+    sum(c.cast(Dec)).over(w).cast("double")
 
   /** Order-independent mean: exact decimal sum / non-null count. */
   def davg(c: Column): Column = sum(c.cast(Dec)).cast("double") / count(c)

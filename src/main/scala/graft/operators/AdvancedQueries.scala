@@ -110,7 +110,7 @@ object AdvancedQueries {
       graft.streaming.StreamingUpsert.runAvailableNow(s, src,
         NormalizedEvents.schema, Drain.targetDir(root), Drain.checkpointDir(root),
         statePartitions = Some(1)) // ~40 (day, type) keys: 1 store, not 32
-      s.read.parquet(Drain.targetDir(root))
+        .read(s)
         .select(col("d").cast("date").as("d"), col("event_type"),
           col("n"), col("sum_value"))
         .presented("d", "event_type")
@@ -206,7 +206,7 @@ object AdvancedQueries {
       graft.streaming.StreamIntervalJoin.runAvailableNow(s, src,
         NormalizedEvents.schema, Drain.targetDir(root), Drain.checkpointDir(root), "inner",
         statePartitions = Some(4)) // state = the events themselves (~80k rows/side): parallel inserts
-      s.read.parquet(Drain.targetDir(root))
+        .read(s)
         .select("p_event_id", "c_event_id", "user_id")
         .orderBy("p_event_id", "c_event_id")
     },
@@ -297,7 +297,7 @@ object AdvancedQueries {
       graft.streaming.StreamIntervalJoin.runAvailableNow(s, src,
         NormalizedEvents.schema, target, Drain.checkpointDir(root), "left_outer",
         statePartitions = Some(4), maxFilesPerTrigger = Some(2))
-      s.read.parquet(target)
+        .read(s)
         .filter(col("p_event_id") >= 0) // synthetic flush rows are harness, not data
         .select("p_event_id", "c_event_id", "user_id")
         .orderBy("p_event_id", "c_event_id")
@@ -494,12 +494,12 @@ object AdvancedQueries {
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
       // Two files → two micro-batches; each plans a broadcast-hash join.
-      val target = Drain.split(root, ev, 2) {
-        _.stream().join(broadcast(weights), "event_type")
-          .selectExpr("event_type", "value", "value * weight AS weighted")
-          .writeStream.format("parquet").option("path", Drain.targetDir(root))
+      val target = new Drain.Target(Drain.targetDir(root))
+      Drain.split(root, ev, 2) { src =>
+        Drain.toParquet(target)(src.stream().join(broadcast(weights), "event_type")
+          .selectExpr("event_type", "value", "value * weight AS weighted"))
       }
-      s.read.parquet(target)
+      target.read(s)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("weighted")).as("weighted_value"))
         .presented("event_type")

@@ -296,14 +296,16 @@ object CurationQueries {
         concat(col("text"), lit(" zq"),
           pmod(col("doc_id"), lit(11)).cast("string")).as("text"))
     val root = graft.TempDirs.fresh("q118")
-    val sink = Drain.appendEach(Drain.targetDir(root)) { b =>
+    val target = new Drain.Target(Drain.targetDir(root))
+    val sink = Drain.appendEach(target) { b =>
       qcScored(qcFeaturesOf(b), w)
         .filter(col("b") === QcBuckets + 1) // bias row: one per doc
         .select(col("doc_id"), col("y"),
           col("p").cast("double").as("p"),
           (col("p") >= lit(0.5).cast(QcDec)).as("admitted"))
     }
-    s.read.parquet(Drain.split(root, batch, nFiles)(sink)).orderBy("doc_id")
+    Drain.split(root, batch, nFiles)(sink)
+    target.read(s).orderBy("doc_id")
   }
 
   /** q115/q116 shared oracle SQL: the labeled-feature CTEs over source
@@ -1496,22 +1498,26 @@ object CurationQueries {
       // Audits read the PUBLISHED artifacts both threads wrote.
       val vidx = Tables.read(s, graft.pipeline.VectorIndex.prepared(
         s, dir, SimilarityQueries.IvfCells))
-      val vpub = s.read.parquet(s"$root/vec_index")
+      // The published tables were written in the persisted artifacts'
+      // schemas (the purge filters rows; the retrains share the
+      // artifacts' writers), so each read-back passes that schema.
+      val vpub = s.read.schema(vidx.schema).parquet(s"$root/vec_index")
       val vecAudit = item("vec_index_before", vidx)
         .unionAll(item("vec_index_removed", vidx.filter(col("vec_id") % 37 === 0)))
         .unionAll(item("vec_index_after", vpub))
         .unionAll(item("vec_index_leak", vpub.filter(col("vec_id") % 37 === 0)))
-      val oldRules = Tables.read(s, TextQueries.bpeMergesPrepared(s, dir))
+      val rules = Tables.read(s, TextQueries.bpeMergesPrepared(s, dir))
+      val oldRules = rules
         .select(col("step"), col("lhs").as("olhs"), col("rhs").as("orhs"))
-      val newRules = s.read.parquet(s"$root/bpe_merges")
+      val newRules = s.read.schema(rules.schema).parquet(s"$root/bpe_merges")
       val bpeChanged = newRules.select(col("step"), col("lhs"), col("rhs"))
         .join(oldRules, Seq("step"), "full_outer")
         .filter(!(col("lhs") <=> col("olhs")) || !(col("rhs") <=> col("orhs")))
       val bpeAudit = item("bpe_rules_n", newRules)
         .unionAll(item("bpe_rules_changed", bpeChanged))
-      val oldW = Tables.read(s, qcModelPrepared(s, dir))
-        .select(col("b"), col("w").cast(QcDec).as("ow"))
-      val newW = s.read.parquet(s"$root/qc_model")
+      val model = Tables.read(s, qcModelPrepared(s, dir))
+      val oldW = model.select(col("b"), col("w").cast(QcDec).as("ow"))
+      val newW = s.read.schema(model.schema).parquet(s"$root/qc_model")
       val wChanged = newW.select(col("b"), col("w").cast(QcDec).as("nw"))
         .join(oldW, Seq("b"), "full_outer")
         .filter(!(col("nw") <=> col("ow")))

@@ -1070,12 +1070,14 @@ object DedupQueries {
       val indexPath = graft.pipeline.DedupIndex.prepared(s, dir)
       val batch = appendTriageBatch(s, dir)
       val root = graft.TempDirs.fresh("q120")
-      val sink = Drain.appendEach(Drain.targetDir(root)) { b =>
+      val target = new Drain.Target(Drain.targetDir(root))
+      val sink = Drain.appendEach(target) { b =>
         graft.pipeline.DedupIndex.triage(s, indexPath,
           graft.pipeline.DedupIndex.signatures(b).checkpointed(false))
       }
       // Two files → two micro-batches.
-      s.read.parquet(Drain.split(root, batch, 2)(sink)).orderBy("doc_id")
+      Drain.split(root, batch, 2)(sink)
+      target.read(s).orderBy("doc_id")
     },
 
     // ----- X3/X4+ GOVERNANCE: TAKEDOWN — purge a removal list from the
@@ -1162,13 +1164,14 @@ object DedupQueries {
           published: String): DataFrame =
         item(s"${name}_before", before)
           .unionAll(item(s"${name}_removed", before.filter(isRm)))
-          .unionAll(item(s"${name}_after", s.read.parquet(published)))
+          .unionAll(item(s"${name}_after",
+            s.read.schema(before.schema).parquet(published)))
       // Re-admission proof: the removed docs' texts re-triage against
       // the PUBLISHED post-takedown index.
       val removed = Tables.load(s, dir, "documents")
         .select("doc_id", "text").filter(col("doc_id") % 37 === 0)
       val verdicts = graft.pipeline.DedupIndex
-        .triage(s.read.parquet(s"$root/index"),
+        .triage(s.read.schema(idx.schema).parquet(s"$root/index"),
           graft.pipeline.DedupIndex.signatures(removed).checkpointed(false))
         .groupBy(col("verdict")).agg(count(lit(1)).as("n"))
         .select(concat(lit("retriage_"), col("verdict")).as("item"), col("n"))

@@ -39,6 +39,11 @@ object ReleaseQueries {
   /** q130/q132's shard count. */
   private val NShards = 32L
 
+  /** q130/q132's shard target, ceil(total / NShards), from
+    * [[exclusivePrefix]]'s part total. */
+  private def shardTarget =
+    expr(s"(_ptot + ${NShards - 1}) div $NShards")
+
   /** The prefix-sum bucket fan-out — a DEPLOYMENT KNOB like the IVF
     * `cells ∝ corpus` rule, read from `spark.graft.prefixBuckets`
     * (power of two; default 256). Buckets are CONTIGUOUS ranges of
@@ -139,9 +144,10 @@ object ReleaseQueries {
     // Every signal helper is the SHARED one (qualityFrame /
     // shingleRowsOf / lmScoredFrame + their SQL twins) so the ensemble
     // can never drift from its member queries. Shape: three doc-keyed
-    // frames join on doc_id, one 1-row stats aggregate broadcasts back
-    // (min-max needs no global sort — the reason it beats rank
-    // normalization at 100 TB), bins are fixed-width (map-side).
+    // frames join on doc_id, the min/max bounds are observed on the
+    // joined frame's checkpoint job (min-max needs no global sort — the
+    // reason it beats rank normalization at 100 TB), bins are
+    // fixed-width (map-side).
     // PARITY (ADVICE r12): the whole output is the ROUND-FREE integer
     // micro tier — bin = ens_micro div 100000, per-bin means as
     // integer division of exact micro sums, disagreement compared on
@@ -231,20 +237,8 @@ object ReleaseQueries {
          |SELECT shard_id, COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS shard_chars,
          |       tgt AS target_chars
          |FROM sh GROUP BY shard_id, tgt ORDER BY shard_id""".stripMargin) { (s, dir) =>
-      val a = docs(s, dir).select(col("doc_id"), col("n_chars"),
-        TextOps.hash60(col("doc_id").cast("string")).as("h"))
-      val b = a.withColumn("bk", expr(s"h div ${bucketWidth(s)}"))
-      // The two-phase prefix sum is the SHARED exclusivePrefix helper
-      // (q132 packs the curriculum with the same machinery): the
-      // bucket-count-row bucket-total frame checkpoints inside it and
-      // feeds BOTH the offset table and the grand total, so the corpus
-      // contributes one aggregate scan + one cumsum scan.
-      val (withStrt, bktot) =
-        exclusivePrefix(b, Seq.empty, "bk", Seq("h", "doc_id"), "n_chars")
-      val t = bktot.agg(sum(col("_btot")).as("tc"))
-        .select(expr(s"(tc + ${NShards - 1}) div $NShards").as("tgt"))
-      withStrt.select(col("n_chars"), col("strt"))
-        .crossJoin(broadcast(t))
+      shardPrefix(s, dir)
+        .withColumn("tgt", shardTarget)
         .select(expr("strt div tgt").as("shard_id"), col("n_chars"), col("tgt"))
         .groupBy(col("shard_id"), col("tgt"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("shard_chars"))
@@ -313,18 +307,8 @@ object ReleaseQueries {
          |       CAST(SUM(n_chars) AS BIGINT) AS shard_chars, tgt AS target_chars
          |FROM sh GROUP BY epoch, shard_id, tgt
          |ORDER BY epoch, shard_id""".stripMargin) { (s, dir) =>
-      // The manifest is the expensive subtree (ensemble + selection):
-      // checkpoint once for its THREE consumers inside the prefix sum
-      // (bucket totals, within-bucket cumsum) and the epoch totals.
-      val m = curriculumFrame(s, dir)
-        .select(col("epoch"), col("pos"), col("doc_id"), col("n_chars"))
-        .withColumn("bk", expr(s"pos div ${bucketWidth(s)}"))
-        .checkpointed()
-      val (withStrt, bktot) =
-        exclusivePrefix(m, Seq("epoch"), "bk", Seq("pos", "doc_id"), "n_chars")
-      val t3 = bktot.groupBy(col("epoch")).agg(sum(col("_btot")).as("tc"))
-        .select(col("epoch"), expr(s"(tc + ${NShards - 1}) div $NShards").as("tgt"))
-      withStrt.join(broadcast(t3), "epoch")
+      curriculumPrefix(s, dir)
+        .withColumn("tgt", shardTarget)
         .select(col("epoch"), expr("strt div tgt").as("shard_id"),
           col("n_chars"), col("tgt"))
         .groupBy(col("epoch"), col("shard_id"), col("tgt"))
@@ -394,7 +378,10 @@ object ReleaseQueries {
       "T6+X4+: streaming card maintenance — foreachBatch applies the exact delta AND writes the artifacts back (stream ≡ batch)",
       cardAppendOracleSql) { (s, dir) =>
       val (root, v) = cardMaintainDrain(s, dir, nFiles = 2)
-      s.read.parquet(s"$root/v$v/card").presented("source", "lang")
+      // Every version's card is written in the published card's schema.
+      val published = Tables.read(s, s"${graft.pipeline.CardIndex.prepared(s, dir)}/card")
+      s.read.schema(published.schema).parquet(s"$root/v$v/card")
+        .presented("source", "lang")
     },
 
     // ----- X4+ GOVERNANCE (VERDICT r12 #3): CardIndex takedown — the
@@ -454,13 +441,13 @@ object ReleaseQueries {
         .unionByName(cardBatch(s, dir).select(col("doc_id"), col("source"),
           col("lang"), col("n_chars"), col("text")))
       val (card2, sig2) = cardTakedown(s,
-        s.read.parquet(s"$root/appended/sigstats"),
-        s.read.parquet(s"$root/appended/card"),
+        s.read.schema(sig1.schema).parquet(s"$root/appended/sigstats"),
+        s.read.schema(card1.schema).parquet(s"$root/appended/card"),
         union.filter(col("doc_id") % 37 === 0),
         union.filter(col("doc_id") % 37 =!= 0))
       writeBoth(sig2, s"$root/sigstats", // published post-takedown index
         card2, s"$root/card")
-      s.read.parquet(s"$root/card").presented("source", "lang")
+      s.read.schema(card2.schema).parquet(s"$root/card").presented("source", "lang")
     })
 
   /** One exact card-takedown step — [[cardUpdate]]'s backward twin,
@@ -603,7 +590,8 @@ object ReleaseQueries {
     val idx = graft.pipeline.CardIndex.prepared(s, dir)
     val root = graft.TempDirs.fresh("q134")
     SigstatsStore.init(s, root, s"$idx/sigstats")
-    Tables.read(s, s"$idx/card").write.parquet(s"$root/v0/card")
+    val card0 = Tables.read(s, s"$idx/card")
+    card0.write.parquet(s"$root/v0/card")
     val committed = new java.util.concurrent.atomic.AtomicInteger(0)
     Drain.split(root, cardBatch(s, dir), nFiles) {
       _.stream().writeStream.foreachBatch { (b: DataFrame, batchId: Long) =>
@@ -612,7 +600,7 @@ object ReleaseQueries {
         val touched = SigstatsStore.touchedBuckets(bf)
         val (card, sig) = cardUpdate(
           SigstatsStore.readBuckets(s, root, v, touched),
-          s.read.parquet(s"$root/v$v/card"), bf)
+          s.read.schema(card0.schema).parquet(s"$root/v$v/card"), bf)
         // The two artifact write-backs are independent (disjoint paths,
         // shared inputs already checkpointed by cardUpdate): overlap
         // them so the card write's job back-fills the sigstats commit's
@@ -912,7 +900,11 @@ object ReleaseQueries {
     * n_chars)`. Eligible (doc, epoch) pairs checkpoint once (two
     * consumers: the counts frame and the selection scan of the
     * ensemble-heavy subtree); after that everything is q127's
-    * map-only shape with a 15-row threshold broadcast. */
+    * map-only shape with a 15-row threshold broadcast. The thresholds
+    * come from the per-(e, lang) counts in one aggregate and ONE window
+    * partitioned by `e` (Σn and the exact-decimal Σw side by side), not
+    * from the oracle's tot2/ws2 aggregates joined back: those cost q132
+    * a checkpoint, three exchanges and two joins over 15 rows. */
   private[graft] def curriculumFrame(s: SparkSession, dir: String): DataFrame = {
     val en = ensembleScored(s, dir).select(col("doc_id"), col("ens_micro"))
     val meta = docs(s, dir).select(col("doc_id"), col("lang"), col("n_chars"))
@@ -923,14 +915,13 @@ object ReleaseQueries {
           .otherwise(lit(450000L)))
       .filter(col("ens_micro") >= col("qfloor"))
       .checkpointed()
-    val cnt2 = el.groupBy(col("e"), col("lang")).agg(count(lit(1)).as("n"))
-      .checkpointed()
-    val tot2 = cnt2.groupBy(col("e")).agg(sum(col("n")).as("nd"))
-      .select(col("e"), expr("nd div 2").as("b"))
-    val w2 = cnt2.select(col("e"), col("lang"), col("n"),
-      tauW(col("e"), col("n")).as("w"))
-    val ws2 = w2.groupBy(col("e")).agg(Exact.dsum(col("w")).as("wsum"))
-    val thr2 = w2.join(ws2, "e").join(tot2, "e")
+    val byE = Window.partitionBy("e")
+    val thr2 = el.groupBy(col("e"), col("lang")).agg(count(lit(1)).as("n"))
+      .withColumn("w", tauW(col("e"), col("n")))
+      .select(col("e"), col("lang"), col("n"), col("w"),
+        Exact.dsumOver(col("w"), byE).as("wsum"),
+        sum(col("n")).over(byE).as("nd"))
+      .withColumn("b", expr("nd div 2"))
       .select(col("e"), col("lang"),
         least(floor(col("w") / col("wsum") * col("b") / col("n") * lit(USize)),
           lit(USize)).as("thr"))
@@ -944,34 +935,65 @@ object ReleaseQueries {
   }
 
 
+  /** q130's prefix sum: every doc with `strt`, its byte offset in the
+    * hash write order, and the corpus total `_ptot`. The two-phase
+    * prefix sum is the SHARED [[exclusivePrefix]] (q132 packs the
+    * curriculum with the same machinery): the bucket-count-row
+    * bucket-total frame checkpoints inside it and windows into BOTH the
+    * offsets and the grand total, so the corpus contributes one
+    * aggregate scan + one cumsum scan. */
+  private[graft] def shardPrefix(s: SparkSession, dir: String): DataFrame = {
+    val b = docs(s, dir).select(col("doc_id"), col("n_chars"),
+        TextOps.hash60(col("doc_id").cast("string")).as("h"))
+      .withColumn("bk", expr(s"h div ${bucketWidth(s)}"))
+    exclusivePrefix(b, Seq.empty, "bk", Seq("h", "doc_id"), "n_chars")
+  }
+
+  /** q132's prefix sum: every admitted (epoch, doc) with `strt`, its
+    * byte offset in the epoch's curriculum order, and the epoch total
+    * `_ptot`. The manifest is the expensive subtree (ensemble +
+    * selection): it checkpoints once for its two consumers inside the
+    * prefix sum (bucket totals, within-bucket cumsum). */
+  private[graft] def curriculumPrefix(s: SparkSession, dir: String): DataFrame = {
+    val m = curriculumFrame(s, dir)
+      .select(col("epoch"), col("pos"), col("doc_id"), col("n_chars"))
+      .withColumn("bk", expr(s"pos div ${bucketWidth(s)}"))
+      .checkpointed()
+    exclusivePrefix(m, Seq("epoch"), "bk", Seq("pos", "doc_id"), "n_chars")
+  }
+
   /** The q130/q132 shared two-phase distributed EXCLUSIVE prefix sum
     * of `value` in (part*, bucket, order*) order: per-(part, bucket)
     * totals aggregate (checkpointed — constant-sized at any corpus),
     * the offset table windows per part over the bucket index (≤
     * #buckets rows per part — the only single-task window), and
     * within-bucket cumsums run fully partitioned. Returns the input
-    * plus `strt`, and the bucket-totals frame (column `_btot`) so
-    * callers derive grand totals without re-scanning the corpus. The
-    * caller guarantees `bucket` is monotone in the intended global
-    * order (hash order for q130, pos ranges for q132) and that `df`
-    * is cheap to scan twice or checkpointed. */
+    * plus `strt` and the part's total `_ptot`: a second window over the
+    * same bounded bucket-totals frame, so a caller's shard target is a
+    * column, not a separate total aggregate broadcast back (that cost
+    * q132 a stage, a broadcast and a join per run; with the window
+    * thresholds of [[curriculumFrame]] and the observed bounds of
+    * [[ensembleScored]], a q132 run starts 31 jobs, not 40, in a traced
+    * perfbench `suite` pass on 4 cores). The caller
+    * guarantees `bucket` is monotone in the intended global order (hash
+    * order for q130, pos ranges for q132) and that `df` is cheap to
+    * scan twice or checkpointed. */
   private def exclusivePrefix(df: DataFrame, part: Seq[String],
-      bucket: String, order: Seq[String], value: String)
-      : (DataFrame, DataFrame) = {
+      bucket: String, order: Seq[String], value: String): DataFrame = {
     val pb = (part :+ bucket).map(col)
-    val bktot = df.groupBy(pb: _*).agg(sum(col(value)).as("_btot"))
+    val byPart = Window.partitionBy(part.map(col): _*)
+    val off = df.groupBy(pb: _*).agg(sum(col(value)).as("_btot"))
       .checkpointed()
-    val off = bktot.select(pb :+
-      coalesce(sum(col("_btot")).over(
-        Window.partitionBy(part.map(col): _*).orderBy(bucket)
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("_off"): _*)
+      .select(pb ++ Seq(
+        coalesce(sum(col("_btot")).over(byPart.orderBy(bucket)
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("_off"),
+        sum(col("_btot")).over(byPart).as("_ptot")): _*)
     val cum = df.withColumn("_cum",
       sum(col(value)).over(
         Window.partitionBy(pb: _*).orderBy(order.map(col): _*)))
-    val res = cum.join(broadcast(off), part :+ bucket)
+    cum.join(broadcast(off), part :+ bucket)
       .withColumn("strt", col("_off") + col("_cum") - col(value))
       .drop("_off", "_cum")
-    (res, bktot)
   }
 
   /** The q128 ensemble's full DuckDB CTE chain, through
@@ -1014,8 +1036,13 @@ object ReleaseQueries {
 
   /** Spark mirror of [[ensembleCtesSql]]'s `en`: the per-doc scored
     * ensemble `(doc_id, ens_micro, rq_micro, rr_micro, hb_micro,
-    * disagree)`. The joined signal frame is checkpointed inside (two
-    * consumers: the 1-row stats aggregate and the normalize pass).
+    * disagree)`. The joined signal frame is checkpointed inside, and
+    * the six min/max values the normalization needs ride that same
+    * checkpoint job as a `Dataset.observe` (see [[signalBounds]]); they
+    * enter the normalize pass as literals. The oracle's 1-row `st`
+    * aggregate broadcast back onto the frame cost q128/q131/q132 an
+    * exchange, a broadcast nested-loop join and a job per run (q128 22
+    * jobs, now 20, in `graft.Bench`'s second sf0.001 pass).
     *
     * Everything here is the TIE-FREE integer micro tier. A 6dp ROUND
     * path cannot be used per-doc: ROUND(x, 6) genuinely half-ties
@@ -1032,14 +1059,11 @@ object ReleaseQueries {
     * ADVICE r12 extended it to q128's bins, means, and spread, whose
     * rounded tier this replaces. */
   private[graft] def ensembleScored(s: SparkSession, dir: String): DataFrame = {
-    val j = ensembleJoined(s, dir).checkpointed()
-    val st = j.agg(
-      min(col("rq_raw")).as("mnq_r"), max(col("rq_raw")).as("mxq_r"),
-      min(col("rr_raw")).as("mnr_r"), max(col("rr_raw")).as("mxr_r"),
-      min(col("hb_raw")).as("mnh_r"), max(col("hb_raw")).as("mxh_r"))
+    val (j, st) = signalBounds(ensembleJoined(s, dir))
+    def v(name: String) = lit(st(name)).cast("double")
     def normRaw(x: String, mn: String, mx: String) =
-      coalesce((col(x) - col(mn)) / nullif(col(mx) - col(mn), lit(0)), lit(0.5))
-    val nz = j.crossJoin(broadcast(st)).select(
+      coalesce((col(x) - v(mn)) / nullif(v(mx) - v(mn), lit(0)), lit(0.5))
+    val nz = j.select(
       col("doc_id"), col("rq_raw"), col("rr_raw"), col("hb_raw"),
       normRaw("rq_raw", "mnq_r", "mxq_r").as("gq_raw"),
       (lit(1.0) - normRaw("rr_raw", "mnr_r", "mxr_r")).as("gr_raw"),
@@ -1052,6 +1076,27 @@ object ReleaseQueries {
       floor(col("hb_raw") * 1000000).cast("long").as("hb_micro"),
       (greatest(col("gq_raw"), col("gr_raw"), col("gh_raw")) -
         least(col("gq_raw"), col("gr_raw"), col("gh_raw")) > 0.5).as("disagree"))
+  }
+
+  /** Checkpoint the joined signal frame and observe its six min/max
+    * values (`mnq_r`, `mxq_r`, `mnr_r`, `mxr_r`, `mnh_r`, `mxh_r`;
+    * null for an empty frame, as the aggregate gives) on the
+    * checkpoint's own job. Both [[graft.Materialize]] paths checkpoint
+    * eagerly through the observed frame's own query execution (the
+    * reliable one from its cache, whose plan holds the observation), so
+    * its metrics are final when the checkpoint returns. They are read
+    * from that execution directly: an `Observation` waits for a
+    * listener-bus event with no timeout. */
+  private[graft] def signalBounds(joined: DataFrame)
+      : (DataFrame, Map[String, Any]) = {
+    val bounds = Seq("q" -> "rq_raw", "r" -> "rr_raw", "h" -> "hb_raw")
+      .flatMap { case (k, c) =>
+        Seq(min(col(c)).as(s"mn${k}_r"), max(col(c)).as(s"mx${k}_r"))
+      }
+    val observed = joined.observe("signal_bounds", bounds.head, bounds.tail: _*)
+    val j = observed.checkpointed()
+    val row = observed.queryExecution.observedMetrics("signal_bounds")
+    (j, row.getValuesMap[Any](row.schema.fieldNames.toSeq))
   }
 
   /** q128's joined signal frame `(doc_id, rq_raw, rr_raw, hb_raw)`,

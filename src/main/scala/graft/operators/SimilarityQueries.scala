@@ -422,9 +422,9 @@ object SimilarityQueries {
       st0.cents.checkpointed(), st0.cb.checkpointed())
     val batch = ivfpqAppendBatch(s, dir)
     val root = graft.TempDirs.fresh("q124")
-    val target = Drain.split(root, batch, nFiles)(
-      Drain.appendEach(Drain.targetDir(root))(ivfpqTriage(st, _)))
-    s.read.parquet(target).orderBy("vec_id")
+    val target = new Drain.Target(Drain.targetDir(root))
+    Drain.split(root, batch, nFiles)(Drain.appendEach(target)(ivfpqTriage(st, _)))
+    target.read(s).orderBy("vec_id")
   }
 
   /** q119's planted append batch: every 5th vector negated under a
@@ -1267,14 +1267,15 @@ object SimilarityQueries {
         .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("c")).head()
       val (nDocs, sumChars) = (key.getLong(0), key.getLong(1))
       val dump = s"$Q48EmbDumpRoot/n${nDocs}_c$sumChars"
-      Embedder.withEmbedding(docs, "text")
+      val dumped = Embedder.withEmbedding(docs, "text")
         .select(col("doc_id"), col("embedding"),
           lit(nDocs).as("n_docs"), lit(sumChars).as("sum_chars"))
-        .write.mode("overwrite").parquet(dump)
+      dumped.write.mode("overwrite").parquet(dump)
       // Score from the DUMP, not the in-flight frame: both engines then
       // rank the exact same parquet doubles, and the dump doubles as the
       // embed stage's materialization point (read twice below).
-      val embedded = s.read.parquet(dump).select("doc_id", "embedding")
+      val embedded = s.read.schema(dumped.schema).parquet(dump)
+        .select("doc_id", "embedding")
       val queries = embedded.filter(col("doc_id") < 5)
         .select(col("doc_id").as("query_id"), col("embedding").as("qv"))
       val scored = embedded.crossJoin(broadcast(queries))

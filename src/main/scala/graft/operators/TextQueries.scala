@@ -909,9 +909,9 @@ object TextQueries {
     val merges = bpeMergesOf(s, dir)
     val batch = bpeAppendBatch(s, dir)
     val root = graft.TempDirs.fresh("q123")
-    val target = Drain.split(root, batch, nFiles)(
-      Drain.appendEach(Drain.targetDir(root))(bpeSegmentWith(merges, _)))
-    s.read.parquet(target).orderBy("doc_id")
+    val target = new Drain.Target(Drain.targetDir(root))
+    Drain.split(root, batch, nFiles)(Drain.appendEach(target)(bpeSegmentWith(merges, _)))
+    target.read(s).orderBy("doc_id")
   }
 
   /** q112's (and q123's) oracle: re-derive the 8 rules from the

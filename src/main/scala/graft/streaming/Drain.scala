@@ -26,6 +26,10 @@ import org.apache.spark.sql.types.StructType
   * `Tables.shareCompiledCode`: Spark clones the session again for every
   * streaming query, and without that setting each clone's tasks got a new
   * class loader and recompiled every class (q124 52, q54 5 per run).
+  * It re-applies [[CheckpointFiles]] for the same reason: on Spark's
+  * default manager every checkpoint file rename forked `readlink`, and
+  * q54's state commits took 0.60 s of a traced perfbench `suite` pass
+  * against 0.05 s with it (seed 906, 4 cores).
   *
   * Invariant for `statePartitions`: skipping the empty batch is safe
   * only when nothing relies on post-drain eviction output. The
@@ -63,6 +67,7 @@ object Drain {
     val session = statePartitions.fold(spark) { n =>
       val s = spark.newSession()
       graft.Tables.shareCompiledCode(s)
+      CheckpointFiles.install(s)
       s.conf.set("spark.sql.shuffle.partitions", n)
       s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", false)
       s
@@ -81,26 +86,43 @@ object Drain {
   /** One file per committed micro-batch. */
   def commitsDir(root: String): String = s"${checkpointDir(root)}/commits"
 
+  /** A drain's parquet output directory. The sinks that write it record
+    * the schema of the rows they write, so [[read]] passes that schema
+    * instead of starting Spark's schema-inference job (one job per
+    * read-back). */
+  final class Target(val dir: String) {
+    @volatile private var written: Option[StructType] = None
+    def wrote(schema: StructType): Unit = written = Some(schema)
+    def read(spark: SparkSession): DataFrame =
+      written.fold(spark.read.parquet(dir))(spark.read.schema(_).parquet(dir))
+  }
+
   /** Split `batch` into `nFiles` parquet files under `srcDir(root)` and
     * drain them one file per micro-batch, so a result that equals the
-    * one-shot batch plan is correct ACROSS micro-batch boundaries.
-    * Returns `targetDir(root)`. */
+    * one-shot batch plan is correct ACROSS micro-batch boundaries. */
   def split(root: String, batch: DataFrame, nFiles: Int)(
-      sink: Source => DataStreamWriter[Row]): String = {
+      sink: Source => DataStreamWriter[Row]): Unit = {
     batch.repartition(nFiles).write.parquet(srcDir(root))
     apply(batch.sparkSession, srcDir(root), batch.schema, checkpointDir(root),
       maxFilesPerTrigger = Some(1))(sink)
-    targetDir(root)
+  }
+
+  /** Append `out`, a streaming frame, to `target` as parquet files. */
+  def toParquet(target: Target)(out: DataFrame): DataStreamWriter[Row] = {
+    target.wrote(out.schema)
+    out.writeStream.format("parquet").option("path", target.dir)
   }
 
   /** Stateless per-micro-batch sink: `transform` runs on each micro-batch
-    * as an ordinary batch plan and its result appends to `dir` parquet.
+    * as an ordinary batch plan and its result appends to `target`.
     * Correct whenever each input row is self-contained (a document
     * carries its whole text); a backlog is just more batches of the same
     * plan. */
-  def appendEach(dir: String)(
+  def appendEach(target: Target)(
       transform: DataFrame => DataFrame): Source => DataStreamWriter[Row] =
     _.stream().writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-      transform(b).write.mode("append").parquet(dir)
+      val out = transform(b)
+      target.wrote(out.schema)
+      out.write.mode("append").parquet(target.dir)
     }
 }

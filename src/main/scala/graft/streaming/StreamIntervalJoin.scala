@@ -28,7 +28,8 @@ object StreamIntervalJoin {
   /** One AvailableNow catch-up: drain `srcDir`, join purchases to the
     * same user's clicks with `c_ts ∈ [p_ts − 1 day, p_ts]` (`joinType`
     * "inner" or "left_outer"), append the (p_event_id, c_event_id,
-    * user_id) pairs to `targetDir` parquet. A left-outer drain passes
+    * user_id) pairs to `targetDir` parquet, and return that target once
+    * the drain ends. A left-outer drain passes
     * `statePartitions` only with flush traffic (the [[Drain]]
     * invariant). */
   def runAvailableNow(
@@ -39,7 +40,8 @@ object StreamIntervalJoin {
       checkpointDir: String,
       joinType: String,
       statePartitions: Option[Int] = None,
-      maxFilesPerTrigger: Option[Int] = None): Unit =
+      maxFilesPerTrigger: Option[Int] = None): Drain.Target = {
+    val target = new Drain.Target(targetDir)
     Drain(spark, srcDir, schema, checkpointDir, maxFilesPerTrigger,
         statePartitions) { src =>
       // Two independent sources over the same directory — each side
@@ -57,16 +59,15 @@ object StreamIntervalJoin {
             col("user_id").as(s"${prefix}_user_id"),
             col("ts").as(s"${prefix}_ts"))
           .withWatermark(s"${prefix}_ts", "1 day")
-      side("purchase", "p")
+      // Stream-stream joins emit append-only, the file sink's mode.
+      Drain.toParquet(target)(side("purchase", "p")
         .join(side("click", "c"),
           expr("p_user_id = c_user_id AND " +
             "c_ts BETWEEN p_ts - INTERVAL 1 DAY AND p_ts"),
           joinType)
         .select(col("p_event_id"), col("c_event_id"),
-          col("p_user_id").as("user_id"))
-        .writeStream
-        .outputMode("append") // stream-stream joins emit append-only
-        .format("parquet")
-        .option("path", targetDir)
+          col("p_user_id").as("user_id")))
     }
+    target
+  }
 }

@@ -25,16 +25,17 @@ object StreamingUpsert {
 
   /** One catch-up cycle: stream every unprocessed file under `srcDir`,
     * aggregate per (day, event_type), and upsert into `targetDir`.
-    * Returns after the drain terminates. Update mode emits re-aggregated
-    * keys in the data batch that changed them, so `statePartitions`
-    * (see [[Drain]]) loses nothing. */
+    * Returns the target once the drain terminates. Update mode emits
+    * re-aggregated keys in the data batch that changed them, so
+    * `statePartitions` (see [[Drain]]) loses nothing. */
   def runAvailableNow(
       spark: SparkSession,
       srcDir: String,
       schema: StructType,
       targetDir: String,
       checkpointDir: String,
-      statePartitions: Option[Int] = None): Unit =
+      statePartitions: Option[Int] = None): Drain.Target = {
+    val target = new Drain.Target(targetDir)
     Drain(spark, srcDir, schema, checkpointDir,
         statePartitions = statePartitions) { src =>
       // Decimal-exact sum: streaming state merges in arrival order, so a
@@ -51,8 +52,11 @@ object StreamingUpsert {
         .outputMode("update") // emit re-aggregated keys each batch; upsert dedups
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           upsertBatch(batch, targetDir, Seq("d", "event_type"), "d", batchId)
+          target.wrote(batch.schema)
         }
     }
+    target
+  }
 
   /** MERGE-without-Delta: last-write-wins the incoming batch against the
     * CURRENT content of only the date partitions it touches, then
@@ -67,7 +71,9 @@ object StreamingUpsert {
       if (!targetExists) incoming
       else {
         val touched = incoming.select(dateCol).distinct()
-        val existing = spark.read.parquet(targetDir)
+        // The target holds rows of the batch's schema: read it with that
+        // schema rather than run an inference job per micro-batch.
+        val existing = spark.read.schema(batch.schema).parquet(targetDir)
           .join(broadcast(touched), Seq(dateCol), "left_semi")
           .withColumn("__v", lit(-1L)) // pre-existing rows lose ties
           .select(incoming.columns.map(col).toSeq: _*)

