@@ -42,11 +42,11 @@ object Plans {
     "q105_mmr_context" -> "one CollectTopK corpus pass; candidate vectors via broadcast semi join-back; QxM^2 pair-cosine table checkpointed once; each greedy step is broadcast joins + max_by aggregates — no corpus re-scan, no cartesian (r10)",
     "q50_chunking" -> "MAP-ONLY chunking: tokenize + start-grid explode + slice ride the scan at input-split parallelism (full tail coverage, r10); the only exchange is the trailing range sort",
     "q107_priority_sample" -> "priority sampling: exact integer priorities computed in the scan project; per-stratum top-(k+1) via CollectTopK map-side k-heaps (exchange = langs*partitions*(k+1) rows); winner set broadcast-joins back for weights (r10)",
-    "q108_bpe_train" -> "BPE training: corpus collapses to a VOCAB-sized word table once (token explode + hash agg, map-side combined); each round aggregates vocab-sized pairs, collects a 1-row argmax (q93's centroid shape), and rewrites only pair-containing words (substring prefilter) — round cost independent of corpus size (r10)",
-    "q109_bpe_segment" -> "BPE segmentation: the post-merge vocab table IS the tokenizer — it broadcasts onto the corpus token stream (map-side join over the scan); only the doc-keyed count aggregate shuffles, map-side combined (r10)",
+    "q108_bpe_train" -> "BPE training: corpus collapses to a VOCAB-sized word table once (token explode + hash agg, map-side combined, checkpointed); each round aggregates vocab-sized pairs, collects a 1-row argmax (q93's centroid shape), and rewrites only pair-containing words in one row-local projection (substring prefilter), checkpointed for the next round — round cost independent of corpus size",
+    "q109_bpe_segment" -> "BPE segmentation: the learned rules replay over the trainer's own checkpointed vocab table in one projection, and that seg table IS the tokenizer — it broadcasts onto the corpus token stream (map-side join over the scan); only the doc-keyed count aggregate shuffles, map-side combined",
     "q110_media_resize" -> "MAP-ONLY resize: per-row 48-element nearest-neighbor byte sampling rides the scan; the only exchange is the presentation sort (r10)",
     "q111_media_frame_sample" -> "MAP-ONLY frame sampling: explode(4) + a W-element fold per row ride the scan; the only exchange is the presentation sort (r10)",
-    "q112_bpe_apply_persisted" -> "tokenize-on-append: PERSISTED merge rules (built once per corpus fingerprint) replay over the BATCH's vocab-sized word table — no retrain, no training-corpus touch; batch stream pays one broadcast seg join (r10)",
+    "q112_bpe_apply_persisted" -> "tokenize-on-append: PERSISTED merge rules (built once per corpus fingerprint) replay over the BATCH's distinct tokens as one projection under the seg broadcast — no retrain, no training-corpus touch, no per-rule checkpoint; the batch stream pays one broadcast seg join",
     "q100_ivf_append" -> "persisted assignment index SCANNED for occupancy; only the batch is scored (one broadcast centroid join)",
     "q113_ivfpq_search" -> "IVF-PQ encode is MAP-ONLY: one broadcast centroid array row + broadcast residual codebook, per-row argmin in place — no exchange ever carries a vector; corpus-sized exchanges move (vec_id, cell, m, code) longs only (r11)",
     "q115_quality_classifier" -> "distributed-LR round (the MLlib GradientDescent shape): weights ship in the task closure — parameter application plans NO join (the broadcast joins BELOW the window are the one-time feature/label build, paid once then checkpointed); z is a doc-keyed window sum; the gradient is one bucket-keyed partial hash aggregate collapsing the corpus to <=66 rows (r11)",

@@ -1299,25 +1299,8 @@ object CurationQueries {
         .select(col("doc_id"), col("text"), col("p"))
         .checkpointed()
       // Stage 3: the persisted BPE merges bill the admitted docs
-      // (q112's replay: 8 rules over the admitted set's vocab-sized
-      // word table, then one broadcast seg join over the doc stream).
-      val merges = Tables.read(s, graft.operators.TextQueries.bpeMergesPrepared(s, dir))
-        .orderBy("step").collect()
-        .map(r => (r.getAs[String]("lhs"), r.getAs[String]("rhs")))
-      val words0 = adm
-        .select(explode(TextOps.tokens(col("text"))).as("tok")).distinct()
-        .select(col("tok"),
-          concat(regexp_replace(col("tok"), "(.)", "$1 "), lit("_")).as("w"))
-      val words = merges.foldLeft(words0.checkpointed()) { case (wds, (l, r)) =>
-        TextQueries.bpeApplyMerge(wds, l, r, carry = Seq("tok")).checkpointed()
-      }
-      val seg = words.select(col("tok"),
-        size(split(col("w"), " ")).cast("long").as("units"))
-      val bill = adm
-        .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
-        .join(broadcast(seg), "tok")
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_tokens"), sum(col("units")).as("n_units"))
+      // (q112's segmentation over the admitted set).
+      val bill = TextQueries.bpeSegmentWith(TextQueries.bpeMergesOf(s, dir), adm)
       // Stage 4: deterministic split; LEFT join so a token-free doc
       // still ships (billed zero) — a manifest must list every
       // admitted doc.
@@ -1482,10 +1465,7 @@ object CurationQueries {
         // identical trainer that built the persisted artifact, publish,
         // diff against the persisted rules step by step.
         // IDENTICAL trainer input as the persisted build, by sharing.
-        val (_, retrained) = TextQueries.bpeTrain(
-          TextQueries.bpeWords0(purged), carry = Seq("cnt"), applyLast = false)
-        s.createDataFrame(retrained)
-          .toDF("step", "lhs", "rhs", "merged", "score")
+        TextQueries.bpeTrain(TextQueries.bpeWords0(purged))
           .repartition(1).write.parquet(s"$root/bpe_merges")
       } {
         // 3. The qc model: same retrain discipline via the shared loop —

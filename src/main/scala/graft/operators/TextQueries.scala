@@ -94,85 +94,80 @@ object TextQueries {
   /** q108: number of BPE merge rules learned. */
   private[graft] val BpeMerges = 8
 
-  /** One greedy-leftmost BPE merge applied to a word table
-    * `(w: space-joined units, cnt)` — the application step of
-    * Sennrich et al. 2016's algorithm, exposed for BpeSpec's
-    * planted-run laws. The sequential recurrence sel_i = m_i ∧ ¬sel_{i−1}
-    * (merge here only if the previous position didn't) has a closed
-    * form over gaps-and-islands: within each maximal run of
-    * consecutive (l,r) adjacencies, every SECOND match fires. That
-    * makes leftmost-greedy application fully declarative — two
-    * windows over unit positions, no per-row loop. Only words that
-    * can contain the pair pay the explode/window/rebuild (substring
-    * prefilter; false positives — the pair text spanning a unit
-    * boundary — just pass through the rewrite unchanged).
+  /** A spaced-unit BPE word (`"c a t _"`) with every rule of `rules`
+    * applied in order: the application step of Sennrich et al. 2016's
+    * algorithm as one row-local column. A rule `(l, r)` merges each
+    * leftmost-greedy, non-overlapping `l r` adjacency into `l⧺r`: the
+    * inner fold carries (out, skip) over the unit array, and a fired
+    * merge emits l⧺r and skips the next unit — the sequential
+    * recurrence sel_i = m_i ∧ ¬sel_{i−1} verbatim. The DuckDB oracle
+    * keeps the gaps-and-islands closed form of the same recurrence
+    * (within a run of matches every second one fires, [[bpeApplyCte]]),
+    * so each hash is an independent check; BpeSpec pins this column
+    * against a sequential reference. A word that cannot contain
+    * `"l r"` skips the rule's fold; a false positive (the pair text
+    * spanning a unit boundary) folds to itself. An empty list returns
+    * `w`.
     *
-    * Row identity: windows partition by `w` PLUS the carry columns —
-    * the same key the trailing groupBy rebuilds on — so two input
-    * rows sharing a `w` but differing in a carry column (e.g. two
-    * toks normalizing to one unit string) rewrite independently
-    * instead of interleaving their posexplode positions in one window
-    * partition (ADVICE r10 #1). Input rows must be distinct on
-    * (w, carry*); duplicates would still interleave. */
-  private[graft] def bpeApplyMerge(words: DataFrame, l: String, r: String,
-      carry: Seq[String] = Seq("cnt")): DataFrame = {
-    // ROW-LOCAL rewrite (r15, guide §2.4 "remove shuffles outright"):
-    // the previous form posexploded each word and ran the recurrence
-    // through windows PARTITIONED BY THE WORD ITSELF plus a groupBy
-    // rebuild — i.e. two sort-windows and a hash aggregate (three
-    // exchanges per merge round) to compute a function of one row. The
-    // leftmost-greedy scan is instead folded in place over the unit
-    // array: carry (out, skip) through `aggregate`; at each position,
-    // a fired merge emits l⧺r and skips the next unit, the recurrence
-    // sel_i = m_i ∧ ¬sel_{i−1} verbatim (BpeSpec's planted-run laws
-    // pin equality with the islands closed form the DuckDB oracle
-    // keeps). One merge round is now a map-only projection — the BPE
-    // family's 8-round replays (q108/q109/q112/q117/q123/q125) plan
-    // ZERO exchanges per round instead of three, which at any scale
-    // removes 24 vocab-sized shuffles and their stage barriers per
-    // replay. The contains() guard skips the fold for words that
-    // cannot contain the pair (false positives — the pair text
-    // spanning a unit boundary — fold to themselves, exactly as they
-    // rebuilt unchanged before). Bonus: rows no longer need to be
-    // distinct on (w, carry*) — the old window interleaved duplicate
-    // rows' positions; a row-local fold cannot.
-    val units = split(col("w"), " ")
-    // Lookahead column: unit i+1, '' past the end (null-proofed like
-    // the old lead(): m must be a TOTAL boolean).
-    val nxt = concat(
-      slice(units, lit(2), greatest(size(units) - 1, lit(0))), array(lit("")))
-    val emptyOut = typedlit(Seq.empty[String])
-    val folded = aggregate(
-      zip_with(units, nxt, (a, b) => struct(a.as("u"), b.as("n"))),
-      struct(emptyOut.as("out"), lit(false).as("skip")),
-      (acc, e) => {
-        val out = acc.getField("out")
-        when(acc.getField("skip"), // right half of a fired merge vanishes
-          struct(out.as("out"), lit(false).as("skip")))
-          .when(e.getField("u") === lit(l) && e.getField("n") === lit(r),
-            struct(concat(out, array(lit(l + r))).as("out"),
-              lit(true).as("skip")))
-          .otherwise(struct(concat(out, array(e.getField("u"))).as("out"),
-            lit(false).as("skip")))
-      },
-      acc => concat_ws(" ", acc.getField("out")))
-    words.withColumn("w",
-      when(col("w").contains(s"$l $r"), folded).otherwise(col("w")))
-  }
+    * The rules ride as a literal array of at most [[BpeMerges]]
+    * structs, so a whole replay is one projection: no exchange and no
+    * per-rule plan, job or checkpoint, on a vocabulary-sized table at
+    * any corpus size. A codegen'd Catalyst class for this was
+    * considered and not built: it would add an interpreted and a
+    * generated path, and no benchmark workload shows in-stage replay
+    * time. Revisit when one runs a BPE query and does. */
+  private[graft] def bpeReplay(w: Column, rules: Seq[(String, String)]): Column =
+    if (rules.isEmpty) w
+    else aggregate(
+      array(rules.map { case (l, r) => struct(lit(l).as("l"), lit(r).as("r")) }: _*),
+      w,
+      (word, rule) => {
+        val (l, r) = (rule.getField("l"), rule.getField("r"))
+        val units = split(word, " ")
+        // Lookahead column: unit i+1, '' past the end (m must be a
+        // TOTAL boolean).
+        val nxt = concat(
+          slice(units, lit(2), greatest(size(units) - 1, lit(0))), array(lit("")))
+        val merged = aggregate(
+          zip_with(units, nxt, (a, b) => struct(a.as("u"), b.as("n"))),
+          struct(typedlit(Seq.empty[String]).as("out"), lit(false).as("skip")),
+          (acc, e) => {
+            val out = acc.getField("out")
+            when(acc.getField("skip"), // right half of a fired merge vanishes
+              struct(out.as("out"), lit(false).as("skip")))
+              .when(e.getField("u") === l && e.getField("n") === r,
+                struct(concat(out, array(concat(l, r))).as("out"),
+                  lit(true).as("skip")))
+              .otherwise(struct(concat(out, array(e.getField("u"))).as("out"),
+                lit(false).as("skip")))
+          },
+          acc => concat_ws(" ", acc.getField("out")))
+        when(word.contains(concat(l, lit(" "), r)), merged).otherwise(word)
+      })
 
-  /** The K-round greedy trainer shared by q108/q109: per round, count
-    * adjacent unit pairs weighted by cnt, pick the (count desc,
-    * (u1, u2) asc) argmax — a 1-row collect, q93's Lloyd-round shape —
-    * and apply the merge via [[bpeApplyMerge]]. Returns the final word
-    * table and the merge log. Stops early when no pair remains (every
-    * word a single unit); the DuckDB mirror's LEFT JOIN keeps its word
-    * table unchanged through such rounds, so both engines converge on
-    * the same final table. `applyLast` = false lets q108 skip the
-    * K-th rewrite its output never reads. */
-  private[graft] def bpeTrain(words0: DataFrame, carry: Seq[String],
-      applyLast: Boolean)
-      : (DataFrame, Seq[(Long, String, String, String, Long)]) = {
-    var words = words0.checkpointed()
+  /** The K-round greedy trainer (q108, q109, q125's retrain and the
+    * [[bpeMergesPrepared]] artifact) over a materialized
+    * [[bpeWords0]] table: per round, count adjacent unit pairs weighted
+    * by cnt, collect the (count desc, (u1, u2) asc) argmax — a 1-row
+    * collect, q93's Lloyd-round shape — and rewrite the words with that
+    * one rule through [[bpeReplay]]. Returns the merge log
+    * `(step, lhs, rhs, merged, score)`. Stops early when no pair
+    * remains (every word one unit); the DuckDB mirror's LEFT JOIN keeps
+    * its word table unchanged through such rounds, so both engines log
+    * the same rules. The K-th rewrite is never read, so it is not run.
+    *
+    * Each round's rewrite is checkpointed because the next round reads
+    * it: the checkpoint truncates an iterative lineage. Measured and
+    * rejected (4 cores, `graft.Bench`): no per-round checkpoint, round
+    * i replaying rules[0..i) over the input instead. The six BPE
+    * queries then ran 141 jobs at sf0.001 instead of 162 (q108 27 → 20,
+    * q109 30 → 23, q125 62 → 55), but at sf0.01 q109 went 1.42/1.50 →
+    * 1.65/1.58 s, and q108 (1.42/1.48 → 1.49/1.47 s) and q125
+    * (2.70/2.88 → 2.48/2.86 s) did not fall (2 runs each). Round i
+    * repeats the work of i−1 rules, so the rule-row work grows with K²
+    * instead of K on a vocabulary of any size. */
+  private[graft] def bpeTrain(words0: DataFrame): DataFrame = {
+    var words = words0
     val merges = Seq.newBuilder[(Long, String, String, String, Long)]
     var step = 1
     var exhausted = false
@@ -190,37 +185,46 @@ object TextQueries {
       else {
         val (l, r) = (top(0).getString(0), top(0).getString(1))
         merges += ((step.toLong, l, r, l + r, top(0).getLong(2)))
-        if (step < BpeMerges || applyLast)
-          words = bpeApplyMerge(words, l, r, carry).checkpointed()
+        if (step < BpeMerges)
+          words = words.withColumn("w", bpeReplay(col("w"), Seq(l -> r))).checkpointed()
         step += 1
       }
     }
-    (words, merges.result())
+    words0.sparkSession.createDataFrame(merges.result())
+      .toDF("step", "lhs", "rhs", "merged", "score")
   }
 
-  /** The PERSISTED merge table (q112's index side): built once per
+  /** The trainer's input: the corpus collapsed to its vocabulary
+    * `(tok, w: spaced units, cnt)`, checkpointed because every training
+    * round reads it. One definition shared by q108, q109, the artifact
+    * build and q125's retrain-on-takedown, so "the identical trainer
+    * over the survivors" holds by sharing, not by keeping copies in
+    * sync. */
+  private[graft] def bpeWords0(d: DataFrame): DataFrame =
+    d.select(explode(TextOps.tokens(col("text"))).as("tok"))
+      .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
+      .select(col("tok"), bpeWord(col("tok")).as("w"), col("cnt"))
+      .checkpointed()
+
+  /** A token as a spaced-unit BPE word: one unit per character, then
+    * the end-of-word marker (`"cat"` → `"c a t _"`). */
+  private def bpeWord(tok: Column): Column =
+    concat(regexp_replace(tok, "(.)", "$1 "), lit("_"))
+
+  /** A merge log's rules in step order (at most [[BpeMerges]] rows). */
+  private[graft] def bpeRules(merges: DataFrame): Seq[(String, String)] =
+    merges.collect().toSeq.sortBy(_.getAs[Long]("step"))
+      .map(r => (r.getAs[String]("lhs"), r.getAs[String]("rhs")))
+
+  /** The PERSISTED merge log (q112's index side): built once per
     * corpus fingerprint via [[bpeTrain]] and published through the
     * same build-into-tmp + rename discipline as DedupIndex /
     * VectorIndex — the production precondition of tokenize-on-append:
     * the rules already EXIST, a new batch never retrains. */
-  /** The trainer's input: the corpus collapsed to a (spaced-unit word,
-    * count) frequency table. ONE definition shared by the artifact
-    * build and q125's retrain-on-takedown — the retrain's claim is
-    * "the IDENTICAL trainer over the survivors", which must be enforced
-    * by sharing, not by keeping two copies in sync. */
-  private[graft] def bpeWords0(d: DataFrame): DataFrame =
-    d.select(explode(TextOps.tokens(col("text"))).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
-      .select(concat(regexp_replace(col("tok"), "(.)", "$1 "), lit("_")).as("w"),
-        col("cnt"))
-
   private[graft] def bpeMergesPrepared(s: SparkSession, sfDir: String): String =
     graft.pipeline.PreparedArtifact.publishOnce(s, "graft_bpe_merges",
         graft.pipeline.PreparedArtifact.fingerprint(s, sfDir, "documents")) { tmp =>
-      val (_, merges) =
-        bpeTrain(bpeWords0(docs(s, sfDir)), carry = Seq("cnt"), applyLast = false)
-      s.createDataFrame(merges)
-        .toDF("step", "lhs", "rhs", "merged", "score")
+      bpeTrain(bpeWords0(docs(s, sfDir)))
         .repartition(1).write.mode("overwrite").parquet(tmp.toString)
     }
 
@@ -238,8 +242,8 @@ object TextQueries {
        |${pfx}best_$i AS (SELECT u1, u2, total FROM ${pfx}pr_$i
        |            ORDER BY total DESC, u1, u2 LIMIT 1)""".stripMargin
 
-  /** DuckDB mirror of [[bpeApplyMerge]] over word table `src` with the
-    * round's winning pair from `best_i` (same islands closed form).
+  /** DuckDB mirror of one [[bpeReplay]] rule over word table `src`,
+    * the round's winning pair from `best_i`, in the islands closed form.
     * `carry` = the non-w columns threaded through unchanged; `out`
     * names the produced CTE (q112 replays the rules onto a batch
     * chain `b_i` beside the training chain `w_i`). */
@@ -753,7 +757,7 @@ object TextQueries {
     // per round, one vocab-sized adjacent-pair aggregate (map-side
     // combined), a 1-row argmax collect (the same driver-loop shape
     // as q93's Lloyd centroids), and a rewrite of only the words that
-    // can contain the winning pair ([[bpeApplyMerge]]'s prefilter).
+    // can contain the winning pair ([[bpeReplay]]'s prefilter).
     // At 100 TB the corpus pass dominates and parallelizes as a scan;
     // the rounds cost vocab-size, independent of corpus size.
     // Determinism: tie-breaks on ascending (u1, u2) — all-ASCII units
@@ -781,16 +785,7 @@ object TextQueries {
         chain.append(")\nORDER BY step")
         chain.toString
       }) { (s, dir) =>
-      val words0 = docs(s, dir)
-        .select(explode(TextOps.tokens(col("text"))).as("tok"))
-        .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
-        .select(concat(regexp_replace(col("tok"), "(.)", "$1 "), lit("_")).as("w"),
-          col("cnt"))
-      val (_, merges) = // the K-th rewrite is never read here
-        bpeTrain(words0, carry = Seq("cnt"), applyLast = false)
-      s.createDataFrame(merges)
-        .toDF("step", "lhs", "rhs", "merged", "score")
-        .presented("step")
+      bpeTrain(bpeWords0(docs(s, dir))).presented("step")
     },
 
     // ----- X4+/LLM: BPE SEGMENTATION — q108's other half: train the
@@ -802,7 +797,9 @@ object TextQueries {
     // VOCAB-sized word table itself (token → its unit count) — it
     // broadcasts to the corpus token stream, so tokenizing 100 TB is
     // one map-side join over the scan; only the per-doc count
-    // aggregate shuffles (map-side combined, doc-keyed).
+    // aggregate shuffles (map-side combined, doc-keyed). The learned
+    // rules replay over the trainer's own input table, so segmentation
+    // adds one projection and no second pass over the corpus tokens.
     q("q109_bpe_segment",
       "X4+/LLM: corpus segmentation with the learned BPE merges (per-doc token/unit counts)",
       {
@@ -829,16 +826,10 @@ object TextQueries {
              |GROUP BY 1 ORDER BY doc_id""".stripMargin)
         chain.toString
       }) { (s, dir) =>
-      val words0 = docs(s, dir)
-        .select(explode(TextOps.tokens(col("text"))).as("tok"))
-        .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
-        .select(col("tok"),
-          concat(regexp_replace(col("tok"), "(.)", "$1 "), lit("_")).as("w"),
-          col("cnt"))
-      val (words, _) =
-        bpeTrain(words0, carry = Seq("tok", "cnt"), applyLast = true)
-      val seg = words.select(col("tok"),
-        size(split(col("w"), " ")).cast("long").as("units"))
+      val words0 = bpeWords0(docs(s, dir))
+      val rules = bpeRules(bpeTrain(words0))
+      val seg = words0.select(col("tok"),
+        size(split(bpeReplay(col("w"), rules), " ")).cast("long").as("units"))
       docs(s, dir)
         .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
         .join(broadcast(seg), "tok")
@@ -857,22 +848,21 @@ object TextQueries {
     // word table, never retraining and never touching the training
     // corpus. OOV tokens are the point: a fixed tokenizer applies its
     // rules to unseen words wherever they match (the replay needs no
-    // counts at all — carry is just the token key). Append cost scales
-    // with the BATCH vocabulary: 8 rule replays over a tiny table +
-    // one broadcast seg join over the batch stream. The oracle
+    // counts at all, only the token). Append cost scales with the
+    // BATCH vocabulary: one projection over a tiny table + one
+    // broadcast seg join over the batch stream. The oracle
     // re-derives the same rules from the training corpus (the q68
     // convention: persisted index vs oracle recompute) and replays
     // them on a parallel batch CTE chain.
     q("q112_bpe_apply_persisted",
       "X4+/LLM: batch tokenization via persisted BPE merges (no retrain, OOV-safe)",
       bpeApplyPersistedOracleSql) { (s, dir) =>
-      val merges = bpeMergesOf(s, dir)
-      bpeSegmentWith(merges, bpeAppendBatch(s, dir))
+      bpeSegmentWith(bpeMergesOf(s, dir), bpeAppendBatch(s, dir))
         .orderBy("doc_id") // row-per-doc output: parallel range sort
     },
 
-    // ----- T6 + X4+/LLM (round-12 completion of the append family's
-    // streaming column): STREAMING tokenize-on-append — q112's replay
+    // ----- T6 + X4+/LLM (the append family's streaming column):
+    // STREAMING tokenize-on-append — q112's replay
     // drained as an AvailableNow stream (the q118/q120 harness): the
     // append batch lands as parquet files, maxFilesPerTrigger=1 forces
     // ≥2 micro-batches, and foreachBatch replays the PERSISTED 8 merge
@@ -886,10 +876,10 @@ object TextQueries {
     // are SUBSETS of the whole-batch table; the replay visits each
     // distinct token identically wherever it appears). The oracle is
     // q112's verbatim: stream ≡ batch IS the hash gate, and
-    // BpeTokenizerSpec pins in-engine stream-vs-batch equality plus
+    // BpeSpec pins in-engine stream-vs-batch equality plus
     // the observed ≥2-micro-batch discipline. At 100 TB this is the
     // tokenizer in the ingest path: catch-up over any backlog is just
-    // more batches, each paying 8 rule replays over its OWN tiny
+    // more batches, each paying one projection over its OWN tiny
     // vocabulary + one broadcast join over its doc stream.
     q("q123_stream_tokenize",
       "T6+X4+/LLM: streaming tokenize-on-append via persisted BPE merges (foreachBatch, stateless)",
@@ -902,15 +892,14 @@ object TextQueries {
   /** q123's drain, file-count parameterized (each file is one
     * micro-batch under maxFilesPerTrigger=1; the registered query runs
     * 2; the `backlog` family of the test-scope scale probe drains a
-    * 10-file backlog to measure the per-micro-batch marginal cost —
-    * VERDICT r13 #3). */
+    * 10-file backlog to measure the per-micro-batch marginal cost). */
   private[graft] def bpeStreamDrain(s: SparkSession, dir: String,
       nFiles: Int): DataFrame = {
-    val merges = bpeMergesOf(s, dir)
+    val rules = bpeMergesOf(s, dir)
     val batch = bpeAppendBatch(s, dir)
     val root = graft.TempDirs.fresh("q123")
     val target = new Drain.Target(Drain.targetDir(root))
-    Drain.split(root, batch, nFiles)(Drain.appendEach(target)(bpeSegmentWith(merges, _)))
+    Drain.split(root, batch, nFiles)(Drain.appendEach(target)(bpeSegmentWith(rules, _)))
     target.read(s).orderBy("doc_id")
   }
 
@@ -958,10 +947,8 @@ object TextQueries {
   }
 
   /** The persisted merge rules, read once (8 tiny rows → closure). */
-  private[graft] def bpeMergesOf(s: SparkSession, dir: String): Array[(String, String)] =
-    Tables.read(s, bpeMergesPrepared(s, dir))
-      .orderBy("step").collect()
-      .map(r => (r.getAs[String]("lhs"), r.getAs[String]("rhs")))
+  private[graft] def bpeMergesOf(s: SparkSession, dir: String): Seq[(String, String)] =
+    bpeRules(Tables.read(s, bpeMergesPrepared(s, dir)))
 
   /** q112's planted append batch: every 5th doc, id-shifted +70000
     * (under the Tables.PlantIdFloor headroom guard), an OOV marker
@@ -972,23 +959,21 @@ object TextQueries {
         concat(col("text"), lit(" zq"), pmod(col("doc_id"), lit(7)).cast("string"))
           .as("text"))
 
-  /** Segment `b`'s docs by REPLAYING the persisted rules over b's own
-    * vocab-sized word table (8 replays + one broadcast seg join — the
-    * cost scales with b, never the corpus). Unordered: q112 adds the
-    * row-per-doc range sort; q123 runs this per micro-batch and sorts
-    * the drained target instead. */
+  /** Segment `b`'s docs `(doc_id, text)` with the merge `rules`: the
+    * rules replay ([[bpeReplay]]) over b's own distinct tokens as one
+    * projection, and that vocabulary-sized seg table broadcasts onto
+    * b's token stream; only the doc-keyed count aggregate shuffles.
+    * Cost scales with b, never the training corpus. Nothing is
+    * checkpointed: the seg table is computed once, under the
+    * broadcast. Unordered: q112 and q117 sort their output; q123 runs
+    * this per micro-batch and sorts the drained target. */
   private[graft] def bpeSegmentWith(
-      merges: Array[(String, String)], b: DataFrame): DataFrame = {
-    val words0 = b
-      .select(explode(TextOps.tokens(col("text"))).as("tok")).distinct()
+      rules: Seq[(String, String)], b: DataFrame): DataFrame = {
+    val toks = explode(TextOps.tokens(col("text"))).as("tok")
+    val seg = b.select(toks).distinct()
       .select(col("tok"),
-        concat(regexp_replace(col("tok"), "(.)", "$1 "), lit("_")).as("w"))
-    val words = merges.foldLeft(words0.checkpointed()) { case (w, (l, r)) =>
-      bpeApplyMerge(w, l, r, carry = Seq("tok")).checkpointed()
-    }
-    val seg = words.select(col("tok"),
-      size(split(col("w"), " ")).cast("long").as("units"))
-    b.select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
+        size(split(bpeReplay(bpeWord(col("tok")), rules), " ")).cast("long").as("units"))
+    b.select(col("doc_id"), toks)
       .join(broadcast(seg), "tok")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"), sum(col("units")).as("n_units"))

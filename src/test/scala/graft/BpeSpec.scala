@@ -1,17 +1,36 @@
 package graft
 
+import graft.operators.TextQueries.bpeReplay
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** q108 BPE-training laws at sf0.001: the distributed trainer must
   * reproduce, merge for merge, a direct sequential implementation of
   * Sennrich et al. 2016 run on the collected word counts — and the
-  * declarative gaps-and-islands merge application must equal greedy
-  * leftmost scanning on planted runs (the case windows get wrong
-  * first: overlapping matches like 'a a a a').
+  * rule replay must equal greedy leftmost scanning on planted runs
+  * (the case a merge gets wrong first: overlapping matches like
+  * 'a a a a') and a sequential fold over random rule lists.
   */
 class BpeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
+
+  /** `words` with the rules replayed over column `w`. */
+  private def replayed(words: DataFrame, rules: (String, String)*): DataFrame =
+    words.withColumn("w", bpeReplay(col("w"), rules))
+
+  /** The units of [[randomWords]]. */
+  private val alphabet = Vector("a", "b", "ab", "_")
+
+  /** 300 random unit sequences over [[alphabet]], deduplicated. Fixed
+    * seed: reproducible. */
+  private lazy val randomWords: Vector[Vector[String]] = {
+    val rnd = new scala.util.Random(20260814)
+    Vector.fill(300)(
+      Vector.fill(1 + rnd.nextInt(12))(alphabet(rnd.nextInt(alphabet.size))))
+      .distinct
+  }
 
   /** Greedy leftmost non-overlapping application — the reference. */
   private def applySeq(units: Vector[String], l: String, r: String): Vector[String] = {
@@ -188,7 +207,7 @@ class BpeSpec extends AnyFunSuite {
       ("xa b _", ("a", "b"), "xa b _"))
     cases.foreach { case (w, (l, r), want) =>
       val in = spark.createDataFrame(Seq((w, 1L))).toDF("w", "cnt")
-      val out = graft.operators.TextQueries.bpeApplyMerge(in, l, r)
+      val out = replayed(in, l -> r)
         .collect().map(x => (x.getString(0), x.getLong(1)))
       assert(out.toSeq == Seq((want, 1L)), s"'$w' + ($l,$r)")
     }
@@ -201,19 +220,14 @@ class BpeSpec extends AnyFunSuite {
     // which is why the comparison is a multiset. (In the pipeline
     // collisions cannot occur — unit concatenation always spells the
     // original token, so distinct tokens keep distinct words — but
-    // the helper must not silently rely on that here.) Fixed seed:
-    // reproducible.
-    val rnd = new scala.util.Random(20260814)
-    val alphabet = Vector("a", "b", "ab", "_")
-    val words = Vector.fill(300)(
-      Vector.fill(1 + rnd.nextInt(12))(alphabet(rnd.nextInt(alphabet.size))))
-      .distinct
+    // the helper must not silently rely on that here.)
+    val words = randomWords
     val in = spark.createDataFrame(words.map(us => (us.mkString(" "), 1L)))
       .toDF("w", "cnt")
     for (l <- alphabet; r <- alphabet) {
       val expected = words.map(us => applySeq(us, l, r).mkString(" "))
         .groupBy(identity).view.mapValues(_.size).toMap
-      val got = graft.operators.TextQueries.bpeApplyMerge(in, l, r)
+      val got = replayed(in, l -> r)
         .collect().map(_.getString(0))
         .groupBy(identity).view.mapValues(_.size).toMap
       assert(got == expected, s"pair ($l,$r)")
@@ -221,17 +235,13 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("bpeApplyMerge rewrites rows sharing w but differing in carry independently") {
-    // Two rows with the SAME unit string but distinct carry values
-    // (e.g. two toks normalizing to one w): the window partitions by
-    // (w, carry*), so each row's positions form their own partition
-    // and both rewrite correctly instead of interleaving posexplode
-    // positions (duplicate i in one partition → nondeterministic
-    // lead/lag/sel).
+    // Two rows with the SAME unit string but distinct other columns
+    // (e.g. two toks normalizing to one w): the rewrite is row-local,
+    // so each row rewrites on its own and keeps its own columns.
     val in = spark.createDataFrame(Seq(
       ("a a a a _", "tokX", 2L), ("a a a a _", "tokY", 5L), ("b a a _", "tokZ", 1L)))
       .toDF("w", "tok", "cnt")
-    val out = graft.operators.TextQueries
-      .bpeApplyMerge(in, "a", "a", carry = Seq("tok", "cnt"))
+    val out = replayed(in, "a" -> "a")
       .collect().map(x => (x.getString(0), x.getString(1), x.getLong(2))).toSet
     assert(out == Set(
       ("aa aa _", "tokX", 2L), ("aa aa _", "tokY", 5L), ("b aa _", "tokZ", 1L)))
@@ -240,9 +250,42 @@ class BpeSpec extends AnyFunSuite {
   test("bpeApplyMerge preserves counts and word multiplicity") {
     val in = spark.createDataFrame(Seq(
       ("a b c _", 7L), ("a b a b _", 3L), ("z _", 11L))).toDF("w", "cnt")
-    val out = graft.operators.TextQueries.bpeApplyMerge(in, "a", "b")
+    val out = replayed(in, "a" -> "b")
       .collect().map(x => (x.getString(0), x.getLong(1))).toSet
     assert(out == Set(("ab c _", 7L), ("ab ab _", 3L), ("z _", 11L)))
+  }
+
+  test("bpeReplay of a rule list equals the sequential fold of its rules") {
+    // 36 random rule lists, four of each length 0-8, over the same 300
+    // random words. Each rule draws its units from the alphabet plus
+    // the earlier rules' merged units, so later rules consume earlier
+    // merges and the order of the list matters. Multiset comparison,
+    // as in the one-rule law.
+    val rnd = new scala.util.Random(20261019)
+    val in = spark.createDataFrame(randomWords.map(us => (us.mkString(" "), 1L)))
+      .toDF("w", "cnt")
+    for (i <- 0 until 36) {
+      var pool = alphabet
+      val rules = Vector.fill(i % 9) {
+        val (l, r) = (pool(rnd.nextInt(pool.size)), pool(rnd.nextInt(pool.size)))
+        pool :+= l + r
+        (l, r)
+      }
+      val expected = randomWords
+        .map(us => rules.foldLeft(us) { case (u, (l, r)) => applySeq(u, l, r) }.mkString(" "))
+        .groupBy(identity).view.mapValues(_.size).toMap
+      val got = replayed(in, rules: _*)
+        .collect().map(_.getString(0))
+        .groupBy(identity).view.mapValues(_.size).toMap
+      assert(got == expected, s"rules $rules")
+    }
+  }
+
+  test("q112 starts at most 9 jobs") {
+    // The replay is one projection under the seg broadcast: no
+    // checkpoint per rule.
+    val counts = TestSpark.jobCountsUntil("q112_bpe_apply_persisted", dir, 9L)
+    assert(counts.exists(_ <= 9L), s"jobs per run: $counts")
   }
 
   test("q123 streams the tokenize: >= 2 micro-batches, stream == batch counts") {

@@ -2,8 +2,6 @@ package graft
 
 import graft.functions.TextOps
 import graft.operators.ReleaseQueries
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -476,28 +474,8 @@ class ReleaseSpec extends AnyFunSuite {
   // instead of separate aggregates joined or broadcast back. These pin
   // what each replacement must equal, and the job count it buys.
 
-  private def jobsOf(name: String): Long = {
-    val jobs = new AtomicLong(0L)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    org.apache.spark.GraftSpark.drainListeners(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      SparkEntry.queries(name)(spark, dir).write.mode("overwrite").format("noop").save()
-      org.apache.spark.GraftSpark.drainListeners(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    jobs.get
-  }
-
   test("q132 starts at most 31 jobs") {
-    // AQE picks some join and stage shapes from runtime stage timing, so
-    // a run now and then plans a variant (CodegenCacheSpec); the bound
-    // must hold on one of three runs.
-    var counts = List.empty[Long]
-    while (counts.size < 3 && !counts.exists(_ <= 31L))
-      counts :+= jobsOf("q132_curriculum_shards")
+    val counts = TestSpark.jobCountsUntil("q132_curriculum_shards", dir, 31L)
     assert(counts.exists(_ <= 31L), s"jobs per run: $counts")
   }
 
