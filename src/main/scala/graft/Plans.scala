@@ -48,13 +48,13 @@ object Plans {
     "q111_media_frame_sample" -> "MAP-ONLY frame sampling: explode(4) + a W-element fold per row ride the scan; the only exchange is the presentation sort (r10)",
     "q112_bpe_apply_persisted" -> "tokenize-on-append: PERSISTED merge rules (built once per corpus fingerprint) replay over the BATCH's distinct tokens as one projection under the seg broadcast — no retrain, no training-corpus touch, no per-rule checkpoint; the batch stream pays one broadcast seg join",
     "q100_ivf_append" -> "persisted assignment index SCANNED for occupancy; only the batch is scored (one broadcast centroid join)",
-    "q113_ivfpq_search" -> "IVF-PQ encode is MAP-ONLY: one broadcast centroid array row + broadcast residual codebook, per-row argmin in place — no exchange ever carries a vector; corpus-sized exchanges move (vec_id, cell, m, code) longs only (r11)",
+    "q113_ivfpq_search" -> "IVF-PQ encode is MAP-ONLY: the centroids collapse to one broadcast array row and each scan row computes its argmin cell, residual and subspace slices in place; the residual codebook broadcasts. No shuffle carries a vector column: the one corpus-sized exchange is the (vec_id, cell_id, m)-keyed min_by encode with a (code, d) buffer",
     "q115_quality_classifier" -> "distributed-LR round (the MLlib GradientDescent shape): weights ship in the task closure — parameter application plans NO join (the broadcast joins BELOW the window are the one-time feature/label build, paid once then checkpointed); z is a doc-keyed window sum; the gradient is one bucket-keyed partial hash aggregate collapsing the corpus to <=66 rows (r11)",
     "q116_score_persisted" -> "score-on-append: the PERSISTED model (<=66 rows, read once) ships in the task closure — inference is tokenize + per-(doc,b) reduce + a doc-keyed window sum; NO join against the corpus, no training-data touch; cost scales with the batch alone (r11)",
     "q119_ivfpq_append" -> "encode-on-append: the PERSISTED packed codes table SCANNED, never re-encoded (the batch-side encode lives below the checkpoint — q113's map-only shape); the insert check is ONE cell_id equi-join between packed-row frames with the ADC distance computed IN-ROW (flat 16-entry table lookup + exact-decimal 4-term sum) — no pair-level exchange exists; nearest-neighbor pick is a map-side min_by (r11)",
-    "q121_ivfpq_trained" -> "trained-centroid IVF-PQ: q93's Lloyd rounds (centroids broadcast, vectors never shuffle) feed q113's layout through the SHARED search helper — the post-training plan is q113's verbatim; the dump shows the search side over the trained checkpoint (r11)",
+    "q121_ivfpq_trained" -> "trained-centroid IVF-PQ: q93's Lloyd rounds (VectorIndex.assign + lloydMeans) train the centroids below their checkpoint, then q113's search helper runs unchanged; the dump shows that search over the checkpointed base, trained centroids and encode: CollectTopK probe and ADC selection, broadcast centroids and per-probe distance tables joined to the code rows, and the recall join against the exact top-k",
     "q125_takedown_artifacts" -> "takedown completion: the assignment-index purge is one pushed NOT-filter rewrite published to parquet; each audit row is a count aggregate over a published scan; the artifact diffs are full-outer equi-joins on 8-row/66-row frames; the retrains themselves are q108's and q115's proven shapes fed the survivor filter (r12)",
-    "q126_ivfpq_nprobe_curve" -> "nprobe curve: ONE map-only encode per variant (q113's shape, below the checkpoint); cell ranking + distance tables are tiny broadcasts; the sweep is a candidates-x-nprobe window partitioned by (query, nprobe) + a shortlist-sized exact re-rank join — query-sized, the corpus is never re-encoded per point (r12)",
+    "q126_ivfpq_nprobe_curve" -> "nprobe curve: each variant's encode, all-cell ranking, ADC and candidates-x-nprobe shortlist window sit below its shortlist checkpoint (the candidate builder q137 shares); the dump shows what reads that checkpoint: the plain recall join against the exact top-k, and the exact re-rank (shortlist rows joined to the vectors, broadcast at sf0.001, then a (query, nprobe)-partitioned window), then per-nprobe recall means; nothing re-encodes per nprobe point",
     "q133_card_on_append" -> "card-on-append: the PERSISTED sigstats/card tables arrive by parquet scan; the batch features are map-only; the sigstats probe is PARTITION-PRUNED to the hash buckets the batch touches (bucket=k directory pruning visible in the FileScan, r15) and probes the BROADCAST batch-hash frame (result <= batch-sized, then re-broadcast); every later join/aggregate is batch- or card-sized; shares/means recompute from exact integer sums (r12)",
     "q134_stream_card_maintain" -> "streaming card maintenance: q133's cardUpdate per micro-batch with artifact WRITE-BACK through the SigstatsStore manifest layout (r15): each micro-batch reads and rewrites ONLY the sig-hash buckets its batch touches, the new version's manifest re-references untouched buckets' files in place (merge-on-read/LSM shape) — no corpus rescan, no corpus shuffle; the commit clusters the touched rows by bucket before the dynamic-partition write so the writer opens one file per bucket, not tasks x buckets (r16, plans/r16/sigstats_commit_write_*.txt); the dump shows the registered drain's final card read (the stream side is foreachBatch, outside the plan) (r12)",
     "q127_train_order" -> "curriculum manifest: one 5-row lang-counts agg feeds a 15-row threshold broadcast; the corpus side is epoch-explode + broadcast-hash join + per-row hash keep — MAP-ONLY selection (no window, no per-stratum rank); the only corpus exchange is the trailing range sort of the manifest itself (r12)",
@@ -94,10 +94,9 @@ object Plans {
         val base = Tables.load(spark, sfDir, "embeddings")
           .select(col("vec_id"),
             functions.VectorOps.asDouble(col("embedding")).as("ev"))
-        val sub = operators.SimilarityQueries.ivfpqSub(base)
-        val cb = sub.filter(col("vec_id") < operators.SimilarityQueries.PqK)
-          .select(col("m"), col("vec_id").as("code"), col("sv").as("cvr"))
-        operators.SimilarityQueries.ivfpqCodes(sub, cb)
+        val cents = pipeline.VectorIndex.seedCentroids(base, operators.SimilarityQueries.IvfCells)
+        operators.SimilarityQueries.ivfpqIndex(
+          operators.SimilarityQueries.ivfpqSub(base, cents)).codes
       }) +
       // q115's training round, pre-checkpoint: closure-shipped weights
       // (no join), doc-keyed window z, 6dp sigmoid, bucket-keyed

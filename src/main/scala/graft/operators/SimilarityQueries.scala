@@ -4,7 +4,8 @@ import graft.Materialize.CheckpointOps
 import graft.{NamedQuery, Overlap, Tables}
 import graft.NamedQuery.{q, PresentationOps}
 import graft.functions.{Exact, ExactSql, VectorOps}
-import graft.pipeline.Embedder
+import graft.pipeline.{Embedder, VectorIndex}
+import graft.plans.CollectTopK
 import graft.streaming.Drain
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -175,7 +176,7 @@ object SimilarityQueries {
     * cap and prove the guarded path bit-identical. */
   private[graft] val SemCellCap = 4096
 
-  /** The q99 engine, hot-cell-safe (VERDICT r5 "What's wrong #1"):
+  /** The q99 engine, hot-cell-safe:
     * exact SemDeDup within-cell pairing whose per-TASK work is bounded
     * even when argmin assignment puts a huge fraction of the corpus in
     * one cell (seeded, untrained centroids make that a real risk — the
@@ -209,8 +210,6 @@ object SimilarityQueries {
     *     and the O(cell²) pair stream is consumed where it is produced.
     */
   private[graft] def semanticPrune(base: DataFrame, cells: Int, cap: Int): DataFrame = {
-    import graft.pipeline.VectorIndex
-    import graft.plans.CollectTopK
     require(cap > 0, "semanticPrune requires a positive cell cap")
     // Same argmin-assignment contract as q42/q100 (rounding and
     // tie-break are oracle-pinned) — shared, not re-implemented.
@@ -249,35 +248,29 @@ object SimilarityQueries {
       .orderBy("drop_id") // row-per-dropped-doc: parallel range sort
   }
 
-  /** q113's index-build half, shared with PlanShapeSpec (which pins the
-    * no-vector-shuffle law on the UNtruncated plan — the registered
-    * query's checkpoint hides it): IVF assignment + residual + PQ
-    * subspace split as ONE map-only projection over the embeddings scan.
+  /** The IVF-PQ encode: assign each of `vectors` to its cell among the
+    * centroid frame `cents` `(cell_id, cv)`, take the residual
+    * (vector − centroid) and split it into PqM subspace slices
+    * `(vec_id, cell_id, m, sv)` — ONE map-only projection over the scan.
+    * q113/q121 and the curves encode the corpus against its own
+    * centroids; the append path (q119) encodes a batch against the
+    * CORPUS's. Given the centroids, encoding is row-local, so
+    * incremental ≡ bulk per row (IvfPqAppendSpec pins the law).
     *
-    * The assignment argmin deliberately does NOT reuse [[VectorIndex
-    * .assign]]'s crossJoin + min_by shape here: that shape needs a
-    * join-back by vec_id to recover the vector for the residual, and
-    * with corpus-sized both sides that join SHUFFLES THE VECTORS — at
-    * 100 TB the raw embedding bytes are the one thing that must never
-    * cross the wire. Instead the 16-row centroid table collapses to a
-    * single array row (broadcast), and each scan row computes its own
-    * argmin cell, residual, and subspace slices in place: the entire
-    * encode path up to the tiny code rows is exchange-free. The argmin
-    * fold is an interpreted HOF over cells×dims elements per row — the
-    * engine's usual explode+agg rewrite is exactly what would
-    * reintroduce the vector exchange, so the map-only form wins here
-    * (the same cost either way; l2Hof is law-pinned equal to the
-    * codegen'd L2Dist in L2DistSpec, so the 6dp parity contract holds). */
-  private[graft] def ivfpqSub(base: DataFrame): DataFrame =
-    ivfpqSub(base, base.filter(col("vec_id") < IvfCells)
-      .select(col("vec_id").as("cell_id"), col("ev").as("cv")))
-
-  /** Two-frame form (q119): encode `vectors` against an EXPLICIT
-    * centroid frame — the append path assigns a batch against the
-    * CORPUS's centroids, which the single-frame overload (centroids
-    * derived from the encoded frame itself) cannot express. Given the
-    * centroids, encoding is row-local, so incremental ≡ bulk per row
-    * (IvfPqAppendSpec pins the law). */
+    * The argmin deliberately does NOT reuse [[VectorIndex.assign]]'s
+    * crossJoin + min_by shape: that shape needs a join-back by vec_id
+    * to recover the vector for the residual, and with corpus-sized both
+    * sides that join SHUFFLES THE VECTORS — at 100 TB the raw embedding
+    * bytes are the one thing that must never cross the wire. Instead
+    * the cells-row centroid table collapses to a single array row
+    * (broadcast), and each scan row computes its own argmin cell,
+    * residual, and subspace slices in place: the entire encode path up
+    * to the tiny code rows is exchange-free (PlanShapeSpec pins it on
+    * the untruncated plan). The argmin fold is an interpreted HOF over
+    * cells×dims elements per row — the engine's usual explode+agg
+    * rewrite is exactly what would reintroduce the vector exchange
+    * (l2Hof is law-pinned equal to the codegen'd L2Dist in L2DistSpec,
+    * so the 6dp parity contract holds). */
   private[graft] def ivfpqSub(vectors: DataFrame, cents: DataFrame): DataFrame = {
     val S = Embedder.Dim / PqM
     val centArr = cents.groupBy()
@@ -298,23 +291,35 @@ object SimilarityQueries {
         slice(col("rv"), col("m") * S + 1, lit(S)).as("sv"))
   }
 
-  /** q113's residual codebook + encode, shared with PlanShapeSpec.
-    * Codebook = the first PqK vectors' residual slices (the same
-    * deterministic seed convention as q88's raw-vector codebook);
-    * assignment is the min_by aggregate whose exchange carries only
-    * (vec_id, cell_id, m) + a (code, d) buffer — never a slice.
+  /** A residual index: its codebook `(m, code, cvr)` and its
+    * per-(vector, subspace) codes `(vec_id, cell_id, m, code)`. */
+  private[graft] final case class IvfPqIndex(cb: DataFrame, codes: DataFrame)
+
+  /** The residual index over an encoded frame `sub` ([[ivfpqSub]]):
+    * codebook = the first `pqK` vectors' residual slices (the seed
+    * convention of q88's raw-vector codebook), codes = [[ivfpqCodes]].
+    * The registered queries pass `sub` EAGERLY checkpointed: the
+    * codebook filter feeds a broadcast build thread AND the encode
+    * reads it, and without the barrier the whole map-only encode
+    * projection computes twice in parallel. */
+  private[graft] def ivfpqIndex(sub: DataFrame, pqK: Int = PqK): IvfPqIndex = {
+    val cb = sub.filter(col("vec_id") < pqK)
+      .select(col("m"), col("vec_id").as("code"), col("sv").as("cvr"))
+    IvfPqIndex(cb, ivfpqCodes(sub, cb))
+  }
+
+  /** PQ encode of `sub` against the residual codebook: the min_by
+    * aggregate whose exchange carries only (vec_id, cell_id, m) + a
+    * (code, d) buffer — never a slice.
     *
-    * r15 A/B note: an in-row argmin over a one-row broadcast codebook
-    * array (the [[ivfpqSub]] cell-assignment shape) was tried to kill
-    * the m-keyed join's row expansion — and measured 3.6× SLOWER at
-    * the 256-entry codebook (q136 8.1 → 29.0 s, q137 4.1 → 15.2 s
+    * An in-row argmin over a one-row broadcast codebook array (the
+    * [[ivfpqSub]] cell-assignment shape) measured 3.6× SLOWER at the
+    * 256-entry codebook (q136 8.1 → 29.0 s, q137 4.1 → 15.2 s
     * in-suite): the interpreted HOF lambda (boxed per-element structs,
     * no whole-stage codegen) loses to the codegen'd broadcast-join
     * probe + L2Dist + partial hash aggregate even at 250× the row
-    * count. Guide §4's "prefer built-ins with codegen" cuts BOTH ways:
-    * at 16 entries (cells) the in-row argmin wins by avoiding an
-    * exchange; at 256 (codes) the codegen'd operator pipeline wins.
-    * Kept: the join form. */
+    * count. At 16 entries (cells) the in-row argmin wins by avoiding an
+    * exchange; at 256 (codes) the codegen'd operator pipeline wins. */
   private[graft] def ivfpqCodes(sub: DataFrame, cb: DataFrame): DataFrame =
     sub.join(broadcast(cb), "m")
       .withColumn("d", round(VectorOps.l2(col("sv"), col("cvr")), 6))
@@ -322,14 +327,12 @@ object SimilarityQueries {
       .agg(min_by(col("code"), struct(col("d"), col("code"))).as("code"))
 
   /** The residual codebook recomputed from the corpus seeds — byte-equal
-    * to the bulk build's `sub.filter(vec_id < PqK)` slice because
-    * encoding is row-local given the centroids, but costs PqK rows
-    * instead of a corpus pass. The append path (q119) rides on this:
-    * centroids and codebook are seed-deterministic, so only the CODES
-    * table needs persistence. */
+    * to the bulk build's because encoding is row-local given the
+    * centroids, but costs PqK rows instead of a corpus pass. The append
+    * path (q119) rides on this: centroids and codebook are
+    * seed-deterministic, so only the CODES table needs persistence. */
   private[graft] def ivfpqCodebook(base: DataFrame, cents: DataFrame): DataFrame =
-    ivfpqSub(base.filter(col("vec_id") < PqK), cents)
-      .select(col("m"), col("vec_id").as("code"), col("sv").as("cvr"))
+    ivfpqIndex(ivfpqSub(base.filter(col("vec_id") < PqK), cents)).cb
 
   /** Per-vector PACKED code rows `(vec_id, cell_id, codes[PqM])` from
     * the per-(vector, subspace) code stream — the deployed FAISS-style
@@ -341,23 +344,19 @@ object SimilarityQueries {
         t => t.getField("code")).as("codes"))
 
   /** One-time persisted IVF-PQ codes table `(vec_id, cell_id,
-    * codes[PqM])` — the composite-index sibling of [[graft.pipeline
-    * .VectorIndex.prepared]] (q100's assignment index): written once
-    * per corpus fingerprint, so an append (q119) pays only the batch's
-    * map-only encode plus index-sized aggregates, never a corpus
-    * re-encode. At 100 TB this table IS the deployed index (clustered
-    * by cell_id); the raw vectors are cold storage it never rescans. */
+    * codes[PqM])` — the composite-index sibling of [[VectorIndex
+    * .prepared]] (q100's assignment index): written once per corpus
+    * fingerprint, so an append (q119) pays only the batch's map-only
+    * encode plus index-sized aggregates, never a corpus re-encode. At
+    * 100 TB this table IS the deployed index (clustered by cell_id);
+    * the raw vectors are cold storage it never rescans. */
   private[graft] def ivfPqIndexPrepared(s: SparkSession, sfDir: String,
       cells: Int = IvfCells): String =
     graft.pipeline.PreparedArtifact.publishOnce(s, "graft_ivfpq_index",
         s"${graft.pipeline.PreparedArtifact.fingerprint(s, sfDir, "embeddings")}_${cells}_${PqM}_$PqK") { tmp =>
       val base = emb(s, sfDir)
-      val cents = base.filter(col("vec_id") < cells)
-        .select(col("vec_id").as("cell_id"), col("ev").as("cv"))
-      val sub = ivfpqSub(base, cents).checkpointed()
-      val cb = sub.filter(col("vec_id") < PqK)
-        .select(col("m"), col("vec_id").as("code"), col("sv").as("cvr"))
-      ivfpqPacked(ivfpqCodes(sub, cb)).write.parquet(tmp.toString)
+      val idx = ivfpqIndex(ivfpqSub(base, VectorIndex.seedCentroids(base, cells)).checkpointed())
+      ivfpqPacked(idx.codes).write.parquet(tmp.toString)
     }
 
   /** q119's append pipeline with the cell count as the explicit scale
@@ -381,8 +380,7 @@ object SimilarityQueries {
     val idx = Tables.read(s, ivfPqIndexPrepared(s, dir, cells))
     val occ = idx.groupBy(col("cell_id")).agg(count(lit(1)).as("cell_n_index"))
     val base = emb(s, dir)
-    val cents = base.filter(col("vec_id") < cells)
-      .select(col("vec_id").as("cell_id"), col("ev").as("cv"))
+    val cents = VectorIndex.seedCentroids(base, cells)
     IvfPqStatics(idx, occ, cents, ivfpqCodebook(base, cents))
   }
 
@@ -391,7 +389,6 @@ object SimilarityQueries {
     * persisted index at `cells`. */
   private[graft] def ivfAppendAssign(s: SparkSession, dir: String,
       cells: Int): DataFrame = {
-    import graft.pipeline.VectorIndex
     val indexPath = VectorIndex.prepared(s, dir, cells)
     val occ = Tables.read(s, indexPath)
       .groupBy(col("cell_id")).agg(count(lit(1)).as("cell_n_index"))
@@ -488,10 +485,31 @@ object SimilarityQueries {
     "es AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings)"
 
   /** The seed-centroid body q113/q119 build on; q121 swaps in the
-    * Lloyd-trained frame ([[kmCentsSql]]) — the layout is unchanged,
-    * which is the whole point of the composition. */
+    * Lloyd-trained frame ([[trainedCentsBodySql]]) — the layout is
+    * unchanged, which is the whole point of the composition. */
   private def seedCentsBodySql =
     s"SELECT vec_id AS cell_id, ev AS cv FROM es WHERE vec_id < $IvfCells"
+
+  private def trainedCentsBodySql = s"SELECT cell_id, cv FROM kcents$KmTrainedUpdates"
+
+  /** `es`, `dims` and the Lloyd chain up to the trained centroids — the
+    * head of every trained-centroid oracle (q121, q126, q136, q137). */
+  private def trainedPreludeSql: String =
+    s"""$esCteSql,
+       |  dims AS (SELECT unnest(range(1, ${Embedder.Dim + 1})) AS dim),
+       |  ${kmCentsSql(KmTrainedUpdates)}""".stripMargin
+
+  /** The query set and its exact L2 top-IvfK, the recall ground truth
+    * of the IVF-PQ search and the curves ([[querySet]]/[[exactTopK]]). */
+  private def qsSql =
+    s"qs AS (SELECT vec_id AS query_id, ev AS qv FROM es WHERE vec_id < $NQueries)"
+
+  private def topxSql: String =
+    s"""topx AS (SELECT query_id, vec_id FROM (
+       |    SELECT q.query_id, e.vec_id,
+       |      ROW_NUMBER() OVER (PARTITION BY q.query_id ORDER BY
+       |        ROUND(list_distance(e.ev, q.qv), 6) ASC, e.vec_id) AS rn
+       |    FROM es e CROSS JOIN qs q) WHERE rn <= $IvfK)""".stripMargin
 
   /** The index half of the IVF-PQ oracle chain (es → cents → assign →
     * res → sub → cb → codes), shared verbatim by q113 and q119 so the
@@ -548,7 +566,7 @@ object SimilarityQueries {
     * so the consumer SQL must be too. Includes the final SELECT. */
   private def ivfpqSearchSql: String = {
     val S = Embedder.Dim / PqM
-    s"""qs AS (SELECT vec_id AS query_id, ev AS qv FROM es WHERE vec_id < $NQueries),
+    s"""$qsSql,
        |  probes AS (SELECT query_id, cell_id FROM (
        |    SELECT qs.query_id, cents.cell_id,
        |      ROW_NUMBER() OVER (PARTITION BY qs.query_id ORDER BY
@@ -568,11 +586,7 @@ object SimilarityQueries {
        |    SELECT query_id, vec_id, ad,
        |      ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY ad ASC, vec_id) AS rn
        |    FROM adc) WHERE rn <= $IvfK),
-       |  topx AS (SELECT query_id, vec_id FROM (
-       |    SELECT q.query_id, e.vec_id,
-       |      ROW_NUMBER() OVER (PARTITION BY q.query_id ORDER BY
-       |        ROUND(list_distance(e.ev, q.qv), 6) ASC, e.vec_id) AS rn
-       |    FROM es e CROSS JOIN qs q) WHERE rn <= $IvfK),
+       |  $topxSql,
        |  hit AS (SELECT s.query_id, COUNT(*) AS n_overlap
        |          FROM sel s JOIN topx x USING (query_id, vec_id) GROUP BY 1)
        |SELECT s.query_id, s.rn, s.vec_id, s.ad,
@@ -689,15 +703,31 @@ object SimilarityQueries {
        |          FROM ${cp}crrrec GROUP BY 1) r USING (nprobe))""".stripMargin
   }
 
-  /** q137's refine-depth curve CTEs (VERDICT r13 #4): the re-rank
-    * shortlist as the SWEPT knob. Same one-encode discipline as
-    * [[ivfpqCurveSql]]: rank all cells, ADC the corpus once, then
-    * every (nprobe, rr_short) point is a SLICE of the shared candidate
-    * frame — the exact re-rank distance is computed ONCE per candidate
-    * row (at the max swept depth) and each rr point re-windows it.
-    * Requires the chain CTEs with prefix `cp` plus `qs`/`topx`. */
-  private def ivfpqRefineCurveSql(cp: String, rrs: Seq[Int],
-      nprobes: Seq[Int]): String = {
+  /** q126/q136's oracle: the seed and trained chains at codebook size
+    * `pqK`, each with its [[ivfpqCurveSql]], in one output frame. */
+  private def nprobeCurvesSql(pqK: Int): String =
+    s"""WITH $trainedPreludeSql,
+       |  ${ivfpqChainSqlFrom(seedCentsBodySql, "", pqK)},
+       |  ${ivfpqChainSqlFrom(trainedCentsBodySql, "t", pqK)},
+       |  $qsSql,
+       |  $topxSql,
+       |  ${ivfpqCurveSql("")},
+       |  ${ivfpqCurveSql("t")}
+       |SELECT variant, nprobe, mean_recall, mean_recall_rr FROM (
+       |  SELECT 'seed' AS variant, nprobe, mean_recall, mean_recall_rr FROM ccurve
+       |  UNION ALL
+       |  SELECT 'trained' AS variant, nprobe, mean_recall, mean_recall_rr FROM tccurve)
+       |ORDER BY variant, nprobe""".stripMargin
+
+  /** q137's refine-depth curve CTEs: the re-rank shortlist as the
+    * SWEPT knob over the [[RrPoints]] × [[NprobePoints]] grid. Same
+    * one-encode discipline as [[ivfpqCurveSql]]: rank all cells, ADC
+    * the corpus once, then every (nprobe, rr_short) point is a SLICE of
+    * the shared candidate frame — the exact re-rank distance is
+    * computed ONCE per candidate row (at the max swept depth) and each
+    * rr point re-windows it. Requires the chain CTEs with prefix `cp`
+    * plus `qs`/`topx`. */
+  private def ivfpqRefineCurveSql(cp: String): String = {
     val S = Embedder.Dim / PqM
     s"""${cp}rcrank AS (SELECT qs.query_id, c.cell_id,
        |    ROW_NUMBER() OVER (PARTITION BY qs.query_id ORDER BY
@@ -717,13 +747,13 @@ object SimilarityQueries {
        |    GROUP BY 1, 2),
        |  ${cp}rcand AS (SELECT a.query_id, a.vec_id, a.ad, np.nprobe
        |    FROM ${cp}radc a
-       |    JOIN (SELECT unnest(${nprobes.mkString("[", ",", "]")}) AS nprobe) np
+       |    JOIN (SELECT unnest(${NprobePoints.mkString("[", ",", "]")}) AS nprobe) np
        |      ON a.crank <= np.nprobe),
        |  ${cp}rshort AS (SELECT query_id, nprobe, vec_id, rn FROM (
        |      SELECT query_id, nprobe, vec_id,
        |        ROW_NUMBER() OVER (PARTITION BY query_id, nprobe
        |          ORDER BY ad ASC, vec_id) AS rn
-       |      FROM ${cp}rcand) WHERE rn <= ${rrs.max}),
+       |      FROM ${cp}rcand) WHERE rn <= ${RrPoints.max}),
        |  ${cp}rxd AS (SELECT s.query_id, s.nprobe, s.vec_id, s.rn,
        |      ROUND(list_distance(e.ev, q.qv), 6) AS xd
        |    FROM ${cp}rshort s JOIN es e ON e.vec_id = s.vec_id
@@ -733,7 +763,7 @@ object SimilarityQueries {
        |        ROW_NUMBER() OVER (PARTITION BY x.query_id, x.nprobe, rp.rr_short
        |          ORDER BY x.xd ASC, x.vec_id) AS rn2
        |      FROM ${cp}rxd x
-       |      JOIN (SELECT unnest(${rrs.mkString("[", ",", "]")}) AS rr_short) rp
+       |      JOIN (SELECT unnest(${RrPoints.mkString("[", ",", "]")}) AS rr_short) rp
        |        ON x.rn <= rp.rr_short) WHERE rn2 <= $IvfK),
        |  ${cp}rrec AS (SELECT s.nprobe, s.rr_short, s.query_id,
        |      ROUND(CAST(COUNT(x.query_id) AS DOUBLE) / $IvfK, 6) AS recall_rr
@@ -743,69 +773,6 @@ object SimilarityQueries {
        |  ${cp}rcurve AS (SELECT rr_short, nprobe,
        |      ${ExactSql.davgRound("recall_rr", 6)} AS mean_recall_rr
        |    FROM ${cp}rrec GROUP BY 1, 2)""".stripMargin
-  }
-
-  /** q137's engine side: [[ivfpqNprobeCurve]]'s chain with the refine
-    * depth swept instead of fixed — candidates sliced per (nprobe,
-    * rr_short), exact distance computed once per shortlist row at the
-    * max depth, every point a re-window. */
-  private def ivfpqRefineCurve(base: DataFrame, cents: DataFrame,
-      topx: DataFrame, pqK: Int, rrs: Seq[Int],
-      nprobes: Seq[Int]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val S = Embedder.Dim / PqM
-    val sub = ivfpqSub(base, cents).checkpointed()
-    val cb = sub.filter(col("vec_id") < pqK)
-      .select(col("m"), col("vec_id").as("code"), col("sv").as("cvr"))
-    val codes = ivfpqCodes(sub, cb)
-    val qs = base.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), col("ev").as("qv"))
-    val crank = qs.crossJoin(broadcast(cents))
-      .withColumn("d", round(VectorOps.l2(col("qv"), col("cv")), 6))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("d"), col("cell_id"))))
-      .select(col("query_id"), col("cell_id"), col("crank"))
-    val qres = crank.join(broadcast(qs), "query_id")
-      .join(broadcast(cents), "cell_id")
-      .select(col("query_id"), col("cell_id"), col("crank"),
-        zip_with(col("qv"), col("cv"), (x, y) => x - y).as("qr"))
-    val dt = qres.crossJoin(broadcast(cb))
-      .withColumn("t", round(VectorOps.l2(
-        slice(col("qr"), col("m") * S + 1, lit(S)), col("cvr")), 6))
-      .select(col("query_id"), col("cell_id"), col("crank"),
-        col("m"), col("code"), round(col("t") * col("t"), 6).as("d2"))
-    // (Same r15 A/B outcome as [[ivfpqNprobeCurve]]: the flat-LUT
-    // in-row ADC variant measured a wash-to-loss; join form kept.)
-    val adc = codes.join(broadcast(dt), Seq("cell_id", "m", "code"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(round(sqrt(Exact.dsum(col("d2"))), 6).as("ad"),
-        min(col("crank")).as("crank"))
-    val cand = adc.select(col("query_id"), col("vec_id"), col("ad"), col("crank"),
-        explode(typedlit(nprobes)).as("nprobe"))
-      .filter(col("crank") <= col("nprobe"))
-    val short = cand.withColumn("rn", row_number().over(
-        Window.partitionBy(col("query_id"), col("nprobe"))
-          .orderBy(col("ad"), col("vec_id"))))
-      .filter(col("rn") <= rrs.max)
-    val xd = short.join(base.select(col("vec_id"), col("ev")), "vec_id")
-      .join(broadcast(qs), "query_id")
-      .withColumn("xd", round(VectorOps.l2(col("ev"), col("qv")), 6))
-      .select(col("query_id"), col("nprobe"), col("vec_id"), col("rn"), col("xd"))
-      .checkpointed(false) // every rr point re-windows this one frame
-    val sel = xd.withColumn("rr_short", explode(typedlit(rrs)))
-      .filter(col("rn") <= col("rr_short"))
-      .withColumn("rn2", row_number().over(
-        Window.partitionBy(col("query_id"), col("nprobe"), col("rr_short"))
-          .orderBy(col("xd"), col("vec_id"))))
-      .filter(col("rn2") <= IvfK)
-    sel.join(topx.withColumn("hitmark", lit(1)),
-        Seq("query_id", "vec_id"), "left_outer")
-      .groupBy(col("query_id"), col("nprobe"), col("rr_short"))
-      .agg(round(count(col("hitmark")).cast("double") / IvfK, 6).as("recall_rr"))
-      .groupBy(col("rr_short"), col("nprobe"))
-      .agg(Exact.davgRound(col("recall_rr"), 6).as("mean_recall_rr"))
-      .select(col("rr_short").cast("long").as("rr_short"),
-        col("nprobe").cast("long").as("nprobe"), col("mean_recall_rr"))
   }
 
   // q137's sweep grid: refine depth as multiples of k (3k = q126's
@@ -837,75 +804,88 @@ object SimilarityQueries {
        |  $rounds""".stripMargin
   }
 
-  /** Lloyd-trained centroids, the engine side of [[kmCentsSql]] —
-    * q93's exact update recipe (argmin assign, per-(cell, dim)
-    * exact-decimal 6dp means, list ordered by dim), extracted so q121
-    * can feed a TRAINED frame into the unchanged IVF-PQ layout. */
-  private[graft] def kmTrainedCents(base: DataFrame, updates: Int): DataFrame = {
-    var cents = base.filter(col("vec_id") < IvfCells)
-      .select(col("vec_id").as("cell_id"), col("ev").as("cv"))
-    for (_ <- 1 to updates) {
-      val assign = base.crossJoin(broadcast(cents))
-        .withColumn("d", round(VectorOps.l2(col("ev"), col("cv")), 6))
-        .groupBy(col("vec_id"))
-        .agg(min_by(struct(col("cell_id"), col("d")),
-          struct(col("d"), col("cell_id"))).as("a"))
-        .select(col("vec_id"), col("a.cell_id").as("cell_id"))
-      cents = assign.join(base, "vec_id")
-        .select(col("cell_id"), posexplode(col("ev")).as(Seq("pos", "val")))
-        .select(col("cell_id"), (col("pos") + 1).as("dim"), col("val"))
-        .groupBy(col("cell_id"), col("dim"))
-        .agg(Exact.davgRound(col("val"), 6).as("m"))
-        .groupBy(col("cell_id"))
-        .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("dm"))
-        .select(col("cell_id"), col("dm").getField("m").as("cv"))
-    }
-    cents
-  }
+  /** Lloyd-trained centroids, the engine side of [[kmCentsSql]]: q93's
+    * rounds ([[VectorIndex.assign]], then [[VectorIndex.lloydMeans]])
+    * from the seed frame, so q121 and the curves can feed a TRAINED
+    * frame into the unchanged IVF-PQ layout. */
+  private[graft] def kmTrainedCents(base: DataFrame, updates: Int): DataFrame =
+    (1 to updates).foldLeft(VectorIndex.seedCentroids(base, IvfCells))((cents, _) =>
+      VectorIndex.lloydMeans(VectorIndex.assign(base, cents), base))
 
-  /** q113/q121's shared search engine: nprobe cell selection, per-
-    * (query, cell) residual distance tables, ADC over the codes,
-    * CollectTopK selection, exact-top-k recall audit. Every frame is
-    * query-count-sized; the centroid/codebook layout is whatever the
-    * caller built (seed for q113, Lloyd-trained for q121). */
-  private def ivfpqSearch(base: DataFrame, cents: DataFrame,
-      cb: DataFrame, codes: DataFrame): DataFrame = {
-    import graft.plans.CollectTopK
-    val S = Embedder.Dim / PqM
-    val qs = base.filter(col("vec_id") < NQueries)
+  /** The first NQueries corpus vectors as the query set `(query_id, qv)`. */
+  private def querySet(base: DataFrame): DataFrame =
+    base.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("query_id"), col("ev").as("qv"))
-    val probes = qs.crossJoin(broadcast(cents))
-      .withColumn("negd", -round(VectorOps.l2(col("qv"), col("cv")), 6))
-      .groupBy(col("query_id"))
-      .agg(CollectTopK.topk(col("negd"), col("cell_id"), IvfProbes).as("tk"))
-      .select(col("query_id"), explode(col("tk.vec_id")).as("cell_id"))
-    // Per-(query, probed cell) residual → the M·K ADC distance table.
-    val qres = probes.join(broadcast(qs), "query_id")
-      .join(broadcast(cents), "cell_id")
-      .select(col("query_id"), col("cell_id"),
-        zip_with(col("qv"), col("cv"), (x, y) => x - y).as("qr"))
-    val dt = qres.crossJoin(broadcast(cb))
-      .withColumn("t", round(VectorOps.l2(
-        slice(col("qr"), col("m") * S + 1, lit(S)), col("cvr")), 6))
-      .select(col("query_id"), col("cell_id"), col("m"), col("code"),
-        round(col("t") * col("t"), 6).as("d2"))
-    // ADC: candidates = codes in probed cells (equi-join on cell_id);
-    // approximate distance = lookup + exact-decimal sum (q89 recipe).
-    val adc = codes.join(broadcast(dt), Seq("cell_id", "m", "code"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(round(sqrt(Exact.dsum(col("d2"))), 6).as("ad"))
-    val sel = adc.groupBy(col("query_id"))
-      .agg(CollectTopK.topk(-col("ad"), col("vec_id"), IvfK).as("tk"))
-      .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "t")))
-      .select(col("query_id"), (col("pos") + 1).cast("long").as("rn"),
-        col("t.vec_id").as("vec_id"), (-col("t.sim")).as("ad"))
-    val topx = base.crossJoin(broadcast(qs))
+
+  /** Each query's exact L2 top-IvfK `(query_id, vec_id)`, the ground
+    * truth of the recall audits: CollectTopK heaps over the negated
+    * distance keep the oracle's (d ASC, vec_id ASC) order. */
+  private def exactTopK(base: DataFrame, qs: DataFrame): DataFrame =
+    base.crossJoin(broadcast(qs))
       .withColumn("xd", round(VectorOps.l2(col("ev"), col("qv")), 6))
       .groupBy(col("query_id"))
       .agg(CollectTopK.topk(-col("xd"), col("vec_id"), IvfK).as("tk"))
       .select(col("query_id"), explode(col("tk.vec_id")).as("vec_id"))
+
+  /** ADC candidates `(query_id, vec_id, ad, extras…)` of the probed
+    * cells, shared by q113/q121's search and the curves. `probes` is
+    * `(query_id, cell_id, extras…)`, one row per (query, probed cell).
+    * Each probe gets the query's residual in that cell and from it the
+    * M·K distance table (per-cell, because the residual differs per
+    * probed centroid); a candidate's approximate distance is a table
+    * lookup per subspace plus one exact-decimal sum (the q89 recipe),
+    * and each extra probe column is carried as its per-candidate min.
+    *
+    * The join + `Exact.dsum` form is measured: a packed-codes +
+    * flat-LUT in-row ADC (q119's element_at shape) read q126 4.2 →
+    * 5.0 s and q137 4.1 → 4.9 s. The aggregate is already map-side
+    * combined to candidate-count rows and the table join is broadcast,
+    * so no exchange went away, while the packing added an interpreted
+    * collect_list/array_sort aggregate. */
+  private def adcCandidates(probes: DataFrame, qs: DataFrame,
+      cents: DataFrame, idx: IvfPqIndex): DataFrame = {
+    val S = Embedder.Dim / PqM
+    val keys = probes.columns.toSeq.map(col)
+    val extras = probes.columns.toSeq.filterNot(Set("query_id", "cell_id"))
+    val qres = probes.join(broadcast(qs), "query_id")
+      .join(broadcast(cents), "cell_id")
+      .select(keys :+ zip_with(col("qv"), col("cv"), (x, y) => x - y).as("qr"): _*)
+    val dt = qres.crossJoin(broadcast(idx.cb))
+      .withColumn("t", round(VectorOps.l2(
+        slice(col("qr"), col("m") * S + 1, lit(S)), col("cvr")), 6))
+      .select(keys ++ Seq(col("m"), col("code"),
+        round(col("t") * col("t"), 6).as("d2")): _*)
+    idx.codes.join(broadcast(dt), Seq("cell_id", "m", "code"))
+      .groupBy(col("query_id"), col("vec_id"))
+      .agg(round(sqrt(Exact.dsum(col("d2"))), 6).as("ad"),
+        extras.map(c => min(col(c)).as(c)): _*)
+  }
+
+  /** Each query's IvfProbes nearest cells `(query_id, cell_id)` (q42,
+    * q113, q121): CollectTopK over the NEGATED distance keeps the
+    * oracle's (d ASC, cell_id ASC) ranking. */
+  private def probedCells(qs: DataFrame, cents: DataFrame): DataFrame =
+    qs.crossJoin(broadcast(cents))
+      .withColumn("negd", -round(VectorOps.l2(col("qv"), col("cv")), 6))
+      .groupBy(col("query_id"))
+      .agg(CollectTopK.topk(col("negd"), col("cell_id"), IvfProbes).as("tk"))
+      .select(col("query_id"), explode(col("tk.vec_id")).as("cell_id"))
+
+  /** q113/q121's search over the index encoded against `cents` (seed
+    * for q113, Lloyd-trained for q121): each query probes its
+    * [[probedCells]], a CollectTopK picks the ADC top-k there, and the
+    * exact top-k audits recall. Every frame after the encode is
+    * query-count-sized. */
+  private def ivfpqSearch(base: DataFrame, cents: DataFrame): DataFrame = {
+    val idx = ivfpqIndex(ivfpqSub(base, cents).checkpointed())
+    val qs = querySet(base)
+    val sel = adcCandidates(probedCells(qs, cents), qs, cents, idx).groupBy(col("query_id"))
+      .agg(CollectTopK.topk(-col("ad"), col("vec_id"), IvfK).as("tk"))
+      .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "t")))
+      .select(col("query_id"), (col("pos") + 1).cast("long").as("rn"),
+        col("t.vec_id").as("vec_id"), (-col("t.sim")).as("ad"))
     val hit = sel.select("query_id", "vec_id")
-      .join(topx, Seq("query_id", "vec_id"))
+      .join(exactTopK(base, qs), Seq("query_id", "vec_id"))
       .groupBy(col("query_id")).agg(count(lit(1)).as("n_overlap"))
     sel.join(hit, Seq("query_id"), "left_outer")
       .select(col("query_id"), col("rn"), col("vec_id"), col("ad"),
@@ -915,53 +895,31 @@ object SimilarityQueries {
       .presented("query_id", "rn")
   }
 
-  /** One variant's recall-vs-nprobe curve (q126's engine side, the
-    * mirror of [[ivfpqCurveSql]]): ONE map-only encode and one
-    * distance-table pass serve every nprobe point — each ADC candidate
-    * carries its home cell's per-query rank, and slicing `crank <=
-    * nprobe` replays the search at every operating point without
-    * re-encoding. The exchanges are the q113 classes (code rows, tiny
-    * broadcast tables) plus one window over candidates×nprobe rows —
-    * query-sized, never corpus-shuffling. */
-  private def ivfpqNprobeCurve(base: DataFrame, cents: DataFrame,
-      topx: DataFrame, variant: String, pqK: Int = PqK): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val S = Embedder.Dim / PqM
-    // EAGER checkpoint on sub: codebook filter feeds a broadcast build
-    // thread AND the encode reads it (the q113 lesson).
-    val sub = ivfpqSub(base, cents).checkpointed()
-    val cb = sub.filter(col("vec_id") < pqK)
-      .select(col("m"), col("vec_id").as("code"), col("sv").as("cvr"))
-    val codes = ivfpqCodes(sub, cb)
-    val qs = base.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), col("ev").as("qv"))
+  /** The curves' candidate frame, beside its query set: one encode
+    * against `cents` at codebook size `pqK`, EVERY cell ranked per
+    * query (`crank`), and the full-corpus ADC with each candidate
+    * carrying its home cell's rank — so an nprobe point is the slice
+    * `crank <= nprobe` of this one frame, never a re-encode. */
+  private def rankedCandidates(base: DataFrame, cents: DataFrame,
+      pqK: Int): (DataFrame, DataFrame) = {
+    val idx = ivfpqIndex(ivfpqSub(base, cents).checkpointed(), pqK)
+    val qs = querySet(base)
     val crank = qs.crossJoin(broadcast(cents))
       .withColumn("d", round(VectorOps.l2(col("qv"), col("cv")), 6))
       .withColumn("crank", row_number().over(
         Window.partitionBy(col("query_id")).orderBy(col("d"), col("cell_id"))))
       .select(col("query_id"), col("cell_id"), col("crank"))
-    val qres = crank.join(broadcast(qs), "query_id")
-      .join(broadcast(cents), "cell_id")
-      .select(col("query_id"), col("cell_id"), col("crank"),
-        zip_with(col("qv"), col("cv"), (x, y) => x - y).as("qr"))
-    val dt = qres.crossJoin(broadcast(cb))
-      .withColumn("t", round(VectorOps.l2(
-        slice(col("qr"), col("m") * S + 1, lit(S)), col("cvr")), 6))
-      .select(col("query_id"), col("cell_id"), col("crank"),
-        col("m"), col("code"), round(col("t") * col("t"), 6).as("d2"))
-    // r15 A/B note: a packed-codes + flat-LUT in-row ADC (q119's
-    // element_at shape) was tried here to drop the (cell, m, code)
-    // join's M-fold rows and the (query, vec) aggregate — measured a
-    // wash-to-loss (q126 4.2 → 5.0 s, q137 4.1 → 4.9 s, stable across
-    // two quiet subset runs): the aggregate is already map-side
-    // combined to candidate-count rows and the dt join is broadcast,
-    // so no exchange was actually removed, while the packing step
-    // added an interpreted collect_list/array_sort aggregation. Kept:
-    // the join + Exact.dsum form.
-    val adc = codes.join(broadcast(dt), Seq("cell_id", "m", "code"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(round(sqrt(Exact.dsum(col("d2"))), 6).as("ad"),
-        min(col("crank")).as("crank"))
+    (qs, adcCandidates(crank, qs, cents, idx))
+  }
+
+  /** One variant's recall-vs-nprobe curve (the engine side of
+    * [[ivfpqCurveSql]]): every nprobe point 1..IvfCells is a slice of
+    * [[rankedCandidates]]. The exchanges are the q113 classes (code
+    * rows, tiny broadcast tables) plus one window over
+    * candidates×nprobe rows — query-sized, never corpus-shuffling. */
+  private def ivfpqNprobeCurve(base: DataFrame, cents: DataFrame,
+      topx: DataFrame, variant: String, pqK: Int): DataFrame = {
+    val (qs, adc) = rankedCandidates(base, cents, pqK)
     val cand = adc.select(col("query_id"), col("vec_id"), col("ad"), col("crank"),
         explode(sequence(lit(1), lit(IvfCells))).as("nprobe"))
       .filter(col("crank") <= col("nprobe"))
@@ -996,6 +954,60 @@ object SimilarityQueries {
       .select(lit(variant).as("variant"),
         col("nprobe").cast("long").as("nprobe"),
         col("mean_recall"), col("mean_recall_rr"))
+  }
+
+  /** q126/q136's body: the seed and Lloyd-trained curves at codebook
+    * size `pqK` against one exact top-k (lazy checkpoint: two
+    * consumers). The seed variant's eager sub-checkpoint does not
+    * depend on the training, so that branch runs on a helper thread and
+    * its job overlaps the Lloyd rounds (the q125 pattern). Only `base`
+    * (already eagerly checkpointed) is shared with the helper; topx's
+    * lazy checkpoint sees its first action in the final union job, on
+    * one thread. */
+  private def nprobeCurves(base: DataFrame, pqK: Int): DataFrame = {
+    val seedCents = VectorIndex.seedCentroids(base, IvfCells)
+    val topx = exactTopK(base, querySet(base)).checkpointed(false)
+    val (seed, trained) = Overlap(ivfpqNprobeCurve(base, seedCents, topx, "seed", pqK))(
+      ivfpqNprobeCurve(base, kmTrainedCents(base, KmTrainedUpdates).checkpointed(),
+        topx, "trained", pqK))
+    seed.unionAll(trained).presented("variant", "nprobe")
+  }
+
+  /** q137's body: the Lloyd-trained Pq8K chain with the refine depth
+    * swept instead of fixed — candidates sliced per (nprobe, rr_short)
+    * over [[rankedCandidates]], the exact distance computed once per
+    * shortlist row at the max depth, every point a re-window. */
+  private def ivfpqRefineCurve(base: DataFrame): DataFrame = {
+    val cents = kmTrainedCents(base, KmTrainedUpdates).checkpointed()
+    val topx = exactTopK(base, querySet(base)).checkpointed(false)
+    val (qs, adc) = rankedCandidates(base, cents, Pq8K)
+    val cand = adc.select(col("query_id"), col("vec_id"), col("ad"), col("crank"),
+        explode(typedlit(NprobePoints)).as("nprobe"))
+      .filter(col("crank") <= col("nprobe"))
+    val short = cand.withColumn("rn", row_number().over(
+        Window.partitionBy(col("query_id"), col("nprobe"))
+          .orderBy(col("ad"), col("vec_id"))))
+      .filter(col("rn") <= RrPoints.max)
+    val xd = short.join(base.select(col("vec_id"), col("ev")), "vec_id")
+      .join(broadcast(qs), "query_id")
+      .withColumn("xd", round(VectorOps.l2(col("ev"), col("qv")), 6))
+      .select(col("query_id"), col("nprobe"), col("vec_id"), col("rn"), col("xd"))
+      .checkpointed(false) // every rr point re-windows this one frame
+    val sel = xd.withColumn("rr_short", explode(typedlit(RrPoints)))
+      .filter(col("rn") <= col("rr_short"))
+      .withColumn("rn2", row_number().over(
+        Window.partitionBy(col("query_id"), col("nprobe"), col("rr_short"))
+          .orderBy(col("xd"), col("vec_id"))))
+      .filter(col("rn2") <= IvfK)
+    sel.join(topx.withColumn("hitmark", lit(1)),
+        Seq("query_id", "vec_id"), "left_outer")
+      .groupBy(col("query_id"), col("nprobe"), col("rr_short"))
+      .agg(round(count(col("hitmark")).cast("double") / IvfK, 6).as("recall_rr"))
+      .groupBy(col("rr_short"), col("nprobe"))
+      .agg(Exact.davgRound(col("recall_rr"), 6).as("mean_recall_rr"))
+      .select(col("rr_short").cast("long").as("rr_short"),
+        col("nprobe").cast("long").as("nprobe"), col("mean_recall_rr"))
+      .presented("rr_short", "nprobe")
   }
 
   val all: Seq[NamedQuery] = Seq(
@@ -1105,37 +1117,18 @@ object SimilarityQueries {
          |  JOIN qs ON qs.query_id = c.query_id)
          |WHERE rn <= $IvfK ORDER BY query_id, rn""".stripMargin) { (s, dir) =>
       val base = emb(s, dir)
-      val cents = base.filter(col("vec_id") < IvfCells)
-        .select(col("vec_id").as("cell_id"), col("ev").as("cv"))
-      // Assignment: argmin L2 over the broadcast centroid table as a
-      // min_by AGGREGATE — map-side partial combine collapses the
-      // IvfCells-times-corpus crossJoin back to one row per vector
-      // BEFORE the exchange. (A ranking window here would shuffle all
-      // N·IvfCells scored rows into a sort — at 100 TB that window IS
-      // the job.) Ties on rounded distance break on cell_id because the
-      // (d, cell_id) struct is compared lexicographically.
-      val assign = base.crossJoin(broadcast(cents))
-        .withColumn("d", round(VectorOps.l2(col("ev"), col("cv")), 6))
-        .groupBy(col("vec_id"))
-        .agg(min_by(col("cell_id"), struct(col("d"), col("cell_id"))).as("cell_id"))
+      val cents = VectorIndex.seedCentroids(base, IvfCells)
+      val assign = VectorIndex.assign(base, cents)
       val queries = base.filter(col("vec_id") < AnnQueries)
         .select(col("vec_id").as("query_id"), col("ev").as("qv"))
-      // Probes: nprobe nearest cells per query — CollectTopK over the
-      // NEGATED distance reuses the same desc-score/asc-id tie contract
-      // the oracle's (dist ASC, cell_id ASC) ranking expresses.
-      val probes = queries.crossJoin(broadcast(cents))
-        .withColumn("negd", -round(VectorOps.l2(col("qv"), col("cv")), 6))
-        .groupBy(col("query_id"))
-        .agg(graft.plans.CollectTopK.topk(col("negd"), col("cell_id"), IvfProbes).as("tk"))
-        .select(col("query_id"), explode(col("tk.vec_id")).as("cell_id"))
-      val cand = broadcast(probes).join(assign, "cell_id")
+      val cand = broadcast(probedCells(queries, cents)).join(assign, "cell_id")
         .select("query_id", "vec_id")
       val scored = cand
         .join(base, "vec_id")
         .join(broadcast(queries), "query_id")
         .withColumn("sim", VectorOps.cosine6(col("ev"), col("qv")))
       scored.groupBy(col("query_id"))
-        .agg(graft.plans.CollectTopK.topk(col("sim"), col("vec_id"), IvfK).as("tk"))
+        .agg(CollectTopK.topk(col("sim"), col("vec_id"), IvfK).as("tk"))
         .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "t")))
         .select(col("query_id"), col("t.vec_id").as("vec_id"),
           col("t.sim").as("sim"), (col("pos") + 1).cast("long").as("rn"))
@@ -1348,14 +1341,8 @@ object SimilarityQueries {
          |SELECT s.cell_id, s.n_members, sh.shift, s.inertia
          |FROM stats s JOIN sh USING (cell_id) ORDER BY cell_id""".stripMargin) { (s, dir) =>
       val base = emb(s, dir)
-      val cents = base.filter(col("vec_id") < IvfCells)
-        .select(col("vec_id").as("cell_id"), col("ev").as("cv"))
-      val assign = base.crossJoin(broadcast(cents))
-        .withColumn("d", round(VectorOps.l2(col("ev"), col("cv")), 6))
-        .groupBy(col("vec_id"))
-        .agg(min_by(struct(col("cell_id"), col("d")),
-          struct(col("d"), col("cell_id"))).as("a"))
-        .select(col("vec_id"), col("a.cell_id").as("cell_id"), col("a.d").as("d"))
+      val cents = VectorIndex.seedCentroids(base, IvfCells)
+      val assign = VectorIndex.assign(base, cents)
       val stats = assign.groupBy(col("cell_id"))
         .agg(count(lit(1)).as("n_members"),
           Exact.davgRound(col("d"), 6).as("inertia"))
@@ -1559,15 +1546,13 @@ object SimilarityQueries {
            |FROM qs q LEFT JOIN hit h USING (query_id)
            |ORDER BY query_id""".stripMargin
       }) { (s, dir) =>
-      import graft.plans.CollectTopK
       val S = Embedder.Dim / PqM
       val base = emb(s, dir)
       val sub = pqSplit(base)
         .checkpointed(false) // codebook, assignment, and queries read it
       val cents = pqCodebook(sub)
       val assign = pqAssign(sub, cents).select(col("vec_id"), col("m"), col("code"))
-      val qs = base.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("query_id"), col("ev").as("qv"))
+      val qs = querySet(base)
       // 16-entry distance table per query, rounded per term then squared.
       val dt = qs.crossJoin(broadcast(cents))
         .withColumn("t", round(VectorOps.l2(
@@ -1579,12 +1564,7 @@ object SimilarityQueries {
       val topa = adc.groupBy(col("query_id"))
         .agg(CollectTopK.topk(-col("ad"), col("vec_id"), IvfK).as("tk"))
         .select(col("query_id"), explode(col("tk.vec_id")).as("vec_id"))
-      val topx = base.crossJoin(broadcast(qs))
-        .withColumn("xd", round(VectorOps.l2(col("ev"), col("qv")), 6))
-        .groupBy(col("query_id"))
-        .agg(CollectTopK.topk(-col("xd"), col("vec_id"), IvfK).as("tk"))
-        .select(col("query_id"), explode(col("tk.vec_id")).as("vec_id"))
-      val hit = topx.join(topa, Seq("query_id", "vec_id"))
+      val hit = exactTopK(base, qs).join(topa, Seq("query_id", "vec_id"))
         .groupBy(col("query_id")).agg(count(lit(1)).as("n_overlap"))
       qs.select(col("query_id")).join(hit, Seq("query_id"), "left_outer")
         .select(col("query_id"),
@@ -1684,29 +1664,16 @@ object SimilarityQueries {
          |ORDER BY iter, cell_id""".stripMargin
     }) { (s, dir) =>
       val base = emb(s, dir).checkpointed(false) // read twice per iteration
-      var cents = base.filter(col("vec_id") < IvfCells)
-        .select(col("vec_id").as("cell_id"), col("ev").as("cv"))
+      var cents = VectorIndex.seedCentroids(base, IvfCells)
       var statsAll: Option[DataFrame] = None
       for (i <- 1 to KmIters) {
-        val assign = base.crossJoin(broadcast(cents))
-          .withColumn("d", round(VectorOps.l2(col("ev"), col("cv")), 6))
-          .groupBy(col("vec_id"))
-          .agg(min_by(struct(col("cell_id"), col("d")),
-            struct(col("d"), col("cell_id"))).as("a"))
-          .select(col("vec_id"), col("a.cell_id").as("cell_id"), col("a.d").as("d"))
+        val assign = VectorIndex.assign(base, cents)
           .checkpointed(false) // census and the new means both read it
         val stats = assign.groupBy(col("cell_id"))
           .agg(count(lit(1)).as("n_members"), Exact.davgRound(col("d"), 6).as("inertia"))
           .select(lit(i).as("iter"), col("cell_id"), col("n_members"), col("inertia"))
         statsAll = Some(statsAll.fold(stats)(_.unionByName(stats)))
-        if (i < KmIters) cents = assign.join(base, "vec_id")
-          .select(col("cell_id"), posexplode(col("ev")).as(Seq("pos", "val")))
-          .select(col("cell_id"), (col("pos") + 1).as("dim"), col("val"))
-          .groupBy(col("cell_id"), col("dim"))
-          .agg(Exact.davgRound(col("val"), 6).as("m"))
-          .groupBy(col("cell_id"))
-          .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("dm"))
-          .select(col("cell_id"), col("dm").getField("m").as("cv"))
+        if (i < KmIters) cents = VectorIndex.lloydMeans(assign, base)
       }
       statsAll.get.presented("iter", "cell_id")
     },
@@ -1788,8 +1755,8 @@ object SimilarityQueries {
       ivfAppendAssign(s, dir, IvfCells)
     },
 
-    // ----- X2 (context assembly): MMR diversity-aware selection (r10 —
-    // VERDICT r9 #4), extending q91's plain top-k: pick MmrK contexts
+    // ----- X2 (context assembly): MMR diversity-aware selection,
+    // extending q91's plain top-k: pick MmrK contexts
     // from the MmrM most-relevant candidates by maximal marginal
     // relevance, score = λ·rel − μ·max_{s∈S} sim(cand, s). The greedy
     // argmax is inherently sequential in K, so the loop is a DRIVER
@@ -1848,10 +1815,8 @@ object SimilarityQueries {
          |SELECT query_id, step, doc_id, rel, mmr FROM ($allSel)
          |ORDER BY query_id, step""".stripMargin
     }) { (s, dir) =>
-      import graft.plans.CollectTopK
       val base = emb(s, dir)
-      val qs = base.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("query_id"), col("ev").as("qv"))
+      val qs = querySet(base)
       // Stage one — the only corpus-wide pass: top-M relevance per
       // query through the map-side k-heap aggregate (0-shuffle-MB
       // candidate generation, as in q26/q91).
@@ -1905,7 +1870,7 @@ object SimilarityQueries {
       selected.presented("query_id", "step")
     },
 
-    // ----- X2 capstone (round-11 lead): the PRODUCTION ANN layout —
+    // ----- X2 capstone: the PRODUCTION ANN layout —
     // IVF-PQ RESIDUAL index (the FAISS IVFPQ composition of q42's IVF
     // cells, q88's PQ encode, and q89's ADC search, which until now were
     // separate demonstrations). Index build: every vector argmin-assigns
@@ -1940,21 +1905,10 @@ object SimilarityQueries {
       // EAGER: base feeds the centroid subtree (a broadcast thread —
       // the q99 lesson) plus the exact-recall side and the query set.
       val base = emb(s, dir).checkpointed()
-      val cents = base.filter(col("vec_id") < IvfCells)
-        .select(col("vec_id").as("cell_id"), col("ev").as("cv"))
-      // Index build: map-only assignment + residual + split (see
-      // ivfpqSub), then the residual codebook and the min_by encode.
-      // EAGER checkpoint on sub: the codebook filter feeds a broadcast
-      // build thread AND the encode reads it — without the barrier the
-      // whole map-only encode projection computes twice in parallel.
-      val sub = ivfpqSub(base).checkpointed()
-      val cb = sub.filter(col("vec_id") < PqK)
-        .select(col("m"), col("vec_id").as("code"), col("sv").as("cvr"))
-      ivfpqSearch(base, cents, cb, ivfpqCodes(sub, cb))
+      ivfpqSearch(base, VectorIndex.seedCentroids(base, IvfCells))
     },
 
-    // ----- X2/LLM (incremental, round-11 completion of the append
-    // family): IVF-PQ ENCODE-ON-APPEND — the q112/q116 pattern applied
+    // ----- X2/LLM (incremental): IVF-PQ ENCODE-ON-APPEND — the q112/q116 pattern applied
     // to the composite index. The corpus's packed codes table is a
     // PERSISTED artifact ([[ivfPqIndexPrepared]], same publish
     // discipline as the dedup/ANN/BPE/classifier artifacts); an
@@ -1992,8 +1946,7 @@ object SimilarityQueries {
       ivfpqAppend(s, dir, IvfCells) // body shared with the scaled-cells probe
     },
 
-    // ----- T6 + X2/LLM (round-12 completion of the append family's
-    // streaming column): STREAMING IVF-PQ encode-on-append — q119's
+    // ----- T6 + X2/LLM: STREAMING IVF-PQ encode-on-append — q119's
     // triage drained as an AvailableNow stream (the q118/q120/q123
     // harness): the append batch lands as parquet files (vector arrays
     // stream through the parquet source schema unchanged),
@@ -2022,8 +1975,7 @@ object SimilarityQueries {
       ivfpqAppendStream(s, dir, IvfCells)
     },
 
-    // ----- X2 composite (round-11 closure of the "a trained codebook
-    // drops in" claim): IVF-PQ over LLOYD-TRAINED centroids — q93's
+    // ----- X2 composite: IVF-PQ over LLOYD-TRAINED centroids — q93's
     // training loop feeds q113's unchanged index layout. Two exact
     // Lloyd updates ([[kmTrainedCents]]: argmin assign, per-(cell, dim)
     // 6dp exact-decimal means — the identical recipe q93's oracle
@@ -2041,24 +1993,18 @@ object SimilarityQueries {
     q("q121_ivfpq_trained", {
       "X2 composite: IVF-PQ over Lloyd-trained centroids — q93's training feeding q113's layout, recall audited"
     }, {
-      s"""WITH $esCteSql,
-         |  dims AS (SELECT unnest(range(1, ${Embedder.Dim + 1})) AS dim),
-         |  ${kmCentsSql(KmTrainedUpdates)},
-         |  ${ivfpqChainSqlFrom(s"SELECT cell_id, cv FROM kcents$KmTrainedUpdates")},
+      s"""WITH $trainedPreludeSql,
+         |  ${ivfpqChainSqlFrom(trainedCentsBodySql)},
          |  $ivfpqSearchSql""".stripMargin
     }) { (s, dir) =>
       val base = emb(s, dir).checkpointed()
       // Trained centroid frame — cells×dims rows of exact decimal
       // means; EAGER checkpoint: it feeds ivfpqSub's broadcast thread,
       // the probe side, and the qres join.
-      val cents = kmTrainedCents(base, KmTrainedUpdates).checkpointed()
-      val sub = ivfpqSub(base, cents).checkpointed()
-      val cb = sub.filter(col("vec_id") < PqK)
-        .select(col("m"), col("vec_id").as("code"), col("sv").as("cvr"))
-      ivfpqSearch(base, cents, cb, ivfpqCodes(sub, cb))
+      ivfpqSearch(base, kmTrainedCents(base, KmTrainedUpdates).checkpointed())
     },
 
-    // ----- X2 composite (round-12, the index's ACCURACY/COST KNOBS):
+    // ----- X2 composite (the index's ACCURACY/COST KNOBS):
     // RECALL-vs-NPROBE OPERATING CURVE — q113/q121 audit recall at the
     // fixed nprobe=2 operating point; this query sweeps nprobe across
     // the full range (1..cells) for BOTH centroid variants (seed and
@@ -2092,63 +2038,21 @@ object SimilarityQueries {
     // query-sized by construction.
     q("q126_ivfpq_nprobe_curve", {
       "X2 composite: recall-vs-nprobe operating curve, seed vs Lloyd-trained, one encode per variant"
-    }, {
-      s"""WITH $esCteSql,
-         |  dims AS (SELECT unnest(range(1, ${Embedder.Dim + 1})) AS dim),
-         |  ${kmCentsSql(KmTrainedUpdates)},
-         |  ${ivfpqChainSqlFrom(seedCentsBodySql)},
-         |  ${ivfpqChainSqlFrom(s"SELECT cell_id, cv FROM kcents$KmTrainedUpdates", "t")},
-         |  qs AS (SELECT vec_id AS query_id, ev AS qv FROM es WHERE vec_id < $NQueries),
-         |  topx AS (SELECT query_id, vec_id FROM (
-         |    SELECT q.query_id, e.vec_id,
-         |      ROW_NUMBER() OVER (PARTITION BY q.query_id ORDER BY
-         |        ROUND(list_distance(e.ev, q.qv), 6) ASC, e.vec_id) AS rn
-         |    FROM es e CROSS JOIN qs q) WHERE rn <= $IvfK),
-         |  ${ivfpqCurveSql("")},
-         |  ${ivfpqCurveSql("t")}
-         |SELECT variant, nprobe, mean_recall, mean_recall_rr FROM (
-         |  SELECT 'seed' AS variant, nprobe, mean_recall, mean_recall_rr FROM ccurve
-         |  UNION ALL
-         |  SELECT 'trained' AS variant, nprobe, mean_recall, mean_recall_rr FROM tccurve)
-         |ORDER BY variant, nprobe""".stripMargin
-    }) { (s, dir) =>
+    }, nprobeCurvesSql(PqK)) { (s, dir) =>
       // EAGER: base feeds both variants' centroid subtrees (broadcast
       // threads), the exact-recall side, and the query set. NOT
-      // embSpread: q126's PqK=4 encode is cheap, and the r16 A/B pairs
-      // showed the fan-out costs it ~+1.0 s while the PqK=256 curves
+      // embSpread: q126's PqK=4 encode is cheap, and A/B pairs showed
+      // the fan-out costs it ~+1.0 s while the PqK=256 curves
       // (q136/q137) win — the codebook size is the discriminator.
-      val base = emb(s, dir).checkpointed()
-      val seedCents = base.filter(col("vec_id") < IvfCells)
-        .select(col("vec_id").as("cell_id"), col("ev").as("cv"))
-      def trainedCentsOf() = kmTrainedCents(base, KmTrainedUpdates).checkpointed()
-      val qs = base.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("query_id"), col("ev").as("qv"))
-      // The exact top-k ground truth, computed ONCE and shared by both
-      // variants (lazy checkpoint: two consumers).
-      val topx = base.crossJoin(broadcast(qs))
-        .withColumn("xd", round(VectorOps.l2(col("ev"), col("qv")), 6))
-        .groupBy(col("query_id"))
-        .agg(graft.plans.CollectTopK.topk(-col("xd"), col("vec_id"), IvfK).as("tk"))
-        .select(col("query_id"), explode(col("tk.vec_id")).as("vec_id"))
-        .checkpointed(false)
-      // The seed variant's EAGER sub-checkpoint is independent of the
-      // Lloyd training: build it on a helper thread so its
-      // materialization job overlaps the training rounds (the q125
-      // pattern). Only `base` (already eagerly checkpointed) is shared
-      // with the helper; topx's lazy checkpoint sees its first action in
-      // the final union job, on one thread.
-      val (seed, trained) = Overlap(ivfpqNprobeCurve(base, seedCents, topx, "seed"))(
-        ivfpqNprobeCurve(base, trainedCentsOf(), topx, "trained"))
-      seed.unionAll(trained).presented("variant", "nprobe")
+      nprobeCurves(emb(s, dir).checkpointed(), PqK)
     },
 
-    // ----- X2 composite (VERDICT r12 #7): the PqK CODEBOOK knob —
-    // q126 proved the 4-entry (2-bit) product quantizer, not nprobe,
-    // binds recall; this is the same curve at the FAISS-default
-    // PqK = 256 (8-bit codebook, 4 bytes/vector at M=4). Everything
-    // is the SHARED chain/curve machinery with ONE parameter moved
-    // (ivfpqChainSqlFrom/ivfpqNprobeCurve's pqK) — the knob is a
-    // codebook size, not a different index. The curve pairs with
+    // ----- X2 composite: the PqK CODEBOOK knob — q126 proved the
+    // 4-entry (2-bit) product quantizer, not nprobe, binds recall; this
+    // is the same curve at the FAISS-default PqK = 256 (8-bit codebook,
+    // 4 bytes/vector at M=4). Everything is q126's curve with ONE
+    // parameter moved (the pqK of nprobeCurves/nprobeCurvesSql) — the
+    // knob is a codebook size, not a different index. The curve pairs with
     // q126's rows to show the quantization tradeoff a deployment
     // actually tunes: code bits × recall at fixed nprobe
     // (IvfPqTrainedSpec pins pq256 ≥ pq4 row-wise at the operating
@@ -2159,46 +2063,11 @@ object SimilarityQueries {
     // (vec_id, cell, m, code) longs.
     q("q136_ivfpq_pq8_curve", {
       "X2 composite: the PqK codebook knob — 8-bit (K=256) recall-vs-nprobe curve, seed vs Lloyd-trained"
-    }, {
-      s"""WITH $esCteSql,
-         |  dims AS (SELECT unnest(range(1, ${Embedder.Dim + 1})) AS dim),
-         |  ${kmCentsSql(KmTrainedUpdates)},
-         |  ${ivfpqChainSqlFrom(seedCentsBodySql, "", Pq8K)},
-         |  ${ivfpqChainSqlFrom(s"SELECT cell_id, cv FROM kcents$KmTrainedUpdates", "t", Pq8K)},
-         |  qs AS (SELECT vec_id AS query_id, ev AS qv FROM es WHERE vec_id < $NQueries),
-         |  topx AS (SELECT query_id, vec_id FROM (
-         |    SELECT q.query_id, e.vec_id,
-         |      ROW_NUMBER() OVER (PARTITION BY q.query_id ORDER BY
-         |        ROUND(list_distance(e.ev, q.qv), 6) ASC, e.vec_id) AS rn
-         |    FROM es e CROSS JOIN qs q) WHERE rn <= $IvfK),
-         |  ${ivfpqCurveSql("")},
-         |  ${ivfpqCurveSql("t")}
-         |SELECT variant, nprobe, mean_recall, mean_recall_rr FROM (
-         |  SELECT 'seed' AS variant, nprobe, mean_recall, mean_recall_rr FROM ccurve
-         |  UNION ALL
-         |  SELECT 'trained' AS variant, nprobe, mean_recall, mean_recall_rr FROM tccurve)
-         |ORDER BY variant, nprobe""".stripMargin
-    }) { (s, dir) =>
-      val base = embSpread(s, dir).checkpointed()
-      val seedCents = base.filter(col("vec_id") < IvfCells)
-        .select(col("vec_id").as("cell_id"), col("ev").as("cv"))
-      val qs = base.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("query_id"), col("ev").as("qv"))
-      val topx = base.crossJoin(broadcast(qs))
-        .withColumn("xd", round(VectorOps.l2(col("ev"), col("qv")), 6))
-        .groupBy(col("query_id"))
-        .agg(graft.plans.CollectTopK.topk(-col("xd"), col("vec_id"), IvfK).as("tk"))
-        .select(col("query_id"), explode(col("tk.vec_id")).as("vec_id"))
-        .checkpointed(false)
-      // Seed-variant sub-checkpoint on a helper thread, overlapping the
-      // Lloyd training (see the q126 note).
-      val (seed, trained) = Overlap(ivfpqNprobeCurve(base, seedCents, topx, "seed", Pq8K))(
-        ivfpqNprobeCurve(base, kmTrainedCents(base, KmTrainedUpdates).checkpointed(),
-          topx, "trained", Pq8K))
-      seed.unionAll(trained).presented("variant", "nprobe")
+    }, nprobeCurvesSql(Pq8K)) { (s, dir) =>
+      nprobeCurves(embSpread(s, dir).checkpointed(), Pq8K)
     },
 
-    // ----- X2 composite (VERDICT r13 #4): the REFINE-DEPTH knob —
+    // ----- X2 composite: the REFINE-DEPTH knob —
     // q136 showed the PqK=256 codebook reaches 0.96 recall@5 at
     // sf0.001 but caps at ~0.56 at sf0.1, and honestly attributed the
     // cap to the FIXED 3k-deep re-rank shortlist (RrShort = 15): as
@@ -2220,7 +2089,7 @@ object SimilarityQueries {
     // IvfPqTrainedSpec pins it), and the deep-refine column reaches
     // the ≥0.9 operating point at BOTH gate SFs (0.96+ at sf0.001;
     // sf0.1 recovers it at rr = 48k with enough probes, where q136's
-    // fixed 3k sat at ~0.56). OPERATING GUIDANCE (VERDICT r14 #3):
+    // fixed 3k sat at ~0.56). OPERATING GUIDANCE:
     // recall is NOT monotone in nprobe at a FIXED rr_short (measured
     // at sf0.1: rr=60 drops 0.88 → 0.76 going nprobe 2 → 4) — this is
     // SHORTLIST CROWDING, not a bug: each extra probed cell adds
@@ -2232,41 +2101,23 @@ object SimilarityQueries {
     // the crowding disappears (the shortlist stops truncating, so
     // probed candidate sets nest and recall is monotone in nprobe
     // again — the companion law IvfPqTrainedSpec pins). SCALE: the
-    // refine step is the same
-    // keyed join at every depth — rr_short × queries rows against the
+    // refine step is the same keyed join at every depth — rr_short × queries rows against the
     // raw vectors; at 100 TB the rr knob trades exactly those exact
     // lookups (cold-storage point reads) for recall, which is why the
     // curve — not any single point — is the deployable artifact.
     q("q137_ivfpq_refine_curve", {
       "X2 composite: the refine-depth knob — recall@5 vs (rr_short, nprobe) at PqK=256, Lloyd-trained"
     }, {
-      s"""WITH $esCteSql,
-         |  dims AS (SELECT unnest(range(1, ${Embedder.Dim + 1})) AS dim),
-         |  ${kmCentsSql(KmTrainedUpdates)},
-         |  ${ivfpqChainSqlFrom(s"SELECT cell_id, cv FROM kcents$KmTrainedUpdates", "t", Pq8K)},
-         |  qs AS (SELECT vec_id AS query_id, ev AS qv FROM es WHERE vec_id < $NQueries),
-         |  topx AS (SELECT query_id, vec_id FROM (
-         |    SELECT q.query_id, e.vec_id,
-         |      ROW_NUMBER() OVER (PARTITION BY q.query_id ORDER BY
-         |        ROUND(list_distance(e.ev, q.qv), 6) ASC, e.vec_id) AS rn
-         |    FROM es e CROSS JOIN qs q) WHERE rn <= $IvfK),
-         |  ${ivfpqRefineCurveSql("t", RrPoints, NprobePoints)}
+      s"""WITH $trainedPreludeSql,
+         |  ${ivfpqChainSqlFrom(trainedCentsBodySql, "t", Pq8K)},
+         |  $qsSql,
+         |  $topxSql,
+         |  ${ivfpqRefineCurveSql("t")}
          |SELECT CAST(rr_short AS BIGINT) AS rr_short,
          |  CAST(nprobe AS BIGINT) AS nprobe, mean_recall_rr FROM trcurve
          |ORDER BY rr_short, nprobe""".stripMargin
     }) { (s, dir) =>
-      val base = embSpread(s, dir).checkpointed()
-      val trainedCents = kmTrainedCents(base, KmTrainedUpdates).checkpointed()
-      val qs = base.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("query_id"), col("ev").as("qv"))
-      val topx = base.crossJoin(broadcast(qs))
-        .withColumn("xd", round(VectorOps.l2(col("ev"), col("qv")), 6))
-        .groupBy(col("query_id"))
-        .agg(graft.plans.CollectTopK.topk(-col("xd"), col("vec_id"), IvfK).as("tk"))
-        .select(col("query_id"), explode(col("tk.vec_id")).as("vec_id"))
-        .checkpointed(false)
-      ivfpqRefineCurve(base, trainedCents, topx, Pq8K, RrPoints, NprobePoints)
-        .presented("rr_short", "nprobe")
+      ivfpqRefineCurve(embSpread(s, dir).checkpointed())
     }
   )
 }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.functions.VectorOps
+import graft.functions.{Exact, VectorOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,8 +25,16 @@ import org.apache.spark.sql.functions._
   */
 object VectorIndex {
 
-  /** Argmin cell assignment against broadcast centroids — the q42
-    * min_by aggregate (map-side combine, no ranking window). */
+  /** Argmin cell assignment `(vec_id, cell_id, d)` of `vectors` against
+    * broadcast centroids `(cell_id, cv)`, with `d` the 6dp L2 distance.
+    * A min_by AGGREGATE, not a ranking window: the map-side partial
+    * collapses the cells × vectors cross join to one row per vector
+    * before the exchange, where a window would shuffle every scored row
+    * into a sort. Ties on `d` break on cell_id because the (d, cell_id)
+    * key compares lexicographically — the oracle's
+    * `ROW_NUMBER() OVER (… ORDER BY d, cell_id)`. Every argmin cell
+    * assignment in the engine is this one (q42, q65, q93, q99, q100,
+    * the Lloyd rounds); `SingleSiteSpec` keeps it that way. */
   def assign(vectors: DataFrame, cents: DataFrame): DataFrame =
     vectors.crossJoin(broadcast(cents))
       .withColumn("d", round(VectorOps.l2(col("ev"), col("cv")), 6))
@@ -39,6 +47,21 @@ object VectorIndex {
   def seedCentroids(embeddings: DataFrame, cells: Int): DataFrame =
     embeddings.filter(col("vec_id") < cells)
       .select(col("vec_id").as("cell_id"), col("ev").as("cv"))
+
+  /** One Lloyd update: each cell's new centroid `(cell_id, cv)` is the
+    * per-dimension exact-decimal mean of its members' vectors, rounded
+    * to 6dp (so the next round's assignment is cross-engine exact) and
+    * listed in dimension order. The mean is one (cell, dim)-keyed
+    * aggregate: its exchange carries cells × dims partial sums. */
+  def lloydMeans(assign: DataFrame, vectors: DataFrame): DataFrame =
+    assign.join(vectors, "vec_id")
+      .select(col("cell_id"), posexplode(col("ev")).as(Seq("pos", "val")))
+      .select(col("cell_id"), (col("pos") + 1).as("dim"), col("val"))
+      .groupBy(col("cell_id"), col("dim"))
+      .agg(Exact.davgRound(col("val"), 6).as("m"))
+      .groupBy(col("cell_id"))
+      .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("dm"))
+      .select(col("cell_id"), col("dm").getField("m").as("cv"))
 
   /** One-time per-corpus index build (memoized + published via
     * [[PreparedArtifact]]; `cells` participates in the key so

@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.VectorOps
 import graft.operators.SimilarityQueries
+import graft.pipeline.VectorIndex
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -47,8 +48,7 @@ class IvfPqAppendSpec extends AnyFunSuite {
   }
 
   test("incremental encode == bulk rebuild restricted to the batch (append soundness)") {
-    val cents = base.filter(col("vec_id") < SimilarityQueries.IvfCells)
-      .select(col("vec_id").as("cell_id"), col("ev").as("cv"))
+    val cents = VectorIndex.seedCentroids(base, SimilarityQueries.IvfCells)
     // Incremental: batch-only sub against corpus centroids, codebook
     // recomputed from the PqK corpus seeds — the q119 path.
     val inc = SimilarityQueries.ivfpqCodes(
@@ -58,10 +58,8 @@ class IvfPqAppendSpec extends AnyFunSuite {
     // Bulk: full rebuild over corpus ∪ batch (batch ids ≥ 100000, so
     // the vec_id < IvfCells / < PqK seeds are the same corpus rows).
     val union = base.unionAll(batch)
-    val bulkSub = SimilarityQueries.ivfpqSub(union)
-    val bulkCb = bulkSub.filter(col("vec_id") < SimilarityQueries.PqK)
-      .select(col("m"), col("vec_id").as("code"), col("sv").as("cvr"))
-    val bulk = SimilarityQueries.ivfpqCodes(bulkSub, bulkCb)
+    val bulk = SimilarityQueries.ivfpqIndex(SimilarityQueries.ivfpqSub(union,
+        VectorIndex.seedCentroids(union, SimilarityQueries.IvfCells))).codes
       .filter(col("vec_id") >= 100000)
       .collect().map(_.toSeq).toSet
     assert(inc.nonEmpty && inc == bulk,

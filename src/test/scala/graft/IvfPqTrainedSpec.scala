@@ -89,6 +89,18 @@ class IvfPqTrainedSpec extends AnyFunSuite {
       "no >=0.9 re-rank operating point at sf0.001")
   }
 
+  // Job bounds at sf0.001: the counts one run of each query starts.
+  // A bound holds on one of up to three runs: AQE plans some stages
+  // from runtime timing, so a run now and then starts a different
+  // count (q113's first run in a fresh JVM read 20).
+  for ((name, bound) <- Seq("q113_ivfpq_search" -> 19L, "q121_ivfpq_trained" -> 31L,
+      "q126_ivfpq_nprobe_curve" -> 59L, "q136_ivfpq_pq8_curve" -> 60L,
+      "q137_ivfpq_refine_curve" -> 36L))
+    test(s"$name starts at most $bound jobs") {
+      val counts = TestSpark.jobCountsUntil(name, dir, bound)
+      assert(counts.exists(_ <= bound), s"$name started ${counts.mkString(", ")} jobs")
+    }
+
   test("q137 refine-depth knob: recall monotone nondecreasing in rr_short per nprobe, full grid, deep refine reaches >=0.9") {
     val rows = SparkEntry.queries("q137_ivfpq_refine_curve")(spark, dir)
       .collect()

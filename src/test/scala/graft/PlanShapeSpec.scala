@@ -187,7 +187,7 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
-  /** q113's two load-bearing scale laws (VERDICT r10 #1), pinned on the
+  /** q113's two load-bearing scale laws, pinned on the
     * UNtruncated encode plan (the registered query's checkpoints hide
     * it): (a) no cartesian product anywhere — the centroid/codebook
     * cross joins must stay broadcast; (b) NO shuffle exchange carries
@@ -199,11 +199,9 @@ class PlanShapeSpec extends AnyFunSuite {
     import org.apache.spark.sql.types.ArrayType
     val base = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), functions.VectorOps.asDouble(col("embedding")).as("ev"))
-    val sub = operators.SimilarityQueries.ivfpqSub(base)
-    val cb = sub.filter(col("vec_id") < operators.SimilarityQueries.PqK)
-      .select(col("m"), col("vec_id").as("code"), col("sv").as("cvr"))
-    val ns = nodes(operators.SimilarityQueries.ivfpqCodes(sub, cb)
-      .queryExecution.executedPlan)
+    val cents = pipeline.VectorIndex.seedCentroids(base, operators.SimilarityQueries.IvfCells)
+    val ns = nodes(operators.SimilarityQueries.ivfpqIndex(
+      operators.SimilarityQueries.ivfpqSub(base, cents)).codes.queryExecution.executedPlan)
     assert(!ns.exists(_.isInstanceOf[CartesianProductExec]),
       "q113 encode plans a CartesianProduct")
     val vecShuffles = ns.collect {

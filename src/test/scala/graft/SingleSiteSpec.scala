@@ -8,7 +8,8 @@ import scala.jdk.CollectionConverters._
   * copy elsewhere fails here, so the one-site refactors stay done:
   * streams open, trigger and wait only in `streaming/Drain.scala`,
   * helper threads come only from `Overlap.scala`, sessions are built
-  * only in `GraftSession.scala`. */
+  * only in `GraftSession.scala`, and the argmin cell assignment's
+  * (d, cell_id) key lives only in `VectorIndex.assign`. */
 class SingleSiteSpec extends AnyFunSuite {
 
   private val mainRoot = Paths.get("src/main/scala")
@@ -24,7 +25,8 @@ class SingleSiteSpec extends AnyFunSuite {
     ("readStream|Trigger\\.AvailableNow|awaitTermination", "graft/streaming/Drain.scala"),
     ("scala\\.concurrent\\.(_|Future\\b|\\{[^}]*\\bFuture\\b)|\\bFuture\\s*[({\\[.]",
       "graft/Overlap.scala"),
-    ("SparkSession\\.builder", "graft/GraftSession.scala"))
+    ("SparkSession\\.builder", "graft/GraftSession.scala"),
+    ("struct\\(col\\(\"d\"\\), col\\(\"cell_id\"\\)\\)", "graft/pipeline/VectorIndex.scala"))
 
   for ((pattern, owner) <- rules)
     test(s"/$pattern/ appears only in $owner") {
