@@ -8,7 +8,7 @@ object Bench {
       sec: Double, shuffleMb: Double, compiles: Long, jobs: Long, err: Option[String])
 
   /** Locale.ROOT 3-decimal doubles: de_DE comma separators are invalid
-    * JSON, and full precision bloated r5's record past the tail a
+    * JSON, and full precision bloats the record past the tail a
     * last-line reader captures. */
   private def f3(x: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(x))
@@ -42,14 +42,14 @@ object Bench {
     // metadata without decoding a single column, leaving the first real
     // query to pay the cold decode.
     // Every warmup / fixture-prep step is individually NonFatal-guarded:
-    // round 6 proved that ONE broken table load here zeroes the whole
-    // artifact (BENCH_r06.json rc=1, no measurement at all). A failed
-    // step costs exactly the queries that depend on it — they error in
-    // the measured pass and are recorded as errors — while every other
-    // query still produces a timing.
+    // ONE broken table load here would otherwise zero the whole artifact
+    // (rc=1, no measurement at all). A failed step costs exactly the
+    // queries that depend on it — they error in the measured pass and
+    // are recorded as errors — while every other query still produces a
+    // timing.
     // Named + logged: a broken fixture here surfaces downstream as
-    // per-query errors, and without the root cause printed the next
-    // round-6-style environment break is needlessly hard to diagnose.
+    // per-query errors, and without the root cause printed an
+    // environment break is needlessly hard to diagnose.
     def warm(label: String)(step: => Unit): Unit =
       try step catch {
         case scala.util.control.NonFatal(e) =>
@@ -141,8 +141,8 @@ object Bench {
     // Start MEASURING from the same state the second pass starts from:
     // the warm pass just churned ~100 queries of allocation, and the
     // first measured queries otherwise absorb its major GCs — the
-    // early-alphabet 3-7x first-pass inflation (r5's q06 6.9s vs 0.94s)
-    // was warm-pass debt, not those queries' cost. Blocking unpersist
+    // early-alphabet 3-7x first-pass inflation (q06 6.9s vs 0.94s) was
+    // warm-pass debt, not those queries' cost. Blocking unpersist
     // first so checkpoint blocks are actually gone before the GC runs.
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     System.gc()
@@ -205,20 +205,20 @@ object Bench {
     calibSink.addAndGet(mixOps(2000000L)) // JIT warm
     // Calibration SAMPLES are interleaved through the measured suite
     // (~0.1 s each at the GC nudge points), not taken once at the end:
-    // round 8's single end-of-run snapshot read 5.3M ops/ms on the run
-    // that measured 84 s and 7.0M on the one that measured 110 s — an
+    // a single end-of-run snapshot read 5.3M ops/ms on a run that
+    // measured 84 s and 7.0M on one that measured 110 s — an
     // end snapshot reflects the moment, not the contention the suite
     // actually ran under. The MEDIAN of interleaved samples is the
     // run's speed reference; calibrated_total normalizes the total to
     // a reference host speed at the same thread count (below), so
     // comparisons across runs cite one number.
     val calibSamples = scala.collection.mutable.ArrayBuffer[Long]()
-    // I/O calibration sample (VERDICT r11 #2): the splitmix64 workload is
-    // CPU-only and missed a 2.4x FILESYSTEM-contention slowdown outright
-    // (BENCH_r11: 347 s raw on the same code the quiet record ran in
-    // 143 s, CPU factor 0.89). Each sample times an fsync'd 32 MiB write
-    // to the repo's target dir — the same ext4 volume the testdata scans
-    // read (single /dev/vda on this host) — so a host whose disk is busy
+    // I/O calibration sample: the splitmix64 workload is CPU-only and
+    // missed a 2.4x FILESYSTEM-contention slowdown outright (347 s raw
+    // on the same code a quiet record ran in 143 s, CPU factor 0.89).
+    // Each sample times an fsync'd 32 MiB write to the repo's target dir
+    // — the same ext4 volume the testdata scans read (single /dev/vda on
+    // this host) — so a host whose disk is busy
     // shows up as low MB/s here even when its cores are idle. force(false)
     // makes the write hit the device, not just the page cache; the file
     // is deleted per sample so repeated runs don't accumulate garbage.
@@ -310,8 +310,8 @@ object Bench {
       "\"" + k + "\":\"" + jstr(e) + "\""
     }.mkString("{", ",", "}")
     val total = results.map(_._2.sec).sum
-    // n_queries/avg keep totals comparable across rounds as the query
-    // count grows (r2: 50 queries, r3: 75).
+    // n_queries/avg keep totals comparable across records as the query
+    // count grows.
     val avg = if (results.nonEmpty) total / results.size else 0.0
     // Flagship E1 pipeline end-to-end at the benched SF (scan → daily
     // agg → sentence render → embedding → last-write-wins upsert frame),
@@ -345,8 +345,8 @@ object Bench {
     val passes = firstPass.collect { case (name, m) if secondPass.contains(name) =>
       s"\"" + name + "\":[" + f3(m.sec) + "," + f3(secondPass(name)) + "]"
     }.mkString("{", ",", "}")
-    // A compact headline line FIRST: r5's driver tail-capture truncated
-    // the full record mid-map, leaving nothing parseable. The short line
+    // A compact headline line FIRST: a tail capture can truncate the
+    // full record mid-map, leaving nothing parseable. The short line
     // carries total/n/avg/entry and survives any tail window; the full
     // per-query record follows on its own line.
     // Self-describing schema: timing_rule states that a query's recorded
@@ -356,7 +356,7 @@ object Bench {
     // engine so an environment bump names itself in the artifact.
     // Host calibration: identical code on this box has measured 72-102s
     // across a single day (the untouched entry pipeline alone varied
-    // 1.3-2.8s), so a cross-round total is only comparable through a
+    // 1.3-2.8s), so a cross-run total is only comparable through a
     // same-run speed reference. The interleaved nt samples (taken
     // through the measured suite — see calibSample above) give the
     // run's contention profile; their MEDIAN normalizes the total to
@@ -379,21 +379,21 @@ object Bench {
     val refNtByThreads = Map(32 -> 5203252L, 4 -> 666666L)
     val refNt = refNtByThreads.get(threads)
     val calibratedTotal = refNt.map(total * ntMedian.toDouble / _)
-    // Spread = max/min of the interleaved samples (VERDICT r10 #8): a
+    // Spread = max/min of the interleaved samples: a
     // quiet host sits well under ~3×; a larger spread means the suite
     // ran under shifting contention and per-query numbers from this
     // record should be read as min-of-passes + shuffle_mb only. The
     // flag makes a contended record SELF-identify instead of needing a
-    // cross-round forensic read.
+    // cross-record forensic read.
     val calibSpread =
       if (ntSorted.nonEmpty && ntSorted.head > 0) ntSorted.last.toDouble / ntSorted.head
       else -1.0
-    // I/O contention verdict (VERDICT r11 #2). Two triggers mark the run
-    // contended: shifting CPU contention (spread of the interleaved mix
-    // samples > 3x — this caught r11's driver run at 3.12 and a genuinely
+    // I/O contention verdict. Two triggers mark the run contended:
+    // shifting CPU contention (spread of the interleaved mix samples > 3x
+    // — this caught a contended run at 3.12 and a genuinely
     // hammered pass at 10.3), or UNIFORMLY slow I/O (median under 40% of
-    // the in-suite reference — r11's blind spot was exactly this shape:
-    // every sample slow, so a CPU check alone stays quiet). io_spread is
+    // the in-suite reference — every sample slow, so a CPU check alone
+    // stays quiet). io_spread is
     // REPORTED but not a trigger: the samples run at the GC-nudge points
     // right after queries complete, when the suite's OWN dirty-page
     // writeback is still draining, so max/min spreads of 5-10x are normal
@@ -405,14 +405,14 @@ object Bench {
     val ioSpread =
       if (ioSorted.nonEmpty && ioSorted.head > 0) ioSorted.last / ioSorted.head
       else -1.0
-    // Reference = the IN-SUITE median of full quiet-host passes (the r9
-    // CPU-ref lesson applied to I/O: both sides of the comparison must
-    // use the same sampling discipline — an idle-host sample reads ~75
+    // Reference = the IN-SUITE median of full quiet-host passes (as for
+    // the CPU reference, both sides of the comparison must use the same
+    // sampling discipline — an idle-host sample reads ~75
     // MB/s but a mid-suite sample competes with the suite's writeback
     // and reads 40-60 on this box). Override via env for a different
     // fleet host. The 0.4x floor means "sustained under ~20 MB/s", the
-    // shape of a host whose disk another tenant is SATURATING (the
-    // r11-incident magnitude). Residual, documented: MILD I/O contention
+    // shape of a host whose disk another tenant is SATURATING (the 2.4x
+    // slowdown above). Residual, documented: MILD I/O contention
     // (disk ~1.5-2x slow, median 20-40) is neither suppressed nor fully
     // corrected by the CPU factor — for that band the record still
     // carries io_mb_s_median + samples for the reader, and the
@@ -424,8 +424,8 @@ object Bench {
     val ioSlow = ioMedian >= 0 && ioMedian < 0.4 * refIoMbS
     val contended = calibSpread > 3.0 || ioSlow
     // A contended record REFUSES to publish a calibrated total rather
-    // than print a misleading one: the CPU-only factor absorbed r11's
-    // 2.4x I/O slowdown to 11% and a reader saw a phantom 3x regression.
+    // than print a misleading one: the CPU-only factor absorbed a 2.4x
+    // I/O slowdown to 11% and a reader saw a phantom 3x regression.
     // Raw total + per-query min-of-passes + shuffle_mb remain — those are
     // the honest readings a contended host can still produce.
     val calibratedJson = calibratedTotal.filterNot(_ => contended).fold("null")(f3)
@@ -439,7 +439,7 @@ object Bench {
           " MB/s vs ref " + f3(refIoMbS) +
           "): calibrated_total suppressed; read raw total + shuffle_mb only\","
       else ""
-    // Pass provenance (VERDICT r11 #8): the committed record is the best
+    // Pass provenance: the committed record is the best
     // of N same-day full passes (host band swings ~20%); the label stamps
     // which pass this artifact is so the protocol is visible in the
     // record itself, not just in the commit message.
@@ -454,22 +454,21 @@ object Bench {
     val meta = s""""spark_version":"${spark.version}","bench_pass":"$passLabel","entry_pipeline_passes":${entryPasses.map(f3).mkString("[", ",", "]")},"entry_pipeline_note":"$entryNote","timing_rule":"min of error-free passes (tail re-measured once; both readings in remeasured_passes); shuffle_mb always from first pass; calibrated_total = total x median(nt samples)/ref at threads_nt, suppressed (null) when contended or when threads_nt has no ref",$calibNote$calib"""
     val summary = s"""{"metric":"total","value":${f3(total)},"unit":"sec","calibrated_total":$calibratedJson,"contended":$contended,"n_queries":${results.size},"avg_sec_per_query":${f3(avg)},"entry_pipeline_sec":${f3(entrySec)},"spark_version":"${spark.version}","sf":"$sfDir"}"""
     val json = s"""{"metric":"total","value":${f3(total)},"unit":"sec","calibrated_total":$calibratedJson,"contended":$contended,"n_queries":${results.size},"avg_sec_per_query":${f3(avg)},"entry_pipeline_sec":${f3(entrySec)},$meta,"queries":$qs,"shuffle_mb":$shuffles,"codegen_compiles":$compiled,"jobs":$jobs,"errors":$errs,"remeasured_passes":$passes,"sf":"$sfDir"}"""
-    // Stdout AND a file: the driver's tail-capture truncated the r3
-    // artifact mid-JSON; the file is the complete record either way.
-    // The file defaults to SCRATCH, not the repo root (VERDICT r13 #5):
-    // the committed BENCH_FULL.json is the protocol's best-of-N record,
-    // and the driver's own end-of-round run clobbered it two rounds
-    // running. Opt into the committed path with SPARK_GRAFT_BENCH_OUT.
-    // One stable scratch name, not per-pid (VERDICT r14 #6): repeated
-    // unlabeled runs reuse the slot instead of accumulating files —
-    // record-keeping passes always set SPARK_GRAFT_BENCH_OUT anyway.
+    // Stdout AND a file: a tail capture can truncate the stdout record
+    // mid-JSON; the file is the complete record either way.
+    // The file defaults to SCRATCH, not the repo root: the committed
+    // BENCH_FULL.json is the protocol's best-of-N record, and an
+    // unlabeled run must not clobber it. Opt into the committed path
+    // with SPARK_GRAFT_BENCH_OUT.
+    // One stable scratch name, not per-pid: repeated unlabeled runs
+    // reuse the slot instead of accumulating files — record-keeping
+    // passes always set SPARK_GRAFT_BENCH_OUT anyway.
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "/tmp/graft_bench_full_last.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), json + "\n")
     catch { case _: Throwable => () }
-    // Compact summary line LAST (VERDICT r10 #3): the driver captures a
-    // bounded TAIL of stdout, and the full per-query record outran that
-    // window in r9/r10 (BENCH_r{9,10}.json parsed:null). The final line
+    // Compact summary line LAST: a bounded TAIL capture of stdout can
+    // lose the full per-query record (it parsed as null). The final line
     // is the one guaranteed to survive any tail size, so it must be the
     // parseable one-line summary; the full record precedes it and is
     // duplicated into BENCH_FULL.json above either way.

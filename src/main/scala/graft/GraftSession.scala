@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one local session shape every graft main and test runs under
-  * (Bench, Verify, Plans, the test-scope tools and `TestSpark`), so a
+  * (Bench, Verify, the test-scope tools and `TestSpark`), so a
   * setting cannot drift between them. A caller of `SparkEntry.entry`
   * brings its own session, which reaches the engine through
   * `Tables.configure` alone. */

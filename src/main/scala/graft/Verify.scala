@@ -20,7 +20,7 @@ object Verify {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    // checker's json.load fail and silently zero the run's correctness.
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -39,8 +39,8 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Engine-version stamp alongside the dump: when a hash drifts, the
-    // artifact itself names which Spark produced it (round 6's silent
-    // 4.1.2 bump cost a round of diagnosis).
+    // artifact itself names which Spark produced it (a silent engine
+    // bump is otherwise invisible in the output).
     Files.writeString(Paths.get(s"$outDir/versions.json"),
       s"""{"spark": ${q(spark.version)}, "scala": ${q(util.Properties.versionNumberString)}}""")
     // Manifest of successfully-written queries, APPENDED per query (not
@@ -49,7 +49,7 @@ object Verify {
     // silently passing the gate) and a killed run keeps its prefix.
     val manifest = Paths.get(s"$outDir/manifest.txt")
     Files.writeString(manifest, "")
-    // Full registry BEFORE the loop (ADVICE r13): the checker's
+    // Full registry BEFORE the loop: the checker's
     // never-completed sweep diffs completions against THIS list, not
     // oracle_sql keys — a rows-only query (no oracle SQL) crashing
     // before its parquet lands must still fail the gate, and a torn
@@ -61,9 +61,9 @@ object Verify {
     // checker starts each query's DuckDB compare the moment its parquet
     // lands) hides a heavy oracle chain under the remaining Spark
     // pass — but only if the chain is submitted early. Order = measured
-    // sf0.01 compare seconds, descending, AFTER the r14 MATERIALIZED-CTE
-    // rewrite ([[OracleSql]]) collapsed the training chains (35, 34, 33,
-    // 27, 3 s — the old 286 s q125 head is now 1.3 s).
+    // sf0.01 compare seconds, descending, with the MATERIALIZED-CTE
+    // rewrite ([[OracleSql]]) collapsing the training chains (35, 34, 33,
+    // 27, 3 s — q125's chain fell from 286 s to 1.3 s).
     val oracleHeavy = Seq("q120_stream_triage", "q68_incremental_dedup",
       "q32_simhash_bands", "q122_takedown", "q136_ivfpq_pq8_curve",
       "q125_takedown_artifacts", "q117_learned_manifest").zipWithIndex.toMap

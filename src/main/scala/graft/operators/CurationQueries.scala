@@ -94,19 +94,14 @@ object CurationQueries {
   private[graft] def qcGradient(scored: DataFrame): DataFrame =
     scored.groupBy(col("b")).agg(sum((col("p") - col("y")) * col("x")).as("g"))
 
-  /** q115's labeled feature frame (pre-checkpoint): per-(doc, bucket)
-    * normalized hashed-unigram counts ∪ the capped-length feature
-    * (b = QcBuckets) ∪ bias (b = QcBuckets+1), joined with the
-    * exact-decimal rule label y = [q34 quality ≥ 0.46]. One tokenize
-    * pass; everything downstream of it is reduced. Exposed for the
-    * Plans dump (the registered query's eager checkpoint truncates the
-    * inspectable plan). */
-  private[graft] def qcFeatures(s: SparkSession, dir: String): DataFrame =
-    qcFeaturesOf(docs(s, dir))
-
-  /** Same, over any `(doc_id, text)` frame — q116 featurizes an append
-    * BATCH with the identical pipeline the model was trained on
-    * (train/serve feature parity is the whole point of sharing this).
+  /** q115's labeled feature frame over any `(doc_id, text)` frame:
+    * per-(doc, bucket) normalized hashed-unigram counts ∪ the
+    * capped-length feature (b = QcBuckets) ∪ bias (b = QcBuckets+1),
+    * joined with the exact-decimal rule label y = [q34 quality ≥ 0.46].
+    * One tokenize pass; everything downstream of it is reduced. q116
+    * featurizes an append BATCH with the identical pipeline the model
+    * was trained on (train/serve feature parity is the whole point of
+    * sharing this).
     *
     * SINGLE-PASS REWRITE MEASURED AND REJECTED (r16 — do not re-try
     * without a fresh in-suite A/B): a one-scan shape (posexplode_outer

@@ -57,9 +57,9 @@ object DedupQueries {
   /** Pre-sort frames for the heavy dedup queries: EXACTLY each registered
     * query's frame minus the trailing `rangeSorted` materialize (whose
     * lazy checkpoint truncates the inspectable plan to an RDD scan).
-    * The query bodies, `graft.Plans` and `PlanShapeSpec` all build from
-    * here, so the pinned/documented plan shape is the benched shape —
-    * same planted-copy union and doc_id spread — minus only the sort. */
+    * The query bodies and `PlanShapeSpec`'s laws both build from here,
+    * so the pinned plan shape is the benched shape — same planted-copy
+    * union and doc_id spread — minus only the sort. */
   private[graft] val preSortFrames: Map[String, DataFrame => DataFrame] = {
     // EXPLICIT partition count: a column-only repartition is
     // REPARTITION_BY_COL, which AQE freely coalesces — and ~10 MB of
@@ -589,8 +589,8 @@ object DedupQueries {
       .select("id_a", "id_b", "hamming")
   }
 
-  /** q84's bloom-prefiltered decontamination, pre-sort (PlanShapeSpec /
-    * graft.Plans read the shape here — the trailing rangeSorted
+  /** q84's bloom-prefiltered decontamination, pre-sort (PlanShapeSpec
+    * reads the shape here — the trailing rangeSorted
     * checkpoint hides it from the registered query's plan): distinct
     * hashed eval 6-grams feed one driver-side binary sketch; the TRAIN
     * side is probed with might_contain BEFORE its dedup exchange, so

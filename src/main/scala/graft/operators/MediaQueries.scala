@@ -31,7 +31,7 @@ object MediaQueries {
 
   /** q104's planted-copy union — the registered query's exact input
     * (exact copies at +80000, one-char-perturbed copies at +90000),
-    * shared with the Plans dump so PLANS.md shows the frame the bench
+    * shared with PlanShapeSpec so its law reads the frame the bench
     * actually executes, not a union-less stand-in. */
   private[graft] def phashPlantedUnion(base: DataFrame): DataFrame =
     base

@@ -1103,7 +1103,7 @@ object ReleaseQueries {
     * BEFORE its checkpoint — kept separately callable because the
     * checkpoint truncates the registered plan to an RDD scan and this
     * is where the load-bearing shape lives (three SHARED doc-keyed
-    * signal frames equi-joined on doc_id; `graft.Plans` dumps it). */
+    * signal frames equi-joined on doc_id; PlanShapeSpec pins it). */
   private[graft] def ensembleJoined(s: SparkSession, dir: String): DataFrame = {
     val qf = TextQueries.qualityFrame(s, dir)
       .filter(col("n_tokens") >= 3)

@@ -264,9 +264,11 @@ object SimilarityQueries {
     * bytes are the one thing that must never cross the wire. Instead
     * the cells-row centroid table collapses to a single array row
     * (broadcast), and each scan row computes its own argmin cell,
-    * residual, and subspace slices in place: the entire encode path up
-    * to the tiny code rows is exchange-free (PlanShapeSpec pins it on
-    * the untruncated plan). The argmin fold is an interpreted HOF over
+    * residual, and subspace slices in place: no exchange carries a
+    * corpus vector up to the tiny code rows (PlanShapeSpec pins it on
+    * the untruncated plan). The centroid array itself is a
+    * `collect_list` whose buffer crosses one single-partition exchange
+    * holding every centroid vector (ROADMAP D7). The argmin fold is an interpreted HOF over
     * cells×dims elements per row — the engine's usual explode+agg
     * rewrite is exactly what would reintroduce the vector exchange
     * (l2Hof is law-pinned equal to the codegen'd L2Dist in L2DistSpec,
@@ -317,8 +319,9 @@ object SimilarityQueries {
     * 256-entry codebook (q136 8.1 → 29.0 s, q137 4.1 → 15.2 s
     * in-suite): the interpreted HOF lambda (boxed per-element structs,
     * no whole-stage codegen) loses to the codegen'd broadcast-join
-    * probe + L2Dist + partial hash aggregate even at 250× the row
-    * count. At 16 entries (cells) the in-row argmin wins by avoiding an
+    * probe + L2Dist + min_by aggregate even at 250× the row count
+    * (that aggregate plans as a SortAggregate on both sides of its
+    * exchange, not a hash partial; ROADMAP D6). At 16 entries (cells) the in-row argmin wins by avoiding an
     * exchange; at 256 (codes) the codegen'd operator pipeline wins. */
   private[graft] def ivfpqCodes(sub: DataFrame, cb: DataFrame): DataFrame =
     sub.join(broadcast(cb), "m")

@@ -1062,7 +1062,7 @@ object TextQueries {
     * separately callable because the checkpoint truncates the
     * registered plan to an RDD scan and this is where the
     * load-bearing shape lives (PlanShapeSpec pins the shuffle-hash
-    * scoring join here; graft.Plans documents it). */
+    * scoring join here). */
   private[graft] def lmScoredFrame(s: SparkSession, dir: String): DataFrame = {
     // Raw (per-occurrence) bigram rows; w1 = the conditioning token.
     // Checkpointed eagerly: THREE consumers (both model aggregates

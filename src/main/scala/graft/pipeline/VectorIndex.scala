@@ -28,8 +28,9 @@ object VectorIndex {
   /** Argmin cell assignment `(vec_id, cell_id, d)` of `vectors` against
     * broadcast centroids `(cell_id, cv)`, with `d` the 6dp L2 distance.
     * A min_by AGGREGATE, not a ranking window: the map-side partial
-    * collapses the cells × vectors cross join to one row per vector
-    * before the exchange, where a window would shuffle every scored row
+    * (a SortAggregate, not a hash partial, until ROADMAP D6) collapses
+    * the cells × vectors cross join to one row per vector before the
+    * exchange, where a window would shuffle every scored row
     * into a sort. Ties on `d` break on cell_id because the (d, cell_id)
     * key compares lexicographically — the oracle's
     * `ROW_NUMBER() OVER (… ORDER BY d, cell_id)`. Every argmin cell

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.Materialize.CheckpointOps
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -53,10 +52,6 @@ object StatefulCounter {
       targetDir: String,
       checkpointDir: String): Unit = {
     import spark.implicits._
-    // One-time layout check per stream start, not per micro-batch: the
-    // probe reads the target table's footers, which is wasted driver I/O
-    // repeated inside a long catch-up cycle's foreachBatch.
-    migrateLegacyLayout(spark, targetDir)
     Drain(spark, srcDir, schema, checkpointDir) { src =>
       src.stream().as[EventIn]
         .groupByKey(_.user_id)
@@ -85,22 +80,4 @@ object StatefulCounter {
     val bucketed = batch.withColumn("bucket", pmod(col("user_id"), lit(TotalsBuckets.toLong)))
     StreamingUpsert.upsertBatch(bucketed, targetDir, Seq("user_id"), "bucket", version)
   }
-
-  /** One-time layout migration: a totals table written before the bucket
-    * fan-out existed has its files at the table root and no `bucket`
-    * column, so the bucketed merge's column resolution (and its dynamic
-    * partition overwrite, which only replaces `bucket=*` directories)
-    * would both break against it. Detect that layout and rewrite it once
-    * with the derived bucket — a FULL overwrite, because the legacy
-    * root-level files must be removed, not shadowed. */
-  private def migrateLegacyLayout(spark: SparkSession, targetDir: String): Unit =
-    if (graft.sinks.SinkOps.pathExists(spark, targetDir)) {
-      val existing = spark.read.parquet(targetDir)
-      if (!existing.columns.contains("bucket")) {
-        val migrated = existing
-          .withColumn("bucket", pmod(col("user_id"), lit(TotalsBuckets.toLong)))
-          .checkpointed(true) // materialize before overwriting its own source
-        migrated.write.mode("overwrite").partitionBy("bucket").parquet(targetDir)
-      }
-    }
 }

@@ -79,33 +79,4 @@ class StatefulCounterSpec extends AnyFunSuite {
       .select("user_id", "n", "sum").as[(Long, Long, Double)].collect().toSet
     assert(after == Set((1L, 2L, 105.0), (2L, 1L, 1.0)))
   }
-
-  test("a legacy unbucketed totals table is migrated in place, then merged against") {
-    val root = Files.createTempDirectory("graft_state_legacy").toFile.getAbsolutePath
-    val src = s"$root/src"; val target = s"$root/target"; val ckpt = s"$root/ckpt"
-
-    // Simulate a totals directory written by the pre-bucket layout:
-    // files at the table root, no `bucket` column.
-    Seq((1L, 5L, 50.0, ts("2024-01-01 10:00:00")),
-        (2L, 1L, 1.0, ts("2024-01-01 12:00:00")))
-      .toDF("user_id", "n", "sum", "last_ts")
-      .write.parquet(target)
-
-    // A fresh catch-up cycle over new events must not fail resolving
-    // `bucket` against the legacy files — it migrates them first.
-    val df1 = Seq((ts("2024-01-02 09:00:00"), 1L, 7.0)).toDF("ts", "user_id", "value")
-    df1.write.mode("append").parquet(src)
-    StatefulCounter.runAvailableNow(spark, src, df1.schema, target, ckpt)
-
-    // Layout is now bucketed (no stray root files), and the merge kept
-    // last-write-wins semantics: user 1's new emission replaced the
-    // legacy row, user 2's legacy row survived the migration.
-    val rootFiles = new java.io.File(target).listFiles()
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-    assert(rootFiles.isEmpty, s"legacy root files survived: ${rootFiles.mkString(",")}")
-    assert(new java.io.File(s"$target/bucket=2").exists())
-    val after = spark.read.parquet(target)
-      .select("user_id", "n", "sum").as[(Long, Long, Double)].collect().toSet
-    assert(after == Set((1L, 1L, 7.0), (2L, 1L, 1.0)))
-  }
 }
