@@ -32,10 +32,9 @@ object GraftSession {
       .config("spark.ui.retainedTasks", "2000")
       .config("spark.ui.retainedDeadExecutors", "1")
       .config("spark.sql.session.timeZone", "UTC")
-      // Session-state extensions (cosine_sim, FuseCosine,
-      // AsOfJoinStrategy) also reach the `newSession()` clones the
-      // streaming runners make; `Tables.configure` below installs them
-      // on this session only.
+      // Session-state extensions (cosine_sim, AsOfJoinStrategy) also
+      // reach the `newSession()` clones the streaming runners make;
+      // `Tables.configure` below installs them on this session only.
       .withExtensions(new plans.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)

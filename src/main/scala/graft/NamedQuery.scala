@@ -22,10 +22,6 @@ object NamedQuery {
       fn: (SparkSession, String) => DataFrame): NamedQuery =
     NamedQuery(name, doc, Some(oracle), fn)
 
-  def noOracle(name: String, doc: String)(
-      fn: (SparkSession, String) => DataFrame): NamedQuery =
-    NamedQuery(name, doc, None, fn)
-
   /** Presentation sort for a BOUNDED final result (aggregates, top-k,
     * verified pairs): one round-robin exchange, then a single-task sort.
     *

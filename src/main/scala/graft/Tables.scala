@@ -57,8 +57,8 @@ object Tables {
     graft.streaming.CheckpointFiles.install(spark)
     try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     catch { case scala.util.control.NonFatal(_) => () }
-    // AQE coalesce floor: Spark's stock 1 MB. Rejected alternative
-    // (r15): a 4kb floor un-serializes CPU-dense tiny-byte stages
+    // AQE coalesce floor: Spark's stock 1 MB. Rejected alternative:
+    // a 4kb floor un-serializes CPU-dense tiny-byte stages
     // (q59's CC-contraction rounds ran n=2..7 of 32; at 4kb n=14..32,
     // isolated wall -25%) but IN-SUITE, back-to-back quiet A/B legs
     // read 179.7 s (stock) vs 206.0 s (4kb): the extra tiny tasks'
@@ -153,7 +153,7 @@ object Tables {
       // session-zone read would surface as TimestampType. Branching on
       // the LOADED dtype instead of hard-coding one era's conversion is
       // what keeps one env/format bump from failing analysis suite-wide
-      // (round-6 regression: 43 queries died on a stale BIGINT path).
+      // (a stale BIGINT path once failed 43 queries).
       import org.apache.spark.sql.functions.{col, expr}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
       val raw = read(spark, s"$sfDir/$name.parquet")
@@ -199,7 +199,7 @@ object Tables {
         }
         if (scans.isEmpty) df.rdd.getNumPartitions // non-file plan: old probe
         else {
-          // Estimate PER SCAN and take the minimum (ADVICE r8 #3): each
+          // Estimate PER SCAN and take the minimum: each
           // scan computes its own bytesPerCore from its own files —
           // pooling all scans' sizes into one pot let a large scan
           // inflate a small one's split count — and the LEAST-parallel
@@ -227,7 +227,7 @@ object Tables {
     if (estTasks < target) df.repartition(target) else df
   }
 
-  /** Planted-copy id-headroom guard (ADVICE r10 #2): many dedup/media
+  /** Planted-copy id-headroom guard: many dedup/media
     * queries mint synthetic copies at doc_id + K with the SMALLEST K
     * being 70000 (q95/q96/q112), so base ids must stay strictly below
     * that or a regenerated larger corpus would collide planted ids with
@@ -255,12 +255,4 @@ object Tables {
       s"embeddings.vec_id max $mv >= $VecPlantIdFloor: appended-batch ids " +
         s"(q100/q119's +100000) would collide with real vectors")
   }
-
-  /** Load all tables as a name→DataFrame map. */
-  def loadAll(spark: SparkSession, sfDir: String): Map[String, DataFrame] =
-    names.map(n => n -> load(spark, sfDir, n)).toMap
-
-  /** Register every table as a temp view for spark.sql use. */
-  def registerViews(spark: SparkSession, sfDir: String): Unit =
-    names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }

@@ -61,9 +61,3 @@ final class ConfigResolver(
     else None
   }
 }
-
-object ConfigResolver {
-  /** Resolver with no primary store: env → defaults (the dotenv path). */
-  def envOnly(defaults: Map[String, String] = Map.empty): ConfigResolver =
-    new ConfigResolver(_ => None, defaults = defaults)
-}

@@ -16,9 +16,6 @@ object TextOps {
   def tokens(text: Column): Column =
     filter(split(lower(text), "[^a-z0-9]+"), t => t =!= "")
 
-  /** Distinct token set. */
-  def tokenSet(text: Column): Column = array_distinct(tokens(text))
-
   /** Word n-gram shingles (space-joined), distinct.
     *
     * Built by folding zip_with over shifted slices of the token array —

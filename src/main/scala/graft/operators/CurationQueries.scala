@@ -4,6 +4,7 @@ import graft.Materialize.CheckpointOps
 import graft.{NamedQuery, Overlap, Tables}
 import graft.NamedQuery.{q, PresentationOps}
 import graft.functions.{Exact, ExactSql, TextOps}
+import graft.plans.CollectTopK
 import graft.streaming.Drain
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -27,9 +28,6 @@ object CurationQueries {
   /** Stable per-doc hash, DuckDB-mirrorable. */
   private val hashSql =
     "CAST(CONCAT('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)"
-
-  /** DuckDB mirror of [[TextOps.tokens]] (canonical copy lives there). */
-  private def tokensSql(text: String): String = TextOps.tokensSql(text)
 
   /** Target mixture for q62 (must sum to 1 over the corpus langs). */
   private val Mixture: Seq[(String, Double)] = Seq(
@@ -103,7 +101,7 @@ object CurationQueries {
     * was trained on (train/serve feature parity is the whole point of
     * sharing this).
     *
-    * SINGLE-PASS REWRITE MEASURED AND REJECTED (r16 — do not re-try
+    * SINGLE-PASS REWRITE MEASURED AND REJECTED (do not re-try
     * without a fresh in-suite A/B): a one-scan shape (posexplode_outer
     * carrying a pos-0-guarded label → (doc,bucket) count aggregate →
     * doc-keyed collect_list → codegen'd feature explode, zero joins)
@@ -200,8 +198,8 @@ object CurationQueries {
     val featY = qcFeaturesOf(d).repartition(col("doc_id"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Round-0 weights: the full-range zero map stands in for the bucket
-    // census (r16 — drops the census's own full pass over featY, the
-    // old `select(b).distinct().collect()` job). Equivalence: every
+    // census (saving the census's own full pass over featY, a
+    // `select(b).distinct().collect()` job). Equivalence: every
     // feature row's bucket is present in both maps with value 0.000000,
     // so round 0's z ≡ 0 either way, and the TRUE census (distinct b of
     // featY) comes back for free as round-0's gradient keyset — w is
@@ -277,8 +275,7 @@ object CurationQueries {
   /** q118's drain, file-count parameterized (each file is one
     * micro-batch under maxFilesPerTrigger=1; the registered query runs
     * 2; the `backlog` family of the test-scope scale probe drains a
-    * 10-file backlog to measure the per-micro-batch marginal cost —
-    * VERDICT r13 #3). */
+    * 10-file backlog to measure the per-micro-batch marginal cost). */
   private[graft] def qcStreamDrain(s: SparkSession, dir: String,
       nFiles: Int): DataFrame = {
     import java.math.{BigDecimal => JDec}
@@ -309,7 +306,7 @@ object CurationQueries {
     * construction, the train/serve feature-parity requirement made
     * literal by sharing the generator). */
   private def qcFeatureCtesSql(src: String, pfx: String): String = {
-    val toks = tokensSql("text")
+    val toks = TextOps.tokensSql("text")
     val h = TextOps.hash60Sql("t")
     val set = TextQueries.Stopwords.map(w => s"'$w'").mkString("[", ", ", "]")
     val B = QcBuckets
@@ -949,7 +946,7 @@ object CurationQueries {
     q("q102_dsir_select",
       "X4+: DSIR hashed-ngram importance selection (deterministic top-k, target = lang 'en')",
       {
-        val toks = tokensSql("text")
+        val toks = TextOps.tokensSql("text")
         val h = TextOps.hash60Sql("t")
         s"""WITH tok AS (SELECT doc_id, lang, unnest($toks) AS t FROM documents),
            |  bk AS (SELECT doc_id, lang, $h % 4096 AS b FROM tok),
@@ -1050,19 +1047,15 @@ object CurationQueries {
         .withColumn("u", pmod(TextOps.hash60(
           concat(col("doc_id").cast("string"), lit(":ps"))), lit(USize)) + 1)
         .withColumn("pri", expr(s"(w * ${PriScale}L) div u"))
-      val heaps = d.groupBy(col("lang"))
-        .agg(graft.plans.CollectTopK.topk(
-          col("pri").cast("double"), col("doc_id"), SampleK + 1).as("tk"))
-        // τ = the (k+1)-th priority; a stratum smaller than k+1 has no
-        // threshold (every doc is sampled, ŵ = w exactly) → 0.
-        .withColumn("tau", coalesce(
-          try_element_at(col("tk"), lit(SampleK + 1)).getField("sim"),
-          lit(0.0)).cast("long"))
-      val sel = heaps
-        .select(col("tau"), posexplode(col("tk")).as(Seq("pos", "t")))
-        .filter(col("pos") < SampleK)
-        .select(col("t.vec_id").as("doc_id"),
-          (col("pos") + 1).cast("long").as("rank"), col("tau"))
+      val pri = col("pri").cast("double")
+      // τ = the (k+1)-th priority; a stratum smaller than k+1 has no
+      // threshold (every doc is sampled, ŵ = w exactly) → 0.
+      val tau = coalesce(CollectTopK.kth(pri, col("doc_id"), SampleK + 1), lit(0.0))
+        .cast("long").as("tau")
+      val sel = CollectTopK.ranked(d.groupBy(col("lang")), pri, col("doc_id"), SampleK + 1,
+          "doc_id", "pri", aggs = Seq(tau))
+        .filter(col("rn") <= SampleK)
+        .select(col("doc_id"), col("rn").as("rank"), col("tau"))
       d.join(broadcast(sel), "doc_id")
         .select(col("lang"), col("rank"), col("doc_id"), col("w"), col("u"),
           col("pri"), col("tau"),
@@ -1070,7 +1063,7 @@ object CurationQueries {
         .presented("lang", "rank")
     },
 
-    // ----- X4+ (selection model, round-11 item #4): TRAINED quality
+    // ----- X4+ (selection model): TRAINED quality
     // classifier — the standard pipeline step between q34's hand rule
     // and q102's DSIR reweighting is a fastText-style linear model
     // (Joulin et al. 2017, "Bag of Tricks for Efficient Text
@@ -1212,7 +1205,7 @@ object CurationQueries {
     q("q117_learned_manifest",
       "X3+X4+/LLM capstone: dedup -> persisted-model gate -> persisted-BPE billing -> split",
       {
-        val toks = tokensSql("text")
+        val toks = TextOps.tokensSql("text")
         val chain = new StringBuilder
         chain.append(
           s"""WITH ${qcFeatureCtesSql("documents", "")},
@@ -1348,7 +1341,7 @@ object CurationQueries {
       qcStreamDrain(s, dir, nFiles = 2)
     },
 
-    // ----- X3/X4+ GOVERNANCE (round-12 completion of q122's takedown):
+    // ----- X3/X4+ GOVERNANCE (completing q122's takedown):
     // RETRAIN-ON-TAKEDOWN — the takedown pass extended to EVERY
     // remaining persisted artifact (q122 already purges the dedup
     // signatures and the IVF-PQ packed codes). Removal list: the q122
@@ -1391,12 +1384,12 @@ object CurationQueries {
              |  w_0 AS (
              |    SELECT concat(regexp_replace(tok, '(.)', '\\1 ', 'g'), '_') AS w,
              |           CAST(COUNT(*) AS BIGINT) AS cnt
-             |    FROM (SELECT unnest(${tokensSql("text")}) AS tok FROM documents)
+             |    FROM (SELECT unnest(${TextOps.tokensSql("text")}) AS tok FROM documents)
              |    GROUP BY 1),
              |  v_0 AS (
              |    SELECT concat(regexp_replace(tok, '(.)', '\\1 ', 'g'), '_') AS w,
              |           CAST(COUNT(*) AS BIGINT) AS cnt
-             |    FROM (SELECT unnest(${tokensSql("text")}) AS tok FROM purged)
+             |    FROM (SELECT unnest(${TextOps.tokensSql("text")}) AS tok FROM purged)
              |    GROUP BY 1)""".stripMargin)
         for (i <- 1 to B) {
           chain.append(",\n").append(TextQueries.bpePairCte(i, s"w_${i - 1}"))
@@ -1446,8 +1439,8 @@ object CurationQueries {
       // BPE retrain is driver-round-trip bound — 8 argmax collects over
       // vocab-sized frames — so it hides almost entirely under the
       // compute-bound qc feature/gradient stages). The two threads write
-      // disjoint artifacts. r15: q125 isolated wall 9.6 s → ~7 s, the
-      // BPE segment's serialized latency gone.
+      // disjoint artifacts. Measured: q125 isolated wall 9.6 s → ~7 s,
+      // the BPE segment's serialized latency gone.
       Overlap {
         // 1. The assignment index: row-wise anti-join purge, published,
         // audited from the PUBLISHED table (q122's discipline — the

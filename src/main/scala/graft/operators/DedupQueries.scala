@@ -155,11 +155,15 @@ object DedupQueries {
       .select(col("doc_id"), coalesce(sigExpr, lit(0L)).as("sig"))
   }
 
-  /** DuckDB mirror of [[TextOps.hash60]] (canonical copy lives there). */
-  private def hash60Sql(tok: String): String = TextOps.hash60Sql(tok)
-
-  /** DuckDB mirror of [[TextOps.tokens]] (canonical copy lives there). */
-  private def tokensSql(text: String): String = TextOps.tokensSql(text)
+  /** The SimHash LSH bands of `(doc_id, sig)` rows: four 15-bit slices
+    * of the 60-bit signature, one `(doc_id, sig, band_id, band_val)` row
+    * each. Two signatures within Hamming 3 share at least one band. */
+  private[graft] def simhashBands(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id"), col("sig"), explode(array(
+        (0 until 4).map(b => struct(lit(b).as("band_id"),
+          shiftright(col("sig"), b * 15).bitwiseAND(lit(32767L)).as("band_val"))): _*)).as("bv"))
+      .select(col("doc_id"), col("sig"),
+        col("bv.band_id").as("band_id"), col("bv.band_val").as("band_val"))
 
   /** DuckDB mirror of [[TextOps.shingles]] (word 3-grams, distinct). */
   private def shinglesSql(toks: String): String =
@@ -185,7 +189,7 @@ object DedupQueries {
     * extra projected columns (e.g. `"side, "`). */
   private def simhashCtesSql(src: String, carry: String, out: String): String = {
     val hs =
-      s"list_transform(${shinglesSql(tokensSql("text"))}, t -> ${hash60Sql("t")})"
+      s"list_transform(${shinglesSql(TextOps.tokensSql("text"))}, t -> ${TextOps.hash60Sql("t")})"
     s"""${out}_hs AS (SELECT $carry doc_id, $hs AS hs FROM $src),
        |  $out AS (SELECT $carry doc_id, ${simhashSql("hs")} AS sig FROM ${out}_hs)""".stripMargin
   }
@@ -220,9 +224,9 @@ object DedupQueries {
     *    argument on the pair's globally-RAREST shared shingle shows it
     *    sits inside BOTH docs' prefixes. Hence indexing ONLY
     *    prefix-resident (doc, shingle) entries is lossless, and every
-    *    tier below works on that sub-index (the round-5/6 plan exploded
-    *    the FULL cold posting lists — correct, but most of the pair
-    *    shuffle was candidates the prefix bound already refutes).
+    *    tier below works on that sub-index (exploding the FULL cold
+    *    posting lists is correct, but most of its pair shuffle is
+    *    candidates the prefix bound already refutes).
     *  - COLD tier: prefix entries of shingles with `1 < df <= dfCap`
     *    re-aggregate into posting lists and explode into candidate
     *    pairs (pair cost per list bounded by min(df, prefix-residency)²
@@ -367,7 +371,7 @@ object DedupQueries {
   }
 
   /** q58/q84's shared containment engine with the 100 TB hot-gram
-    * guard (VERDICT r8 #1): one-sided n-gram containment
+    * guard: one-sided n-gram containment
     * `|E ∩ T| / |E| >= tau` between a SMALL eval corpus and a large
     * train corpus, bit-identical to the naive gram equi-join
     * (`eg ⋈ tg` then count per pair) the DuckDB oracle runs, but with
@@ -447,12 +451,12 @@ object DedupQueries {
       .groupBy(col("eval_id"))
       .agg(sort_array(collect_list(col("e"))).as("s"))
       .withColumn("n", size(col("s")).cast("long"))
-      // Eager, like cand below: a one-JVM interleaved A/B (r10, 6
+      // Eager, like cand below: a one-JVM interleaved A/B (6
       // alternating pairs at sf0.1) measured lazy variants of BOTH
       // trailing checkpoints as a wash (eager mean 4.63 s vs lazy
       // 4.60 s for q58+q84 combined) — the broadcast threads recompute
-      // what the eager job pays once, and neither wins. The barrier
-      // premium VERDICT r9 priced is stage-count floor, not eagerness.
+      // what the eager job pays once, and neither wins. The barrier's
+      // premium is its stage-count floor, not eagerness.
       .checkpointed() // the prefix broadcast reads it
     val prefix = ranked
       .select(col("eval_id"), explode(expr(
@@ -477,7 +481,7 @@ object DedupQueries {
     val evalArr = ranked.select(col("eval_id"),
       (if (hashKeyed) expr("array_sort(transform(s, x -> x.g))")
        else expr("transform(s, x -> x.g)")).as("ea"), col("n").as("n_eval"))
-    // evalArr is BROADCAST (r10): the eval side is small by the same
+    // evalArr is BROADCAST: the eval side is small by the same
     // contract that already broadcasts its full gram set above, and
     // broadcasting the per-eval-doc arrays means the candidate-pair
     // stream — the side that grows with corpus density — never
@@ -569,12 +573,7 @@ object DedupQueries {
     * exchange reuse — without it the shingle+vote subtree (the
     * dominant cost) computes twice. */
   private[graft] def simhashPairs(u: DataFrame): DataFrame = {
-    val sg = simhashSigs(u).checkpointed(false)
-    val banded = sg.select(col("doc_id"), col("sig"), explode(array(
-        (0 until 4).map(b => struct(lit(b).as("band_id"),
-          shiftright(col("sig"), b * 15).bitwiseAND(lit(32767L)).as("band_val"))): _*)).as("bv"))
-      .select(col("doc_id"), col("sig"),
-        col("bv.band_id").as("band_id"), col("bv.band_val").as("band_val"))
+    val banded = simhashBands(simhashSigs(u).checkpointed(false))
     val cand = banded.select(col("band_id"), col("band_val"),
         col("doc_id").as("id_a"), col("sig").as("sig_a"))
       .join(banded.select(col("band_id"), col("band_val"),
@@ -654,7 +653,7 @@ object DedupQueries {
     * "Connected Components in MapReduce and Beyond", SoCC 2014): each
     * round hangs every node's neighborhood off its minimum, halving
     * component depth, so rounds grow ~log(n) — NOT with component
-    * diameter like the round-5/6 min-label propagation, whose per-hop
+    * diameter like min-label propagation, whose per-hop
     * propagation made a long drop-a-token dup chain exceed any fixed
     * round cap. Both star steps are equi-joins + min-aggregates keyed
     * on the vertex id; no step ever materializes a component as one
@@ -773,7 +772,7 @@ object DedupQueries {
     * corpora: one frequent shingle whose permuted hash lands globally
     * small becomes the argmin of every doc containing it, and the
     * 10× probe measured a 3,927-doc bucket → 7.7M candidate pairs →
-    * 406× shuffle growth on 10× input (SCALE_r08.json, round 8).
+    * 406× shuffle growth on 10× input.
     * With r = 5 the same corpus yields a 173-doc max bucket and 169k
     * candidates — sublinear vs 75k at 1×. Parameters follow the
     * production MinHash-LSH convention (e.g. Leskovec et al., Mining
@@ -812,7 +811,7 @@ object DedupQueries {
   /** q68's oracle, shared VERBATIM by q120 (the same triage drained as
     * an AvailableNow stream): stream ≡ batch is q120's hash gate. */
   private def appendTriageOracleSql: String = {
-    val toks = tokensSql("text")
+    val toks = TextOps.tokensSql("text")
     s"""WITH batch AS (SELECT doc_id + 90000 AS doc_id,
        |         CASE WHEN doc_id % 12 = 0 THEN text
        |              WHEN doc_id % 8 = 0 THEN $dropFirstTokSql
@@ -883,8 +882,8 @@ object DedupQueries {
         }.mkString("\n           |              UNION ALL ")
         s"""WITH u AS (${plantedSql(10, 10000, dropFirstTokSql)}),
            |     sh AS (SELECT doc_id,
-           |              list_transform(${shinglesSql(tokensSql("text"))},
-           |                t -> ${hash60Sql("t")} & 2147483647) AS h31s
+           |              list_transform(${shinglesSql(TextOps.tokensSql("text"))},
+           |                t -> ${TextOps.hash60Sql("t")} & 2147483647) AS h31s
            |            FROM u),
            |     mh AS (SELECT doc_id,
            |              $ms
@@ -957,8 +956,8 @@ object DedupQueries {
          |               UNION ALL
          |               SELECT doc_id + 40000, $dropFirstTokSql FROM documents
          |               WHERE doc_id % 50 = 0),
-         |     eg AS (SELECT doc_id AS eval_id, unnest(${ngramsSql(tokensSql("text"), 8)}) AS t FROM ev),
-         |     tg AS (SELECT doc_id AS train_id, unnest(${ngramsSql(tokensSql("text"), 8)}) AS t FROM train),
+         |     eg AS (SELECT doc_id AS eval_id, unnest(${ngramsSql(TextOps.tokensSql("text"), 8)}) AS t FROM ev),
+         |     tg AS (SELECT doc_id AS train_id, unnest(${ngramsSql(TextOps.tokensSql("text"), 8)}) AS t FROM train),
          |     shared AS (SELECT eval_id, train_id, COUNT(*) AS n_shared
          |                FROM eg JOIN tg USING (t)
          |                WHERE eval_id <> train_id
@@ -1197,7 +1196,7 @@ object DedupQueries {
       s"""WITH u AS (${plantedSql(11, 50000, dropFirstTokSql)}),
          |     sh AS (SELECT doc_id,
          |              unnest(list_distinct(list_transform(
-         |                ${shinglesSql(tokensSql("text"))}, t -> ${hash60Sql("t")}))) AS h
+         |                ${shinglesSql(TextOps.tokensSql("text"))}, t -> ${TextOps.hash60Sql("t")}))) AS h
          |            FROM u),
          |     n AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
          |     pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_shared
@@ -1236,11 +1235,11 @@ object DedupQueries {
          |               WHERE doc_id % 40 = 0),
          |     eg AS (SELECT doc_id AS eval_id,
          |              unnest(list_distinct(list_transform(
-         |                ${ngramsSql(tokensSql("text"), 6)}, t -> ${hash60Sql("t")}))) AS h
+         |                ${ngramsSql(TextOps.tokensSql("text"), 6)}, t -> ${TextOps.hash60Sql("t")}))) AS h
          |            FROM ev),
          |     tg AS (SELECT doc_id AS train_id,
          |              unnest(list_distinct(list_transform(
-         |                ${ngramsSql(tokensSql("text"), 6)}, t -> ${hash60Sql("t")}))) AS h
+         |                ${ngramsSql(TextOps.tokensSql("text"), 6)}, t -> ${TextOps.hash60Sql("t")}))) AS h
          |            FROM train),
          |     shared AS (SELECT eval_id, train_id, COUNT(*) AS n_shared
          |                FROM eg JOIN tg USING (h)
@@ -1335,9 +1334,9 @@ object DedupQueries {
       "X3: duplicated-substring spans (rolling 8-token windows, cross-doc share, islands merge)", {
       val W = DupSpanW
       s"""WITH u AS (${plantedSql(7, 70000, dropFirstTokSql)}),
-         |  tkl AS (SELECT doc_id, ${tokensSql("text")} AS tk FROM u),
+         |  tkl AS (SELECT doc_id, ${TextOps.tokensSql("text")} AS tk FROM u),
          |  wins AS (SELECT doc_id, x - 1 AS pos,
-         |             ${hash60Sql(s"array_to_string(list_slice(tk, x, x + ${W - 1}), ' ')")} AS h
+         |             ${TextOps.hash60Sql(s"array_to_string(list_slice(tk, x, x + ${W - 1}), ' ')")} AS h
          |           FROM tkl, unnest(range(1, len(tk) - ${W - 2})) t(x)),
          |  shared AS (SELECT h FROM wins GROUP BY h HAVING COUNT(DISTINCT doc_id) >= 2),
          |  fl AS (SELECT doc_id, pos FROM wins JOIN shared USING (h)),
@@ -1368,7 +1367,7 @@ object DedupQueries {
       s"""WITH u AS (${plantedSql(9, 45000, dropFirstTokSql)}),
          |     sh AS (SELECT doc_id,
          |              unnest(list_distinct(list_transform(
-         |                ${shinglesSql(tokensSql("text"))}, t -> ${hash60Sql("t")}))) AS h
+         |                ${shinglesSql(TextOps.tokensSql("text"))}, t -> ${TextOps.hash60Sql("t")}))) AS h
          |            FROM u),
          |     fo AS (SELECT h, MIN(doc_id) AS first_id FROM sh GROUP BY 1)
          |SELECT doc_id, COUNT(*) AS n_shingles,

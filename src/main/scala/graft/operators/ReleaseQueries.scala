@@ -54,8 +54,7 @@ object ReleaseQueries {
     * table one tiny task; at 100 TB set buckets ∝ corpus/target-task
     * -bytes (e.g. ~400k buckets caps a within-bucket cumsum task near
     * 256 MB) — the offset table is still offset-window-cheap at ~10^5
-    * rows, while a FIXED 256 would put ~400 GB in one cumsum task
-    * (VERDICT r12 #4). */
+    * rows, while a FIXED 256 would put ~400 GB in one cumsum task. */
   private[graft] def nBuckets(s: SparkSession): Long = {
     val n = s.conf.get("spark.graft.prefixBuckets", "256").toLong
     require(n > 0 && (n & (n - 1)) == 0 && n <= (1L << 52),
@@ -148,11 +147,11 @@ object ReleaseQueries {
     // joined frame's checkpoint job (min-max needs no global sort — the
     // reason it beats rank normalization at 100 TB), bins are
     // fixed-width (map-side).
-    // PARITY (ADVICE r12): the whole output is the ROUND-FREE integer
+    // PARITY: the whole output is the ROUND-FREE integer
     // micro tier — bin = ens_micro div 100000, per-bin means as
     // integer division of exact micro sums, disagreement compared on
-    // raw IEEE doubles. The earlier 6dp-ROUND path binned per-doc
-    // rounded signals, and ROUND(x, 6) genuinely half-ties
+    // raw IEEE doubles. A 6dp-ROUND path would bin per-doc rounded
+    // signals, and ROUND(x, 6) genuinely half-ties
     // cross-engine on exact 7-decimal values (q34's quality — see
     // ensembleScored's note): one tied extremum shifts every
     // normalized signal and can flip a doc's bin as the corpus grows.
@@ -340,7 +339,7 @@ object ReleaseQueries {
       cardAppendOracleSql) { (s, dir) =>
       val idx = graft.pipeline.CardIndex.prepared(s, dir)
       val bf = cardFeatures(cardBatch(s, dir)).checkpointed()
-      // Partition-pruned probe (VERDICT r14 #1): the index is bucketed
+      // Partition-pruned probe: the index is bucketed
       // by sig hash, so the one corpus-sized read narrows to the
       // buckets the batch's own hashes touch — directory-level pruning
       // the FileScan shows as a partition filter.
@@ -366,14 +365,14 @@ object ReleaseQueries {
     // i.e. the two-micro-batch composition must land on the SAME card
     // as the one-shot update, which holds because the delta math is
     // exact for ANY base/batch split (the ReleaseSpec q133 law applied
-    // inductively). SCALE (VERDICT r14 #1): each micro-batch pays
+    // inductively). SCALE: each micro-batch pays
     // batch-keyed compute plus a broadcast-probed scan and rewrite of
     // ONLY the sigstats hash buckets its own sigs touch — the
     // SigstatsStore manifest layout re-references untouched buckets'
     // files in place (the merge-on-read/LSM shape), so per-batch index
     // I/O is touched/NumBuckets of the corpus instead of the full
-    // previous version, which is what flattened the r14 adversarial
-    // backlog tail (2.4 → 6.3 s/batch under the old full-rescan).
+    // previous version, which is what flattens the adversarial
+    // backlog tail (2.4 → 6.3 s/batch under a full rescan).
     q("q134_stream_card_maintain",
       "T6+X4+: streaming card maintenance — foreachBatch applies the exact delta AND writes the artifacts back (stream ≡ batch)",
       cardAppendOracleSql) { (s, dir) =>
@@ -384,7 +383,7 @@ object ReleaseQueries {
         .presented("source", "lang")
     },
 
-    // ----- X4+ GOVERNANCE (VERDICT r12 #3): CardIndex takedown — the
+    // ----- X4+ GOVERNANCE: CardIndex takedown — the
     // fourth persisted artifact class joins the q122/q125 purge
     // discipline, so every artifact under pipeline/ is now named in
     // exactly one takedown path (DedupIndex + VectorIndex codes →
@@ -529,15 +528,7 @@ object ReleaseQueries {
           .as("n_langid_flag"))
       .filter(col("n_docs") > 0) // a fully-erased group leaves the card
       .checkpointed()
-    val tot = merged.agg(sum(col("n_docs")).as("nd"))
-    val card = merged.crossJoin(broadcast(tot))
-      .select(col("source"), col("lang"), col("n_docs"),
-        round(col("n_docs").cast("double") / col("nd"), 6).as("share_docs"),
-        col("sum_chars").cast("long").as("sum_chars"),
-        col("sum_tokens").cast("long").as("sum_tokens"),
-        round(col("sum_chars").cast("double") / col("n_docs"), 6)
-          .as("mean_chars"),
-        col("n_dup_docs"), col("n_langid_flag"))
+    val card = cardProjection(merged, merged.agg(sum(col("n_docs")).as("nd")))
     // Updated sigstats: decrement by the broadcast removal counts, drop
     // zeroed rows, repair affected survivors' holder group.
     val sig = S.join(broadcast(rsH), Seq("sig"), "left")
@@ -557,13 +548,13 @@ object ReleaseQueries {
     * uses 2, ReleaseSpec re-drains at 3 to pin composition across a
     * different split). Returns (scratch root, final version) — the
     * spec asserts the final version EQUALS the file count, i.e. every
-    * forced micro-batch actually committed (ADVICE r12: the earlier
-    * test was vacuously green if AvailableNow coalesced to one batch).
-    * Version RETENTION (VERDICT r12 #5): each micro-batch writes a
+    * forced micro-batch actually committed (without it the test would
+    * be vacuously green if AvailableNow coalesced to one batch).
+    * Version RETENTION: each micro-batch writes a
     * full versioned working copy of sigstats+card; only vN and vN−1
     * stay live — vN−2 is deleted the moment vN commits, so a real
     * backlog holds ≤2 corpus-sized copies instead of corpus × N.
-    * RECOVERY (ADVICE r13): the version is derived from the
+    * RECOVERY: the version is derived from the
     * micro-batch id, NOT an in-memory counter — batch B reads v{B} and
     * overwrite-writes v{B+1}, so when the process dies mid-write of
     * v{B+1} the checkpoint's replay of batch B finds its true base
@@ -572,16 +563,15 @@ object ReleaseQueries {
     * the half-written v{B+1} safe to redo. An in-memory counter would
     * restart at 0 and read a purged version; the batch-id keying is
     * what makes the replay claim real.
-    * BUCKETED I/O (VERDICT r14 #1): sigstats lives in the
+    * BUCKETED I/O: sigstats lives in the
     * [[graft.pipeline.SigstatsStore]] manifest layout — each
     * micro-batch reads ONLY the hash buckets its own sigs touch and
     * writes back ONLY those buckets; untouched buckets' files are
     * re-referenced by the new version's manifest without being read or
-    * rewritten (ReleaseSpec pins file-identity survival). The old
-    * layout re-scanned and rewrote the FULL corpus-sized sigstats
-    * every micro-batch, which is exactly the adversarial-backlog tail
-    * ramp the r14 probe measured (2.4 → 6.3 s/batch); per-batch index
-    * I/O is now touched/NumBuckets of the corpus. v0 references the
+    * rewritten (ReleaseSpec pins file-identity survival). Re-scanning
+    * and rewriting the FULL corpus-sized sigstats every micro-batch
+    * ramps the adversarial-backlog tail (measured 2.4 → 6.3 s/batch);
+    * per-batch index I/O is touched/NumBuckets of the corpus. v0 references the
     * published index's bucket files in place — seeding copies only the
     * card (card-sized). */
   private[graft] def cardMaintainDrain(s: SparkSession, dir: String,
@@ -715,15 +705,7 @@ object ReleaseQueries {
         (coalesce(col("n_langid_flag"), lit(0L)) +
           coalesce(col("b_flags"), lit(0L))).as("n_langid_flag"))
       .checkpointed()
-    val tot = merged.agg(sum(col("n_docs")).as("nd"))
-    val card = merged.crossJoin(broadcast(tot))
-      .select(col("source"), col("lang"), col("n_docs"),
-        round(col("n_docs").cast("double") / col("nd"), 6).as("share_docs"),
-        col("sum_chars").cast("long").as("sum_chars"),
-        col("sum_tokens").cast("long").as("sum_tokens"),
-        round(col("sum_chars").cast("double") / col("n_docs"), 6)
-          .as("mean_chars"),
-        col("n_dup_docs"), col("n_langid_flag"))
+    val card = cardProjection(merged, merged.agg(sum(col("n_docs")).as("nd")))
     // Updated sigstats: existing rows merged with the broadcast delta
     // (one map-side scan of S), new hashes appended by a tiny union;
     // holder columns keep the original owner, or adopt the batch's
@@ -819,7 +801,14 @@ object ReleaseQueries {
         sum(col("n_toks")).as("sum_tokens"),
         sum(when(col("nsig") > 1, 1L).otherwise(0L)).as("n_dup_docs"),
         sum(when(col("pred") =!= col("lang"), 1L).otherwise(0L)).as("n_langid_flag"))
-    val tot = f.agg(count(lit(1)).as("nd"))
+    cardProjection(a, f.agg(count(lit(1)).as("nd")))
+  }
+
+  /** The card's final projection over per-group sums `a` and the one-row
+    * total `tot(nd)`, the engine side of [[dataCardSelectSql]]: shares
+    * and means recompute from the exact integer sums, so the full and
+    * incremental cards land on bit-identical doubles. */
+  private def cardProjection(a: DataFrame, tot: DataFrame): DataFrame =
     a.crossJoin(broadcast(tot))
       .select(col("source"), col("lang"), col("n_docs"),
         round(col("n_docs").cast("double") / col("nd"), 6).as("share_docs"),
@@ -827,7 +816,6 @@ object ReleaseQueries {
         col("sum_tokens").cast("long").as("sum_tokens"),
         round(col("sum_chars").cast("double") / col("n_docs"), 6).as("mean_chars"),
         col("n_dup_docs"), col("n_langid_flag"))
-  }
 
   /** q129's full card over a `(doc_id, source, lang, n_chars, text)`
     * frame — the from-scratch form the spec compares q133 against. */
@@ -843,9 +831,8 @@ object ReleaseQueries {
     * lang-ID flag counts. The shifts are CORPUS-DERIVED so the three id
     * ranges — base [0, mx), b1 [2mx, 3mx), b2 [4mx, 5mx) — are disjoint
     * at ANY corpus, including the 10× probe replicas whose ids reach
-    * ~9·Stride (ADVICE r12 flagged the fixed +110000/+120000 pair;
-    * the fixed +200000/+400000 replacement still collided on probe
-    * corpora). The transform keys (%5/%15/%20/%25) use the BASE id, so
+    * ~9·Stride (fixed +110000/+120000 or +200000/+400000 shifts
+    * collide on probe corpora). The transform keys (%5/%15/%20/%25) use the BASE id, so
     * batch TEXTS — and therefore the q133/q134 cards — are unchanged
     * by the shift rule; only q135's %37 removal membership reads the
     * shifted ids, mirrored exactly in the oracle. */
@@ -1054,10 +1041,9 @@ object ReleaseQueries {
     * micro path therefore never decimal-rounds ANYWHERE: raw signals
     * (exact-decimal casts and IEEE divisions — bit-identical doubles
     * in both engines), raw min-max, raw quotients, FLOOR of identical
-    * doubles, and raw-double comparisons — all deterministic. Round
-    * 12 applied this only to ens_micro (q131's per-doc output);
-    * ADVICE r12 extended it to q128's bins, means, and spread, whose
-    * rounded tier this replaces. */
+    * doubles, and raw-double comparisons — all deterministic. This
+    * covers ens_micro (q131's per-doc output) and q128's bins, means
+    * and spread alike. */
   private[graft] def ensembleScored(s: SparkSession, dir: String): DataFrame = {
     val (j, st) = signalBounds(ensembleJoined(s, dir))
     def v(name: String) = lit(st(name)).cast("double")

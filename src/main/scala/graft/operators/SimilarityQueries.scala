@@ -40,7 +40,7 @@ object SimilarityQueries {
 
   /** Embeddings with the float array cast to double (F14) once, up front.
     *
-    * Deliberately NOT `Tables.spread` (r15 A/B): the one-file scan does
+    * Deliberately NOT `Tables.spread` (rejected by A/B): the one-file scan does
     * start single-task, and isolated cold runs improve 10-35% when fanned
     * out — but in-suite (warm JIT, min-of-passes) the fan-out exchange
     * plus 32-task fixed overhead through the checkpointed encode chains
@@ -57,15 +57,15 @@ object SimilarityQueries {
   /** The CURVE queries' checkpointed base (q126/q136/q137 only): emb
     * fanned out to defaultParallelism before the eager checkpoint, so
     * the 50-70 downstream single-task stages (two 256-codebook encodes,
-    * residual/ADC chains, Lloyd rounds — profiled r16: q136 ran 60
+    * residual/ADC chains, Lloyd rounds — profiled: q136 ran 60
     * sequential n=1 stages, taskRun ≈ wall ≈ 9-11 s on one core)
     * inherit 32-way parallelism from the checkpoint blocks. This is
-    * deliberately NOT the tier-wide `Tables.spread` the r15 A/B
+    * deliberately NOT the tier-wide `Tables.spread` the A/B above
     * rejected: that fan-out taxed 22 similarity queries' small warm
     * frames with an exchange each (+4.8 s family); here the exchange
     * is paid only inside the three queries whose chains are seconds-
     * scale even warm. Results are partitioning-independent (decimal-
-    * exact aggregates, totally-ordered rankings — the r15 argument). */
+    * exact aggregates, totally-ordered rankings). */
   private[graft] def embSpread(s: SparkSession, dir: String): DataFrame =
     emb(s, dir)
       .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
@@ -235,16 +235,13 @@ object SimilarityQueries {
       col("vec_id").as("id_b"), col("ev").as("bv"),
       explode(sequence(lit(0), col("g") - 1)).as("ga"),
       pmod(col("vec_id"), col("g")).cast("int").as("gb"))
-    a.join(b, Seq("cell_id", "ga", "gb"))
+    val pairs = a.join(b, Seq("cell_id", "ga", "gb"))
       .filter(col("id_a") < col("id_b"))
       .withColumn("sim", VectorOps.cosine6(col("av"), col("bv")))
       .filter(col("sim") >= NdThresh)
-      .groupBy(col("id_b"), col("cell_id"))
-      .agg(CollectTopK.topk(col("sim"), col("id_a"), 1).as("top"))
-      .select(col("id_b").as("drop_id"),
-        element_at(col("top"), 1).getField("vec_id").as("keep_id"),
-        col("cell_id"),
-        element_at(col("top"), 1).getField("sim").as("sim"))
+    CollectTopK.ranked(pairs.groupBy(col("id_b"), col("cell_id")), col("sim"), col("id_a"), 1,
+        "keep_id", "sim")
+      .select(col("id_b").as("drop_id"), col("keep_id"), col("cell_id"), col("sim"))
       .orderBy("drop_id") // row-per-dropped-doc: parallel range sort
   }
 
@@ -820,15 +817,27 @@ object SimilarityQueries {
     base.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("query_id"), col("ev").as("qv"))
 
+  /** Brute-force kNN: every `corpus` row scored against every row of
+    * the broadcast `queries` set, then each `key` group's k best `id`s as
+    * ranked rows `(key, id, scoreAs, rn)` ([[CollectTopK.ranked]]). The
+    * heaps reduce map-side, so the one exchange carries Q·P·k rows, never
+    * the N·Q score matrix a ranking window would move. `smallest` ranks a
+    * distance; `excludeSelf` drops the `id = key` pairs before scoring. */
+  private def knn(corpus: DataFrame, queries: DataFrame, key: String, id: String,
+      score: Column, scoreAs: String, k: Int, smallest: Boolean = false,
+      excludeSelf: Boolean = false): DataFrame = {
+    val pairs = corpus.crossJoin(broadcast(queries))
+    val scored = (if (excludeSelf) pairs.filter(col(id) =!= col(key)) else pairs)
+      .withColumn(scoreAs, score)
+    CollectTopK.ranked(scored.groupBy(col(key)), col(scoreAs), col(id), k, id, scoreAs, smallest)
+  }
+
   /** Each query's exact L2 top-IvfK `(query_id, vec_id)`, the ground
-    * truth of the recall audits: CollectTopK heaps over the negated
-    * distance keep the oracle's (d ASC, vec_id ASC) order. */
+    * truth of the recall audits, in the oracle's (d ASC, vec_id ASC)
+    * order. */
   private def exactTopK(base: DataFrame, qs: DataFrame): DataFrame =
-    base.crossJoin(broadcast(qs))
-      .withColumn("xd", round(VectorOps.l2(col("ev"), col("qv")), 6))
-      .groupBy(col("query_id"))
-      .agg(CollectTopK.topk(-col("xd"), col("vec_id"), IvfK).as("tk"))
-      .select(col("query_id"), explode(col("tk.vec_id")).as("vec_id"))
+    knn(base, qs, "query_id", "vec_id", round(VectorOps.l2(col("ev"), col("qv")), 6),
+      "xd", IvfK, smallest = true).select("query_id", "vec_id")
 
   /** ADC candidates `(query_id, vec_id, ad, extras…)` of the probed
     * cells, shared by q113/q121's search and the curves. `probes` is
@@ -865,14 +874,10 @@ object SimilarityQueries {
   }
 
   /** Each query's IvfProbes nearest cells `(query_id, cell_id)` (q42,
-    * q113, q121): CollectTopK over the NEGATED distance keeps the
-    * oracle's (d ASC, cell_id ASC) ranking. */
+    * q113, q121), in the oracle's (d ASC, cell_id ASC) ranking. */
   private def probedCells(qs: DataFrame, cents: DataFrame): DataFrame =
-    qs.crossJoin(broadcast(cents))
-      .withColumn("negd", -round(VectorOps.l2(col("qv"), col("cv")), 6))
-      .groupBy(col("query_id"))
-      .agg(CollectTopK.topk(col("negd"), col("cell_id"), IvfProbes).as("tk"))
-      .select(col("query_id"), explode(col("tk.vec_id")).as("cell_id"))
+    knn(qs, cents, "query_id", "cell_id", round(VectorOps.l2(col("qv"), col("cv")), 6),
+      "d", IvfProbes, smallest = true).select("query_id", "cell_id")
 
   /** q113/q121's search over the index encoded against `cents` (seed
     * for q113, Lloyd-trained for q121): each query probes its
@@ -882,11 +887,8 @@ object SimilarityQueries {
   private def ivfpqSearch(base: DataFrame, cents: DataFrame): DataFrame = {
     val idx = ivfpqIndex(ivfpqSub(base, cents).checkpointed())
     val qs = querySet(base)
-    val sel = adcCandidates(probedCells(qs, cents), qs, cents, idx).groupBy(col("query_id"))
-      .agg(CollectTopK.topk(-col("ad"), col("vec_id"), IvfK).as("tk"))
-      .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "t")))
-      .select(col("query_id"), (col("pos") + 1).cast("long").as("rn"),
-        col("t.vec_id").as("vec_id"), (-col("t.sim")).as("ad"))
+    val sel = CollectTopK.ranked(adcCandidates(probedCells(qs, cents), qs, cents, idx)
+      .groupBy(col("query_id")), col("ad"), col("vec_id"), IvfK, "vec_id", "ad", smallest = true)
     val hit = sel.select("query_id", "vec_id")
       .join(exactTopK(base, qs), Seq("query_id", "vec_id"))
       .groupBy(col("query_id")).agg(count(lit(1)).as("n_overlap"))
@@ -1032,15 +1034,8 @@ object SimilarityQueries {
          |  FROM scored)
          |WHERE rn <= $TopK ORDER BY query_id, rn""".stripMargin) { (s, dir) =>
       val base = emb(s, dir)
-      val queries = base.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("query_id"), col("ev").as("qv"))
-      val scored = base.crossJoin(broadcast(queries))
-        .withColumn("sim", VectorOps.cosine6(col("ev"), col("qv")))
-      scored.groupBy(col("query_id"))
-        .agg(graft.plans.CollectTopK.topk(col("sim"), col("vec_id"), TopK).as("tk"))
-        .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "t")))
-        .select(col("query_id"), col("t.vec_id").as("vec_id"),
-          col("t.sim").as("sim"), (col("pos") + 1).cast("long").as("rn"))
+      knn(base, querySet(base), "query_id", "vec_id",
+          VectorOps.cosine6(col("ev"), col("qv")), "sim", TopK)
         .presented("query_id", "rn")
     },
 
@@ -1130,11 +1125,8 @@ object SimilarityQueries {
         .join(base, "vec_id")
         .join(broadcast(queries), "query_id")
         .withColumn("sim", VectorOps.cosine6(col("ev"), col("qv")))
-      scored.groupBy(col("query_id"))
-        .agg(CollectTopK.topk(col("sim"), col("vec_id"), IvfK).as("tk"))
-        .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "t")))
-        .select(col("query_id"), col("t.vec_id").as("vec_id"),
-          col("t.sim").as("sim"), (col("pos") + 1).cast("long").as("rn"))
+      CollectTopK.ranked(scored.groupBy(col("query_id")), col("sim"), col("vec_id"), IvfK,
+          "vec_id", "sim")
         .presented("query_id", "rn")
     },
 
@@ -1186,23 +1178,21 @@ object SimilarityQueries {
         .withColumn("bm", signBucket(col("ev"), MpBits))
       val queries = base.filter(col("vec_id") < AnnQueries)
         .select(col("vec_id").as("query_id"), col("ev").as("qv"), col("b1"), col("bm"))
-      val exact = base.crossJoin(broadcast(queries.select("query_id", "qv")))
-        .withColumn("sim", VectorOps.cosine6(col("ev"), col("qv")))
-        .groupBy(col("query_id"))
-        .agg(graft.plans.CollectTopK.topk(col("sim"), col("vec_id"), AnnK).as("tk"))
-        .select(col("query_id"), explode(col("tk.vec_id")).as("vec_id"))
+      val exact = knn(base, queries.select("query_id", "qv"), "query_id", "vec_id",
+          VectorOps.cosine6(col("ev"), col("qv")), "sim", AnnK)
+        .select("query_id", "vec_id")
       // One aggregate per flavor produces BOTH the candidate budget and
-      // the top-k (CollectTopK partial-aggregates map-side as ever).
+      // the top-k; the budget is read off each query's first-ranked row.
       def measure(scored: DataFrame, pfx: String): DataFrame = {
-        val agg = scored.groupBy(col("query_id"))
-          .agg(count(lit(1)).as(s"n_cand_$pfx"),
-            graft.plans.CollectTopK.topk(col("sim"), col("vec_id"), AnnK).as("tk"))
+        val top = CollectTopK.ranked(scored.groupBy(col("query_id")), col("sim"), col("vec_id"),
+          AnnK, "vec_id", "sim", aggs = Seq(count(lit(1)).as(s"n_cand_$pfx")))
         val hits = exact
-          .join(agg.select(col("query_id"), explode(col("tk.vec_id")).as("vec_id"))
+          .join(top.select(col("query_id"), col("vec_id"))
             .withColumn("hit", lit(1)), Seq("query_id", "vec_id"), "left_outer")
           .groupBy(col("query_id"))
           .agg(count(col("hit")).as(s"n_hits_$pfx"))
-        agg.select(col("query_id"), col(s"n_cand_$pfx")).join(hits, "query_id")
+        top.filter(col("rn") === 1).select(col("query_id"), col(s"n_cand_$pfx"))
+          .join(hits, "query_id")
           .withColumn(s"recall_$pfx", col(s"n_hits_$pfx").cast("double") / AnnK)
       }
       val single = measure(base.join(broadcast(queries.select(
@@ -1274,13 +1264,8 @@ object SimilarityQueries {
         .select("doc_id", "embedding")
       val queries = embedded.filter(col("doc_id") < 5)
         .select(col("doc_id").as("query_id"), col("embedding").as("qv"))
-      val scored = embedded.crossJoin(broadcast(queries))
-        .withColumn("sim", VectorOps.cosine6(col("embedding"), col("qv")))
-      scored.groupBy(col("query_id"))
-        .agg(graft.plans.CollectTopK.topk(col("sim"), col("doc_id"), 3).as("tk"))
-        .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "t")))
-        .select(col("query_id"), col("t.vec_id").as("doc_id"),
-          col("t.sim").as("sim"), (col("pos") + 1).cast("long").as("rn"))
+      knn(embedded, queries, "query_id", "doc_id",
+          VectorOps.cosine6(col("embedding"), col("qv")), "sim", 3)
         .presented("query_id", "rn")
     },
 
@@ -1458,11 +1443,10 @@ object SimilarityQueries {
       val cand = base.join(anchors, "bucket")
         .filter(col("vec_id") =!= col("anchor_id"))
         .withColumn("neg_sim", VectorOps.cosine6(col("av"), col("ev")))
-      cand.groupBy(col("anchor_id"))
-        .agg(graft.plans.CollectTopK.topk(col("neg_sim"), col("vec_id"), 1).as("tk"))
-        .select(col("anchor_id"), explode(col("tk")).as("t"))
+      CollectTopK.ranked(cand.groupBy(col("anchor_id")), col("neg_sim"), col("vec_id"), 1,
+          "neg_id", "neg_sim")
         .select(col("anchor_id"), (col("anchor_id") + 40000).as("pos_id"),
-          col("t.vec_id").as("neg_id"), col("t.sim").as("neg_sim"))
+          col("neg_id"), col("neg_sim"))
         .presented("anchor_id")
     },
 
@@ -1564,9 +1548,9 @@ object SimilarityQueries {
       val adc = assign.join(broadcast(dt), Seq("m", "code"))
         .groupBy(col("query_id"), col("vec_id"))
         .agg(round(sqrt(Exact.dsum(col("d2"))), 6).as("ad"))
-      val topa = adc.groupBy(col("query_id"))
-        .agg(CollectTopK.topk(-col("ad"), col("vec_id"), IvfK).as("tk"))
-        .select(col("query_id"), explode(col("tk.vec_id")).as("vec_id"))
+      val topa = CollectTopK.ranked(adc.groupBy(col("query_id")), col("ad"), col("vec_id"), IvfK,
+          "vec_id", "ad", smallest = true)
+        .select("query_id", "vec_id")
       val hit = exactTopK(base, qs).join(topa, Seq("query_id", "vec_id"))
         .groupBy(col("query_id")).agg(count(lit(1)).as("n_overlap"))
       qs.select(col("query_id")).join(hit, Seq("query_id"), "left_outer")
@@ -1603,18 +1587,10 @@ object SimilarityQueries {
          |SELECT query_id, CAST(COUNT(*) AS BIGINT) AS k,
          |       string_agg(line, chr(10) ORDER BY rn) AS context
          |FROM lines GROUP BY query_id ORDER BY query_id""".stripMargin) { (s, dir) =>
-      import graft.plans.CollectTopK
       val base = emb(s, dir)
-      val qs = base.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("query_id"), col("ev").as("qv"))
-      val topk = base.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("sim", VectorOps.cosine6(col("ev"), col("qv")))
-        .groupBy(col("query_id"))
-        .agg(CollectTopK.topk(col("sim"), col("vec_id"), 3).as("tk"))
-        .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "t")))
-        .select(col("query_id"), (col("pos") + 1).cast("long").as("rn"),
-          col("t.vec_id").as("doc_id"))
+      val topk = knn(base, querySet(base), "query_id", "vec_id",
+          VectorOps.cosine6(col("ev"), col("qv")), "sim", 3, excludeSelf = true)
+        .select(col("query_id"), col("rn"), col("vec_id").as("doc_id"))
       val docsT = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
       topk.join(docsT, "doc_id")
         .select(col("query_id"), col("rn"),
@@ -1823,13 +1799,9 @@ object SimilarityQueries {
       // Stage one — the only corpus-wide pass: top-M relevance per
       // query through the map-side k-heap aggregate (0-shuffle-MB
       // candidate generation, as in q26/q91).
-      val cand = base.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("rel", VectorOps.cosine6(col("ev"), col("qv")))
-        .groupBy(col("query_id"))
-        .agg(CollectTopK.topk(col("rel"), col("vec_id"), MmrM).as("tk"))
-        .select(col("query_id"), explode(col("tk")).as("t"))
-        .select(col("query_id"), col("t.vec_id").as("doc_id"), col("t.sim").as("rel"))
+      val cand = knn(base, qs, "query_id", "vec_id",
+          VectorOps.cosine6(col("ev"), col("qv")), "rel", MmrM, excludeSelf = true)
+        .select(col("query_id"), col("vec_id").as("doc_id"), col("rel"))
         .checkpointed() // read every greedy step + two broadcasts below
       // Candidate vectors ride a broadcast semi into the embeddings
       // scan (Q·M ids); the Q·M² pair-cosine table is built once —

@@ -22,10 +22,10 @@ object TextQueries {
     Tables.load(s, dir, "documents")
 
   /** docs() + round-robin fan-out, for the map-heavy per-doc scorers
-    * (q33/q34/q36). The r8 driver gate ran these at 4-7 s under host
-    * contention (committed record: sub-second) — a serialized one-task
-    * stage amplifies contention by its full slowdown factor, while a
-    * spread stage amortizes it across cores. The r9 contended A/B
+    * (q33/q34/q36). Under host contention these ran at 4-7 s against a
+    * sub-second quiet record — a serialized one-task stage amplifies
+    * contention by its full slowdown factor, while a spread stage
+    * amortizes it across cores. A contended A/B
     * (splitmix noise threads, one JVM, alternating variants) measured:
     * q33 spread wins in every regime (0.33 vs 0.52 s quiet); q34/q36
     * pay ~0.2 s quiet but save 0.5-1.6 s at 4× oversubscription — the
@@ -35,9 +35,6 @@ object TextQueries {
     * starts under-parallel). */
   private def docsSpread(s: SparkSession, dir: String): DataFrame =
     Tables.spread(docs(s, dir))
-
-  /** DuckDB mirror of [[TextOps.tokens]] (canonical copy lives there). */
-  private def tokensSql(text: String): String = TextOps.tokensSql(text)
 
   /** Shared ASCII stopword profiles for the language-ID heuristic.
     * (The corpus is synthetic English-ish word bags under synthetic lang
@@ -57,7 +54,7 @@ object TextQueries {
     * data card). */
   private[operators] def langScoreSql(textExpr: String, l: String): String = {
     val set = Profiles.toMap.apply(l).map(w => s"'$w'").mkString("[", ", ", "]")
-    s"len(list_filter(${tokensSql(textExpr)}, t -> list_contains($set, t)))"
+    s"len(list_filter(${TextOps.tokensSql(textExpr)}, t -> list_contains($set, t)))"
   }
 
   /** Spark mirror of [[langScoreSql]]. */
@@ -298,7 +295,7 @@ object TextQueries {
          |  COUNT(*) AS n_docs,
          |  COUNT(DISTINCT source) AS n_sources,
          |  ${ExactSql.dsum("n_chars")} AS sum_chars,
-         |  ${ExactSql.davg(s"len(${tokensSql("text")})")} AS avg_tokens
+         |  ${ExactSql.davg(s"len(${TextOps.tokensSql("text")})")} AS avg_tokens
          |FROM documents
          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
       val lenBucket = when(col("n_chars") < 64, "0-63")
@@ -345,8 +342,8 @@ object TextQueries {
     // signal a pretraining pipeline thresholds on. The linear combination
     // runs in EXACT decimal arithmetic on the 6dp-rounded ratios (then one
     // cast to double) — a double-precision combo can land on a rounding
-    // half-tie and diverge between engines (same hazard as ADVICE's
-    // format_string note).
+    // half-tie and diverge between engines (the same hazard as a
+    // format_string over doubles).
     q("q34_quality_score",
       "X4: per-doc quality scoring (length/punct/stopword ratios)",
       s"""$qualityScoredSql
@@ -361,7 +358,7 @@ object TextQueries {
     q("q35_token_counts",
       "X4: whitespace vs BPE-ish token counts + per-lang vocabulary",
       {
-        val toks = tokensSql("text")
+        val toks = TextOps.tokensSql("text")
         s"""SELECT d.lang, n_docs, sum_ws_tokens, sum_bpe_tokens, vocab
            |FROM (
            |  SELECT lang, COUNT(*) AS n_docs,
@@ -399,10 +396,10 @@ object TextQueries {
     // Short docs yield exactly one whole-doc chunk. The start grid runs
     // to 1 + S·ceil((n−W)/S) — one window PAST the last full-window
     // start whenever tokens remain, so the final (possibly partial)
-    // chunk always reaches token n. (r10 fix: the original grid
-    // stopped at the last FULL window and silently dropped up to S−1
-    // trailing tokens per doc — unretrievable content in a RAG store;
-    // ChunkSampleSpec's reconstruction law now pins full coverage.)
+    // chunk always reaches token n. (A grid that stops at the last FULL
+    // window silently drops up to S−1 trailing tokens per doc —
+    // unretrievable content in a RAG store; ChunkSampleSpec's
+    // reconstruction law pins full coverage.)
     // The grid never emits a chunk fully contained in its predecessor:
     // the last start is ≤ S past the prior one, which still ends ≥ 1
     // new token. MAP-ONLY at scale: tokenize + explode + slice ride
@@ -411,7 +408,7 @@ object TextQueries {
       "RAG: overlapping token-window chunking with chunk ids (full tail coverage)",
       {
         val (w, s) = (32, 24)
-        val toks = tokensSql("text")
+        val toks = TextOps.tokensSql("text")
         s"""SELECT doc_id, u.cid AS chunk_id,
            |  CAST(len(string_split(u.txt, ' ')) AS BIGINT) AS n_chunk_tokens,
            |  u.txt AS chunk_text
@@ -449,7 +446,7 @@ object TextQueries {
     q("q36_fingerprint_groups",
       "X4/X3: rolling-hash fingerprint; order-sensitivity vs verbatim dups",
       {
-        val toks = tokensSql("text")
+        val toks = TextOps.tokensSql("text")
         s"""WITH u AS (
            |  SELECT doc_id, text FROM documents
            |  UNION ALL
@@ -497,7 +494,7 @@ object TextQueries {
       "X4: BM25 keyword relevance scoring (k1=1.2, b=0.75)",
       {
         val terms = BmTerms.map(t => s"'$t'").mkString(", ")
-        s"""WITH toks AS (SELECT doc_id, unnest(${tokensSql("text")}) AS tok FROM documents),
+        s"""WITH toks AS (SELECT doc_id, unnest(${TextOps.tokensSql("text")}) AS tok FROM documents),
            |  dl AS (SELECT doc_id, COUNT(*) AS dl FROM toks GROUP BY 1),
            |  stats AS (SELECT COUNT(*) AS n_docs, AVG(dl) AS avgdl FROM dl),
            |  tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM toks
@@ -547,7 +544,7 @@ object TextQueries {
     // counts) and rounded to 6dp — the libm-parity recipe.
     q("q69_pmi_bigrams",
       "X4: PMI bigram collocation mining (min-count floor)",
-      s"""WITH ts AS (SELECT doc_id, ${tokensSql("text")} AS ts FROM documents),
+      s"""WITH ts AS (SELECT doc_id, ${TextOps.tokensSql("text")} AS ts FROM documents),
          |  tok AS (SELECT unnest(ts) AS t FROM ts),
          |  uni AS (SELECT t, COUNT(*) AS c FROM tok GROUP BY 1),
          |  ntok AS (SELECT COUNT(*) AS n FROM tok),
@@ -597,7 +594,7 @@ object TextQueries {
     // identical count ratios and rounds to 6dp (the q60/q69 recipe).
     q("q82_tfidf_terms",
       "X4: per-doc top-3 TF-IDF salient terms (integer-deterministic rank)",
-      s"""WITH toks AS (SELECT doc_id, unnest(${tokensSql("text")}) AS tok FROM documents),
+      s"""WITH toks AS (SELECT doc_id, unnest(${TextOps.tokensSql("text")}) AS tok FROM documents),
          |  tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
          |  dfreq AS (SELECT tok, COUNT(*) AS df FROM tf GROUP BY 1),
          |  nd AS (SELECT COUNT(*) AS n_docs FROM documents),
@@ -639,7 +636,7 @@ object TextQueries {
     // heap in the same exchange.
     q("q85_posting_lists",
       "X4: impact-ordered posting lists w/ top-8 static pruning (CollectTopK)",
-      s"""WITH toks AS (SELECT doc_id, unnest(${tokensSql("text")}) AS tok FROM documents),
+      s"""WITH toks AS (SELECT doc_id, unnest(${TextOps.tokensSql("text")}) AS tok FROM documents),
          |  tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
          |  stats AS (SELECT tok, COUNT(*) AS df, CAST(SUM(tf) AS BIGINT) AS total_tf
          |            FROM tf GROUP BY 1),
@@ -660,16 +657,12 @@ object TextQueries {
         .filter(col("tok") =!= "")
       val tf = toks.groupBy(col("tok"), col("doc_id")).agg(count(lit(1)).as("tf"))
       // One exchange keyed by term: the pruned heap and the full-list
-      // stats aggregate together (CollectTopK's best-first order is
+      // stats aggregate together (the heap's best-first order is
       // exactly (tf desc, doc_id asc), matching the oracle's window).
-      tf.groupBy(col("tok"))
-        .agg(count(lit(1)).as("df"), sum(col("tf")).as("total_tf"),
-          CollectTopK.topk(col("tf").cast("double"), col("doc_id"), 8).as("top"))
-        .select(col("tok"), col("df"), col("total_tf"),
-          posexplode(col("top")).as(Seq("pos", "p")))
-        .select(col("tok"), col("df"), col("total_tf"),
-          (col("pos") + 1).cast("long").as("rnk"),
-          col("p.vec_id").as("doc_id"), col("p.sim").cast("long").as("tf"))
+      CollectTopK.ranked(tf.groupBy(col("tok")), col("tf").cast("double"), col("doc_id"), 8,
+          "doc_id", "tf", aggs = Seq(count(lit(1)).as("df"), sum(col("tf")).as("total_tf")))
+        .select(col("tok"), col("df"), col("total_tf"), col("rn").as("rnk"),
+          col("doc_id"), col("tf").cast("long").as("tf"))
         .orderBy("tok", "rnk") // row-per-(term,posting): parallel range sort
     },
 
@@ -686,13 +679,12 @@ object TextQueries {
     // (the q60 idf trick), per-doc sums decimal-exact (Exact.dsum,
     // order-independent), and the tercile cuts are ORDER STATISTICS of
     // those already-rounded doubles — t1 = the ceil(N/3)-th smallest
-    // h_bits, t2 = the ceil(2N/3)-th (ADVICE r9 #5): a cut snapped to
-    // an actual corpus value involves NO interpolation arithmetic at
-    // all, so the boundary comparison is an exact-equality question
-    // both engines answer identically (the previous 6dp-rounded
-    // interpolated percentile still carried a residual half-ulp
-    // boundary risk when the interpolated value straddled a rounding
-    // boundary).
+    // h_bits, t2 = the ceil(2N/3)-th: a cut snapped to an actual
+    // corpus value involves NO interpolation arithmetic at all, so the
+    // boundary comparison is an exact-equality question both engines
+    // answer identically (a 6dp-rounded interpolated percentile keeps a
+    // half-ulp boundary risk when the interpolated value straddles a
+    // rounding boundary).
     // 100 TB plan: ONE bigram explode feeds both model aggregates
     // (counts keyed by bigram and by left-token — map-side combined)
     // and, checkpointed, the scoring join; the model table joins back
@@ -720,8 +712,8 @@ object TextQueries {
       // Scored frame is read twice (tercile aggregate + bucket assign):
       // eager checkpoint, the tercile frame feeds a broadcast build.
       val scored = lmScoredFrame(s, dir).checkpointed()
-      // Tercile cuts SNAPPED to actual h_bits order statistics (ADVICE
-      // r9 #5): t1/t2 are corpus VALUES at ranks ceil(N/3)/ceil(2N/3),
+      // Tercile cuts SNAPPED to actual h_bits order statistics: t1/t2
+      // are corpus VALUES at ranks ceil(N/3)/ceil(2N/3),
       // picked by integer rank arithmetic — no interpolation, so no
       // cross-engine float form exists to disagree (ties under
       // row_number pick a rank arbitrarily, but the VALUE at a rank is
@@ -770,7 +762,7 @@ object TextQueries {
           s"""WITH w_0 AS (
              |  SELECT concat(regexp_replace(tok, '(.)', '\\1 ', 'g'), '_') AS w,
              |         CAST(COUNT(*) AS BIGINT) AS cnt
-             |  FROM (SELECT unnest(${tokensSql("text")}) AS tok FROM documents)
+             |  FROM (SELECT unnest(${TextOps.tokensSql("text")}) AS tok FROM documents)
              |  GROUP BY 1)""".stripMargin)
         for (i <- 1 to BpeMerges) {
           chain.append(",\n").append(bpePairCte(i, s"w_${i - 1}"))
@@ -809,7 +801,7 @@ object TextQueries {
           s"""WITH w_0 AS (
              |  SELECT tok, concat(regexp_replace(tok, '(.)', '\\1 ', 'g'), '_') AS w,
              |         CAST(COUNT(*) AS BIGINT) AS cnt
-             |  FROM (SELECT unnest(${tokensSql("text")}) AS tok FROM documents)
+             |  FROM (SELECT unnest(${TextOps.tokensSql("text")}) AS tok FROM documents)
              |  GROUP BY 1, 2)""".stripMargin)
         for (i <- 1 to BpeMerges) {
           chain.append(",\n").append(bpePairCte(i, s"w_${i - 1}"))
@@ -821,7 +813,7 @@ object TextQueries {
              |        FROM w_$BpeMerges)
              |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
              |       CAST(SUM(units) AS BIGINT) AS n_units
-             |FROM (SELECT doc_id, unnest(${tokensSql("text")}) AS tok FROM documents)
+             |FROM (SELECT doc_id, unnest(${TextOps.tokensSql("text")}) AS tok FROM documents)
              |JOIN seg USING (tok)
              |GROUP BY 1 ORDER BY doc_id""".stripMargin)
         chain.toString
@@ -914,7 +906,7 @@ object TextQueries {
       s"""WITH w_0 AS (
          |  SELECT concat(regexp_replace(tok, '(.)', '\\1 ', 'g'), '_') AS w,
          |         CAST(COUNT(*) AS BIGINT) AS cnt
-         |  FROM (SELECT unnest(${tokensSql("text")}) AS tok FROM documents)
+         |  FROM (SELECT unnest(${TextOps.tokensSql("text")}) AS tok FROM documents)
          |  GROUP BY 1)""".stripMargin)
     for (i <- 1 to BpeMerges) {
       chain.append(",\n").append(bpePairCte(i, s"w_${i - 1}"))
@@ -930,7 +922,7 @@ object TextQueries {
          |b_0 AS (
          |  SELECT DISTINCT tok,
          |         concat(regexp_replace(tok, '(.)', '\\1 ', 'g'), '_') AS w
-         |  FROM (SELECT unnest(${tokensSql("text")}) AS tok FROM batch))""".stripMargin)
+         |  FROM (SELECT unnest(${TextOps.tokensSql("text")}) AS tok FROM batch))""".stripMargin)
     for (i <- 1 to BpeMerges)
       chain.append(",\n")
         .append(bpeApplyCte(i, s"b_${i - 1}", Seq("tok"), out = s"b_$i"))
@@ -940,7 +932,7 @@ object TextQueries {
          |        FROM b_$BpeMerges)
          |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
          |       CAST(SUM(units) AS BIGINT) AS n_units
-         |FROM (SELECT doc_id, unnest(${tokensSql("text")}) AS tok FROM batch)
+         |FROM (SELECT doc_id, unnest(${TextOps.tokensSql("text")}) AS tok FROM batch)
          |JOIN seg USING (tok)
          |GROUP BY 1 ORDER BY doc_id""".stripMargin)
     chain.toString
@@ -984,7 +976,7 @@ object TextQueries {
     * the q128 ensemble reuses the SAME formula text (the decimal combo
     * is half-tie-sensitive; a drifted copy would diverge silently). */
   private[operators] def qualityScoredSql: String = {
-    val toks = tokensSql("text")
+    val toks = TextOps.tokensSql("text")
     val set = Stopwords.map(w => s"'$w'").mkString("[", ", ", "]")
     s"""SELECT doc_id, n_tokens, punct_ratio, digit_ratio, stop_ratio,
        |  CAST(0.4 * (CASE WHEN n_tokens >= 50 THEN CAST(1 AS DECIMAL(8,6))
@@ -1036,7 +1028,7 @@ object TextQueries {
     * q128 ensemble's oracle reuses the SAME model text (formula drift
     * between two hand copies would silently skew one consumer). */
   private[operators] def lmScoredCtes: String = {
-    val toks = tokensSql("text")
+    val toks = TextOps.tokensSql("text")
     s"""toks AS (SELECT doc_id, $toks AS t FROM documents),
        |  bgw AS (SELECT doc_id, b, split_part(b, ' ', 1) AS w1 FROM (
        |            SELECT doc_id,

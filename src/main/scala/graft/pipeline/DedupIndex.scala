@@ -53,13 +53,6 @@ object DedupIndex {
   def build(docs: DataFrame, indexPath: String): Unit =
     signatures(docs).write.mode("overwrite").parquet(indexPath)
 
-  private def bands(sigs: DataFrame): DataFrame =
-    sigs.select(col("doc_id"), col("sig"), explode(array(
-        (0 until 4).map(b => struct(lit(b).as("band_id"),
-          shiftright(col("sig"), b * 15).bitwiseAND(lit(32767L)).as("band_val"))): _*)).as("bv"))
-      .select(col("doc_id"), col("sig"),
-        col("bv.band_id").as("band_id"), col("bv.band_val").as("band_val"))
-
   /** Triage a batch against the index: one row per batch doc with
     * verdict ∈ {exact_dup, near_dup, new} and the match count. The
     * passed `batchSigs` must come from [[signatures]] over the batch. */
@@ -72,8 +65,8 @@ object DedupIndex {
     val exact = batchSigs.select(col("doc_id"), col("content_hash"))
       .join(index.select(col("content_hash")), "content_hash")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("exact_n"))
-    val near = bands(batchSigs)
-      .join(bands(index).select(col("doc_id").as("idx_id"), col("sig").as("isig"),
+    val near = DedupQueries.simhashBands(batchSigs)
+      .join(DedupQueries.simhashBands(index).select(col("doc_id").as("idx_id"), col("sig").as("isig"),
         col("band_id"), col("band_val")), Seq("band_id", "band_val"))
       .filter(bit_count(col("sig").bitwiseXOR(col("isig"))).cast("long") <= HammingThresh)
       .groupBy(col("doc_id")).agg(count_distinct(col("idx_id")).as("near_n"))

@@ -1,11 +1,12 @@
 package graft.plans
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-import org.apache.spark.sql.{Column, GraftSql}
+import org.apache.spark.sql.{Column, DataFrame, GraftSql, RelationalGroupedDataset}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.functions.{col, lit, posexplode, try_element_at}
 import org.apache.spark.sql.types._
 import scala.collection.mutable
 
@@ -99,14 +100,41 @@ case class CollectTopK(
 }
 
 object CollectTopK {
-  val ResultType: DataType = ArrayType(StructType(Seq(
+  private val ResultType: DataType = ArrayType(StructType(Seq(
     StructField("sim", DoubleType), StructField("vec_id", LongType))),
     containsNull = false)
 
-  /** Column API: `collect_topk(score, id, k)` → array<struct<sim,vec_id>>
-    * sorted best-first. */
-  def topk(score: Column, id: Column, k: Int): Column =
+  /** `collect_topk(score, id, k)` → array<struct<sim,vec_id>> sorted
+    * best-first. Only [[ranked]] and [[kth]] read that layout. */
+  private def topk(score: Column, id: Column, k: Int): Column =
     GraftSql.column(
       CollectTopK(GraftSql.expression(score), GraftSql.expression(id), k)
         .toAggregateExpression())
+
+  /** Each group of `g` reduced to its k best `(score, id)` pairs, as
+    * ranked rows `(keys…, aggs…, idAs, scoreAs, rn)`: best-first, ties on
+    * ascending id, `rn` a 1-based long. `smallest` ranks the lowest score
+    * first (a distance): the heap keeps the negated score and each row
+    * carries it with the sign restored. `aggs` are further aggregates
+    * over the same groups, computed in the same aggregate, so they share
+    * its exchange. A group whose scores are all null yields no row. */
+  def ranked(g: RelationalGroupedDataset, score: Column, id: Column, k: Int,
+      idAs: String, scoreAs: String, smallest: Boolean = false,
+      aggs: Seq[Column] = Nil): DataFrame = {
+    def signed(c: Column): Column = if (smallest) -c else c
+    val all = aggs :+ CollectTopK.topk(signed(score), id, k).as("topk_heap")
+    val grouped = g.agg(all.head, all.tail: _*)
+    val keep = grouped.columns.toSeq.filterNot(_ == "topk_heap").map(col)
+    grouped.select(keep :+ posexplode(col("topk_heap")).as(Seq("topk_pos", "topk_pair")): _*)
+      .select(keep ++ Seq(col("topk_pair.vec_id").as(idAs),
+        signed(col("topk_pair.sim")).as(scoreAs),
+        (col("topk_pos") + 1).cast("long").as("rn")): _*)
+  }
+
+  /** The score of each group's k-th best `(score, id)` pair, null when
+    * the group holds fewer than k: an aggregate for [[ranked]]'s `aggs`.
+    * Beside a `ranked` call with the same score, id and k it reads that
+    * call's heap, since Spark plans equal aggregates once. */
+  def kth(score: Column, id: Column, k: Int): Column =
+    try_element_at(CollectTopK.topk(score, id, k), lit(k)).getField("sim")
 }

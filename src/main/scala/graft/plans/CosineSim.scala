@@ -19,9 +19,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * element is null (the zip_with fold's null-padding/poisoning, exactly),
   * or a norm is zero (zero vectors have no direction — `cosine`'s nullif).
   */
-case class CosineSim(left: Expression, right: Expression,
-    zeroMode: String = CosineSim.ZeroNull)
-  extends BinaryExpression {
+case class CosineSim(left: Expression, right: Expression) extends BinaryExpression {
 
   private def isDoubleArray(t: DataType): Boolean = t match {
     case ArrayType(DoubleType, _) => true
@@ -49,10 +47,8 @@ case class CosineSim(left: Expression, right: Expression,
     val xs = a.asInstanceOf[ArrayData]
     val ys = b.asInstanceOf[ArrayData]
     val n = xs.numElements()
-    // Length mismatch / null element → NULL in EVERY mode, matching the
-    // HOF fold this expression replaces: zip_with null-pads the shorter
-    // side and a null poisons the whole fold (null ÷ null is null even
-    // under ANSI, so no mode distinction arises).
+    // Length mismatch / null element → NULL, matching the HOF fold:
+    // zip_with null-pads the shorter side and a null poisons the fold.
     if (n != ys.numElements()) return null
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
@@ -63,15 +59,7 @@ case class CosineSim(left: Expression, right: Expression,
       i += 1
     }
     val denom = math.sqrt(na) * math.sqrt(nb)
-    // zeroMode preserves the semantics of whatever the expression
-    // replaced: the library default is SQL-ish NULL (zero vectors have
-    // no direction); FuseCosine rewrites of a raw Divide carry that
-    // divide's eval-mode behavior instead (ANSI error / legacy NaN).
-    if (denom == 0.0) zeroMode match {
-      case CosineSim.ZeroNan => dot / denom
-      case CosineSim.ZeroAnsi => throw org.apache.spark.sql.GraftSql.divideByZeroError()
-      case _ => null
-    } else dot / denom
+    if (denom == 0.0) null else dot / denom
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -104,14 +92,8 @@ case class CosineSim(left: Expression, right: Expression,
          |  }
          |  if (!${ev.isNull}) {
          |    double $denom = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
-         |    if ($denom == 0.0) {
-         |      ${zeroMode match {
-                   case CosineSim.ZeroNan => s"${ev.value} = $dot / $denom;"
-                   case CosineSim.ZeroAnsi =>
-                     s"throw org.apache.spark.sql.GraftSql.divideByZeroError();"
-                   case _ => s"${ev.isNull} = true;"
-                 }}
-         |    } else { ${ev.value} = $dot / $denom; }
+         |    if ($denom == 0.0) { ${ev.isNull} = true; }
+         |    else { ${ev.value} = $dot / $denom; }
          |  }
          |}
        """.stripMargin
@@ -125,10 +107,6 @@ case class CosineSim(left: Expression, right: Expression,
 }
 
 object CosineSim {
-  val ZeroNull = "null" // zero vector → NULL (library contract)
-  val ZeroNan = "nan"   // legacy divide: 0/0 → NaN
-  val ZeroAnsi = "ansi" // ANSI divide: error on zero denominator
-
   /** Column API. */
   def apply(a: Column, b: Column): Column =
     GraftSql.column(CosineSim(GraftSql.expression(a), GraftSql.expression(b)))
@@ -136,11 +114,11 @@ object CosineSim {
 
 /** SparkSessionExtensions wiring: `spark.sql.extensions=graft.plans.
   * GraftExtensions` (or `.withExtensions(new GraftExtensions)`) exposes
-  * the custom expressions to plain SQL as `cosine_sim(a, b)`. */
+  * the custom expressions to plain SQL as `cosine_sim(a, b)` and plans
+  * the as-of join ([[AsOfJoinStrategy]]). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction(GraftExtensions.cosineSimDescriptor)
-    ext.injectOptimizerRule(_ => FuseCosine)
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
   }
 }
@@ -155,14 +133,11 @@ object GraftExtensions {
     })
 
   /** Idempotent per-session registration for sessions built without the
-    * extensions hook: same FunctionRegistry entry, and the FuseCosine
-    * rewrite via the public experimental-optimizations hook. */
+    * extensions hook: same FunctionRegistry entry, and the as-of join
+    * strategy via the public experimental-strategies hook. */
   def install(spark: SparkSession): Unit = {
     val (ident, info, builder) = cosineSimDescriptor
     GraftSql.registerFunction(spark, ident, info, builder)
-    if (!spark.experimental.extraOptimizations.contains(FuseCosine))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ FuseCosine
     if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ AsOfJoinStrategy

@@ -21,11 +21,6 @@ object GraftSql {
       builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
 
-  /** The ANSI divide-by-zero error, for expressions that must replicate
-    * Divide's ANSI eval-mode semantics. */
-  def divideByZeroError(): ArithmeticException =
-    org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
-
   /** Wrap a custom LogicalPlan as a DataFrame (the private[sql]
     * Dataset.ofRows), for operators graft plans itself (as-of join). */
   def ofRows(spark: SparkSession,

@@ -8,8 +8,9 @@ import scala.jdk.CollectionConverters._
   * copy elsewhere fails here, so the one-site refactors stay done:
   * streams open, trigger and wait only in `streaming/Drain.scala`,
   * helper threads come only from `Overlap.scala`, sessions are built
-  * only in `GraftSession.scala`, and the argmin cell assignment's
-  * (d, cell_id) key lives only in `VectorIndex.assign`. */
+  * only in `GraftSession.scala`, the argmin cell assignment's
+  * (d, cell_id) key lives only in `VectorIndex.assign`, and only
+  * `CollectTopK`'s own row builder reads its heap layout. */
 class SingleSiteSpec extends AnyFunSuite {
 
   private val mainRoot = Paths.get("src/main/scala")
@@ -26,7 +27,8 @@ class SingleSiteSpec extends AnyFunSuite {
     ("scala\\.concurrent\\.(_|Future\\b|\\{[^}]*\\bFuture\\b)|\\bFuture\\s*[({\\[.]",
       "graft/Overlap.scala"),
     ("SparkSession\\.builder", "graft/GraftSession.scala"),
-    ("struct\\(col\\(\"d\"\\), col\\(\"cell_id\"\\)\\)", "graft/pipeline/VectorIndex.scala"))
+    ("struct\\(col\\(\"d\"\\), col\\(\"cell_id\"\\)\\)", "graft/pipeline/VectorIndex.scala"),
+    ("CollectTopK\\.topk\\(", "graft/plans/CollectTopK.scala"))
 
   for ((pattern, owner) <- rules)
     test(s"/$pattern/ appears only in $owner") {
