@@ -397,18 +397,14 @@ object Bench {
     // the CPU reference, both sides of the comparison must use the same
     // sampling discipline — an idle-host sample reads ~75
     // MB/s but a mid-suite sample competes with the suite's writeback
-    // and reads 40-60 on this box). Override via env for a different
-    // fleet host. The 0.4x floor means "sustained under ~20 MB/s", the
-    // shape of a host whose disk another tenant is SATURATING (the 2.4x
-    // slowdown above). Residual, documented: MILD I/O contention
+    // and reads 40-60 on this box). The 0.4x floor means "sustained
+    // under ~20 MB/s", the shape of a host whose disk another tenant is
+    // SATURATING (the 2.4x slowdown above). Residual, documented: MILD I/O contention
     // (disk ~1.5-2x slow, median 20-40) is neither suppressed nor fully
     // corrected by the CPU factor — for that band the record still
     // carries io_mb_s_median + samples for the reader, and the
     // best-of-N-passes protocol (bench_pass) is the primary defense.
-    // Guarded parse: this line runs AFTER the whole suite — a malformed
-    // env value must not cost the run its record.
-    val refIoMbS = sys.env.get("SPARK_GRAFT_REF_IO_MBS")
-      .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(50.0)
+    val refIoMbS = 50.0
     val ioSlow = ioMedian >= 0 && ioMedian < 0.4 * refIoMbS
     val contended = calibSpread > 3.0 || ioSlow
     // A contended record REFUSES to publish a calibrated total rather
@@ -427,11 +423,6 @@ object Bench {
           " MB/s vs ref " + f3(refIoMbS) +
           "): calibrated_total suppressed; read raw total + shuffle_mb only\","
       else ""
-    // Pass provenance: the committed record is the best
-    // of N same-day full passes (host band swings ~20%); the label stamps
-    // which pass this artifact is so the protocol is visible in the
-    // record itself, not just in the commit message.
-    val passLabel = jstr(sys.env.getOrElse("SPARK_GRAFT_PASS_LABEL", "1/1"))
     val calib = s""""host_calibration":{"workload":"splitmix64 mix, 20M iters/thread","ops_per_ms_1t":${opsPerMs(1)},"ops_per_ms_nt":$ntMedian,"ops_per_ms_nt_samples":${ntSorted.mkString("[", ",", "]")},"calibration_spread":${f3(calibSpread)},"io_workload":"32MiB fsync'd write to repo target (same ext4 as testdata)","io_mb_s_samples":${ioSorted.map(f3).mkString("[", ",", "]")},"io_mb_s_median":${f3(ioMedian)},"io_spread":${f3(ioSpread)},"ref_io_mb_s":${f3(refIoMbS)},"io_slow":$ioSlow,"contended":$contended,"ref_ops_per_ms_nt":${refNt.fold("null")(_.toString)},"ref_protocol":"in-suite interleaved median at threads_nt threads (matched protocol)","threads_nt":$threads,"checksum":${calibSink.get()}}"""
     val entryNote = "entry_pipeline_sec = min of 2 passes (both in " +
       "entry_pipeline_passes); pass 1 includes the plan's one-time driver " +
@@ -439,7 +430,7 @@ object Bench {
       "isolated total, stage sum only ~1.3s) — the r10->r11 2.47->4.77 " +
       "drift was this overhead under end-of-suite JVM state + host band, " +
       "the pipeline code being byte-identical between those records"
-    val meta = s""""spark_version":"${spark.version}","bench_pass":"$passLabel","entry_pipeline_passes":${entryPasses.map(f3).mkString("[", ",", "]")},"entry_pipeline_note":"$entryNote","timing_rule":"min of error-free passes (tail re-measured once; both readings in remeasured_passes); shuffle_mb always from first pass; calibrated_total = total x median(nt samples)/ref at threads_nt, suppressed (null) when contended or when threads_nt has no ref",$calibNote$calib"""
+    val meta = s""""spark_version":"${spark.version}","bench_pass":"1/1","entry_pipeline_passes":${entryPasses.map(f3).mkString("[", ",", "]")},"entry_pipeline_note":"$entryNote","timing_rule":"min of error-free passes (tail re-measured once; both readings in remeasured_passes); shuffle_mb always from first pass; calibrated_total = total x median(nt samples)/ref at threads_nt, suppressed (null) when contended or when threads_nt has no ref",$calibNote$calib"""
     val summary = s"""{"metric":"total","value":${f3(total)},"unit":"sec","calibrated_total":$calibratedJson,"contended":$contended,"n_queries":${results.size},"avg_sec_per_query":${f3(avg)},"entry_pipeline_sec":${f3(entrySec)},"spark_version":"${spark.version}","sf":"$sfDir"}"""
     val json = s"""{"metric":"total","value":${f3(total)},"unit":"sec","calibrated_total":$calibratedJson,"contended":$contended,"n_queries":${results.size},"avg_sec_per_query":${f3(avg)},"entry_pipeline_sec":${f3(entrySec)},$meta,"queries":$qs,"shuffle_mb":$shuffles,"codegen_compiles":$compiled,"jobs":$jobs,"errors":$errs,"remeasured_passes":$passes,"sf":"$sfDir"}"""
     // Stdout AND a file: a tail capture can truncate the stdout record

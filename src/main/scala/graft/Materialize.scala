@@ -29,7 +29,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * always eager: it brackets the checkpoint in persist/unpersist so
   * the checkpoint-write job reads cached blocks instead of recomputing
   * the subtree, and the materializing action must run inside that
-  * bracket. Known trade (ADVICE r8 #5): under a reliable config,
+  * bracket. Known trade: under a reliable config,
   * `checkpointed(false)` call sites in iterative loops (the CC rounds)
   * each pay their checkpoint job at call time instead of riding the
   * loop's own convergence action, adding one driver round-trip per

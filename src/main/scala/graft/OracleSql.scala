@@ -22,7 +22,7 @@ package graft
   * verified row-for-row equality empirically. The rewrite anchors on
   * the token BEFORE the CTE name — `WITH` or the `,` separating CTE
   * definitions — and additionally EXCLUDES every span covered by a
-  * named-`WINDOW` clause (ADVICE r14): `WINDOW w1 AS (...), w2 AS
+  * named-`WINDOW` clause: `WINDOW w1 AS (...), w2 AS
   * (...)` uses the same `, name AS (` shape as a CTE list, so the
   * comma anchor alone would corrupt the second and later window
   * definitions (DuckDB rejects MATERIALIZED there). The window spans

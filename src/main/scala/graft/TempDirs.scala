@@ -4,9 +4,8 @@ import java.nio.file.{Files, Path}
 
 /** Per-invocation scratch roots for the streaming-harness and
   * artifact-publishing queries (q49/q53/q54/q71/q94/q118/q120/q122/...),
-  * with the cleanup the raw `Files.createTempDirectory` calls lacked
-  * (ADVICE r11): each label's PREVIOUS root is purged when a fresh one
-  * is requested (bounding in-JVM accumulation to one live root per
+  * with the cleanup raw `Files.createTempDirectory` calls lack: each
+  * label's PREVIOUS root is purged when a fresh one is requested (bounding in-JVM accumulation to one live root per
   * label across warm + measured + remeasure passes), and whatever is
   * still live is purged by a JVM shutdown hook — so repeated
   * bench/verify runs no longer accumulate corpus-sized garbage in

@@ -87,7 +87,7 @@ object AdvancedQueries {
     // must equal the batch daily aggregate computed by DuckDB. This is
     // the reference driver loop (main.py:343-369) with its convergence
     // property actually asserted by the gate.
-    // FLOOR (r9 stage profile): ~1.6 s in-suite = ~0.9 s AvailableNow
+    // FLOOR (stage profile): ~1.6 s in-suite = ~0.9 s AvailableNow
     // harness (query start/stop, offset+commit logs, batch planning)
     // + ~0.7 s genuine work (source scan + state agg ~0.5 s wall, the
     // 31-date-partition merge write ~0.2-0.6 s). The harness share is
@@ -187,7 +187,7 @@ object AdvancedQueries {
     // the batch time-bound join DuckDB computes. Complements q49
     // (stream-batch upsert) and q43 (session windows): with it, every
     // streaming operator family is oracle-checked end to end.
-    // FLOOR (r9 stage profile): ~1.6 s in-suite = ~1.0 s harness +
+    // FLOOR (stage profile): ~1.6 s in-suite = ~1.0 s harness +
     // ~1.3 s stage wall (both sides' scans 0.55 s, the 4-store stateful
     // join 0.73 s) overlapping the harness; per-event cost amortizes
     // (probe: 1.45× wall at 10× events).
@@ -216,7 +216,7 @@ object AdvancedQueries {
     // micro-batch, so the re-delivery lands in a LATER batch and
     // dropDuplicatesWithinWatermark must recognize it from keyed state —
     // the written table must equal the plain distinct source.
-    // FLOOR (r9 stage profile): TWO micro-batch cycles are semantic
+    // FLOOR (stage profile): TWO micro-batch cycles are semantic
     // (the re-delivery MUST arrive after the first batch's state
     // commit, like q94's flush cycles) — ~1.5 s in-suite = 2 × ~0.45 s
     // batch harness + ~0.9 s first-batch scan/state-insert wall.
@@ -402,7 +402,7 @@ object AdvancedQueries {
       // high-precision HLL buffer (~16 KB at rsd 0.01) through partial
       // aggregation — per-KEY sketch churn instead of per-GROUP. Split,
       // the sketch count equals the group count in both phases.
-      // Deliberately NOT spread: the r9 contended A/B (16- and
+      // Deliberately NOT spread: a contended A/B (16- and
       // 128-thread noise, one JVM, alternating variants) measured the
       // added raw-row exchange losing in BOTH regimes (quiet 0.74 s →
       // 1.55 s, oversubscribed 3.5 s → 5.6 s) — the heavy work here is

@@ -36,7 +36,7 @@ object JdbcQueries {
       val cust = Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"), col("c_acctbal").as("acctbal"))
       // DB scoped per sf dir: concurrent sweeps at different scales must
-      // not share state (the round-3 scratch-dir lesson, 57d7833).
+      // not share state.
       val url = JdbcSink.memoryUrl("graft_q80_" +
         java.lang.Integer.toHexString(dir.hashCode).replace('-', 'x'))
       JdbcSink.recreateTable(url, "customers",

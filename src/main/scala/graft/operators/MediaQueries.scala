@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * q39 is pure columnar binary algebra and oracle-checked (the DuckDB
   * mirror computes on the source text, which is byte-identical to the
   * UTF-8 payload for this ASCII corpus). q40 exercises the typed
-  * mapPartitions decode path; since r9 it is hash-checked too — values
+  * mapPartitions decode path and is hash-checked too — values
   * roll up q101's oracled per-asset features, and the batch surface is
   * pinned as a boolean invariant rather than exact runtime sizes.
   */
@@ -176,8 +176,8 @@ object MediaQueries {
     },
 
     // ----- the batched kernel path: typed Dataset boundary →
-    // mapPartitions decode stub → per-kind rollup. Hash-checked since
-    // r9 (VERDICT r8 #6): the VALUE columns roll up the same per-asset
+    // mapPartitions decode stub → per-kind rollup. Hash-checked:
+    // the VALUE columns roll up the same per-asset
     // kernel outputs q101 oracles (micro-unit longs, so the sums are
     // integer-exact and order-independent), and the genuinely non-SQL
     // batch surface ships as an INVARIANT — batches_ok must read true,
@@ -214,8 +214,8 @@ object MediaQueries {
         .presented("kind")
     },
 
-    // ----- perceptual-hash near-dup dedup for the media tier (round-10
-    // lead item): dHash-style 64-bit fingerprints ([[graft.plans
+    // ----- perceptual-hash near-dup dedup for the media tier:
+    // dHash-style 64-bit fingerprints ([[graft.plans
     // .PHash64]], codegen'd byte arithmetic — no UDF), 4×16-bit band
     // buckets for candidates, exact Hamming verify ≤ 3. The corpus
     // plants EXACT payload copies (every 10th asset, id+80000) and
@@ -346,7 +346,7 @@ object MediaQueries {
         .orderBy("media_id", "frame_no")
     },
 
-    // ----- X3 composite (round-11 item #2): CROSS-MODAL dedup manifest
+    // ----- X3 composite: CROSS-MODAL dedup manifest
     // — text near-dup edges (q59's normalization-key blocking) and media
     // perceptual-hash edges (q104's banded pHash) resolved JOINTLY over
     // one id space, the step a real multimodal pipeline runs before

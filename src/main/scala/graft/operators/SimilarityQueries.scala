@@ -159,15 +159,13 @@ object SimilarityQueries {
     sub.filter(col("vec_id") < PqK)
       .select(col("m"), col("vec_id").as("code"), col("sv").as("cv"))
 
-  /** min_by code assignment with the cross-engine (d, code) tie-break;
+  /** Argmin code assignment with the cross-engine (d, code) tie-break;
     * keeps the residual distance d for the q88 output. */
   private def pqAssign(sub: DataFrame, cents: DataFrame): DataFrame =
-    sub.join(broadcast(cents), "m")
-      .withColumn("d", round(VectorOps.l2(col("sv"), col("cv")), 6))
-      .groupBy(col("vec_id"), col("m"))
-      .agg(min_by(struct(col("code"), col("d")),
-        struct(col("d"), col("code"))).as("a"))
-      .select(col("vec_id"), col("m"), col("a.code").as("code"), col("a.d").as("d"))
+    CollectTopK.ranked(sub.join(broadcast(cents), "m")
+        .withColumn("d", round(VectorOps.l2(col("sv"), col("cv")), 6))
+        .groupBy(col("vec_id"), col("m")), col("d"), col("code"), 1, "code", "d", smallest = true)
+      .select("vec_id", "m", "code", "d")
 
   /** Per-task pair-work bound for q99: no task ever evaluates more than
     * ~SemCellCap² candidate pairs, no matter how skewed the cell sizes
@@ -255,7 +253,7 @@ object SimilarityQueries {
     * incremental ≡ bulk per row (IvfPqAppendSpec pins the law).
     *
     * The argmin deliberately does NOT reuse [[VectorIndex.assign]]'s
-    * crossJoin + min_by shape: that shape needs a join-back by vec_id
+    * crossJoin + top-k aggregate shape: that shape needs a join-back by vec_id
     * to recover the vector for the residual, and with corpus-sized both
     * sides that join SHUFFLES THE VECTORS — at 100 TB the raw embedding
     * bytes are the one thing that must never cross the wire. Instead
@@ -307,19 +305,27 @@ object SimilarityQueries {
     IvfPqIndex(cb, ivfpqCodes(sub, cb))
   }
 
-  /** PQ encode of `sub` against the residual codebook: the min_by
+  /** PQ encode of `sub` against the residual codebook: a `min_by`
     * aggregate whose exchange carries only (vec_id, cell_id, m) + a
-    * (code, d) buffer — never a slice.
+    * (code, d) buffer — never a slice. Its struct ordering key is not
+    * fixed-width, so it plans as SortAggregate on both sides of the
+    * exchange (ROADMAP D6).
+    *
+    * The one argmin that is not [[CollectTopK.ranked]]: the k = 1,
+    * smallest-first heap read q136 (256 codes) 2.54 → 2.92 s and
+    * 2.76 → 3.27 s, and q137 1.91 → 1.96 s and 2.08 → 2.23 s (medians
+    * of 3 `graft.Bench` runs per side at sf0.1 on 4 cores, in two
+    * sessions; each q136 median above the min_by side's slowest run).
     *
     * An in-row argmin over a one-row broadcast codebook array (the
     * [[ivfpqSub]] cell-assignment shape) measured 3.6× SLOWER at the
-    * 256-entry codebook (q136 8.1 → 29.0 s, q137 4.1 → 15.2 s
-    * in-suite): the interpreted HOF lambda (boxed per-element structs,
-    * no whole-stage codegen) loses to the codegen'd broadcast-join
-    * probe + L2Dist + min_by aggregate even at 250× the row count
-    * (that aggregate plans as a SortAggregate on both sides of its
-    * exchange, not a hash partial; ROADMAP D6). At 16 entries (cells) the in-row argmin wins by avoiding an
-    * exchange; at 256 (codes) the codegen'd operator pipeline wins. */
+    * 256-entry codebook than this min_by aggregate (q136 8.1 → 29.0 s,
+    * q137 4.1 → 15.2 s in-suite): the interpreted HOF lambda (boxed
+    * per-element structs, no whole-stage codegen) loses to the
+    * codegen'd broadcast-join probe + L2Dist + aggregate even at 250×
+    * the row count. At 16 entries (cells) the in-row argmin wins by
+    * avoiding an exchange; at 256 (codes) the codegen'd operator
+    * pipeline wins. */
   private[graft] def ivfpqCodes(sub: DataFrame, cb: DataFrame): DataFrame =
     sub.join(broadcast(cb), "m")
       .withColumn("d", round(VectorOps.l2(col("sv"), col("cvr")), 6))
@@ -465,11 +471,9 @@ object SimilarityQueries {
     val adc = idx.join(dt16, Seq("cell_id"))
       .select(col("query_id"), col("vec_id"),
         round(sqrt(adSum.cast("double")), 6).as("ad"))
-    val nn = adc.groupBy(col("query_id"))
-      .agg(min_by(struct(col("vec_id"), col("ad")),
-        struct(col("ad"), col("vec_id"))).as("n"))
-      .select(col("query_id").as("vec_id"),
-        col("n.vec_id").as("nn_vec_id"), col("n.ad").as("nn_ad"))
+    val nn = CollectTopK.ranked(adc.groupBy(col("query_id")), col("ad"), col("vec_id"), 1,
+        "nn_vec_id", "nn_ad", smallest = true)
+      .select(col("query_id").as("vec_id"), col("nn_vec_id"), col("nn_ad"))
     barr.join(occ, Seq("cell_id"), "left_outer")
       .na.fill(0L, Seq("cell_n_index"))
       .join(nn, Seq("vec_id"), "left_outer")
@@ -539,7 +543,7 @@ object SimilarityQueries {
        |          FROM ${p}res CROSS JOIN (SELECT unnest(range(0, $PqM)) AS m) m)""".stripMargin
   }
 
-  /** min_by PQ encode of a prefixed `sub` CTE against the `cbCte`
+  /** Argmin PQ encode of a prefixed `sub` CTE against the `cbCte`
     * codebook — same single-text discipline as [[ivfpqSubSqlFrom]]. */
   private def ivfpqCodesSqlFrom(p: String, cbCte: String = "cb"): String =
     s"""${p}codes AS (SELECT vec_id, cell_id, m, code FROM (
@@ -909,18 +913,16 @@ object SimilarityQueries {
       pqK: Int): (DataFrame, DataFrame) = {
     val idx = ivfpqIndex(ivfpqSub(base, cents).checkpointed(), pqK)
     val qs = querySet(base)
-    val crank = qs.crossJoin(broadcast(cents))
-      .withColumn("d", round(VectorOps.l2(col("qv"), col("cv")), 6))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("d"), col("cell_id"))))
-      .select(col("query_id"), col("cell_id"), col("crank"))
+    val crank = knn(qs, cents, "query_id", "cell_id", round(VectorOps.l2(col("qv"), col("cv")), 6),
+        "d", IvfCells, smallest = true)
+      .select(col("query_id"), col("cell_id"), col("rn").as("crank"))
     (qs, adcCandidates(crank, qs, cents, idx))
   }
 
   /** One variant's recall-vs-nprobe curve (the engine side of
     * [[ivfpqCurveSql]]): every nprobe point 1..IvfCells is a slice of
     * [[rankedCandidates]]. The exchanges are the q113 classes (code
-    * rows, tiny broadcast tables) plus one window over
+    * rows, tiny broadcast tables) plus the top-k heaps over
     * candidates×nprobe rows — query-sized, never corpus-shuffling. */
   private def ivfpqNprobeCurve(base: DataFrame, cents: DataFrame,
       topx: DataFrame, variant: String, pqK: Int): DataFrame = {
@@ -932,10 +934,8 @@ object SimilarityQueries {
     // first K, the re-rank column re-orders the WHOLE shortlist by
     // exact distance first — one keyed join against the raw vectors,
     // shortlist-sized, the production `refine` step.
-    val short = cand.withColumn("rn", row_number().over(
-        Window.partitionBy(col("query_id"), col("nprobe"))
-          .orderBy(col("ad"), col("vec_id"))))
-      .filter(col("rn") <= RrShort)
+    val short = CollectTopK.ranked(cand.groupBy(col("query_id"), col("nprobe")), col("ad"),
+        col("vec_id"), RrShort, "vec_id", "ad", smallest = true)
       .checkpointed(false) // two consumers: plain top-k + re-rank
     def recallOf(selected: DataFrame, out: String): DataFrame = selected
       .join(topx.withColumn("hitmark", lit(1)),
@@ -946,11 +946,8 @@ object SimilarityQueries {
     val rr = short.join(base.select(col("vec_id"), col("ev")), "vec_id")
       .join(broadcast(qs), "query_id")
       .withColumn("xd", round(VectorOps.l2(col("ev"), col("qv")), 6))
-      .withColumn("rn2", row_number().over(
-        Window.partitionBy(col("query_id"), col("nprobe"))
-          .orderBy(col("xd"), col("vec_id"))))
-      .filter(col("rn2") <= IvfK)
-    val rrqrec = recallOf(rr.select("query_id", "nprobe", "vec_id"), "recall_rr")
+    val rrqrec = recallOf(CollectTopK.ranked(rr.groupBy(col("query_id"), col("nprobe")),
+      col("xd"), col("vec_id"), IvfK, "vec_id", "xd", smallest = true), "recall_rr")
     qrec.groupBy(col("nprobe"))
       .agg(Exact.davgRound(col("recall"), 6).as("mean_recall"))
       .join(rrqrec.groupBy(col("nprobe"))
@@ -981,7 +978,7 @@ object SimilarityQueries {
   /** q137's body: the Lloyd-trained Pq8K chain with the refine depth
     * swept instead of fixed — candidates sliced per (nprobe, rr_short)
     * over [[rankedCandidates]], the exact distance computed once per
-    * shortlist row at the max depth, every point a re-window. */
+    * shortlist row at the max depth, every point a re-ranked top-k. */
   private def ivfpqRefineCurve(base: DataFrame): DataFrame = {
     val cents = kmTrainedCents(base, KmTrainedUpdates).checkpointed()
     val topx = exactTopK(base, querySet(base)).checkpointed(false)
@@ -989,21 +986,17 @@ object SimilarityQueries {
     val cand = adc.select(col("query_id"), col("vec_id"), col("ad"), col("crank"),
         explode(typedlit(NprobePoints)).as("nprobe"))
       .filter(col("crank") <= col("nprobe"))
-    val short = cand.withColumn("rn", row_number().over(
-        Window.partitionBy(col("query_id"), col("nprobe"))
-          .orderBy(col("ad"), col("vec_id"))))
-      .filter(col("rn") <= RrPoints.max)
+    val short = CollectTopK.ranked(cand.groupBy(col("query_id"), col("nprobe")), col("ad"),
+      col("vec_id"), RrPoints.max, "vec_id", "ad", smallest = true)
     val xd = short.join(base.select(col("vec_id"), col("ev")), "vec_id")
       .join(broadcast(qs), "query_id")
       .withColumn("xd", round(VectorOps.l2(col("ev"), col("qv")), 6))
       .select(col("query_id"), col("nprobe"), col("vec_id"), col("rn"), col("xd"))
-      .checkpointed(false) // every rr point re-windows this one frame
-    val sel = xd.withColumn("rr_short", explode(typedlit(RrPoints)))
-      .filter(col("rn") <= col("rr_short"))
-      .withColumn("rn2", row_number().over(
-        Window.partitionBy(col("query_id"), col("nprobe"), col("rr_short"))
-          .orderBy(col("xd"), col("vec_id"))))
-      .filter(col("rn2") <= IvfK)
+      .checkpointed(false) // every rr point re-ranks this one frame
+    val sel = CollectTopK.ranked(xd.withColumn("rr_short", explode(typedlit(RrPoints)))
+        .filter(col("rn") <= col("rr_short"))
+        .groupBy(col("query_id"), col("nprobe"), col("rr_short")),
+      col("xd"), col("vec_id"), IvfK, "vec_id", "xd", smallest = true)
     sel.join(topx.withColumn("hitmark", lit(1)),
         Seq("query_id", "vec_id"), "left_outer")
       .groupBy(col("query_id"), col("nprobe"), col("rr_short"))
@@ -1296,7 +1289,7 @@ object SimilarityQueries {
 
     // ----- X2 (index training): one k-means Lloyd iteration — the step
     // that turns q42's "first-k stand-in" centroids into trained IVF
-    // cells. Assign = the same min_by argmin aggregate q42 uses (no
+    // cells. Assign = the same argmin aggregate q42 uses (no
     // ranking window, map-side combine). Recompute = per-(cell, dim)
     // means via posexplode + ONE hash aggregate — the classic
     // distributed-k-means shape: everything reduces map-side, the
@@ -1457,12 +1450,12 @@ object SimilarityQueries {
     // centroids — first ids, the k-means stand-in q42/q65 also use),
     // assign every subvector to its nearest code by exact L2. Plan
     // shape: subvectors ride a 4-row explode of the corpus scan, the
-    // 16-row codebook broadcasts, assignment is one min_by aggregate
+    // 16-row codebook broadcasts, assignment is one argmin aggregate
     // keyed (vec_id, m) — no ranking window, no corpus self-join; the
     // residual d is the per-subspace quantization error a PQ recall
     // model consumes. Ties broken by code id in both engines.
     q("q88_pq_encode",
-      "X2: product-quantization encode (M=4 subspaces, K=4 codes, min_by assign)",
+      "X2: product-quantization encode (M=4 subspaces, K=4 codes, argmin assign)",
       {
         val S = Embedder.Dim / PqM
         s"""WITH es AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
@@ -1660,7 +1653,7 @@ object SimilarityQueries {
     // ----- X2+X3 composite: SEMANTIC pruning (the SemDeDup shape) —
     // embedding-space dedup where candidate generation is IVF-CELL
     // blocking instead of sign buckets: every vector argmin-assigns to
-    // its nearest of $SemCells seed centroids (the q42 min_by aggregate
+    // its nearest of $SemCells seed centroids (the q42 argmin aggregate
     // — map-side combine, no ranking window), pairs form only WITHIN a
     // cell (equi-join on cell_id, never all-pairs), and the exact
     // cosine verifies. Each doc matched at tau to a LOWER id is
@@ -1705,7 +1698,7 @@ object SimilarityQueries {
     // The corpus's cell assignments live in VectorIndex's parquet
     // (written by the initial bulk build / prior appends); an append
     // pays only the BATCH's argmin assignment (centroids broadcast,
-    // min_by aggregate) plus one aggregate over the INDEX SCAN for cell
+    // argmin aggregate) plus one aggregate over the INDEX SCAN for cell
     // occupancy — the corpus's vectors are never re-scored. Cost scales
     // with the batch, never the corpus; VectorIndexSpec pins that the
     // plan recomputes exactly one assignment (the batch's) and reads
@@ -1748,11 +1741,11 @@ object SimilarityQueries {
     //    ONCE and checkpointed — each greedy step reads it instead of
     //    re-touching any vector;
     //  - each step: redundancy = max over ≤K selected via a join on
-    //    the pair table, pick = max_by((mmr, −doc_id)) — broadcast-only
+    //    the pair table, pick = the k = 1 top-k on mmr — broadcast-only
     //    joins, never all-pairs, nothing corpus-sized after stage one.
     // Float parity: rel/psim are cosine6 values; mmr rounds the
-    // λ/μ-weighted sum to 6dp (q60 recipe); ties break on doc_id via
-    // the negated-id max_by key ≡ the oracle's ROW_NUMBER order.
+    // λ/μ-weighted sum to 6dp (q60 recipe); ties break on ascending
+    // doc_id ≡ the oracle's ROW_NUMBER order.
     // Oracle: the K-step greedy unrolled as a CTE chain.
     q("q105_mmr_context", {
       "X2: MMR diversity-aware context selection (greedy λ·rel − μ·maxsim, K unrolled)"
@@ -1818,12 +1811,13 @@ object SimilarityQueries {
         .withColumn("psim", VectorOps.cosine6(col("eva"), col("evb")))
         .select("query_id", "ca", "cb", "psim")
         .checkpointed() // read once per greedy step
-      val pickKey = struct(col("mmr"), (-col("doc_id")).as("nid"))
-      var selected = cand.withColumn("mmr", col("rel"))
-        .groupBy(col("query_id"))
-        .agg(max_by(struct(col("doc_id"), col("rel"), col("mmr")), pickKey).as("p"))
-        .select(col("query_id"), lit(1L).as("step"),
-          col("p.doc_id").as("doc_id"), col("p.rel").as("rel"), col("p.mmr").as("mmr"))
+      // One greedy step: each query's (mmr DESC, doc_id ASC) best of
+      // `scored`; rel is read back from cand once, after the last step.
+      def pick(scored: DataFrame, step: Int): DataFrame =
+        CollectTopK.ranked(scored.groupBy(col("query_id")), col("mmr"), col("doc_id"), 1,
+            "doc_id", "mmr")
+          .select(col("query_id"), lit(step.toLong).as("step"), col("doc_id"), col("mmr"))
+      var selected = pick(cand.withColumn("mmr", col("rel")), 1)
       for (k <- 2 to MmrK) {
         val selNow = selected
         val rem = cand.join(selNow.select("query_id", "doc_id"),
@@ -1832,17 +1826,14 @@ object SimilarityQueries {
             broadcast(selNow.select(col("query_id"), col("doc_id").as("cb"))),
             Seq("query_id", "cb"))
           .groupBy(col("query_id"), col("ca")).agg(max(col("psim")).as("mr"))
-        val pick = rem.join(red.withColumnRenamed("ca", "doc_id"),
+        selected = selected.unionAll(pick(rem.join(red.withColumnRenamed("ca", "doc_id"),
             Seq("query_id", "doc_id"))
           .withColumn("mmr",
-            round(lit(MmrLambda) * col("rel") - lit(MmrMu) * col("mr"), 6))
-          .groupBy(col("query_id"))
-          .agg(max_by(struct(col("doc_id"), col("rel"), col("mmr")), pickKey).as("p"))
-          .select(col("query_id"), lit(k.toLong).as("step"),
-            col("p.doc_id").as("doc_id"), col("p.rel").as("rel"), col("p.mmr").as("mmr"))
-        selected = selected.unionAll(pick)
+            round(lit(MmrLambda) * col("rel") - lit(MmrMu) * col("mr"), 6)), k))
       }
-      selected.presented("query_id", "step")
+      selected.join(cand, Seq("query_id", "doc_id"))
+        .select("query_id", "step", "doc_id", "rel", "mmr")
+        .presented("query_id", "step")
     },
 
     // ----- X2 capstone: the PRODUCTION ANN layout —
@@ -1911,7 +1902,7 @@ object SimilarityQueries {
     // quadratic SHUFFLE; here pair volume is in-task CPU, bounded by
     // cell occupancy, which production holds constant by growing cells
     // ∝ corpus — the q99/q113 contract). The final per-query min is a
-    // min_by whose map-side partial leaves one row per (query,
+    // k = 1 top-k whose map-side partial leaves one row per (query,
     // partition). Output per batch vector: home cell, its PqM codes,
     // the cell's persisted occupancy, nearest existing neighbor + ADC
     // distance.

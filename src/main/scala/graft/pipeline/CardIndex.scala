@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *     [[SigstatsStore.bucketOf]] (directory-level `bucket=k`), so an
   *     append's probe partition-prunes to the buckets its own hashes
   *     touch and the streaming maintainer ([[SigstatsStore]]) rewrites
-  *     only touched buckets per micro-batch — VERDICT r14 #1.
+  *     only touched buckets per micro-batch.
   *   - `card(...)`: q129's ~|source x lang|-row aggregate, verbatim.
   *
   * An append then pays its own feature compute plus ONE probe of the

@@ -6,11 +6,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Bucketed, manifest-versioned layout for the card-maintenance
-  * sigstats artifact (VERDICT r14 #1 — the round's one measured scale
-  * flag): q134's streaming card maintenance used to rewrite the FULL
-  * corpus-sized sigstats table every micro-batch, so an N-batch
-  * backfill paid N full-index scans and the adversarial 10× backlog
-  * tail ramped 2.4 → 6.3 s/batch as dup-heavy appends grew the index.
+  * sigstats artifact. q134's streaming card maintenance used to
+  * rewrite the FULL corpus-sized sigstats table every micro-batch, so
+  * an N-batch backfill paid N full-index scans and the adversarial 10×
+  * backlog tail ramped 2.4 → 6.3 s/batch as dup-heavy appends grew the index.
   *
   * This store applies the hash-bucket pattern the engine already
   * proved on [[graft.streaming.StatefulCounter]] (touched-buckets-only
@@ -38,7 +37,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *     the index plus the last batch's touched-bucket pre-images,
   *     strictly less than the previous two-full-copies retention.
   *
-  * Replay safety (the ADVICE r13 contract, preserved): batch B reads
+  * Replay safety: batch B reads
   * manifest/card v{B} and overwrite-writes v{B+1}; retirement at batch
   * B deletes only data unreferenced by manifests v{B} AND v{B+1}, so a
   * crash mid-write of v{B+1} leaves batch B's true base intact and the
@@ -171,12 +170,12 @@ object SigstatsStore {
     val dataDir = s"$root/v$version/data"
     updatedTouched
       .withColumn("bucket", bucketOf(col("sig")))
-      // Cluster by bucket BEFORE the dynamic-partition write (r16,
-      // guide §6): the incoming frame arrives on ~30 upstream
-      // partitions each holding rows of every touched bucket, so the
-      // writer otherwise opens tasks × buckets parquet writers (~900
-      // tiny files per commit, ~0.9 s/task of writer init — the bulk
-      // of the q134 +1.3 s gate-scale constant VERDICT r15 flagged).
+      // Cluster by bucket BEFORE the dynamic-partition write: the
+      // incoming frame arrives on ~30 upstream partitions each holding
+      // rows of every touched bucket, so the writer otherwise opens
+      // tasks × buckets parquet writers (~900 tiny files per commit,
+      // ~0.9 s/task of writer init — the bulk of q134's +1.3 s
+      // gate-scale constant).
       // One numbered exchange of the touched rows (batch-proportional
       // bytes) caps it at one-two files per bucket.
       .repartition(NumBuckets, col("bucket"))

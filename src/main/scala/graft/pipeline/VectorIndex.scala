@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.functions.{Exact, VectorOps}
+import graft.plans.CollectTopK
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,23 +27,24 @@ import org.apache.spark.sql.functions._
 object VectorIndex {
 
   /** Argmin cell assignment `(vec_id, cell_id, d)` of `vectors` against
-    * broadcast centroids `(cell_id, cv)`, with `d` the 6dp L2 distance.
-    * A min_by AGGREGATE, not a ranking window: the map-side partial
-    * (a SortAggregate, not a hash partial, until ROADMAP D6) collapses
-    * the cells × vectors cross join to one row per vector before the
-    * exchange, where a window would shuffle every scored row
-    * into a sort. Ties on `d` break on cell_id because the (d, cell_id)
-    * key compares lexicographically — the oracle's
-    * `ROW_NUMBER() OVER (… ORDER BY d, cell_id)`. Every argmin cell
-    * assignment in the engine is this one (q42, q65, q93, q99, q100,
-    * the Lloyd rounds); `SingleSiteSpec` keeps it that way. */
+    * broadcast centroids `(cell_id, cv)`, with `d` the 6dp L2 distance:
+    * the k = 1, smallest-first [[CollectTopK.ranked]], so ties on `d`
+    * break on cell_id — the oracle's
+    * `ROW_NUMBER() OVER (… ORDER BY d, cell_id)`. An aggregate, not a
+    * ranking window: its map-side partial collapses the cells × vectors
+    * cross join to one row per vector before the exchange, where a
+    * window would shuffle every scored row into a sort. It plans as
+    * ObjectHashAggregate; past
+    * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` groups
+    * per task (Spark's default 128) that aggregate falls back to
+    * sort-based aggregation, so at corpus scale the vec_id-keyed
+    * argmin still sorts. Every argmin cell assignment in the engine is
+    * this one (q42, q65, q93, q99, q100, the Lloyd rounds). */
   def assign(vectors: DataFrame, cents: DataFrame): DataFrame =
-    vectors.crossJoin(broadcast(cents))
-      .withColumn("d", round(VectorOps.l2(col("ev"), col("cv")), 6))
-      .groupBy(col("vec_id"))
-      .agg(min_by(struct(col("cell_id"), col("d")),
-        struct(col("d"), col("cell_id"))).as("a"))
-      .select(col("vec_id"), col("a.cell_id").as("cell_id"), col("a.d").as("d"))
+    CollectTopK.ranked(vectors.crossJoin(broadcast(cents))
+        .withColumn("d", round(VectorOps.l2(col("ev"), col("cv")), 6))
+        .groupBy(col("vec_id")), col("d"), col("cell_id"), 1, "cell_id", "d", smallest = true)
+      .select("vec_id", "cell_id", "d")
 
   /** Seed centroid frame: the first `cells` corpus vectors. */
   def seedCentroids(embeddings: DataFrame, cells: Int): DataFrame =

@@ -20,10 +20,19 @@ import scala.collection.mutable
   * This is the operator Spark's built-ins lack (row_number+filter must
   * shuffle every scored row); the engine plans it as
   * ObjectHashAggregate(partial) → exchange → ObjectHashAggregate(final).
+  * Past `spark.sql.objectHashAggregate.sortBased.fallbackThreshold`
+  * groups in one task (Spark's default 128) that aggregate switches to
+  * sort-based aggregation, so a corpus-keyed grouping (an argmin per
+  * vector) still sorts at scale.
   *
-  * Determinism contract matches the window formulation and the DuckDB
-  * oracle: ties on score break on ascending id; null scores/ids are
-  * skipped (a null cosine = zero vector, which cannot rank).
+  * Every ranking in the similarity tier goes through [[CollectTopK.ranked]]:
+  * kNN and ADC top-k, the curves' shortlists, the argmins (k = 1,
+  * smallest-first; the IVF-PQ encode keeps a measured `min_by`, see
+  * `SimilarityQueries.ivfpqCodes`) and q105's MMR picks. Its order
+  * contract is written here once and matches the window formulation
+  * and the DuckDB oracle: best score first, ties on ascending id; null
+  * scores/ids are skipped (a null cosine = zero vector, which cannot
+  * rank).
   */
 case class CollectTopK(
     score: Expression,

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen'd byte-sampling kernels for the media tier (q110
-  * resize / q111 frame-sample) — the round-11 replacement for the
+  * resize / q111 frame-sample), replacing the
   * interpreted `transform`/`aggregate` HOF folds, per the engine's
   * stated HOF policy (the PHash64 pattern: inline int/long loops, no
   * boxing, no per-row lambda dispatch, stays inside WholeStageCodegen).

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
 
 /** 64-bit perceptual hash over an opaque `binary` media payload as a
   * NATIVE codegen'd Catalyst expression — the media tier's analog of
-  * q32's SimHash (round-10 lead item: perceptual near-dup dedup).
+  * q32's SimHash, for perceptual near-dup dedup.
   *
   * Structure is the classic dHash (difference hash): resample the
   * payload onto a fixed 9-column × 8-row grid of block means, then emit

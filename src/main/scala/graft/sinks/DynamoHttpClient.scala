@@ -197,7 +197,7 @@ object DynamoHttpClient {
     val schema = df.schema
     SinkOps.putBatchedIf(df, batchSize = 25) { row =>
       val client = DynamoHttpClient(conf)
-      RetryPolicy.withRetry(retry.maxAttempts, retry.baseDelayMs, retry.jitterMs) { attempt =>
+      RetryPolicy.withRetry(retry) { attempt =>
         client.putItem(table, schema, row, Some(condition), attempt) == Stored
       }
     }
@@ -224,17 +224,12 @@ object DynamoHttpClient {
           throw new SinkOps.PartialBatchFailure(drained,
             s"${pending.size} items still unprocessed after ${retry.maxAttempts} rounds " +
               s"($drained of ${batch.size} stored)")
-        if (round > 1) {
-          // same jittered ladder as the transient-retry path: shed
-          // pages hit whole fleets at once, and deterministic re-drive
-          // delays would re-synchronize the herd every round
-          val jitter = if (retry.jitterMs > 0)
-            java.util.concurrent.ThreadLocalRandom.current().nextLong(retry.jitterMs) else 0L
-          val delay = (if (retry.baseDelayMs > 0) retry.baseDelayMs << (round - 2) else 0L) + jitter
-          if (delay > 0) Thread.sleep(delay)
-        }
+        // same jittered ladder as the transient-retry path: shed pages
+        // hit whole fleets at once, and deterministic re-drive delays
+        // would re-synchronize the herd every round
+        if (round > 1) RetryPolicy.pause(retry, round - 1)
         pending =
-          try RetryPolicy.withRetry(retry.maxAttempts, retry.baseDelayMs, retry.jitterMs) {
+          try RetryPolicy.withRetry(retry) {
             attempt => client.batchWrite(table, schema, pending, attempt)
           } catch {
             case NonFatal(e) if drained > 0 => throw new SinkOps.PartialBatchFailure(

@@ -107,10 +107,7 @@ final class EmbeddingHttpClient private[sources] (conf: EmbeddingConf,
     * aggregate a loss count. Auth/config failures propagate. */
   def embedBatchOrZero(texts: Seq[String]): (IndexedSeq[Array[Double]], Boolean) =
     try {
-      val r = conf.retry
-      (RetryPolicy.withRetry(r.maxAttempts, r.baseDelayMs, r.jitterMs) {
-        attempt => embedBatch(texts, attempt)
-      }, true)
+      (RetryPolicy.withRetry(conf.retry)(embedBatch(texts, _)), true)
     } catch {
       case _: TransientFault | _: MalformedEmbedding =>
         (IndexedSeq.fill(texts.size)(Array.fill(conf.dimensions)(0.0)), false)

@@ -103,31 +103,35 @@ final class TransientPageError(page: Int, attempt: Int)
   with TransientFault
 
 object RetryPolicy {
-  /** Run `f(attempt)` up to `maxAttempts` times, sleeping
-    * baseDelayMs·2^(attempt−1) + U(0, jitterMs) between tries — the
-    * reference's bounded exponential backoff WITH jitter
-    * (client.py:64-65: `base_delay * 2**attempt + random.uniform(0,
-    * 2)`). The jitter matters precisely at fleet scale: when hundreds
-    * of tasks hit the same 429 in the same instant, deterministic
-    * delays re-synchronize the herd on every retry; the uniform term
-    * spreads the wave. Zero-delay configs (tests) never sleep.
-    * Non-transient errors propagate immediately. */
-  def withRetry[T](maxAttempts: Int, baseDelayMs: Long, jitterMs: Long = 0L)
-      (f: Int => T): T = {
+  /** Run `f(attempt)` up to `retry.maxAttempts` times, with a [[pause]]
+    * between tries — the reference's bounded exponential backoff WITH
+    * jitter (client.py:64-65: `base_delay * 2**attempt +
+    * random.uniform(0, 2)`). Non-transient errors propagate immediately. */
+  def withRetry[T](retry: RetryConf)(f: Int => T): T = {
     var attempt = 1
-    while (attempt < maxAttempts) {
+    while (attempt < retry.maxAttempts) {
       try return f(attempt)
       catch {
         case _: TransientFault =>
-          val jitter =
-            if (jitterMs > 0) java.util.concurrent.ThreadLocalRandom.current().nextLong(jitterMs)
-            else 0L
-          val delay = (if (baseDelayMs > 0) baseDelayMs << (attempt - 1) else 0L) + jitter
-          if (delay > 0) Thread.sleep(delay)
+          pause(retry, attempt)
           attempt += 1
       }
     }
     f(attempt) // last attempt: let any failure propagate
+  }
+
+  /** Sleep before retry `n` (1-based): baseDelayMs·2^(n−1) + U(0,
+    * jitterMs). The jitter matters precisely at fleet scale: when
+    * hundreds of tasks hit the same 429 in the same instant,
+    * deterministic delays re-synchronize the herd on every retry; the
+    * uniform term spreads the wave. Zero-delay configs (tests) never
+    * sleep. */
+  def pause(retry: RetryConf, n: Int): Unit = {
+    val jitter =
+      if (retry.jitterMs > 0) java.util.concurrent.ThreadLocalRandom.current().nextLong(retry.jitterMs)
+      else 0L
+    val delay = (if (retry.baseDelayMs > 0) retry.baseDelayMs << (n - 1) else 0L) + jitter
+    if (delay > 0) Thread.sleep(delay)
   }
 }
 
@@ -401,7 +405,7 @@ class ErcotPagesReaderFactory(pageSize: Int, startDateDays: Long,
   private def httpReader(page: Int, hc: HttpConf): PartitionReader[InternalRow] = {
     val client = HttpPageClient(hc)
     val params = hubFilter.map("settlementPoint" -> _).toMap
-    val payload = RetryPolicy.withRetry(retry.maxAttempts, retry.baseDelayMs, retry.jitterMs) {
+    val payload = RetryPolicy.withRetry(retry) {
       attempt => client.fetchPage(page + 1, pageSize, params, attempt)
     }
     val idx = fields.map(f => payload.fieldIndex(HttpPageClient.WireNames(f)))
@@ -435,7 +439,7 @@ class ErcotPagesReaderFactory(pageSize: Int, startDateDays: Long,
     // (cached, auto-refreshing) auth token and surviving injected
     // transient faults stand in for the authenticated HTTP GET the
     // reference performs per page (client.py:60-84, auth.py:47-166).
-    RetryPolicy.withRetry(retry.maxAttempts, retry.baseDelayMs, retry.jitterMs) { attempt =>
+    RetryPolicy.withRetry(retry) { attempt =>
       TokenProvider.default.current()
       if (retry.failEveryN > 0 && page % retry.failEveryN == 0 && attempt <= retry.failAttempts)
         throw new TransientPageError(page, attempt)

@@ -53,7 +53,7 @@ private[sources] object FanOut {
       .repartition(math.max(1, items.size)) // item-per-task fan-out
       .flatMap { case ((name, id), idx) =>
         val it =
-          try RetryPolicy.withRetry(retry.maxAttempts, retry.baseDelayMs, retry.jitterMs) {
+          try RetryPolicy.withRetry(retry) {
             attempt => one(name, id, attempt)
           }
           catch { case NonFatal(_) => null } // skip-and-count

@@ -171,7 +171,7 @@ final class HttpPageClient private[sources] (conf: HttpConf, http: HttpClient,
     * partition-per-page scan without the caller knowing the page count
     * up front. */
   def totalRecords(params: Map[String, String], retry: RetryConf): Long =
-    RetryPolicy.withRetry(retry.maxAttempts, retry.baseDelayMs, retry.jitterMs) { attempt =>
+    RetryPolicy.withRetry(retry) { attempt =>
       fetchPage(1, 1, params, attempt).totalRecords
     }
 

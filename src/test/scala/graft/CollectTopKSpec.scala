@@ -31,15 +31,23 @@ class CollectTopKSpec extends AnyFunSuite {
     // Smallest-first input: distances on a 0.1 grid, so a group's best
     // five are ties at d = 0 that only the id order separates.
     val dists = rows.map { case (g, i, s) => (g, i, math.floor(s * 10) / 10) }
-    for ((input, smallest) <- Seq(rows -> false, dists -> true); parts <- Seq(1, 4, 13)) {
+    for ((input, smallest, k) <- Seq((rows, false, 5), (dists, true, 5), (dists, true, 1));
+         parts <- Seq(1, 4, 13)) {
       val df = input.toDF("g", "i", "s").repartition(parts)
-      val want = windowTopK(df, 5, smallest).collect().map(_.toSeq).toSet
-      val got = aggTopK(df, 5, smallest).collect()
-      assert(got.map(_.toSeq).toSet == want, s"parts=$parts smallest=$smallest")
+      val want = windowTopK(df, k, smallest).collect().map(_.toSeq).toSet
+      val got = aggTopK(df, k, smallest).collect()
+      assert(got.map(_.toSeq).toSet == want, s"parts=$parts smallest=$smallest k=$k")
+      // The k = 1 argmin is the (d, id)-keyed min_by it replaces.
+      if (k == 1) {
+        val argmin = df.groupBy(col("g"))
+          .agg(min_by(struct(col("i"), col("s")), struct(col("s"), col("i"))).as("a"))
+          .select(col("g"), col("a.i"), col("a.s"), lit(1L))
+        assert(got.map(_.toSeq).toSet == argmin.collect().map(_.toSeq).toSet, s"parts=$parts")
+      }
       // The sign is restored: a zero distance comes back as +0.0.
       val zeros = got.map(_.getDouble(2)).filter(_ == 0.0)
       if (smallest) assert(zeros.nonEmpty &&
-        zeros.forall(java.lang.Double.doubleToRawLongBits(_) == 0L), s"parts=$parts")
+        zeros.forall(java.lang.Double.doubleToRawLongBits(_) == 0L), s"parts=$parts k=$k")
     }
   }
 

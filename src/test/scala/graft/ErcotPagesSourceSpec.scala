@@ -82,7 +82,7 @@ class ErcotPagesSourceSpec extends AnyFunSuite {
   }
 
   test("retry backoff: jitter bounded by U(0, jitterMs); zero-delay config never sleeps") {
-    import graft.sources.{RetryPolicy, TransientPageError}
+    import graft.sources.{RetryConf, RetryPolicy, TransientPageError}
     def failTwice(): Int => String = {
       var calls = 0
       attempt => { calls += 1; if (calls <= 2) throw new TransientPageError(0, attempt) else "ok" }
@@ -90,11 +90,11 @@ class ErcotPagesSourceSpec extends AnyFunSuite {
     // deterministic part 10+20=30ms; only the FLOOR is asserted — a
     // wall-clock ceiling would test the OS scheduler, not the policy
     val t0 = System.nanoTime()
-    assert(RetryPolicy.withRetry(4, 10, jitterMs = 25)(failTwice()) == "ok")
+    assert(RetryPolicy.withRetry(RetryConf(4, 10, 0, 0, jitterMs = 25))(failTwice()) == "ok")
     val ms = (System.nanoTime() - t0) / 1000000
     assert(ms >= 30, s"backoff floor violated: ${ms}ms")
     // zero-delay, zero-jitter config completes (never sleeps by code path)
-    assert(RetryPolicy.withRetry(4, 0)(failTwice()) == "ok")
+    assert(RetryPolicy.withRetry(RetryConf(4, 0, 0, 0))(failTwice()) == "ok")
   }
 
   test("token lifecycle: cached until T-5 of expiry, then refreshed (singleton reuse)") {

@@ -219,8 +219,8 @@ class PlanShapeSpec extends AnyFunSuite {
       calls("sorted_intersect_size")) ++ noCross),
     "q31_embedding_neardup" -> (noFunnel +: noCross),
     "q32_simhash_bands/pre-sort" -> (joins[HashJoin]("band_id", "band_val")() +: noCross),
-    // The argmin plans as SortAggregate (ROADMAP D6), not a hash partial.
-    "q42_ivf_knn" -> Seq(no[WindowExec], calls("min_by"), joins[BroadcastNestedLoopJoinExec]()("cv")),
+    "q42_ivf_knn" -> Seq(no[WindowExec], calls("collect_topk"), no[SortAggregateExec],
+      joins[BroadcastNestedLoopJoinExec]()("cv")),
     "q52_asof_enrich" -> Seq(has[plans.AsOfJoinExec](), has[SortExec](3), noFunnel),
     "q58_contamination/pre-sort" -> containment,
     "q59_dup_clusters" -> (Seq(groups[HashAgg]("u"), joins[HashJoin]("id")(), noFunnel) ++ noCross),
@@ -251,7 +251,7 @@ class PlanShapeSpec extends AnyFunSuite {
       !joins[ShuffledHashJoinExec]("b")("doc_id"), joins[BroadcastNestedLoopJoinExec]()("v")),
     "q104_media_phash_dedup/pre-sort" -> (Seq(calls("phash64"), groups[ObjectHashAgg]("band_id", "band_val"),
       no[BaseJoinExec], exchanges(2)) ++ noCross),
-    "q105_mmr_context" -> Seq(calls("max_by"), joins[BroadcastHashJoinExec]("query_id", "doc_id")(),
+    "q105_mmr_context" -> Seq(calls("collect_topk"), joins[BroadcastHashJoinExec]("query_id", "doc_id")(),
       has[BroadcastExchangeExec](),
       no[CartesianProductExec]),
     "q50_chunking" -> Seq(exchanges(1), noFunnel),
@@ -271,13 +271,14 @@ class PlanShapeSpec extends AnyFunSuite {
     "q115_quality_classifier/sigmoid" -> Seq(no[BaseJoinExec], has[WindowExec]()),
     "q115_quality_classifier/gradient" -> (groups[HashAgg]("b") +: noCross),
     "q116_score_persisted" -> Seq(has[WindowExec](), !joins[BaseJoinExec]("b")(), noFunnel),
-    "q119_ivfpq_append" -> Seq(reads("ivfpq_index"), joins[HashJoin]("cell_id")(), calls("min_by")),
+    "q119_ivfpq_append" -> Seq(reads("ivfpq_index"), joins[HashJoin]("cell_id")(), calls("min_by"),
+      calls("collect_topk")),
     "q121_ivfpq_trained" -> Seq(calls("collect_topk"), joins[BroadcastHashJoinExec]("cell_id", "m", "code")(),
       joins[SortMergeJoinExec]("query_id")()),
     "q125_takedown_artifacts" -> Seq(reads("vec_index"), joins[SortMergeJoinExec]("step")(),
       joins[SortMergeJoinExec]("b")()),
-    "q126_ivfpq_nprobe_curve" -> Seq(has[WindowExec](), joins[BroadcastHashJoinExec]("query_id", "vec_id")(),
-      joins[BroadcastHashJoinExec]("vec_id")()),
+    "q126_ivfpq_nprobe_curve" -> Seq(no[WindowExec], calls("collect_topk"),
+      joins[BroadcastHashJoinExec]("query_id", "vec_id")(), joins[BroadcastHashJoinExec]("vec_id")()),
     "q127_train_order" -> Seq(no[WindowExec], joins[BroadcastHashJoinExec]("e", "lang")(),
       no[CartesianProductExec], noFunnel),
     "q128_quality_ensemble/joined" ->
@@ -288,7 +289,8 @@ class PlanShapeSpec extends AnyFunSuite {
     "q132_curriculum_shards" -> Seq(joins[BroadcastHashJoinExec]("epoch", "bk")(), has[WindowExec](3)),
     "q133_card_on_append" -> Seq(no[FileSourceScanExec], no[ShuffledJoin]),
     "q134_stream_card_maintain" -> Seq(reads("card")),
-    "q137_ivfpq_refine_curve" -> Seq(has[WindowExec](), joins[BroadcastHashJoinExec]("query_id", "vec_id")()),
+    "q137_ivfpq_refine_curve" -> Seq(no[WindowExec], calls("collect_topk"),
+      joins[BroadcastHashJoinExec]("query_id", "vec_id")()),
     "flagship" -> Seq(joins[BroadcastHashJoinExec]("d")("temp_c"), no[GenerateExec], no[SortAggregateExec],
       no[ObjectHashAgg], notKeyedOn("semantic_sentence"), fused("hash_sign_embed")),
     "diamond" -> Seq(has[ReusedExchangeExec]())
@@ -349,7 +351,7 @@ class PlanShapeSpec extends AnyFunSuite {
   /** Each predicate kind fails on a plan known to break it. */
   test("every predicate kind fails on a known-bad plan") {
     val bad: Seq[(P, String)] = Seq(
-      no[SortAggregateExec] -> "q42_ivf_knn", noArrayBuffer -> "q113_ivfpq_search/encode",
+      no[SortAggregateExec] -> "q113_ivfpq_search/encode", noArrayBuffer -> "q113_ivfpq_search/encode",
       no[BroadcastNestedLoopJoinExec] -> "q26_knn_topk", exchanges(1) -> "q01_pricing_summary",
       calls("collect_topk") -> "q01_pricing_summary", reads("dedup_index") -> "q01_pricing_summary",
       pushed("l_shipdate") -> "q09_multiway_join", groups[HashAgg]("cell_id") -> "q01_pricing_summary",

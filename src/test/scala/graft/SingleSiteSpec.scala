@@ -8,9 +8,11 @@ import scala.jdk.CollectionConverters._
   * copy elsewhere fails here, so the one-site refactors stay done:
   * streams open, trigger and wait only in `streaming/Drain.scala`,
   * helper threads come only from `Overlap.scala`, sessions are built
-  * only in `GraftSession.scala`, the argmin cell assignment's
-  * (d, cell_id) key lives only in `VectorIndex.assign`, and only
-  * `CollectTopK`'s own row builder reads its heap layout. */
+  * only in `GraftSession.scala`, and only `CollectTopK`'s own row
+  * builder reads its heap layout. Every argmin and best-of-group pick
+  * goes through `CollectTopK.ranked`, so `min_by`/`max_by` appear only
+  * in `SimilarityQueries.ivfpqCodes`, whose scaladoc pins the A/B that
+  * keeps it. */
 class SingleSiteSpec extends AnyFunSuite {
 
   private val mainRoot = Paths.get("src/main/scala")
@@ -22,24 +24,41 @@ class SingleSiteSpec extends AnyFunSuite {
     finally walk.close()
   }
 
+  /** Lines of `src/main` matching `pattern`, as (path, 1-based line, text). */
+  private def matches(pattern: String): Seq[(String, Int, String)] = {
+    val regex = pattern.r
+    for {
+      (path, text) <- sources
+      (line, n) <- text.linesIterator.zipWithIndex if regex.findFirstIn(line).nonEmpty
+    } yield (path.toString, n + 1, line.trim)
+  }
+
+  private def show(lines: Seq[(String, Int, String)]): String =
+    lines.map { case (p, n, l) => s"$p:$n: $l" }.mkString("\n", "\n", "")
+
   private val rules = Seq(
     ("readStream|Trigger\\.AvailableNow|awaitTermination", "graft/streaming/Drain.scala"),
     ("scala\\.concurrent\\.(_|Future\\b|\\{[^}]*\\bFuture\\b)|\\bFuture\\s*[({\\[.]",
       "graft/Overlap.scala"),
     ("SparkSession\\.builder", "graft/GraftSession.scala"),
-    ("struct\\(col\\(\"d\"\\), col\\(\"cell_id\"\\)\\)", "graft/pipeline/VectorIndex.scala"),
     ("CollectTopK\\.topk\\(", "graft/plans/CollectTopK.scala"))
 
   for ((pattern, owner) <- rules)
     test(s"/$pattern/ appears only in $owner") {
       assert(sources.exists(_._1.toString == owner), s"$owner is missing")
-      val regex = pattern.r
-      val strays = for {
-        (path, text) <- sources if path.toString != owner
-        (line, n) <- text.linesIterator.zipWithIndex if regex.findFirstIn(line).nonEmpty
-      } yield s"$path:${n + 1}: ${line.trim}"
-      assert(strays.isEmpty, strays.mkString("\n", "\n", ""))
-      assert(regex.findFirstIn(sources.find(_._1.toString == owner).get._2).nonEmpty,
-        s"$owner no longer matches /$pattern/")
+      val (home, strays) = matches(pattern).partition(_._1 == owner)
+      assert(strays.isEmpty, show(strays))
+      assert(home.nonEmpty, s"$owner no longer matches /$pattern/")
     }
+
+  test("/min_by\\(|max_by\\(/ appears only in SimilarityQueries.ivfpqCodes") {
+    val owner = "graft/operators/SimilarityQueries.scala"
+    val lines = sources.find(_._1.toString == owner).get._2.linesIterator.toVector
+    val from = lines.indexWhere(_.contains("def ivfpqCodes("))
+    val body = (from + 1) to lines.indexWhere(_.trim.isEmpty, from)
+    val (home, strays) = matches("min_by\\(|max_by\\(")
+      .partition { case (p, n, _) => p == owner && from >= 0 && body.contains(n) }
+    assert(strays.isEmpty, show(strays))
+    assert(home.size == 1, s"ivfpqCodes no longer calls min_by: drop its exception here${show(home)}")
+  }
 }
