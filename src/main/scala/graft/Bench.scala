@@ -91,9 +91,7 @@ object Bench {
       .repartition(1).sortWithinPartitions("k")
       .write.mode("overwrite").format("noop").save())
     Prepared.foreach { case (label, build) => warm(label)(build(spark, sfDir)) }
-    // SPARK_GRAFT_ONLY=q28_minhash_pairs,q32_simhash_bands — iterate on a
-    // subset without paying for the whole suite. Unset = run everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+    val only = SparkEntry.only
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     // Steady-state warmup: run every selected query once at the smallest

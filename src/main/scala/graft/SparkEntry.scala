@@ -33,6 +33,12 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map(nq => nq.name -> nq.fn).toMap
 
+  /** The subset of [[queries]] a Bench or Verify run is limited to while
+    * iterating: `SPARK_GRAFT_ONLY=q28_minhash_pairs,q32_simhash_bands`
+    * (`tools/check_oracle.py --only` passes it through). Unset = all. */
+  def only: Option[Set[String]] =
+    sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     * Every named CTE carries DuckDB's MATERIALIZED hint ([[OracleSql

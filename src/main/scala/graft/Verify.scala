@@ -13,11 +13,9 @@ object Verify {
       outDir: String): Unit = {
     Tables.assertIdHeadroom(spark, sfDir) // planted-copy offsets need id room
     new java.io.File(outDir).mkdirs()
-    // GRAFT_VERIFY_ONLY=q1,q2 — dump a subset while iterating locally
-    // (tools/check_oracle.py --only passes it through). Unset = all;
-    // the driver's gate always runs unset, so the manifest stays full.
-    val only = sys.env.get("GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    // A full correctness gate runs with SPARK_GRAFT_ONLY unset, so its
+    // manifest lists every query.
+    val only = SparkEntry.only
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // checker's json.load fail and silently zero the run's correctness.

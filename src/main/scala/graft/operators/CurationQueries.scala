@@ -21,9 +21,7 @@ import org.apache.spark.sql.functions._
   * sampling cannot be re-derived or oracle-checked.
   */
 object CurationQueries {
-
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "documents")
+  import TextQueries.{appendBatch, docs}
 
   /** Stable per-doc hash, DuckDB-mirrorable. */
   private val hashSql =
@@ -49,7 +47,7 @@ object CurationQueries {
     * admits (any positive weight is valid); both engines cap
     * identically so the gate still hash-matches. */
   private val SampleK = 100
-  private val USize = 1048576L // 2^20
+  private[operators] val USize = 1048576L // 2^20
   private val PriScale = 4294967296L // 2^32
   private val WScale = PriScale / USize // 2^12
   private val WCap = 2097151L // 2^21 - 1: max weight with pri < 2^53
@@ -265,12 +263,15 @@ object CurationQueries {
   private[graft] def qcModelPrepared(s: SparkSession, sfDir: String): String =
     graft.pipeline.PreparedArtifact.publishOnce(s, "graft_qc_model",
         graft.pipeline.PreparedArtifact.fingerprint(s, sfDir, "documents")) { tmp =>
-      val (w, _) = qcTrain(s, sfDir)
-      import s.implicits._
-      w.toSeq.sortBy(_._1).map { case (b, v) => (b, v.toPlainString) }
-        .toDF("b", "w")
-        .repartition(1).write.mode("overwrite").parquet(tmp.toString)
+      qcModelRows(s, qcTrain(s, sfDir)._1).write.mode("overwrite").parquet(tmp.toString)
     }
+
+  /** A weight vector as the persisted model's rows, in one partition. */
+  private def qcModelRows(s: SparkSession, w: Map[Int, java.math.BigDecimal]): DataFrame = {
+    import s.implicits._
+    w.toSeq.sortBy(_._1).map { case (b, v) => (b, v.toPlainString) }
+      .toDF("b", "w").repartition(1)
+  }
 
   /** q118's drain, file-count parameterized (each file is one
     * micro-batch under maxFilesPerTrigger=1; the registered query runs
@@ -278,27 +279,92 @@ object CurationQueries {
     * 10-file backlog to measure the per-micro-batch marginal cost). */
   private[graft] def qcStreamDrain(s: SparkSession, dir: String,
       nFiles: Int): DataFrame = {
-    import java.math.{BigDecimal => JDec}
-    val w: Map[Int, JDec] = Tables.read(s, qcModelPrepared(s, dir))
-      .collect()
-      .map(r => r.getAs[Int]("b") -> new JDec(r.getAs[String]("w")))
-      .toMap
-    val batch = docs(s, dir).filter(col("doc_id") % 5 === 4)
-      .select((col("doc_id") + 70000).as("doc_id"),
-        concat(col("text"), lit(" zq"),
-          pmod(col("doc_id"), lit(11)).cast("string")).as("text"))
+    val w = qcModelWeights(s, dir)
     val root = graft.TempDirs.fresh("q118")
     val target = new Drain.Target(Drain.targetDir(root))
-    val sink = Drain.appendEach(target) { b =>
-      qcScored(qcFeaturesOf(b), w)
-        .filter(col("b") === QcBuckets + 1) // bias row: one per doc
-        .select(col("doc_id"), col("y"),
-          col("p").cast("double").as("p"),
-          (col("p") >= lit(0.5).cast(QcDec)).as("admitted"))
-    }
-    Drain.split(root, batch, nFiles)(sink)
+    Drain.split(root, appendBatch(s, dir, 4, 11), nFiles)(
+      Drain.appendEach(target)(qcAdmission(_, w)))
     target.read(s).orderBy("doc_id")
   }
+
+  /** The persisted model's ≤66 (bucket, weight) rows, read once. */
+  private def qcModelWeights(s: SparkSession, dir: String): Map[Int, java.math.BigDecimal] =
+    Tables.read(s, qcModelPrepared(s, dir)).collect()
+      .map(r => r.getAs[Int]("b") -> new java.math.BigDecimal(r.getAs[String]("w")))
+      .toMap
+
+  /** Score `(doc_id, text)` docs with weights `w` in the task closure:
+    * `(doc_id, y, p, admitted)`, admitted = p ≥ 0.5 (q116, q117's gate,
+    * each q118 micro-batch). */
+  private def qcAdmission(b: DataFrame, w: Map[Int, java.math.BigDecimal]): DataFrame =
+    qcScored(qcFeaturesOf(b), w)
+      .filter(col("b") === QcBuckets + 1) // bias row: one per doc
+      .select(col("doc_id"), col("y"),
+        col("p").cast("double").as("p"),
+        (col("p") >= lit(0.5).cast(QcDec)).as("admitted"))
+
+  /** DuckDB mirror of scoring `{pfx}feat` with the trained `w{QcRounds}`:
+    * `{pfx}z` (logit) and `{pfx}p` (6dp sigmoid) per doc. */
+  private def qcScoreCtesSql(pfx: String): String =
+    s"""${pfx}z AS (SELECT f.doc_id, SUM(f.x * w.w) AS z
+       |    FROM ${pfx}feat f JOIN w$QcRounds w USING (b) GROUP BY 1),
+       |  ${pfx}p AS (SELECT doc_id,
+       |      CAST(ROUND(1 / (1 + EXP(-CAST(z AS DOUBLE))), 6) AS DECIMAL(18,6)) AS p
+       |    FROM ${pfx}z)""".stripMargin
+
+  /** q116/q118's oracle: retrain the model in the unrolled chain, then
+    * score [[TextQueries.appendBatch]]`(rem, m)` through the same feature CTEs. */
+  private def qcAppendScoreSql(rem: Int, m: Int): String =
+    s"""WITH ${qcFeatureCtesSql("documents", "")},
+       |  ${qcTrainCtesSql(withEval = false)},
+       |  batch AS (SELECT doc_id + 70000 AS doc_id,
+       |      concat(text, ' zq', CAST(doc_id % $m AS VARCHAR)) AS text
+       |    FROM documents WHERE doc_id % 5 = $rem),
+       |  ${qcFeatureCtesSql("batch", "b")},
+       |  ${qcScoreCtesSql("b")}
+       |SELECT bp.doc_id, blab.y, CAST(p AS DOUBLE) AS p,
+       |  (p >= CAST(0.5 AS DECIMAL(18,6))) AS admitted
+       |FROM bp JOIN blab USING (doc_id)
+       |ORDER BY doc_id""".stripMargin
+
+  /** q75/q117's exact-dedup stage: every 7th doc planted verbatim under
+    * id+20000, then the lowest id per content hash survives. */
+  private def shipSurvivors(base: DataFrame): DataFrame = {
+    val u = DedupQueries.withPlanted(base, (7, 20000, identity))
+    u.join(u.groupBy(md5(col("text"))).agg(min(col("doc_id")).as("doc_id"))
+      .select("doc_id"), "doc_id")
+  }
+
+  /** DuckDB mirror of [[shipSurvivors]]: `u`, then `keep(doc_id)`. */
+  private def shipDedupCtesSql: String =
+    s"""u AS (${DedupQueries.plantedSql(7, 20000, "text", " " * 5)}),
+       |  keep AS (SELECT MIN(doc_id) AS doc_id FROM u GROUP BY md5(text))""".stripMargin
+
+  /** q78/q96's two corpus versions, full-outer joined on the key:
+    * `(doc_id, h1, h2, in1, in2)`, h = md5(text). v2 deletes every 9th
+    * doc, rewrites every 5th survivor (first token dropped) and adds
+    * re-keyed copies of every 10th doc at id+70000. */
+  private def snapshotDiff(docs: DataFrame): DataFrame = {
+    val v2 = docs.filter(col("doc_id") % 9 =!= 0)
+      .select(col("doc_id").as("id2"), md5(when(col("doc_id") % 5 === 0,
+        DedupQueries.dropFirstTok(col("text"))).otherwise(col("text"))).as("h2"))
+      .unionAll(docs.filter(col("doc_id") % 10 === 0)
+        .select((col("doc_id") + 70000).as("id2"), md5(col("text")).as("h2")))
+    docs.select(col("doc_id").as("id1"), md5(col("text")).as("h1"))
+      .join(v2, col("id1") === col("id2"), "full_outer")
+      .select(coalesce(col("id1"), col("id2")).as("doc_id"), col("h1"), col("h2"),
+        col("id1").isNotNull.as("in1"), col("id2").isNotNull.as("in2"))
+  }
+
+  /** DuckDB mirror of [[snapshotDiff]]'s versions: `v1`, `v2`. */
+  private def snapshotCtesSql: String =
+    s"""v1 AS (SELECT doc_id, md5(text) AS h FROM documents),
+       |  v2 AS (SELECT doc_id,
+       |           md5(CASE WHEN doc_id % 5 = 0
+       |               THEN ${DedupQueries.dropFirstTokSql} ELSE text END) AS h
+       |         FROM documents WHERE doc_id % 9 <> 0
+       |         UNION ALL
+       |         SELECT doc_id + 70000, md5(text) FROM documents WHERE doc_id % 10 = 0)""".stripMargin
 
   /** q115/q116 shared oracle SQL: the labeled-feature CTEs over source
     * relation `src`, CTE names prefixed `pfx` (q116 featurizes the
@@ -644,10 +710,7 @@ object CurationQueries {
     // lineage story a 100 TB corpus release needs.
     q("q75_ship_manifest",
       "X3+X4 composition: dedup → quality gate → split = ship list",
-      s"""WITH u AS (SELECT doc_id, text FROM documents
-         |     UNION ALL
-         |     SELECT doc_id + 20000, text FROM documents WHERE doc_id % 7 = 0),
-         |  keep AS (SELECT MIN(doc_id) AS doc_id FROM u GROUP BY md5(text)),
+      s"""WITH $shipDedupCtesSql,
          |  gated AS (SELECT u.doc_id, u.text FROM u JOIN keep USING (doc_id)
          |            WHERE len(${"list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')"})
          |                  BETWEEN 20 AND 200)
@@ -656,15 +719,9 @@ object CurationQueries {
          |       WHEN $hashSql % 100 < 90 THEN 'val'
          |       ELSE 'test' END AS split
          |FROM gated ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val base = docs(s, dir).select(col("doc_id"), col("text"))
-      val u = base.unionAll(
-        base.filter(col("doc_id") % 7 === 0)
-          .select((col("doc_id") + 20000).as("doc_id"), col("text")))
-      val keep = u.groupBy(md5(col("text"))).agg(min(col("doc_id")).as("doc_id"))
-        .select("doc_id")
       val nToks = size(TextOps.tokens(col("text")))
       val b = TextOps.hash60(col("doc_id").cast("string")) % 100
-      u.join(keep, "doc_id")
+      shipSurvivors(docs(s, dir).select(col("doc_id"), col("text")))
         .filter(nToks.between(20, 200))
         .select(col("doc_id"),
           when(b < 80, "train").when(b < 90, "val").otherwise("test").as("split"))
@@ -750,13 +807,7 @@ object CurationQueries {
     // (SinkOps.writeBucketed) it plans with no exchange at all.
     q("q78_snapshot_diff",
       "X3/A6: two-version CDC diff (added/deleted/changed/unchanged)",
-      s"""WITH v1 AS (SELECT doc_id, md5(text) AS h FROM documents),
-         |  v2 AS (SELECT doc_id,
-         |           md5(CASE WHEN doc_id % 5 = 0
-         |               THEN regexp_replace(text, '^[a-z0-9]+ ', '') ELSE text END) AS h
-         |         FROM documents WHERE doc_id % 9 <> 0
-         |         UNION ALL
-         |         SELECT doc_id + 70000, md5(text) FROM documents WHERE doc_id % 10 = 0),
+      s"""WITH $snapshotCtesSql,
          |  d AS (SELECT COALESCE(v1.doc_id, v2.doc_id) AS doc_id,
          |          CASE WHEN v1.doc_id IS NULL THEN 'added'
          |               WHEN v2.doc_id IS NULL THEN 'deleted'
@@ -766,20 +817,10 @@ object CurationQueries {
          |SELECT change_type, COUNT(*) AS n_docs,
          |  MIN(doc_id) AS min_id, MAX(doc_id) AS max_id
          |FROM d GROUP BY 1 ORDER BY change_type""".stripMargin) { (s, dir) =>
-      val base = docs(s, dir).select(col("doc_id"), col("text"))
-      val v1 = base.select(col("doc_id"), md5(col("text")).as("h"))
-      val dropTok = regexp_replace(col("text"), "^[a-z0-9]+ ", "")
-      val v2 = base.filter(col("doc_id") % 9 =!= 0)
+      snapshotDiff(docs(s, dir))
         .select(col("doc_id"),
-          md5(when(col("doc_id") % 5 === 0, dropTok).otherwise(col("text"))).as("h"))
-        .unionAll(base.filter(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + 70000).as("doc_id"), md5(col("text")).as("h")))
-      v1.select(col("doc_id").as("id1"), col("h").as("h1"))
-        .join(v2.select(col("doc_id").as("id2"), col("h").as("h2")),
-          col("id1") === col("id2"), "full_outer")
-        .select(coalesce(col("id1"), col("id2")).as("doc_id"),
-          when(col("id1").isNull, "added")
-            .when(col("id2").isNull, "deleted")
+          when(!col("in1"), "added")
+            .when(!col("in2"), "deleted")
             .when(col("h1") =!= col("h2"), "changed")
             .otherwise("unchanged").as("change_type"))
         .groupBy(col("change_type"))
@@ -873,13 +914,7 @@ object CurationQueries {
     // row-per-(key, version) → parallel orderBy.
     q("q96_scd2_history",
       "X4+/K1: SCD Type-2 history from a two-version snapshot diff (validity intervals)",
-      s"""WITH v1 AS (SELECT doc_id, md5(text) AS h FROM documents),
-         |  v2 AS (SELECT doc_id,
-         |           md5(CASE WHEN doc_id % 5 = 0
-         |               THEN regexp_replace(text, '^[a-z0-9]+ ', '') ELSE text END) AS h
-         |         FROM documents WHERE doc_id % 9 <> 0
-         |         UNION ALL
-         |         SELECT doc_id + 70000, md5(text) FROM documents WHERE doc_id % 10 = 0),
+      s"""WITH $snapshotCtesSql,
          |  j AS (SELECT COALESCE(v1.doc_id, v2.doc_id) AS doc_id,
          |          v1.h AS h1, v2.h AS h2,
          |          v1.doc_id IS NOT NULL AS in1, v2.doc_id IS NOT NULL AS in2
@@ -892,20 +927,7 @@ object CurationQueries {
          |SELECT doc_id, h2, 2, NULL, TRUE
          |FROM j WHERE in2 AND (NOT in1 OR h1 <> h2)
          |ORDER BY doc_id, valid_from""".stripMargin) { (s, dir) =>
-      val base = docs(s, dir).select(col("doc_id"), col("text"))
-      val v1 = base.select(col("doc_id"), md5(col("text")).as("h"))
-      val dropTok = regexp_replace(col("text"), "^[a-z0-9]+ ", "")
-      val v2 = base.filter(col("doc_id") % 9 =!= 0)
-        .select(col("doc_id"),
-          md5(when(col("doc_id") % 5 === 0, dropTok).otherwise(col("text"))).as("h"))
-        .unionAll(base.filter(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + 70000).as("doc_id"), md5(col("text")).as("h")))
-      val j = v1.select(col("doc_id").as("id1"), col("h").as("h1"))
-        .join(v2.select(col("doc_id").as("id2"), col("h").as("h2")),
-          col("id1") === col("id2"), "full_outer")
-        .select(coalesce(col("id1"), col("id2")).as("doc_id"),
-          col("h1"), col("h2"),
-          col("id1").isNotNull.as("in1"), col("id2").isNotNull.as("in2"))
+      val j = snapshotDiff(docs(s, dir))
         .checkpointed(false) // both history branches read it
       val closedOrOpen = j.filter(col("in1"))
         .select(col("doc_id"), col("h1").as("h"), lit(1).as("valid_from"),
@@ -1145,38 +1167,8 @@ object CurationQueries {
     // the closure exactly as in q115's rounds.
     q("q116_score_persisted",
       "X4+/LLM: batch quality scoring via the persisted trained model (no retrain, OOV-safe)",
-      {
-        s"""WITH ${qcFeatureCtesSql("documents", "")},
-           |  ${qcTrainCtesSql(withEval = false)},
-           |  batch AS (SELECT doc_id + 70000 AS doc_id,
-           |      concat(text, ' zq', CAST(doc_id % 9 AS VARCHAR)) AS text
-           |    FROM documents WHERE doc_id % 5 = 2),
-           |  ${qcFeatureCtesSql("batch", "b")},
-           |  bz AS (SELECT f.doc_id, SUM(f.x * w.w) AS z
-           |    FROM bfeat f JOIN w$QcRounds w USING (b) GROUP BY 1),
-           |  bp AS (SELECT doc_id,
-           |      CAST(ROUND(1 / (1 + EXP(-CAST(z AS DOUBLE))), 6) AS DECIMAL(18,6)) AS p
-           |    FROM bz)
-           |SELECT bp.doc_id, blab.y, CAST(p AS DOUBLE) AS p,
-           |  (p >= CAST(0.5 AS DECIMAL(18,6))) AS admitted
-           |FROM bp JOIN blab USING (doc_id)
-           |ORDER BY doc_id""".stripMargin
-      }) { (s, dir) =>
-      import java.math.{BigDecimal => JDec}
-      // The persisted model: ≤66 (bucket, weight) rows, read once.
-      val w: Map[Int, JDec] = Tables.read(s, qcModelPrepared(s, dir))
-        .collect()
-        .map(r => r.getAs[Int]("b") -> new JDec(r.getAs[String]("w")))
-        .toMap
-      val batch = docs(s, dir).filter(col("doc_id") % 5 === 2)
-        .select((col("doc_id") + 70000).as("doc_id"),
-          concat(col("text"), lit(" zq"),
-            pmod(col("doc_id"), lit(9)).cast("string")).as("text"))
-      qcScored(qcFeaturesOf(batch), w)
-        .filter(col("b") === QcBuckets + 1) // bias row: one per doc
-        .select(col("doc_id"), col("y"),
-          col("p").cast("double").as("p"),
-          (col("p") >= lit(0.5).cast(QcDec)).as("admitted"))
+      qcAppendScoreSql(2, 9)) { (s, dir) =>
+      qcAdmission(appendBatch(s, dir, 2, 9), qcModelWeights(s, dir))
         .orderBy("doc_id") // row-per-doc output: parallel range sort
     },
 
@@ -1210,39 +1202,19 @@ object CurationQueries {
         chain.append(
           s"""WITH ${qcFeatureCtesSql("documents", "")},
              |  ${qcTrainCtesSql(withEval = false)},
-             |  u AS (SELECT doc_id, text FROM documents
-             |     UNION ALL
-             |     SELECT doc_id + 20000, text FROM documents WHERE doc_id % 7 = 0),
-             |  keep AS (SELECT MIN(doc_id) AS doc_id FROM u GROUP BY md5(text)),
+             |  $shipDedupCtesSql,
              |  surv AS (SELECT u.doc_id, u.text FROM u JOIN keep USING (doc_id)),
              |  ${qcFeatureCtesSql("surv", "s")},
-             |  sz AS (SELECT f.doc_id, SUM(f.x * w.w) AS z
-             |    FROM sfeat f JOIN w$QcRounds w USING (b) GROUP BY 1),
-             |  sp AS (SELECT doc_id,
-             |      CAST(ROUND(1 / (1 + EXP(-CAST(z AS DOUBLE))), 6) AS DECIMAL(18,6)) AS p
-             |    FROM sz),
+             |  ${qcScoreCtesSql("s")},
              |  adm AS (SELECT surv.doc_id, surv.text, CAST(sp.p AS DOUBLE) AS p
              |    FROM surv JOIN sp USING (doc_id)
              |    WHERE sp.p >= CAST(0.5 AS DECIMAL(18,6))),
-             |  w_0 AS (
-             |    SELECT concat(regexp_replace(tok, '(.)', '\\1 ', 'g'), '_') AS w,
-             |           CAST(COUNT(*) AS BIGINT) AS cnt
-             |    FROM (SELECT unnest($toks) AS tok FROM documents)
-             |    GROUP BY 1)""".stripMargin)
-        for (i <- 1 to TextQueries.BpeMerges) {
-          chain.append(",\n").append(TextQueries.bpePairCte(i, s"w_${i - 1}"))
-          if (i < TextQueries.BpeMerges) // the last rewrite is never read
-            chain.append(",\n").append(TextQueries.bpeApplyCte(i, s"w_${i - 1}"))
-        }
+             |  ${TextQueries.bpeWordsCte("w_0", "documents", "  ")}""".stripMargin)
+        chain.append(",\n").append(TextQueries.bpeTrainCtesSql())
         chain.append(
           s""",
-             |  a_0 AS (
-             |    SELECT DISTINCT tok,
-             |           concat(regexp_replace(tok, '(.)', '\\1 ', 'g'), '_') AS w
-             |    FROM (SELECT unnest($toks) AS tok FROM adm))""".stripMargin)
-        for (i <- 1 to TextQueries.BpeMerges)
-          chain.append(",\n").append(
-            TextQueries.bpeApplyCte(i, s"a_${i - 1}", Seq("tok"), out = s"a_$i"))
+             |  ${TextQueries.bpeTokWordsCte("a_0", "adm", "  ")}""".stripMargin)
+        chain.append(",\n").append(TextQueries.bpeReplayCtesSql("a"))
         chain.append(
           s""",
              |  seg AS (SELECT tok, CAST(len(string_split(w, ' ')) AS BIGINT) AS units
@@ -1263,26 +1235,13 @@ object CurationQueries {
              |ORDER BY doc_id""".stripMargin)
         chain.toString
       }) { (s, dir) =>
-      import java.math.{BigDecimal => JDec}
-      // Stage 1: exact dedup over the planted union (q75's plant).
-      val base = docs(s, dir).select(col("doc_id"), col("text"))
-      val u = base.unionAll(
-        base.filter(col("doc_id") % 7 === 0)
-          .select((col("doc_id") + 20000).as("doc_id"), col("text")))
-      val keep = u.groupBy(md5(col("text"))).agg(min(col("doc_id")).as("doc_id"))
-        .select("doc_id")
-      val surv = u.join(keep, "doc_id")
+      // Stage 1: q75's exact dedup over the planted union.
+      val surv = shipSurvivors(docs(s, dir).select(col("doc_id"), col("text")))
       // Stage 2: the persisted model gates admission (q116's path —
       // weights in the closure, no join). Checkpointed: three
       // downstream consumers (vocab build, billing stream, manifest).
-      val w: Map[Int, JDec] = Tables.read(s, qcModelPrepared(s, dir))
-        .collect()
-        .map(r => r.getAs[Int]("b") -> new JDec(r.getAs[String]("w")))
-        .toMap
-      val gate = qcScored(qcFeaturesOf(surv), w)
-        .filter(col("b") === QcBuckets + 1) // bias row: one per doc
-        .filter(col("p") >= lit(0.5).cast(QcDec))
-        .select(col("doc_id"), col("p").cast("double").as("p"))
+      val gate = qcAdmission(surv, qcModelWeights(s, dir))
+        .filter(col("admitted")).select(col("doc_id"), col("p"))
       val adm = surv.join(gate, "doc_id")
         .select(col("doc_id"), col("text"), col("p"))
         .checkpointed()
@@ -1321,23 +1280,7 @@ object CurationQueries {
     // equality plus the ≥2-micro-batch discipline.
     q("q118_stream_score",
       "T6+X4+/LLM: streaming quality scoring via the persisted model (foreachBatch, stateless)",
-      {
-        s"""WITH ${qcFeatureCtesSql("documents", "")},
-           |  ${qcTrainCtesSql(withEval = false)},
-           |  batch AS (SELECT doc_id + 70000 AS doc_id,
-           |      concat(text, ' zq', CAST(doc_id % 11 AS VARCHAR)) AS text
-           |    FROM documents WHERE doc_id % 5 = 4),
-           |  ${qcFeatureCtesSql("batch", "b")},
-           |  bz AS (SELECT f.doc_id, SUM(f.x * w.w) AS z
-           |    FROM bfeat f JOIN w$QcRounds w USING (b) GROUP BY 1),
-           |  bp AS (SELECT doc_id,
-           |      CAST(ROUND(1 / (1 + EXP(-CAST(z AS DOUBLE))), 6) AS DECIMAL(18,6)) AS p
-           |    FROM bz)
-           |SELECT bp.doc_id, blab.y, CAST(p AS DOUBLE) AS p,
-           |  (p >= CAST(0.5 AS DECIMAL(18,6))) AS admitted
-           |FROM bp JOIN blab USING (doc_id)
-           |ORDER BY doc_id""".stripMargin
-      }) { (s, dir) =>
+      qcAppendScoreSql(4, 11)) { (s, dir) =>
       qcStreamDrain(s, dir, nFiles = 2)
     },
 
@@ -1381,27 +1324,10 @@ object CurationQueries {
              |  purged AS (SELECT doc_id, text FROM documents WHERE doc_id % 37 <> 0),
              |  ${qcFeatureCtesSql("purged", "r")},
              |  ${qcTrainCtesSql(withEval = false, src = "purged", pfx = "r")},
-             |  w_0 AS (
-             |    SELECT concat(regexp_replace(tok, '(.)', '\\1 ', 'g'), '_') AS w,
-             |           CAST(COUNT(*) AS BIGINT) AS cnt
-             |    FROM (SELECT unnest(${TextOps.tokensSql("text")}) AS tok FROM documents)
-             |    GROUP BY 1),
-             |  v_0 AS (
-             |    SELECT concat(regexp_replace(tok, '(.)', '\\1 ', 'g'), '_') AS w,
-             |           CAST(COUNT(*) AS BIGINT) AS cnt
-             |    FROM (SELECT unnest(${TextOps.tokensSql("text")}) AS tok FROM purged)
-             |    GROUP BY 1)""".stripMargin)
-        for (i <- 1 to B) {
-          chain.append(",\n").append(TextQueries.bpePairCte(i, s"w_${i - 1}"))
-          if (i < B)
-            chain.append(",\n").append(TextQueries.bpeApplyCte(i, s"w_${i - 1}"))
-        }
-        for (i <- 1 to B) {
-          chain.append(",\n").append(TextQueries.bpePairCte(i, s"v_${i - 1}", "p"))
-          if (i < B)
-            chain.append(",\n").append(TextQueries.bpeApplyCte(
-              i, s"v_${i - 1}", Seq("cnt"), out = s"v_$i", pfx = "p"))
-        }
+             |  ${TextQueries.bpeWordsCte("w_0", "documents", "  ")},
+             |  ${TextQueries.bpeWordsCte("v_0", "purged", "  ")}""".stripMargin)
+        chain.append(",\n").append(TextQueries.bpeTrainCtesSql())
+        chain.append(",\n").append(TextQueries.bpeTrainCtesSql("v", "p"))
         def rules(pfx: String) = (1 to B)
           .map(i => s"SELECT $i AS step, u1, u2 FROM ${pfx}best_$i")
           .mkString(" UNION ALL ")
@@ -1427,7 +1353,6 @@ object CurationQueries {
              |SELECT item, CAST(n AS BIGINT) AS n FROM audit ORDER BY item""".stripMargin)
         chain.toString
       }) { (s, dir) =>
-      import s.implicits._
       val root = graft.TempDirs.fresh("q125")
       def item(name: String, df: DataFrame): DataFrame =
         DedupQueries.auditItem(name, df) // shared with q122 — one audit-row shape
@@ -1458,10 +1383,7 @@ object CurationQueries {
       } {
         // 3. The qc model: same retrain discipline via the shared loop —
         // runs on THIS thread while the helper thread drives stages 1-2.
-        val (rw, _) = qcTrainOf(s, purged)
-        rw.toSeq.sortBy(_._1).map { case (b, v) => (b, v.toPlainString) }
-          .toDF("b", "w")
-          .repartition(1).write.parquet(s"$root/qc_model")
+        qcModelRows(s, qcTrainOf(s, purged)._1).write.parquet(s"$root/qc_model")
       }
       // Audits read the PUBLISHED artifacts both threads wrote.
       val vidx = Tables.read(s, graft.pipeline.VectorIndex.prepared(

@@ -35,24 +35,58 @@ import org.apache.spark.sql.functions._
   */
 object DedupQueries {
 
-  /** Documents ∪ deterministic planted copies: every `mod`-th doc again
+  /** One planted copy `(mod, shift, perturb)`: every `mod`-th doc again
     * under id+`shift`, with `perturb` applied to the text. */
-  private def withPlanted(base: DataFrame, mod: Int, shift: Int,
-                          perturb: Column => Column): DataFrame =
-    base.unionAll(
-      base.filter(col("doc_id") % mod === 0)
-        .select((col("doc_id") + shift).as("doc_id"),
-          perturb(col("text")).as("text")))
+  private[operators] type Plant = (Int, Int, Column => Column)
 
-  private def plantedSql(mod: Int, shift: Int, perturbSql: String): String =
+  /** Documents ∪ deterministic planted copies, one union branch per
+    * [[Plant]], each drawn from `base` (never from an earlier copy). */
+  private[operators] def withPlanted(base: DataFrame, plants: Plant*): DataFrame =
+    plants.foldLeft(base) { case (u, (mod, shift, perturb)) =>
+      u.unionAll(base.filter(col("doc_id") % mod === 0)
+        .select((col("doc_id") + shift).as("doc_id"), perturb(col("text")).as("text")))
+    }
+
+  /** DuckDB mirror of a one-plant [[withPlanted]]; `pad` indents the
+    * continuation lines. */
+  private[operators] def plantedSql(mod: Int, shift: Int, perturbSql: String,
+      pad: String = ""): String =
     s"""SELECT doc_id, text FROM documents
-       |UNION ALL
-       |SELECT doc_id + $shift, $perturbSql FROM documents WHERE doc_id % $mod = 0""".stripMargin
+       |${pad}UNION ALL
+       |${pad}SELECT doc_id + $shift, $perturbSql FROM documents WHERE doc_id % $mod = 0""".stripMargin
 
   /** Drop the first word — a near-duplicate, not an exact one. */
-  private val dropFirstTok: Column => Column =
+  private[operators] val dropFirstTok: Column => Column =
     t => regexp_replace(t, "^[a-z0-9]+ ", "")
-  private val dropFirstTokSql = "regexp_replace(text, '^[a-z0-9]+ ', '')"
+  private[operators] val dropFirstTokSql = "regexp_replace(text, '^[a-z0-9]+ ', '')"
+
+  /** q59/q86's two-level drop-token chain: every `mod1`-th doc minus its
+    * first token (id+40000), every `mod2`-th minus two (id+80000) — the
+    * {A, B, C} chains only the transitive closure groups. */
+  private def dropChain(mod1: Int, mod2: Int): Seq[Plant] =
+    Seq((mod1, 40000, dropFirstTok), (mod2, 80000, dropFirstTok.andThen(dropFirstTok)))
+
+  /** DuckDB mirror of [[dropChain]]'s union, then the blocking edges
+    * `e` and [[componentsCtesSql]] over them (needs `WITH RECURSIVE`). */
+  private def dropChainClustersSql(mod1: Int, mod2: Int): String = {
+    val pad = " " * 8
+    s"""u AS (${plantedSql(mod1, 40000, dropFirstTokSql, pad)}
+       |${pad}UNION ALL
+       |${pad}SELECT doc_id + 80000, ${dropFirstTokSql.replace("text", dropFirstTokSql)}
+       |${pad}FROM documents WHERE doc_id % $mod2 = 0),
+       |  keys AS (SELECT doc_id, unnest([md5(text), md5($dropFirstTokSql)]) AS k FROM u),
+       |  e AS (SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
+       |        FROM keys a JOIN keys b USING (k) WHERE a.doc_id <> b.doc_id),
+       |  $componentsCtesSql""".stripMargin
+  }
+
+  /** [[dropChain]]'s union of `base` and its [[connectedComponents]]
+    * labels over the [[blockingEdges]]: `(u, labels)`. */
+  private def dropChainClusters(base: DataFrame, mod1: Int, mod2: Int,
+      tag: String): (DataFrame, DataFrame) = {
+    val u = withPlanted(base, dropChain(mod1, mod2): _*)
+    (u, connectedComponents(blockingEdges(u), tag = tag))
+  }
 
   /** Pre-sort frames for the heavy dedup queries: EXACTLY each registered
     * query's frame minus the trailing `rangeSorted` materialize (whose
@@ -70,7 +104,7 @@ object DedupQueries {
     // it still satisfies the downstream groupBy(doc_id) distribution,
     // so no second exchange appears.
     def planted(mod: Int, shift: Int)(base: DataFrame): DataFrame =
-      withPlanted(base, mod, shift, dropFirstTok)
+      withPlanted(base, (mod, shift, dropFirstTok))
         .repartition(base.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
     Map(
       "q28_minhash_pairs" -> (b => minhashPairs(planted(10, 10000)(b))),
@@ -79,9 +113,7 @@ object DedupQueries {
         jaccardSelfJoin(planted(11, 50000)(b), JaccardThresh, JaccardDfCap)),
       "q58_contamination" -> (b => {
         val evalDocs = b.filter(col("doc_id") % 50 === 0)
-        val train = b.unionAll(
-          evalDocs.select((col("doc_id") + 40000).as("doc_id"),
-            dropFirstTok(col("text")).as("text")))
+        val train = withPlanted(b, (50, 40000, dropFirstTok))
         // Distinct word-8-grams on the eval side; RAW gram rows on the
         // train side — the engine's eval-gram semi-join dedups only the
         // matching slice, so the full train stream never pays a
@@ -96,12 +128,8 @@ object DedupQueries {
           .select(col("doc_id").as("train_id"), col("t").as("g"))
         containmentJoin(eg, tg, ContamThresh)
       }),
-      "q84_bloom_decontam" -> (b => {
-        val evalDocs = b.filter(col("doc_id") % 40 === 0)
-        bloomDecontamPairs(evalDocs, b.unionAll(
-          evalDocs.select((col("doc_id") + 60000).as("doc_id"),
-            dropFirstTok(col("text")).as("text"))))
-      }),
+      "q84_bloom_decontam" -> (b => bloomDecontamPairs(
+        b.filter(col("doc_id") % 40 === 0), withPlanted(b, (40, 60000, dropFirstTok)))),
       "q95_dup_spans" -> (b => dupSpans(planted(7, 70000)(b), DupSpanW)),
       "q98_novelty_score" -> (b => noveltyScores(planted(9, 45000)(b))))
   }
@@ -194,9 +222,37 @@ object DedupQueries {
        |  $out AS (SELECT $carry doc_id, ${simhashSql("hs")} AS sig FROM ${out}_hs)""".stripMargin
   }
 
+  /** q58/q84's eval set `ev` (every `mod`-th doc) and train corpus
+    * `train`: the corpus plus each eval doc minus its first token at
+    * id+`shift`. */
+  private def decontamCorpusSql(mod: Int, shift: Int): String =
+    s"""ev AS (SELECT doc_id, text FROM documents WHERE doc_id % $mod = 0),
+       |     train AS (SELECT doc_id, text FROM documents
+       |               UNION ALL
+       |               SELECT doc_id + $shift, $dropFirstTokSql FROM documents
+       |               WHERE doc_id % $mod = 0)""".stripMargin
+
+  /** The containment tail of q58/q84's oracles over gram rows
+    * `eg(eval_id, key)` and `tg(train_id, key)`: shared-gram counts per
+    * (eval, train) pair, eval totals, and the pairs at containment
+    * ≥ [[ContamThresh]]. */
+  private def containmentTailSql(key: String): String =
+    s"""shared AS (SELECT eval_id, train_id, COUNT(*) AS n_shared
+       |                FROM eg JOIN tg USING ($key)
+       |                WHERE eval_id <> train_id
+       |                GROUP BY 1, 2),
+       |     totals AS (SELECT eval_id, COUNT(*) AS n_eval FROM eg GROUP BY 1)
+       |SELECT s.eval_id, s.train_id, s.n_shared,
+       |       ROUND(CAST(s.n_shared AS DOUBLE) / t.n_eval, 6) AS containment
+       |FROM shared s JOIN totals t USING (eval_id)
+       |WHERE ROUND(CAST(s.n_shared AS DOUBLE) / t.n_eval, 6) >= $ContamThresh
+       |ORDER BY eval_id, train_id""".stripMargin
+
   private val JaccardThresh = 0.6
   private val DupSpanW = 8 // q95 rolling-window length, in tokens
-  private val HammingThresh = 10
+  /** SimHash near-dup verify bound, in bits (q32, and the append
+    * triage of q68/q120/q122 through [[graft.pipeline.DedupIndex]]). */
+  private[graft] val HammingThresh = 10
   private val ContamThresh = 0.5
 
   /** q81's df cap: posting lists longer than this never explode into
@@ -758,6 +814,40 @@ object DedupQueries {
       .select(col("id"), coalesce(col("root"), col("id")).as("lbl"))
   }
 
+  /** DuckDB mirror of [[connectedComponents]] over the edge relation
+    * `e(a, b)` (both orientations present): the recursive reachability
+    * walk, then `comp(id, cluster_id)`, cluster_id = the component
+    * minimum. Needs `WITH RECURSIVE`; q59, q86 and q114 read it. */
+  private[operators] def componentsCtesSql: String =
+    """walk(id, r) AS (
+      |    SELECT DISTINCT a, a FROM e
+      |    UNION
+      |    SELECT e.b, w.r FROM walk w JOIN e ON e.a = w.id),
+      |  comp AS (SELECT id, MIN(r) AS cluster_id FROM walk GROUP BY id)""".stripMargin
+
+  /** The canonical survivor of each cluster of `labels(id, lbl)`: the
+    * longest text of `u(doc_id, text)`, then the lowest id — an
+    * integer-deterministic rule, so every engine and every retry picks
+    * the same winner. One row per cluster: `(lbl, id, n_chars,
+    * n_members, rnk)`; a window over cluster-sized partitions. */
+  private[operators] def survivors(labels: DataFrame, u: DataFrame): DataFrame = {
+    val w = Window.partitionBy("lbl")
+    labels
+      .join(u.select(col("doc_id").as("id"), length(col("text")).cast("long").as("n_chars")), "id")
+      .withColumn("rnk", row_number().over(w.orderBy(col("n_chars").desc, col("id").asc)))
+      .withColumn("n_members", count(lit(1)).over(w))
+      .filter(col("rnk") === 1)
+  }
+
+  /** DuckDB mirror of [[survivors]] over `comp` and `u`: `ranked`, whose
+    * `rnk = 1` rows are the survivors. */
+  private[operators] def survivorRankSql: String =
+    """ranked AS (SELECT c.cluster_id, c.id, len(u.text) AS n_chars,
+      |               ROW_NUMBER() OVER (PARTITION BY c.cluster_id
+      |                 ORDER BY len(u.text) DESC, c.id ASC) AS rnk,
+      |               COUNT(*) OVER (PARTITION BY c.cluster_id) AS n_members
+      |             FROM comp c JOIN u ON u.doc_id = c.id)""".stripMargin
+
   /** Universal-hash permutation constants for MinHash: minhash_j =
     * (a_j·h31 + b_j) mod p over h31 = hash60(t) & (2^31−1). One md5 per
     * shingle total (not per seed) — the k permutations are integer ops.
@@ -808,6 +898,21 @@ object DedupQueries {
           .as("text"))
   }
 
+  /** The SimHash band probe of the append-triage oracles (q68/q120,
+    * q122) over `sg(side, doc_id, sig)`: `bands`, then `nearm(doc_id,
+    * near_n)` — each 'new' doc's count of 'idx' docs sharing a band
+    * within [[HammingThresh]] bits. */
+  private def nearProbeSql: String =
+    s"""bands AS (SELECT side, doc_id, sig, b.band_id,
+       |              (sig >> (b.band_id * 15)) & 32767 AS band_val
+       |            FROM sg, (SELECT unnest(range(0, 4)) AS band_id) b),
+       |  nearm AS (SELECT n.doc_id, COUNT(DISTINCT i.doc_id) AS near_n
+       |            FROM bands n JOIN bands i
+       |              ON n.band_id = i.band_id AND n.band_val = i.band_val
+       |            WHERE n.side = 'new' AND i.side = 'idx'
+       |              AND CAST(bit_count(xor(n.sig, i.sig)) AS BIGINT) <= $HammingThresh
+       |            GROUP BY 1)""".stripMargin
+
   /** q68's oracle, shared VERBATIM by q120 (the same triage drained as
     * an AvailableNow stream): stream ≡ batch is q120's hash gate. */
   private def appendTriageOracleSql: String = {
@@ -824,15 +929,7 @@ object DedupQueries {
        |  u AS (SELECT 'idx' AS side, doc_id, text FROM documents
        |        UNION ALL SELECT 'new', doc_id, text FROM batch),
        |  ${simhashCtesSql("u", "side, ", "sg")},
-       |  bands AS (SELECT side, doc_id, sig, b.band_id,
-       |              (sig >> (b.band_id * 15)) & 32767 AS band_val
-       |            FROM sg, (SELECT unnest(range(0, 4)) AS band_id) b),
-       |  nearm AS (SELECT n.doc_id, COUNT(DISTINCT i.doc_id) AS near_n
-       |            FROM bands n JOIN bands i
-       |              ON n.band_id = i.band_id AND n.band_val = i.band_val
-       |            WHERE n.side = 'new' AND i.side = 'idx'
-       |              AND CAST(bit_count(xor(n.sig, i.sig)) AS BIGINT) <= $HammingThresh
-       |            GROUP BY 1)
+       |  $nearProbeSql
        |SELECT b.doc_id,
        |  CASE WHEN COALESCE(ex.exact_n, 0) > 0 THEN 'exact_dup'
        |       WHEN COALESCE(nm.near_n, 0) > 0 THEN 'near_dup'
@@ -857,7 +954,7 @@ object DedupQueries {
          |       COUNT(*) AS n_copies
          |FROM u GROUP BY 1 ORDER BY keep_id""".stripMargin) { (s, dir) =>
       val base = Tables.load(s, dir, "documents").select("doc_id", "text")
-      withPlanted(base, 7, 20000, identity)
+      withPlanted(base, (7, 20000, identity))
         .groupBy(md5(col("text")).as("content_hash"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
         .rangeSorted("keep_id") // md5 groupBy child runs once, not twice
@@ -951,23 +1048,10 @@ object DedupQueries {
     // 100 TB the join key becomes the n-gram HASH; same plan shape.
     q("q58_contamination",
       "X3: train/eval 8-gram containment (decontamination sweep)",
-      s"""WITH ev AS (SELECT doc_id, text FROM documents WHERE doc_id % 50 = 0),
-         |     train AS (SELECT doc_id, text FROM documents
-         |               UNION ALL
-         |               SELECT doc_id + 40000, $dropFirstTokSql FROM documents
-         |               WHERE doc_id % 50 = 0),
+      s"""WITH ${decontamCorpusSql(50, 40000)},
          |     eg AS (SELECT doc_id AS eval_id, unnest(${ngramsSql(TextOps.tokensSql("text"), 8)}) AS t FROM ev),
          |     tg AS (SELECT doc_id AS train_id, unnest(${ngramsSql(TextOps.tokensSql("text"), 8)}) AS t FROM train),
-         |     shared AS (SELECT eval_id, train_id, COUNT(*) AS n_shared
-         |                FROM eg JOIN tg USING (t)
-         |                WHERE eval_id <> train_id
-         |                GROUP BY 1, 2),
-         |     totals AS (SELECT eval_id, COUNT(*) AS n_eval FROM eg GROUP BY 1)
-         |SELECT s.eval_id, s.train_id, s.n_shared,
-         |       ROUND(CAST(s.n_shared AS DOUBLE) / t.n_eval, 6) AS containment
-         |FROM shared s JOIN totals t USING (eval_id)
-         |WHERE ROUND(CAST(s.n_shared AS DOUBLE) / t.n_eval, 6) >= $ContamThresh
-         |ORDER BY eval_id, train_id""".stripMargin) { (s, dir) =>
+         |     ${containmentTailSql("t")}""".stripMargin) { (s, dir) =>
       val base = Tables.load(s, dir, "documents").select("doc_id", "text")
       preSortFrames("q58_contamination")(base)
         .rangeSorted("eval_id", "train_id") // containment child runs once
@@ -991,34 +1075,13 @@ object DedupQueries {
     q("q59_dup_clusters",
       "X3: multi-key blocking + connected-components dup clusters",
       s"""WITH RECURSIVE
-         |  u AS (SELECT doc_id, text FROM documents
-         |        UNION ALL
-         |        SELECT doc_id + 40000, $dropFirstTokSql FROM documents WHERE doc_id % 25 = 0
-         |        UNION ALL
-         |        SELECT doc_id + 80000, ${dropFirstTokSql.replace("text", dropFirstTokSql)}
-         |        FROM documents WHERE doc_id % 50 = 0),
-         |  keys AS (SELECT doc_id, unnest([md5(text), md5($dropFirstTokSql)]) AS k FROM u),
-         |  e AS (SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-         |        FROM keys a JOIN keys b USING (k) WHERE a.doc_id <> b.doc_id),
-         |  walk(id, r) AS (
-         |    SELECT DISTINCT a, a FROM e
-         |    UNION
-         |    SELECT e.b, w.r FROM walk w JOIN e ON e.a = w.id),
-         |  comp AS (SELECT id, MIN(r) AS cluster_id FROM walk GROUP BY id),
+         |  ${dropChainClustersSql(25, 50)},
          |  sizes AS (SELECT cluster_id, COUNT(*) AS n_members FROM comp GROUP BY 1)
          |SELECT c.cluster_id, c.id AS doc_id, s.n_members
          |FROM comp c JOIN sizes s USING (cluster_id)
          |ORDER BY cluster_id, doc_id""".stripMargin) { (s, dir) =>
       val base = Tables.load(s, dir, "documents").select("doc_id", "text")
-      val u = base
-        .unionAll(base.filter(col("doc_id") % 25 === 0)
-          .select((col("doc_id") + 40000).as("doc_id"),
-            dropFirstTok(col("text")).as("text")))
-        .unionAll(base.filter(col("doc_id") % 50 === 0)
-          .select((col("doc_id") + 80000).as("doc_id"),
-            dropFirstTok(dropFirstTok(col("text"))).as("text")))
-      val edges = blockingEdges(u)
-      val labels = connectedComponents(edges, tag = "q59")
+      val (_, labels) = dropChainClusters(base, 25, 50, "q59")
       val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("n_members"))
       labels.join(sizes, "lbl")
         .select(col("lbl").as("cluster_id"), col("id").as("doc_id"),
@@ -1115,15 +1178,7 @@ object DedupQueries {
            |         JOIN (SELECT md5(text) AS h FROM u WHERE side = 'idx') ih USING (h)
            |         GROUP BY 1),
            |  ${simhashCtesSql("u", "side, ", "sg")},
-           |  bands AS (SELECT side, doc_id, sig, b.band_id,
-           |              (sig >> (b.band_id * 15)) & 32767 AS band_val
-           |            FROM sg, (SELECT unnest(range(0, 4)) AS band_id) b),
-           |  nearm AS (SELECT n.doc_id, COUNT(DISTINCT i.doc_id) AS near_n
-           |            FROM bands n JOIN bands i
-           |              ON n.band_id = i.band_id AND n.band_val = i.band_val
-           |            WHERE n.side = 'new' AND i.side = 'idx'
-           |              AND CAST(bit_count(xor(n.sig, i.sig)) AS BIGINT) <= $HammingThresh
-           |            GROUP BY 1),
+           |  $nearProbeSql,
            |  verd AS (SELECT b.doc_id,
            |             CASE WHEN COALESCE(ex.exact_n, 0) > 0 THEN 'exact_dup'
            |                  WHEN COALESCE(nm.near_n, 0) > 0 THEN 'near_dup'
@@ -1228,11 +1283,7 @@ object DedupQueries {
     // — which is exactly what the (bloom-free) oracle checks.
     q("q84_bloom_decontam",
       "X3: bloom-prefiltered 6-gram containment decontamination (exact result)",
-      s"""WITH ev AS (SELECT doc_id, text FROM documents WHERE doc_id % 40 = 0),
-         |     train AS (SELECT doc_id, text FROM documents
-         |               UNION ALL
-         |               SELECT doc_id + 60000, $dropFirstTokSql FROM documents
-         |               WHERE doc_id % 40 = 0),
+      s"""WITH ${decontamCorpusSql(40, 60000)},
          |     eg AS (SELECT doc_id AS eval_id,
          |              unnest(list_distinct(list_transform(
          |                ${ngramsSql(TextOps.tokensSql("text"), 6)}, t -> ${TextOps.hash60Sql("t")}))) AS h
@@ -1241,16 +1292,7 @@ object DedupQueries {
          |              unnest(list_distinct(list_transform(
          |                ${ngramsSql(TextOps.tokensSql("text"), 6)}, t -> ${TextOps.hash60Sql("t")}))) AS h
          |            FROM train),
-         |     shared AS (SELECT eval_id, train_id, COUNT(*) AS n_shared
-         |                FROM eg JOIN tg USING (h)
-         |                WHERE eval_id <> train_id
-         |                GROUP BY 1, 2),
-         |     totals AS (SELECT eval_id, COUNT(*) AS n_eval FROM eg GROUP BY 1)
-         |SELECT s.eval_id, s.train_id, s.n_shared,
-         |       ROUND(CAST(s.n_shared AS DOUBLE) / t.n_eval, 6) AS containment
-         |FROM shared s JOIN totals t USING (eval_id)
-         |WHERE ROUND(CAST(s.n_shared AS DOUBLE) / t.n_eval, 6) >= $ContamThresh
-         |ORDER BY eval_id, train_id""".stripMargin) { (s, dir) =>
+         |     ${containmentTailSql("h")}""".stripMargin) { (s, dir) =>
       val base = Tables.load(s, dir, "documents").select("doc_id", "text")
       preSortFrames("q84_bloom_decontam")(base)
         .rangeSorted("eval_id", "train_id") // containment child runs once
@@ -1269,45 +1311,14 @@ object DedupQueries {
     q("q86_canonical_pick",
       "X3: canonical survivor per dup cluster (longest text, lowest id)",
       s"""WITH RECURSIVE
-         |  u AS (SELECT doc_id, text FROM documents
-         |        UNION ALL
-         |        SELECT doc_id + 40000, $dropFirstTokSql FROM documents WHERE doc_id % 20 = 0
-         |        UNION ALL
-         |        SELECT doc_id + 80000, ${dropFirstTokSql.replace("text", dropFirstTokSql)}
-         |        FROM documents WHERE doc_id % 60 = 0),
-         |  keys AS (SELECT doc_id, unnest([md5(text), md5($dropFirstTokSql)]) AS k FROM u),
-         |  e AS (SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
-         |        FROM keys a JOIN keys b USING (k) WHERE a.doc_id <> b.doc_id),
-         |  walk(id, r) AS (
-         |    SELECT DISTINCT a, a FROM e
-         |    UNION
-         |    SELECT e.b, w.r FROM walk w JOIN e ON e.a = w.id),
-         |  comp AS (SELECT id, MIN(r) AS cluster_id FROM walk GROUP BY id),
-         |  ranked AS (SELECT c.cluster_id, c.id, len(u.text) AS n_chars,
-         |               ROW_NUMBER() OVER (PARTITION BY c.cluster_id
-         |                 ORDER BY len(u.text) DESC, c.id ASC) AS rnk,
-         |               COUNT(*) OVER (PARTITION BY c.cluster_id) AS n_members
-         |             FROM comp c JOIN u ON u.doc_id = c.id)
+         |  ${dropChainClustersSql(20, 60)},
+         |  $survivorRankSql
          |SELECT cluster_id, id AS keep_id, CAST(n_chars AS BIGINT) AS keep_chars,
          |       n_members
          |FROM ranked WHERE rnk = 1 ORDER BY cluster_id""".stripMargin) { (s, dir) =>
       val base = Tables.load(s, dir, "documents").select("doc_id", "text")
-      val u = base
-        .unionAll(base.filter(col("doc_id") % 20 === 0)
-          .select((col("doc_id") + 40000).as("doc_id"),
-            dropFirstTok(col("text")).as("text")))
-        .unionAll(base.filter(col("doc_id") % 60 === 0)
-          .select((col("doc_id") + 80000).as("doc_id"),
-            dropFirstTok(dropFirstTok(col("text"))).as("text")))
-      val labels = connectedComponents(blockingEdges(u), tag = "q86")
-      val withLen = labels
-        .join(u.select(col("doc_id").as("id"), length(col("text")).cast("long").as("n_chars")), "id")
-      val w = Window.partitionBy("lbl")
-      val ranked = withLen
-        .withColumn("rnk", row_number().over(
-          w.orderBy(col("n_chars").desc, col("id").asc)))
-        .withColumn("n_members", count(lit(1)).over(w))
-      ranked.filter(col("rnk") === 1)
+      val (u, labels) = dropChainClusters(base, 20, 60, "q86")
+      survivors(labels, u)
         .select(col("lbl").as("cluster_id"), col("id").as("keep_id"),
           col("n_chars").as("keep_chars"), col("n_members"))
         .orderBy("cluster_id")

@@ -5,7 +5,6 @@ import graft.Materialize.CheckpointOps
 import graft.NamedQuery.{q, PresentationOps}
 import graft.pipeline.MediaOps
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column queries (north-star brief: binary payloads with
@@ -34,13 +33,21 @@ object MediaQueries {
     * shared with PlanShapeSpec so its law reads the frame the bench
     * actually executes, not a union-less stand-in. */
   private[graft] def phashPlantedUnion(base: DataFrame): DataFrame =
-    base
-      .unionAll(base.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 80000).as("doc_id"), col("text")))
-      .unionAll(base.filter(col("doc_id") % 6 === 0)
-        .select((col("doc_id") + 90000).as("doc_id"),
-          concat(col("text").substr(lit(1), length(col("text")) - 1), lit("q"))
-            .as("text")))
+    DedupQueries.withPlanted(base, phashPlants: _*)
+
+  private val phashPlants: Seq[DedupQueries.Plant] = Seq(
+    (10, 80000, identity),
+    (6, 90000, t => concat(t.substr(lit(1), length(t) - 1), lit("q"))))
+
+  /** DuckDB mirror of [[phashPlants]]: the two UNION ALL branches q104
+    * and q114 append to their base relation, continuation lines
+    * indented `pad`. */
+  private def phashPlantsSql(pad: String): String =
+    s"""UNION ALL
+       |${pad}SELECT doc_id + 80000, text FROM documents WHERE doc_id % 10 = 0
+       |${pad}UNION ALL
+       |${pad}SELECT doc_id + 90000, concat(substring(text, 1, length(text) - 1), 'q')
+       |${pad}FROM documents WHERE doc_id % 6 = 0""".stripMargin
 
   /** q104's banded perceptual-hash near-dup join, pre-sort
     * (PlanShapeSpec pins no-cross-product here — the registered query's
@@ -235,11 +242,7 @@ object MediaQueries {
       {
         s"""WITH u AS (
            |  SELECT doc_id AS media_id, text FROM documents
-           |  UNION ALL
-           |  SELECT doc_id + 80000, text FROM documents WHERE doc_id % 10 = 0
-           |  UNION ALL
-           |  SELECT doc_id + 90000, concat(substring(text, 1, length(text) - 1), 'q')
-           |  FROM documents WHERE doc_id % 6 = 0),
+           |  ${phashPlantsSql("  ")}),
            |${phashOracleCtes("u")}
            |SELECT a.media_id AS id_a, b.media_id AS id_b,
            |  CAST(bit_count(xor(a.phash, b.phash)) AS BIGINT) AS hamming
@@ -371,15 +374,11 @@ object MediaQueries {
       s"""WITH RECURSIVE
          |  u AS (SELECT doc_id, text FROM documents
          |        UNION ALL
-         |        SELECT doc_id + 40000, regexp_replace(text, '^[a-z0-9]+ ', '')
+         |        SELECT doc_id + 40000, ${DedupQueries.dropFirstTokSql}
          |        FROM documents WHERE doc_id % 25 = 0
-         |        UNION ALL
-         |        SELECT doc_id + 80000, text FROM documents WHERE doc_id % 10 = 0
-         |        UNION ALL
-         |        SELECT doc_id + 90000, concat(substring(text, 1, length(text) - 1), 'q')
-         |        FROM documents WHERE doc_id % 6 = 0),
+         |        ${phashPlantsSql(" " * 8)}),
          |  keys AS (SELECT doc_id, unnest([md5(text),
-         |             md5(regexp_replace(text, '^[a-z0-9]+ ', ''))]) AS k FROM u),
+         |             md5(${DedupQueries.dropFirstTokSql})]) AS k FROM u),
          |  te AS (SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
          |         FROM keys a JOIN keys b USING (k) WHERE a.doc_id < b.doc_id),
          |  mu AS (SELECT doc_id AS media_id, text FROM u),
@@ -389,16 +388,8 @@ object MediaQueries {
          |         WHERE bit_count(xor(a.phash, b.phash)) <= $PHashHamming),
          |  e0 AS (SELECT a, b FROM te UNION SELECT a, b FROM me),
          |  e AS (SELECT a, b FROM e0 UNION SELECT b, a FROM e0),
-         |  walk(id, r) AS (
-         |    SELECT DISTINCT a, a FROM e
-         |    UNION
-         |    SELECT e.b, w.r FROM walk w JOIN e ON e.a = w.id),
-         |  comp AS (SELECT id, MIN(r) AS cluster_id FROM walk GROUP BY id),
-         |  ranked AS (SELECT c.cluster_id, c.id, len(u.text) AS n_chars,
-         |               ROW_NUMBER() OVER (PARTITION BY c.cluster_id
-         |                 ORDER BY len(u.text) DESC, c.id ASC) AS rnk,
-         |               COUNT(*) OVER (PARTITION BY c.cluster_id) AS n_members
-         |             FROM comp c JOIN u ON u.doc_id = c.id),
+         |  ${DedupQueries.componentsCtesSql},
+         |  ${DedupQueries.survivorRankSql},
          |  tec AS (SELECT c.cluster_id, COUNT(*) AS n_text_edges
          |          FROM te JOIN comp c ON c.id = te.a GROUP BY 1),
          |  mec AS (SELECT c.cluster_id, COUNT(*) AS n_media_edges
@@ -413,16 +404,7 @@ object MediaQueries {
          |LEFT JOIN mec m USING (cluster_id)
          |WHERE rnk = 1 ORDER BY cluster_id""".stripMargin) { (s, dir) =>
       val base = Tables.load(s, dir, "documents").select("doc_id", "text")
-      val dropTok = regexp_replace(col("text"), "^[a-z0-9]+ ", "")
-      val u = base
-        .unionAll(base.filter(col("doc_id") % 25 === 0)
-          .select((col("doc_id") + 40000).as("doc_id"), dropTok.as("text")))
-        .unionAll(base.filter(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + 80000).as("doc_id"), col("text")))
-        .unionAll(base.filter(col("doc_id") % 6 === 0)
-          .select((col("doc_id") + 90000).as("doc_id"),
-            concat(col("text").substr(lit(1), length(col("text")) - 1), lit("q"))
-              .as("text")))
+      val u = DedupQueries.withPlanted(base, (25, 40000, DedupQueries.dropFirstTok) +: phashPlants: _*)
         .checkpointed(false) // text edges, media edges, and the length join
       val te = DedupQueries.blockingEdges(u) // symmetric, distinct, checkpointed
       // EAGER: the CC rounds (via the union below) and the census both
@@ -446,15 +428,7 @@ object MediaQueries {
           .groupBy(col("lbl")).agg(count(lit(1)).as(cname))
       val tec = census(te.filter(col("a") < col("b")), "n_text_edges")
       val mec = census(me, "n_media_edges")
-      val withLen = labels.join(
-        u.select(col("doc_id").as("id"),
-          length(col("text")).cast("long").as("n_chars")), "id")
-      val w = Window.partitionBy("lbl")
-      val ranked = withLen
-        .withColumn("rnk", row_number().over(
-          w.orderBy(col("n_chars").desc, col("id").asc)))
-        .withColumn("n_members", count(lit(1)).over(w))
-      ranked.filter(col("rnk") === 1)
+      DedupQueries.survivors(labels, u)
         .join(tec, Seq("lbl"), "left_outer")
         .join(mec, Seq("lbl"), "left_outer")
         .select(col("lbl").as("cluster_id"), col("id").as("keep_id"),

@@ -30,11 +30,8 @@ import org.apache.spark.sql.functions._
   */
 object ReleaseQueries {
 
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "documents")
-
-  /** Keep-rate denominator: thresholds live in [0, 2^20]. */
-  private val USize = 1048576L
+  import TextQueries.docs
+  import CurationQueries.USize // keep-rate denominator: thresholds live in [0, 2^20]
 
   /** q130/q132's shard count. */
   private val NShards = 32L

@@ -159,6 +159,17 @@ object SimilarityQueries {
     sub.filter(col("vec_id") < PqK)
       .select(col("m"), col("vec_id").as("code"), col("sv").as("cv"))
 
+  /** DuckDB mirror of [[pqSplit]] and [[pqCodebook]] over the corpus:
+    * `es`, `sub(vec_id, m, sv)` and `cents(m, code, cv)`. */
+  private def pqCodebookCtesSql: String = {
+    val S = Embedder.Dim / PqM
+    s"""$esCteSql,
+       |  sub AS (SELECT vec_id, m.m,
+       |            list_slice(ev, m.m * $S + 1, m.m * $S + $S) AS sv
+       |          FROM es CROSS JOIN (SELECT unnest(range(0, $PqM)) AS m) m),
+       |  cents AS (SELECT m, vec_id AS code, sv AS cv FROM sub WHERE vec_id < $PqK)""".stripMargin
+  }
+
   /** Argmin code assignment with the cross-engine (d, code) tie-break;
     * keeps the residual distance d for the q88 output. */
   private def pqAssign(sub: DataFrame, cents: DataFrame): DataFrame =
@@ -491,8 +502,9 @@ object SimilarityQueries {
   /** The seed-centroid body q113/q119 build on; q121 swaps in the
     * Lloyd-trained frame ([[trainedCentsBodySql]]) — the layout is
     * unchanged, which is the whole point of the composition. */
-  private def seedCentsBodySql =
-    s"SELECT vec_id AS cell_id, ev AS cv FROM es WHERE vec_id < $IvfCells"
+  private def seedCentsBodySql: String = seedCentsBodySql(IvfCells)
+  private def seedCentsBodySql(k: Int): String =
+    s"SELECT vec_id AS cell_id, ev AS cv FROM es WHERE vec_id < $k"
 
   private def trainedCentsBodySql = s"SELECT cell_id, cv FROM kcents$KmTrainedUpdates"
 
@@ -1019,7 +1031,7 @@ object SimilarityQueries {
       "X1/X2/F14: brute-force cosine top-k via CollectTopK partial agg",
       s"""WITH qs AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
          |            FROM embeddings WHERE vec_id < $NQueries),
-         |     es AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
+         |     $esCteSql,
          |     scored AS (SELECT query_id, vec_id, $cosineSql AS sim FROM es, qs)
          |SELECT query_id, vec_id, sim, rn FROM (
          |  SELECT query_id, vec_id, sim,
@@ -1080,8 +1092,8 @@ object SimilarityQueries {
     // IvfProbes partitions, not the corpus.
     q("q42_ivf_knn",
       "X2: IVF coarse-quantizer ANN — argmin cell assign, nprobe=2, top-k",
-      s"""WITH es AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-         |     cents AS (SELECT vec_id AS cell_id, ev AS cv FROM es WHERE vec_id < $IvfCells),
+      s"""WITH $esCteSql,
+         |     cents AS ($seedCentsBodySql),
          |     assign AS (SELECT vec_id, cell_id FROM (
          |       SELECT es.vec_id, cents.cell_id,
          |         ROW_NUMBER() OVER (PARTITION BY es.vec_id ORDER BY
@@ -1299,8 +1311,8 @@ object SimilarityQueries {
     // centroid movement and inertia are partitioning-invariant.
     q("q65_kmeans_step",
       "X2: one Lloyd k-means iteration (assign + exact recompute)",
-      s"""WITH es AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-         |  cents AS (SELECT vec_id AS cell_id, ev AS cv FROM es WHERE vec_id < $IvfCells),
+      s"""WITH $esCteSql,
+         |  cents AS ($seedCentsBodySql),
          |  assign AS (SELECT vec_id, cell_id, d FROM (
          |    SELECT es.vec_id, cents.cell_id, ROUND(list_distance(ev, cv), 6) AS d,
          |      ROW_NUMBER() OVER (PARTITION BY es.vec_id ORDER BY
@@ -1357,7 +1369,7 @@ object SimilarityQueries {
     // are rounded before the exact-decimal per-vector sum.
     q("q67_sq8_quantize",
       "X2: SQ8 scalar quantization + reconstruction-error audit",
-      s"""WITH es AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
+      s"""WITH $esCteSql,
          |  dims AS (SELECT unnest(range(1, ${Embedder.Dim + 1})) AS dim),
          |  el AS (SELECT vec_id, dm.dim, ev[dm.dim] AS val FROM es CROSS JOIN dims dm),
          |  cb AS (SELECT dim, MIN(val) AS lo, MAX(val) AS hi FROM el GROUP BY 1),
@@ -1457,12 +1469,7 @@ object SimilarityQueries {
     q("q88_pq_encode",
       "X2: product-quantization encode (M=4 subspaces, K=4 codes, argmin assign)",
       {
-        val S = Embedder.Dim / PqM
-        s"""WITH es AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-           |  sub AS (SELECT vec_id, m.m,
-           |            list_slice(ev, m.m * $S + 1, m.m * $S + $S) AS sv
-           |          FROM es CROSS JOIN (SELECT unnest(range(0, $PqM)) AS m) m),
-           |  cents AS (SELECT m, vec_id AS code, sv AS cv FROM sub WHERE vec_id < $PqK),
+        s"""WITH $pqCodebookCtesSql,
            |  assign AS (SELECT vec_id, m, code, d FROM (
            |    SELECT s.vec_id, s.m, c.code,
            |      ROUND(list_distance(s.sv, c.cv), 6) AS d,
@@ -1493,11 +1500,7 @@ object SimilarityQueries {
       "X2: PQ asymmetric-distance kNN + recall@k vs exact (distance-table lookup)",
       {
         val S = Embedder.Dim / PqM
-        s"""WITH es AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-           |  sub AS (SELECT vec_id, m.m,
-           |            list_slice(ev, m.m * $S + 1, m.m * $S + $S) AS sv
-           |          FROM es CROSS JOIN (SELECT unnest(range(0, $PqM)) AS m) m),
-           |  cents AS (SELECT m, vec_id AS code, sv AS cv FROM sub WHERE vec_id < $PqK),
+        s"""WITH $pqCodebookCtesSql,
            |  assign AS (SELECT vec_id, m, code FROM (
            |    SELECT s.vec_id, s.m, c.code,
            |      ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m ORDER BY
@@ -1566,7 +1569,7 @@ object SimilarityQueries {
     // (O3, main.py:114).
     q("q91_rag_context",
       "X1/X2: RAG context assembly — top-3 retrieve, doc fetch, ordered block render",
-      s"""WITH es AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
+      s"""WITH $esCteSql,
          |  qs AS (SELECT vec_id AS query_id, ev AS qv FROM es WHERE vec_id < $NQueries),
          |  scored AS (SELECT query_id, vec_id, $cosineSql AS sim
          |             FROM es CROSS JOIN qs WHERE vec_id <> query_id),
@@ -1628,8 +1631,8 @@ object SimilarityQueries {
       }.mkString(",\n  ")
       val unionSql = (1 to KmIters).map(i => s"SELECT * FROM stats$i")
         .mkString(" UNION ALL ")
-      s"""WITH es AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-         |  cents0 AS (SELECT vec_id AS cell_id, ev AS cv FROM es WHERE vec_id < $IvfCells),
+      s"""WITH $esCteSql,
+         |  cents0 AS ($seedCentsBodySql),
          |  dims AS (SELECT unnest(range(1, ${Embedder.Dim + 1})) AS dim),
          |  $iterSql
          |SELECT iter, cell_id, n_members, inertia FROM ($unionSql)
@@ -1668,8 +1671,8 @@ object SimilarityQueries {
     // CollectTopK partial aggregate so pair rows never shuffle.
     q("q99_semantic_prune",
       "X2/X3: SemDeDup-style semantic pruning (IVF-cell blocking + cosine verify + canonical drop)",
-      s"""WITH es AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-         |  cents AS (SELECT vec_id AS cell_id, ev AS cv FROM es WHERE vec_id < $SemCells),
+      s"""WITH $esCteSql,
+         |  cents AS (${seedCentsBodySql(SemCells)}),
          |  assign AS (SELECT vec_id, cell_id FROM (
          |    SELECT es.vec_id, cents.cell_id,
          |      ROW_NUMBER() OVER (PARTITION BY es.vec_id ORDER BY
@@ -1705,8 +1708,8 @@ object SimilarityQueries {
     // the index parquet for the rest.
     q("q100_ivf_append",
       "X2: incremental ANN index append (batch-only assignment vs the persisted index)",
-      s"""WITH es AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
-         |  cents AS (SELECT vec_id AS cell_id, ev AS cv FROM es WHERE vec_id < $IvfCells),
+      s"""WITH $esCteSql,
+         |  cents AS ($seedCentsBodySql),
          |  assign AS (SELECT vec_id, cell_id FROM (
          |    SELECT es.vec_id, cents.cell_id,
          |      ROW_NUMBER() OVER (PARTITION BY es.vec_id ORDER BY
@@ -1768,7 +1771,7 @@ object SimilarityQueries {
            |      GROUP BY c.query_id, c.doc_id, c.rel) x) WHERE rn = 1)""".stripMargin
       }.mkString(",\n  ")
       val allSel = (1 to MmrK).map(i => s"SELECT * FROM sel$i").mkString(" UNION ALL ")
-      s"""WITH es AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings),
+      s"""WITH $esCteSql,
          |  qs AS (SELECT vec_id AS query_id, ev AS qv FROM es WHERE vec_id < $NQueries),
          |  scored AS (SELECT query_id, vec_id, $cosineSql AS rel
          |             FROM es CROSS JOIN qs WHERE vec_id <> query_id),

@@ -18,8 +18,18 @@ import org.apache.spark.sql.functions._
 object TextQueries {
   import Exact.{davg, dsum}
 
-  private def docs(s: SparkSession, dir: String): DataFrame =
+  /** The corpus table; the one loader of the text-side tiers. */
+  private[operators] def docs(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "documents")
+
+  /** A planted append batch (q112/q123 `(1, 7)`, q116 `(2, 9)`, q118
+    * `(4, 11)`): the docs with `doc_id % 5 = rem`, id-shifted +70000
+    * (under the Tables.PlantIdFloor headroom guard), an out-of-vocabulary
+    * marker token `zq<doc_id mod m>` appended. */
+  private[operators] def appendBatch(s: SparkSession, dir: String, rem: Int, m: Int): DataFrame =
+    docs(s, dir).filter(col("doc_id") % 5 === rem)
+      .select((col("doc_id") + 70000).as("doc_id"),
+        concat(col("text"), lit(" zq"), pmod(col("doc_id"), lit(m)).cast("string")).as("text"))
 
   /** docs() + round-robin fan-out, for the map-heavy per-doc scorers
     * (q33/q34/q36). Under host contention these ran at 4-7 s against a
@@ -208,6 +218,38 @@ object TextQueries {
   private def bpeWord(tok: Column): Column =
     concat(regexp_replace(tok, "(.)", "$1 "), lit("_"))
 
+  /** DuckDB twin of [[bpeWord]] over column `tok`. */
+  private val bpeWordSql = "concat(regexp_replace(tok, '(.)', '\\1 ', 'g'), '_')"
+
+  /** DuckDB mirror of [[bpeWords0]]'s `(w, cnt)` over the tokens of
+    * relation `src`, as CTE `name`; `pad` indents the body. */
+  private[operators] def bpeWordsCte(name: String, src: String, pad: String = ""): String =
+    s"""$name AS (
+       |$pad  SELECT $bpeWordSql AS w,
+       |$pad         CAST(COUNT(*) AS BIGINT) AS cnt
+       |$pad  FROM (SELECT unnest(${TextOps.tokensSql("text")}) AS tok FROM $src)
+       |$pad  GROUP BY 1)""".stripMargin
+
+  /** DuckDB mirror of [[bpeSegmentWith]]'s replay input: the distinct
+    * tokens of relation `src` as `(tok, w)` BPE words, CTE `name`;
+    * `pad` indents the body. */
+  private[operators] def bpeTokWordsCte(name: String, src: String, pad: String = ""): String =
+    s"""$name AS (
+       |$pad  SELECT DISTINCT tok,
+       |$pad         $bpeWordSql AS w
+       |$pad  FROM (SELECT unnest(${TextOps.tokensSql("text")}) AS tok FROM $src))""".stripMargin
+
+  /** q109/q112's oracle tail: per doc of `src`, its token count and its
+    * BPE-unit count, units read from the replayed table `words(tok, w)`. */
+  private def bpeCountsSql(words: String, src: String): String =
+    s"""seg AS (SELECT tok, CAST(len(string_split(w, ' ')) AS BIGINT) AS units
+       |        FROM $words)
+       |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
+       |       CAST(SUM(units) AS BIGINT) AS n_units
+       |FROM (SELECT doc_id, unnest(${TextOps.tokensSql("text")}) AS tok FROM $src)
+       |JOIN seg USING (tok)
+       |GROUP BY 1 ORDER BY doc_id""".stripMargin
+
   /** A merge log's rules in step order (at most [[BpeMerges]] rows). */
   private[graft] def bpeRules(merges: DataFrame): Seq[(String, String)] =
     merges.collect().toSeq.sortBy(_.getAs[Long]("step"))
@@ -229,7 +271,7 @@ object TextQueries {
     * argmax CTEs over word table `src`. `pfx` prefixes the produced CTE
     * names so a second training chain (q125 retrains on the purged
     * corpus beside the full-corpus chain) can coexist in one query. */
-  private[graft] def bpePairCte(i: Int, src: String, pfx: String = ""): String =
+  private def bpePairCte(i: Int, src: String, pfx: String = ""): String =
     s"""${pfx}pr_$i AS (
        |  SELECT u1, u2, CAST(SUM(cnt) AS BIGINT) AS total FROM (
        |    SELECT cnt, unnest(list_slice(us, 1, len(us) - 1)) AS u1,
@@ -239,12 +281,27 @@ object TextQueries {
        |${pfx}best_$i AS (SELECT u1, u2, total FROM ${pfx}pr_$i
        |            ORDER BY total DESC, u1, u2 LIMIT 1)""".stripMargin
 
+  /** DuckDB mirror of [[bpeTrain]] over the word table `${w}_0`: each
+    * round's pair count and argmax `${pfx}best_i`, then its rewrite
+    * `${w}_i` (the last round's is never read). */
+  private[operators] def bpeTrainCtesSql(w: String = "w", pfx: String = ""): String =
+    (1 to BpeMerges).flatMap { i =>
+      bpePairCte(i, s"${w}_${i - 1}", pfx) +: (if (i < BpeMerges)
+        Seq(bpeApplyCte(i, s"${w}_${i - 1}", out = s"${w}_$i", pfx = pfx)) else Nil)
+    }.mkString(",\n")
+
+  /** DuckDB mirror of [[bpeReplay]] over the `(tok, w)` table `${w}_0`:
+    * every trained rule in step order, ending at `${w}_BpeMerges`. */
+  private[operators] def bpeReplayCtesSql(w: String): String =
+    (1 to BpeMerges).map(i => bpeApplyCte(i, s"${w}_${i - 1}", Seq("tok"), out = s"${w}_$i"))
+      .mkString(",\n")
+
   /** DuckDB mirror of one [[bpeReplay]] rule over word table `src`,
     * the round's winning pair from `best_i`, in the islands closed form.
     * `carry` = the non-w columns threaded through unchanged; `out`
     * names the produced CTE (q112 replays the rules onto a batch
     * chain `b_i` beside the training chain `w_i`). */
-  private[graft] def bpeApplyCte(i: Int, src: String,
+  private def bpeApplyCte(i: Int, src: String,
       carry: Seq[String] = Seq("cnt"), out: String = "",
       pfx: String = ""): String = {
     val c = carry.mkString(", ")
@@ -759,16 +816,8 @@ object TextQueries {
       {
         val chain = new StringBuilder
         chain.append(
-          s"""WITH w_0 AS (
-             |  SELECT concat(regexp_replace(tok, '(.)', '\\1 ', 'g'), '_') AS w,
-             |         CAST(COUNT(*) AS BIGINT) AS cnt
-             |  FROM (SELECT unnest(${TextOps.tokensSql("text")}) AS tok FROM documents)
-             |  GROUP BY 1)""".stripMargin)
-        for (i <- 1 to BpeMerges) {
-          chain.append(",\n").append(bpePairCte(i, s"w_${i - 1}"))
-          if (i < BpeMerges) // the last round's rewrite is never read
-            chain.append(",\n").append(bpeApplyCte(i, s"w_${i - 1}"))
-        }
+          s"WITH ${bpeWordsCte("w_0", "documents")}")
+        chain.append(",\n").append(bpeTrainCtesSql())
         chain.append("\nSELECT * FROM (\n")
         chain.append((1 to BpeMerges).map { i =>
           s"""  SELECT CAST($i AS BIGINT) AS step, u1 AS lhs, u2 AS rhs,
@@ -799,7 +848,7 @@ object TextQueries {
         val carry = Seq("tok", "cnt")
         chain.append(
           s"""WITH w_0 AS (
-             |  SELECT tok, concat(regexp_replace(tok, '(.)', '\\1 ', 'g'), '_') AS w,
+             |  SELECT tok, $bpeWordSql AS w,
              |         CAST(COUNT(*) AS BIGINT) AS cnt
              |  FROM (SELECT unnest(${TextOps.tokensSql("text")}) AS tok FROM documents)
              |  GROUP BY 1, 2)""".stripMargin)
@@ -807,15 +856,7 @@ object TextQueries {
           chain.append(",\n").append(bpePairCte(i, s"w_${i - 1}"))
           chain.append(",\n").append(bpeApplyCte(i, s"w_${i - 1}", carry))
         }
-        chain.append(
-          s""",
-             |seg AS (SELECT tok, CAST(len(string_split(w, ' ')) AS BIGINT) AS units
-             |        FROM w_$BpeMerges)
-             |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-             |       CAST(SUM(units) AS BIGINT) AS n_units
-             |FROM (SELECT doc_id, unnest(${TextOps.tokensSql("text")}) AS tok FROM documents)
-             |JOIN seg USING (tok)
-             |GROUP BY 1 ORDER BY doc_id""".stripMargin)
+        chain.append(",\n").append(bpeCountsSql(s"w_$BpeMerges", "documents"))
         chain.toString
       }) { (s, dir) =>
       val words0 = bpeWords0(docs(s, dir))
@@ -849,7 +890,7 @@ object TextQueries {
     q("q112_bpe_apply_persisted",
       "X4+/LLM: batch tokenization via persisted BPE merges (no retrain, OOV-safe)",
       bpeApplyPersistedOracleSql) { (s, dir) =>
-      bpeSegmentWith(bpeMergesOf(s, dir), bpeAppendBatch(s, dir))
+      bpeSegmentWith(bpeMergesOf(s, dir), appendBatch(s, dir, 1, 7))
         .orderBy("doc_id") // row-per-doc output: parallel range sort
     },
 
@@ -888,7 +929,7 @@ object TextQueries {
   private[graft] def bpeStreamDrain(s: SparkSession, dir: String,
       nFiles: Int): DataFrame = {
     val rules = bpeMergesOf(s, dir)
-    val batch = bpeAppendBatch(s, dir)
+    val batch = appendBatch(s, dir, 1, 7)
     val root = graft.TempDirs.fresh("q123")
     val target = new Drain.Target(Drain.targetDir(root))
     Drain.split(root, batch, nFiles)(Drain.appendEach(target)(bpeSegmentWith(rules, _)))
@@ -903,53 +944,23 @@ object TextQueries {
   private[graft] def bpeApplyPersistedOracleSql: String = {
     val chain = new StringBuilder
     chain.append(
-      s"""WITH w_0 AS (
-         |  SELECT concat(regexp_replace(tok, '(.)', '\\1 ', 'g'), '_') AS w,
-         |         CAST(COUNT(*) AS BIGINT) AS cnt
-         |  FROM (SELECT unnest(${TextOps.tokensSql("text")}) AS tok FROM documents)
-         |  GROUP BY 1)""".stripMargin)
-    for (i <- 1 to BpeMerges) {
-      chain.append(",\n").append(bpePairCte(i, s"w_${i - 1}"))
-      if (i < BpeMerges)
-        chain.append(",\n").append(bpeApplyCte(i, s"w_${i - 1}"))
-    }
+      s"WITH ${bpeWordsCte("w_0", "documents")}")
+    chain.append(",\n").append(bpeTrainCtesSql())
     chain.append(
       s""",
          |batch AS (SELECT doc_id + 70000 AS doc_id, text FROM (
          |            SELECT doc_id,
          |              concat(text, ' zq', CAST(doc_id % 7 AS VARCHAR)) AS text
          |            FROM documents WHERE doc_id % 5 = 1)),
-         |b_0 AS (
-         |  SELECT DISTINCT tok,
-         |         concat(regexp_replace(tok, '(.)', '\\1 ', 'g'), '_') AS w
-         |  FROM (SELECT unnest(${TextOps.tokensSql("text")}) AS tok FROM batch))""".stripMargin)
-    for (i <- 1 to BpeMerges)
-      chain.append(",\n")
-        .append(bpeApplyCte(i, s"b_${i - 1}", Seq("tok"), out = s"b_$i"))
-    chain.append(
-      s""",
-         |seg AS (SELECT tok, CAST(len(string_split(w, ' ')) AS BIGINT) AS units
-         |        FROM b_$BpeMerges)
-         |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-         |       CAST(SUM(units) AS BIGINT) AS n_units
-         |FROM (SELECT doc_id, unnest(${TextOps.tokensSql("text")}) AS tok FROM batch)
-         |JOIN seg USING (tok)
-         |GROUP BY 1 ORDER BY doc_id""".stripMargin)
+         |${bpeTokWordsCte("b_0", "batch")}""".stripMargin)
+    chain.append(",\n").append(bpeReplayCtesSql("b"))
+    chain.append(",\n").append(bpeCountsSql(s"b_$BpeMerges", "batch"))
     chain.toString
   }
 
   /** The persisted merge rules, read once (8 tiny rows → closure). */
   private[graft] def bpeMergesOf(s: SparkSession, dir: String): Seq[(String, String)] =
     bpeRules(Tables.read(s, bpeMergesPrepared(s, dir)))
-
-  /** q112's planted append batch: every 5th doc, id-shifted +70000
-    * (under the Tables.PlantIdFloor headroom guard), an OOV marker
-    * token appended — the fixed-tokenizer-on-unseen-text case. */
-  private[graft] def bpeAppendBatch(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).filter(col("doc_id") % 5 === 1)
-      .select((col("doc_id") + 70000).as("doc_id"),
-        concat(col("text"), lit(" zq"), pmod(col("doc_id"), lit(7)).cast("string"))
-          .as("text"))
 
   /** Segment `b`'s docs `(doc_id, text)` with the merge `rules`: the
     * rules replay ([[bpeReplay]]) over b's own distinct tokens as one

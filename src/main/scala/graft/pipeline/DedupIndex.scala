@@ -23,8 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object DedupIndex {
 
-  private val HammingThresh = 10
-
   /** One-time per-corpus index build, memoized per corpus FINGERPRINT
     * (not dir name) within the JVM and reused across JVMs via an
     * on-disk completion marker under the same fingerprint. This
@@ -68,7 +66,7 @@ object DedupIndex {
     val near = DedupQueries.simhashBands(batchSigs)
       .join(DedupQueries.simhashBands(index).select(col("doc_id").as("idx_id"), col("sig").as("isig"),
         col("band_id"), col("band_val")), Seq("band_id", "band_val"))
-      .filter(bit_count(col("sig").bitwiseXOR(col("isig"))).cast("long") <= HammingThresh)
+      .filter(bit_count(col("sig").bitwiseXOR(col("isig"))).cast("long") <= DedupQueries.HammingThresh)
       .groupBy(col("doc_id")).agg(count_distinct(col("idx_id")).as("near_n"))
     batchSigs.select(col("doc_id"))
       .join(exact, Seq("doc_id"), "left")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, GraftSql, RelationalGroupedDatas
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions.{col, lit, posexplode, try_element_at}
 import org.apache.spark.sql.types._
 import scala.collection.mutable
@@ -48,10 +48,7 @@ case class CollectTopK(
   override def nullable: Boolean = false
   override def dataType: DataType = CollectTopK.ResultType
 
-  /** Heap ordering where the MAX (head) is the WORST kept pair: lowest
-    * score first, then largest id — so dequeue evicts the right element. */
-  private def ord: Ordering[(Double, Long)] =
-    Ordering.by { case (s, i) => (-s, i) }
+  import CollectTopK.ord
 
   override def createAggregationBuffer(): mutable.PriorityQueue[(Double, Long)] =
     mutable.PriorityQueue.empty[(Double, Long)](ord)
@@ -76,8 +73,7 @@ case class CollectTopK(
   }
 
   override def eval(buf: mutable.PriorityQueue[(Double, Long)]): Any =
-    new GenericArrayData(buf.toSeq
-      .sortBy { case (s, i) => (-s, i) } // best-first: score desc, id asc
+    new GenericArrayData(buf.toSeq.sorted(ord) // best-first: score desc, id asc
       .map { case (s, i) => InternalRow(s, i) })
 
   override def serialize(buf: mutable.PriorityQueue[(Double, Long)]): Array[Byte] = {
@@ -109,6 +105,18 @@ case class CollectTopK(
 }
 
 object CollectTopK {
+  /** Best first: score descending in SQL's double order (−0.0 = 0.0,
+    * NaN above every number — the window's and DuckDB's order), then id
+    * ascending. A heap's MAX (head) is therefore the WORST kept pair, so
+    * dequeue evicts the right element. One instance: no per-offer
+    * allocation, no boxed tuple keys. */
+  private val ord: Ordering[(Double, Long)] = new Ordering[(Double, Long)] {
+    def compare(a: (Double, Long), b: (Double, Long)): Int = {
+      val c = SQLOrderingUtil.compareDoubles(b._1, a._1)
+      if (c != 0) c else java.lang.Long.compare(a._2, b._2)
+    }
+  }
+
   private val ResultType: DataType = ArrayType(StructType(Seq(
     StructField("sim", DoubleType), StructField("vec_id", LongType))),
     containsNull = false)

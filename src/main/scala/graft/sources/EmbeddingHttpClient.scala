@@ -18,8 +18,7 @@ final case class EmbeddingConf(
     model: String = "text-embedding-3-small",
     dimensions: Int = 1536,
     batchSize: Int = 128,
-    retry: RetryConf = RetryConf(maxAttempts = 3, baseDelayMs = 0,
-      failEveryN = 0, failAttempts = 0)) {
+    retry: RetryConf = RetryConf(maxAttempts = 3, baseDelayMs = 0)) {
   override def toString: String =
     s"EmbeddingConf($endpoint, model=$model, dim=$dimensions, " +
       s"batch=$batchSize, apiKey=***)"

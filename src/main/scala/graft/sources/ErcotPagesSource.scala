@@ -47,8 +47,6 @@ class ErcotPagesSource extends TableProvider
     val retry = RetryConf(
       maxAttempts = Option(opts.get("maxRetries")).map(_.toInt).getOrElse(3),
       baseDelayMs = Option(opts.get("retryDelayMs")).map(_.toLong).getOrElse(0L),
-      failEveryN = Option(opts.get("failEveryN")).map(_.toInt).getOrElse(0),
-      failAttempts = Option(opts.get("failAttempts")).map(_.toInt).getOrElse(2),
       jitterMs = Option(opts.get("retryJitterMs")).map(_.toLong).getOrElse(0L))
     // `endpoint` switches the scan from the deterministic generator to
     // the LIVE HTTP transport (HttpPageClient); everything else —
@@ -83,12 +81,8 @@ class ErcotPagesSource extends TableProvider
   * client.py:60-84): `maxAttempts` tries with exponential backoff from
   * `baseDelayMs` plus U(0, `jitterMs`) de-synchronization (the
   * reference's `random.uniform(0, 2)` seconds — set ~2000 against a
-  * live API, 0 for deterministic tests). `failEveryN`/`failAttempts`
-  * INJECT deterministic transient faults (every Nth page fails its
-  * first `failAttempts` fetches) so the policy is testable without a
-  * network. */
-final case class RetryConf(maxAttempts: Int, baseDelayMs: Long,
-    failEveryN: Int, failAttempts: Int, jitterMs: Long = 0L)
+  * live API, 0 for deterministic tests). */
+final case class RetryConf(maxAttempts: Int, baseDelayMs: Long, jitterMs: Long = 0L)
 
 /** Marker for failures worth retrying — transient HTTP 5xx/429/timeout
   * faults ([[TransientPageError]]) and store-side throttling
@@ -96,8 +90,8 @@ final case class RetryConf(maxAttempts: Int, baseDelayMs: Long,
   * these; everything else propagates immediately. */
 trait TransientFault extends Throwable
 
-/** A retryable fetch failure — the stand-in for the transient HTTP 5xx /
-  * timeout the reference client retries. */
+/** A retryable page fetch: [[HttpPageClient]]'s 401/429/5xx, the
+  * transient faults the reference client retries. */
 final class TransientPageError(page: Int, attempt: Int)
   extends RuntimeException(s"transient fault fetching page $page (attempt $attempt)")
   with TransientFault
@@ -435,15 +429,11 @@ class ErcotPagesReaderFactory(pageSize: Int, startDateDays: Long,
 
   /** Deterministic generator path (the oracle-checked stand-in). */
   private def generatedReader(page: Int): PartitionReader[InternalRow] = {
-    // "Fetch" the page under the token + retry policy: acquiring the
-    // (cached, auto-refreshing) auth token and surviving injected
-    // transient faults stand in for the authenticated HTTP GET the
-    // reference performs per page (client.py:60-84, auth.py:47-166).
-    RetryPolicy.withRetry(retry) { attempt =>
-      TokenProvider.default.current()
-      if (retry.failEveryN > 0 && page % retry.failEveryN == 0 && attempt <= retry.failAttempts)
-        throw new TransientPageError(page, attempt)
-    }
+    // "Fetch" the page: acquiring the (cached, auto-refreshing) auth
+    // token stands in for the authenticated GET the reference performs
+    // per page (auth.py:47-166). Only a real GET can fail transiently,
+    // so only httpReader runs under RetryPolicy.
+    TokenProvider.default.current()
     new PartitionReader[InternalRow] {
       private var i = page.toLong * pageSize - 1
       private val end = (page + 1).toLong * pageSize

@@ -31,7 +31,11 @@ class CollectTopKSpec extends AnyFunSuite {
     // Smallest-first input: distances on a 0.1 grid, so a group's best
     // five are ties at d = 0 that only the id order separates.
     val dists = rows.map { case (g, i, s) => (g, i, math.floor(s * 10) / 10) }
-    for ((input, smallest, k) <- Seq((rows, false, 5), (dists, true, 5), (dists, true, 1));
+    // Signed-zero input: every score is -0.0 or 0.0, which SQL orders
+    // as equal, so only the id order separates a group's rows.
+    val zeros = rows.map { case (g, i, s) => (g, i, if (s < 0.5) -0.0 else 0.0) }
+    for ((input, smallest, k) <- Seq((rows, false, 5), (dists, true, 5), (dists, true, 1),
+        (zeros, false, 5));
          parts <- Seq(1, 4, 13)) {
       val df = input.toDF("g", "i", "s").repartition(parts)
       val want = windowTopK(df, k, smallest).collect().map(_.toSeq).toSet

@@ -103,8 +103,7 @@ class DynamoHttpSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     shedOnce = false; shedForever = 0
   }
 
-  private val retry = RetryConf(maxAttempts = 3, baseDelayMs = 0, failEveryN = 0,
-    failAttempts = 0)
+  private val retry = RetryConf(maxAttempts = 3, baseDelayMs = 0)
 
   /** The K3 flatten shape: typed Decimal + raw_json, from real testdata. */
   private def frame(n: Int) = {

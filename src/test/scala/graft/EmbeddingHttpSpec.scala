@@ -83,7 +83,7 @@ class EmbeddingHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def conf(maxAttempts: Int = 3, apiKey: String = "key-1") =
     EmbeddingConf(endpoint = s"$base/v1/embeddings", apiKey = apiKey,
       dimensions = Dim, batchSize = 3,
-      retry = RetryConf(maxAttempts, baseDelayMs = 0, failEveryN = 0, failAttempts = 0))
+      retry = RetryConf(maxAttempts, baseDelayMs = 0))
 
   import spark.implicits._
 

@@ -64,23 +64,6 @@ class ErcotPagesSourceSpec extends AnyFunSuite {
     assert(df.count() == 0)
   }
 
-  test("transient page faults are retried; exhausted retries fail the read") {
-    // Every 2nd page fails its first 2 fetches; 3 attempts ride it out.
-    val flaky = spark.read.format("ercot-pages")
-      .option("pages", 4).option("pageSize", 25)
-      .option("failEveryN", 2).option("failAttempts", 2).option("maxRetries", 3)
-      .load()
-    assert(flaky.count() == 4 * 25) // same rows as a fault-free read
-
-    val tooFewRetries = spark.read.format("ercot-pages")
-      .option("pages", 4).option("pageSize", 25)
-      .option("failEveryN", 2).option("failAttempts", 2).option("maxRetries", 2)
-      .load()
-    val e = intercept[org.apache.spark.SparkException](tooFewRetries.count())
-    assert(e.getMessage.contains("transient fault") ||
-      Option(e.getCause).exists(_.getMessage.contains("transient fault")))
-  }
-
   test("retry backoff: jitter bounded by U(0, jitterMs); zero-delay config never sleeps") {
     import graft.sources.{RetryConf, RetryPolicy, TransientPageError}
     def failTwice(): Int => String = {
@@ -90,11 +73,11 @@ class ErcotPagesSourceSpec extends AnyFunSuite {
     // deterministic part 10+20=30ms; only the FLOOR is asserted — a
     // wall-clock ceiling would test the OS scheduler, not the policy
     val t0 = System.nanoTime()
-    assert(RetryPolicy.withRetry(RetryConf(4, 10, 0, 0, jitterMs = 25))(failTwice()) == "ok")
+    assert(RetryPolicy.withRetry(RetryConf(4, 10, jitterMs = 25))(failTwice()) == "ok")
     val ms = (System.nanoTime() - t0) / 1000000
     assert(ms >= 30, s"backoff floor violated: ${ms}ms")
     // zero-delay, zero-jitter config completes (never sleeps by code path)
-    assert(RetryPolicy.withRetry(RetryConf(4, 0, 0, 0))(failTwice()) == "ok")
+    assert(RetryPolicy.withRetry(RetryConf(4, 0))(failTwice()) == "ok")
   }
 
   test("token lifecycle: cached until T-5 of expiry, then refreshed (singleton reuse)") {

@@ -91,7 +91,7 @@ class LivePipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.sources.EmbeddingHttp.withEmbedding(sentences(), "semantic_sentence",
       graft.sources.EmbeddingConf(endpoint = s"$base/v1/embeddings",
         apiKey = "key-1", dimensions = EmbedDim, batchSize = 2,
-        retry = graft.sources.RetryConf(3, 0, 0, 0)))
+        retry = graft.sources.RetryConf(3, 0)))
       .select("vector_id", "embedding", "semantic_sentence", "updated_at")
       .localCheckpoint()
 

@@ -76,8 +76,7 @@ class MeteostatHttpSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (server != null) server.stop(0)
 
-  private val retry = RetryConf(maxAttempts = 3, baseDelayMs = 0,
-    failEveryN = 0, failAttempts = 0)
+  private val retry = RetryConf(maxAttempts = 3, baseDelayMs = 0)
 
   private def reset(): Unit = {
     stationAttempts.clear(); flaky500s = Map.empty

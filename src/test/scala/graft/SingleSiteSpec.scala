@@ -12,7 +12,7 @@ import scala.jdk.CollectionConverters._
   * builder reads its heap layout. Every argmin and best-of-group pick
   * goes through `CollectTopK.ranked`, so `min_by`/`max_by` appear only
   * in `SimilarityQueries.ivfpqCodes`, whose scaladoc pins the A/B that
-  * keeps it. */
+  * keeps it. Each folded oracle SQL fragment is spelled on one line. */
 class SingleSiteSpec extends AnyFunSuite {
 
   private val mainRoot = Paths.get("src/main/scala")
@@ -49,6 +49,22 @@ class SingleSiteSpec extends AnyFunSuite {
       val (home, strays) = matches(pattern).partition(_._1 == owner)
       assert(strays.isEmpty, show(strays))
       assert(home.nonEmpty, s"$owner no longer matches /$pattern/")
+    }
+
+  /** Oracle SQL fragments each built by one function (the BPE word,
+    * the components walk, the band probe, the containment totals, the
+    * survivor rank): every query that needs one calls its builder. */
+  private val oracleFragments = Seq(
+    """concat(regexp_replace(tok, '(.)', '\\1 ', 'g'), '_')""",
+    "walk(id, r) AS (",
+    "nearm AS (",
+    "totals AS (SELECT eval_id",
+    "ORDER BY len(u.text) DESC")
+
+  for (fragment <- oracleFragments)
+    test(s"oracle fragment `$fragment` sits on one line of src/main") {
+      val hits = matches(java.util.regex.Pattern.quote(fragment))
+      assert(hits.size == 1, show(hits))
     }
 
   test("/min_by\\(|max_by\\(/ appears only in SimilarityQueries.ivfpqCodes") {

@@ -12,8 +12,7 @@ class FanOutSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private val retry = RetryConf(maxAttempts = 2, baseDelayMs = 1,
-    failEveryN = 0, failAttempts = 0, jitterMs = 0)
+  private val retry = RetryConf(maxAttempts = 2, baseDelayMs = 1, jitterMs = 0)
   private val items = Seq("a" -> "1", "b" -> "2", "c" -> "3")
 
   test("clean fan-out: all rows land, zero skipped") {

@@ -48,9 +48,12 @@ def start_verify():
     cp = f"{REPO}/target/scala-2.13/classes:" + ":".join(glob.glob("/opt/spark/jars/*.jar"))
     env = dict(os.environ, SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_CPUS", "8"))
     # Scope the Spark dump to the requested subset too — iterating on one
-    # query should not pay the whole suite's Verify pass.
+    # query should not pay the whole suite's Verify pass. A subset left
+    # in the caller's environment (Bench reads the same variable) must
+    # not narrow a full run.
+    env.pop("SPARK_GRAFT_ONLY", None)
     if ONLY:
-        env["GRAFT_VERIFY_ONLY"] = ",".join(sorted(ONLY))
+        env["SPARK_GRAFT_ONLY"] = ",".join(sorted(ONLY))
     cmd = ["java", *ADD_OPENS, "-Xmx8g", "-Dspark.ui.enabled=false",
            "-Dspark.sql.session.timeZone=UTC", "-cp", cp, "graft.Verify", SF, OUT]
     return subprocess.Popen(cmd, env=env, stdout=subprocess.DEVNULL,
